@@ -25,8 +25,9 @@ object DedupMicro {
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 
-    // ~26-word vocabulary with doc-id-salted tokens: realistic shingle
-    // diversity (mostly distinct per doc), stable across runs
+    // tokens drawn from a 5000-word vocabulary by a doc-id-seeded RNG:
+    // realistic shingle diversity (mostly distinct per doc), stable
+    // across runs
     val docs = spark.range(0, nDocs, 1, cpus).map { id =>
       val rnd = new scala.util.Random(id * 2654435761L + 7)
       val sb = new java.lang.StringBuilder()
@@ -38,8 +39,11 @@ object DedupMicro {
       }
       (id, sb.toString)
     }.toDF("doc_id", "text")
-    docs.write.mode("overwrite").parquet("/tmp/graft_dedup_micro")
-    val corpus = spark.read.parquet("/tmp/graft_dedup_micro")
+    // per-run corpus directory: concurrent runs never share one
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_micro")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    docs.write.mode("overwrite").parquet(dir.toString)
+    val corpus = spark.read.parquet(dir.toString)
 
     def time(what: String)(body: => Long): Unit = {
       val secs = (1 to 3).map { _ =>

@@ -1,7 +1,10 @@
 package graft.run
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{Column, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.schema.LedgerRow
 
 /** Checkpoint/resume ledger: one parquet table of per-stage (and
@@ -15,16 +18,27 @@ final class Ledger(spark: SparkSession, baseDir: String, inputVersion: String) {
   import spark.implicits._
 
   private val path = s"$baseDir/_ledger"
+  private val counts = scala.collection.mutable.Map.empty[String, (Long, Long)]
 
-  def doneStages(): Set[String] = {
+  /** Latest done row per stage for this inputVersion: one job, no schema
+    * inference, the set built on the driver. An unreadable ledger is
+    * reported and treated as empty (every stage recomputes).
+    */
+  private def doneRows(): Map[String, LedgerRow] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Set.empty
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Map.empty
     try {
-      spark.read.parquet(path)
+      Ledger.read[LedgerRow](spark, path)
         .where($"state" === "done" && $"inputVersion" === inputVersion)
-        .select($"stage").distinct().as[String].collect().toSet
-    } catch { case _: Throwable => Set.empty }
+        .collect().groupBy(_.stage).map { case (s, rs) => s -> rs.maxBy(_.finishedAt.getTime) }
+    } catch {
+      case NonFatal(e) =>
+        println(s"[ledger] unreadable, recomputing: $e")
+        Map.empty
+    }
   }
+
+  def doneStages(): Set[String] = doneRows().keySet
 
   def markDone(stage: String, partitionKey: String, rowsIn: Long, rowsOut: Long,
       wallMs: Long): Unit = {
@@ -33,20 +47,76 @@ final class Ledger(spark: SparkSession, baseDir: String, inputVersion: String) {
     spark.createDataset(Seq(row)).write.mode(SaveMode.Append).parquet(path)
   }
 
+  /** (rowsIn, rowsOut) of a stage this ledger ran, or read from its done
+    * row when the stage was skipped on resume.
+    */
+  def rows(stageName: String): Option[(Long, Long)] = counts.get(stageName)
+
   /** Run `body` writing parquet to `$baseDir/$stage` unless already done;
     * returns the stage output path. `body` must write to the returned path.
     */
   def stage(stageName: String)(body: String => (Long, Long)): String = {
     val out = s"$baseDir/$stageName"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val outExists = fs.exists(new org.apache.hadoop.fs.Path(out))
-    if (outExists && doneStages().contains(stageName)) {
-      println(s"[ledger] resume: skipping $stageName")
-    } else {
-      val t0 = System.nanoTime()
-      val (rowsIn, rowsOut) = body(out)
-      markDone(stageName, stageName, rowsIn, rowsOut, (System.nanoTime() - t0) / 1000000L)
+    val done =
+      if (fs.exists(new org.apache.hadoop.fs.Path(out))) doneRows().get(stageName) else None
+    done match {
+      case Some(r) =>
+        println(s"[ledger] resume: skipping $stageName")
+        counts(stageName) = (r.rowsIn, r.rowsOut)
+      case None =>
+        val t0 = System.nanoTime()
+        val (rowsIn, rowsOut) = body(out)
+        markDone(stageName, stageName, rowsIn, rowsOut, (System.nanoTime() - t0) / 1000000L)
+        counts(stageName) = (rowsIn, rowsOut)
     }
     out
+  }
+}
+
+object Ledger {
+
+  /** Read an engine-written table with its schema pinned to `T`: no
+    * footer-inference job before the scan.
+    */
+  def read[T <: Product: TypeTag](spark: SparkSession, path: String): Dataset[T] = {
+    val enc = Encoders.product[T]
+    spark.read.schema(enc.schema).parquet(path).as(enc)
+  }
+
+  /** Metrics observed on one write: `rows` is the written row count,
+    * the rest are the caller's extra named aggregates.
+    */
+  final class Observed(obs: Observation) {
+    /** Blocks until the observed action has finished; 0 for a null
+      * aggregate (e.g. the max of an empty table).
+      */
+    def long(name: String): Long = obs.get.get(name) match {
+      case Some(n: java.lang.Number) => n.longValue
+      case _ => 0L
+    }
+    def rows: Long = long("rows")
+  }
+
+  /** Attach `count(lit(1)) as rows` plus `extra` to `ds`. The metrics are
+    * only right when the returned plan runs exactly once: observe the top
+    * of a write plan, or an input with a single consumer — a
+    * CollectMetrics node in a forked plan reports whichever copy did not
+    * run (see `ops.Dedup.capBuckets`).
+    */
+  def observe[T](ds: Dataset[T], extra: Column*): (Dataset[T], Observed) = {
+    val obs = new Observation()
+    (ds.observe(obs, count(lit(1)).as("rows"), extra: _*), new Observed(obs))
+  }
+
+  /** Overwrite `out` with `ds` as parquet (partitioned by `partitionBy`)
+    * and return the metrics observed on that same write.
+    */
+  def write[T](ds: Dataset[T], out: String, extra: Seq[Column] = Nil,
+      partitionBy: Seq[String] = Nil): Observed = {
+    val (observed, metrics) = observe(ds, extra: _*)
+    val writer = observed.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(out)
+    metrics
   }
 }

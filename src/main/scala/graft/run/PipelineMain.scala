@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ingest.TranscriptGen
 import graft.series.Derive
@@ -16,7 +16,10 @@ import graft.schema._
   *
   * Stages: transcripts → series (token_len, gap_s, turn_rate) →
   * gap-fill → Gorilla chunks → tiers 1m→1h→1d → per-tier MP (mpx) →
-  * discords/regimes per profile. Usage:
+  * discords/regimes per profile. Every stage's ledger row counts are
+  * observed on the stage's own write (no re-read of its output), tables
+  * are read back with their schemas pinned (no inference job), and all
+  * raw and tier series share one MP plan. Usage:
   *   runMain graft.run.PipelineMain [numConvs] [outDir] [window]
   */
 object PipelineMain {
@@ -42,15 +45,15 @@ object PipelineMain {
 
     // stage 1: transcript table (the production engine scans Iceberg here)
     val transcriptsPath = ledger.stage("transcripts") { out =>
-      val ds = TranscriptGen.generate(spark, numConvs)
-      ds.write.mode(SaveMode.Overwrite).parquet(out)
-      (0L, spark.read.parquet(out).count())
+      (0L, Ledger.write(TranscriptGen.generate(spark, numConvs), out).rows)
     }
     maybeAbort("transcripts")
-    val transcripts = spark.read.parquet(transcriptsPath).as[Transcript]
+    val transcripts = Ledger.read[Transcript](spark, transcriptsPath)
 
     // stage 2: derived series points (time-indexed for rollup, position-
-    // indexed token_len/gap_s for golden-gated profiles)
+    // indexed token_len/gap_s for golden-gated profiles); every transcript
+    // turn yields exactly one token_len_t point, so that kind's count is
+    // the stage's input count
     val pointsPath = ledger.stage("series_points") { out =>
       val timed = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
         unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
@@ -59,17 +62,16 @@ object PipelineMain {
       val gap = Derive.gapSeconds(transcripts)
       val rate = Derive.gapFill(Derive.turnRate(transcripts), Rollup.MicrosPerMin, Some(0.0))
       val all = timed.union(tok).union(gap).union(rate)
-      all.write.mode(SaveMode.Overwrite).partitionBy("kind").parquet(out)
-      (transcripts.count(), spark.read.parquet(out).count())
+      val written = Ledger.write(all, out,
+        Seq(sum(($"kind" === "token_len_t").cast("long")).as("turns")), partitionBy = Seq("kind"))
+      (written.long("turns"), written.rows)
     }
     maybeAbort("series_points")
-    val points = spark.read.parquet(pointsPath).as[SeriesPoint]
+    val points = Ledger.read[SeriesPoint](spark, pointsPath)
 
     // stage 3: Gorilla-compressed chunk structs for the raw tier
-    val chunksPath = ledger.stage("chunks_raw") { out =>
-      val ch = Chunks.encode(points.where($"kind" === "token_len_t"))
-      ch.write.mode(SaveMode.Overwrite).parquet(out)
-      (0L, spark.read.parquet(out).count())
+    ledger.stage("chunks_raw") { out =>
+      (0L, Ledger.write(Chunks.encode(points.where($"kind" === "token_len_t")), out).rows)
     }
 
     maybeAbort("chunks_raw")
@@ -80,53 +82,51 @@ object PipelineMain {
     // (1m: 3 days, 1h: 30 days, 1d: forever — the north rule's
     // "retention drops old fine-tier buckets")
     val tiersPath = ledger.stage("tiers") { out =>
-      val raw = points.where($"kind" === "token_len_t")
-      val m1 = Rollup.rollupRaw(raw, "1m")
-      m1.write.mode(SaveMode.Overwrite).parquet(s"$out/m1_full")
-      val m1r = spark.read.parquet(s"$out/m1_full").as[TierAgg]
-      val h1 = Rollup.rollupTier(m1r, "1h")
-      h1.write.mode(SaveMode.Overwrite).parquet(s"$out/h1_full")
-      val h1r = spark.read.parquet(s"$out/h1_full").as[TierAgg]
-      val d1 = Rollup.rollupTier(h1r, "1d")
-      d1.write.mode(SaveMode.Overwrite).parquet(s"$out/d1")
-      val maxBucket = m1r.agg(max($"bucket")).as[Long].first()
+      val (raw, rawSeen) = Ledger.observe(points.where($"kind" === "token_len_t"))
+      val m1 = Ledger.write(Rollup.rollupRaw(raw, "1m"), s"$out/m1_full",
+        Seq(max($"bucket").as("maxBucket")))
+      val m1r = Ledger.read[TierAgg](spark, s"$out/m1_full")
+      Ledger.write(Rollup.rollupTier(m1r, "1h"), s"$out/h1_full")
+      val h1r = Ledger.read[TierAgg](spark, s"$out/h1_full")
+      Ledger.write(Rollup.rollupTier(h1r, "1d"), s"$out/d1")
+      val maxBucket = m1.long("maxBucket")
       val day = 24L * 3600 * 1000000
-      Rollup.applyRetention(m1r, maxBucket - 3 * day)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/m1")
-      Rollup.applyRetention(h1r, maxBucket - 30 * day)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/h1")
-      (raw.count(), m1r.count())
+      Ledger.write(Rollup.applyRetention(m1r, maxBucket - 3 * day), s"$out/m1")
+      Ledger.write(Rollup.applyRetention(h1r, maxBucket - 30 * day), s"$out/h1")
+      (rawSeen.rows, m1.rows)
     }
 
     maybeAbort("tiers")
 
-    // stage 5: per-tier matrix profiles (mpx with chunk min/max-merge)
+    // stage 5: per-tier matrix profiles (mpx with chunk min/max-merge):
+    // the position-indexed raw kinds and the m1/h1/d1 tier series
+    // (kinds `<kind>@<tier>`) assemble into ONE cached input for ONE
+    // mpxProfiles plan — it scans its input twice (the zero-exchange
+    // short branch and the tile branch). The tier label follows the kind.
+    var subsequences: Option[Long] = None
     val profilesPath = ledger.stage("profiles") { out =>
-      // cache both assemblies: mpxProfiles scans its input twice (the
-      // zero-exchange short branch and the tile branch)
-      val posSeries = Derive.assemble(points.where($"kind".isin("token_len", "gap_s", "turn_rate")))
+      val tierPoints = Seq("m1", "h1", "d1")
+        .map(t => Rollup.tierSeries(Ledger.read[TierAgg](spark, s"$tiersPath/$t")).toDF())
+      // unionByName: the partitioned points table reads `kind` last
+      val allPoints = (points.where($"kind".isin("token_len", "gap_s", "turn_rate")).toDF()
+        +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
+      val series = Derive.assemble(allPoints)
         .map { case (c, k, s, v) => SeriesRow(c, k, s, v) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tierSeries = Derive.assemble(
-          Rollup.tierSeries(spark.read.parquet(s"$tiersPath/m1").as[TierAgg])
-            .union(Rollup.tierSeries(spark.read.parquet(s"$tiersPath/h1").as[TierAgg]))
-            .union(Rollup.tierSeries(spark.read.parquet(s"$tiersPath/d1").as[TierAgg])))
-        .map { case (c, k, s, v) => SeriesRow(c, k, s, v) }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      val profiles = DistributedMp.mpxProfiles(posSeries, w, "raw")
-        .union(DistributedMp.mpxProfiles(tierSeries, w, "tier"))
-      profiles.write.mode(SaveMode.Overwrite).parquet(out)
-      posSeries.unpersist()
-      tierSeries.unpersist()
-      (0L, spark.read.parquet(out).count())
+      val profiles = DistributedMp.mpxProfiles(series, w, "raw")
+        .withColumn("tier", when($"kind".contains("@"), lit("tier")).otherwise(lit("raw")))
+        .as[MpProfileRow]
+      val written = Ledger.write(profiles, out, Seq(sum(size($"mp")).as("subsequences")))
+      series.unpersist()
+      subsequences = Some(written.long("subsequences"))
+      (0L, written.rows)
     }
 
     maybeAbort("profiles")
 
     // stage 6: discovery — top-k discords + regimes per profile
-    val discoveryPath = ledger.stage("discovery") { out =>
-      val profiles = spark.read.parquet(profilesPath).as[MpProfileRow]
+    ledger.stage("discovery") { out =>
+      val profiles = Ledger.read[MpProfileRow](spark, profilesPath)
       val found = profiles.map { p =>
         val discords = TopK.mpTopKDiscords(p.mp, p.ez, k = 3)
         val regimes =
@@ -134,17 +134,19 @@ object PipelineMain {
           else Array.empty[Long]
         (p.conv_id, p.kind, p.tier, p.w, discords, regimes)
       }.toDF("conv_id", "kind", "tier", "w", "discords", "regimes")
-      found.write.mode(SaveMode.Overwrite).parquet(out)
-      (0L, spark.read.parquet(out).count())
+      (0L, Ledger.write(found, out).rows)
     }
 
+    // summary from the stages' own counts (observed on this run's writes,
+    // or the ledger rows of stages skipped on resume); only a skipped
+    // profiles stage needs a scan, for its subsequence total
     val wallS = (System.nanoTime() - t0) / 1e9
-    val nPoints = points.count()
-    val nProfiles = spark.read.parquet(profilesPath).count()
-    val nSubseq = spark.read.parquet(profilesPath)
-      .select(sum(size($"mp"))).as[Long].first()
-    println(f"[pipeline] convs=$numConvs points=$nPoints profiles=$nProfiles " +
-      f"subsequences=$nSubseq discovery=${spark.read.parquet(discoveryPath).count()} " +
+    def rowsOut(stage: String): Long = ledger.rows(stage).get._2
+    val nPoints = rowsOut("series_points")
+    val nSubseq = subsequences.getOrElse(Ledger.read[MpProfileRow](spark, profilesPath)
+      .select(sum(size($"mp"))).as[Option[Long]].first().getOrElse(0L))
+    println(f"[pipeline] convs=$numConvs points=$nPoints profiles=${rowsOut("profiles")} " +
+      f"subsequences=$nSubseq discovery=${rowsOut("discovery")} " +
       f"wall=${wallS}%.1fs points/s=${nPoints / wallS}%.0f")
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.run.Ledger
+import graft.run.{Ledger, PipelineMain}
 
 /** Checkpoint-resume semantics of the per-stage lineage ledger (north
   * rule: runs resumable from checkpoint with per-partition lineage +
@@ -79,19 +79,106 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(b1.rowsIn == 10L && b1.rowsOut == 5L)
   }
 
+  /** Stdout of `body` (the `[ledger]` and `[pipeline]` lines). */
+  private def captured(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf)(body)
+    buf.toString("UTF-8")
+  }
+
+  /** The `[pipeline]` summary line without its timing fields. */
+  private def summary(log: String): String =
+    log.linesIterator.find(_.startsWith("[pipeline]")).get.split(" wall=").head
+
+  /** (rowsIn, rowsOut) of every done ledger row, by stage. */
+  private def ledgerCounts(dir: String): Map[String, (Long, Long)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/_ledger").as[graft.schema.LedgerRow].collect()
+      .map(r => r.stage -> (r.rowsIn, r.rowsOut)).toMap
+  }
+
+  test("an unreadable ledger is reported and every stage recomputes") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ledger_bad").toString
+    val dir = new java.io.File(s"$base/_ledger")
+    dir.mkdirs()
+    java.nio.file.Files.write(new java.io.File(dir, "part-0.parquet").toPath,
+      "not parquet".getBytes("UTF-8"))
+    val l = new Ledger(spark, base, inputVersion = "v1")
+    var done: Set[String] = null
+    val log = captured { done = l.doneStages() }
+    assert(done.isEmpty)
+    assert(log.contains("[ledger] unreadable, recomputing: "), log)
+  }
+
+  test("PipelineMain ledger counts come from the writes: they equal fresh " +
+      "counts of every stage output, at a bounded number of Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val out = java.nio.file.Files.createTempDirectory("graft_observed").toString
+    val marker = "ledger-spec-drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.job.description") == marker) drained.countDown()
+        else { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      PipelineMain.run(spark, 15, out, 16, resume = false)
+      // the bus delivers in order: once the marker job's start arrives,
+      // every job of the run has been counted
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+
+    val counts = ledgerCounts(out)
+    assert(counts.keySet == Set("transcripts", "series_points", "chunks_raw", "tiers",
+      "profiles", "discovery"))
+    def fresh(table: String) = spark.read.parquet(s"$out/$table").count()
+    for ((stage, table) <- Seq("transcripts" -> "transcripts",
+        "series_points" -> "series_points", "chunks_raw" -> "chunks_raw",
+        "tiers" -> "tiers/m1_full", "profiles" -> "profiles", "discovery" -> "discovery"))
+      assert(counts(stage)._2 == fresh(table), s"$stage rowsOut")
+    assert(counts("series_points")._1 == fresh("transcripts"))
+    assert(counts("tiers")._1 == spark.read.parquet(s"$out/series_points")
+      .where($"kind" === "token_len_t").count())
+    // measured 29 at local[2] (76 before counts came from the writes);
+    // re-reads, inference or summary jobs creeping back push it over
+    assert(jobs.get() <= 32, s"pipeline ran ${jobs.get()} Spark jobs")
+  }
+
   test("PipelineMain kill-resume: a run crashed mid-pipeline resumes to " +
       "outputs content-identical to an uninterrupted run") {
-    import graft.run.{PipelineMain, ResumeBench}
+    import graft.run.ResumeBench
     val out = java.nio.file.Files.createTempDirectory("graft_killresume").toString
-    PipelineMain.run(spark, 15, s"$out/fresh", 16, resume = false)
-    intercept[PipelineMain.SimulatedCrash] {
-      PipelineMain.run(spark, 15, s"$out/killed", 16, resume = false,
-        abortAfter = Some("series_points"))
+    val freshLog = captured(PipelineMain.run(spark, 15, s"$out/fresh", 16, resume = false))
+    val tables = Seq("transcripts", "series_points", "chunks_raw", "tiers/m1_full",
+      "tiers/h1_full", "tiers/d1", "tiers/m1", "tiers/h1", "profiles", "discovery")
+    for (abortAt <- Seq("series_points", "tiers")) {
+      val dir = s"$out/killed_$abortAt"
+      intercept[PipelineMain.SimulatedCrash] {
+        PipelineMain.run(spark, 15, dir, 16, resume = false, abortAfter = Some(abortAt))
+      }
+      val log = captured(PipelineMain.run(spark, 15, dir, 16, resume = true))
+      assert(log.contains(s"[ledger] resume: skipping $abortAt"), log)
+      // the summary of a resumed run takes skipped stages' counts from
+      // the ledger and still prints the uninterrupted run's numbers
+      assert(summary(log) == summary(freshLog))
+      for (table <- tables)
+        assert(ResumeBench.contentHash(spark, s"$out/fresh/$table") ==
+          ResumeBench.contentHash(spark, s"$dir/$table"),
+          s"$table differs after a crash at $abortAt and resume")
+      assert(ledgerCounts(dir) == ledgerCounts(s"$out/fresh"),
+        s"ledger counts differ after a crash at $abortAt and resume")
     }
-    PipelineMain.run(spark, 15, s"$out/killed", 16, resume = true)
-    for (stage <- Seq("series_points", "profiles", "discovery"))
-      assert(ResumeBench.contentHash(spark, s"$out/fresh/$stage") ==
-        ResumeBench.contentHash(spark, s"$out/killed/$stage"),
-        s"stage $stage differs after resume")
+    // every stage skipped: the summary falls back to ledger rows and one
+    // profiles scan
+    val rerun = captured(PipelineMain.run(spark, 15, s"$out/fresh", 16, resume = true))
+    assert(summary(rerun) == summary(freshLog))
   }
 }
