@@ -1,6 +1,6 @@
 package graft.rollup
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import graft.schema.{SeriesPoint, TierAgg}
 
@@ -26,7 +26,7 @@ object Rollup {
   val TierStep: Map[String, Long] = Map(
     "1m" -> MicrosPerMin, "1h" -> 60 * MicrosPerMin, "1d" -> 1440 * MicrosPerMin)
 
-  /** Loud-failure guard for the colocated paths' input contract: within a
+  /** Loud-failure guard for the colocated rollup's input contract: within a
     * partition each (conv, kind) series must arrive as ONE contiguous run
     * with non-decreasing time. A violated contract used to emit split
     * buckets (duplicate rows per bucket) and silently wrong first/last —
@@ -43,7 +43,7 @@ object Rollup {
     * partition's group count, the same order as the aggregation state
     * itself.
     */
-  private final class SortGuard(what: String) {
+  private final class SortGuard {
     private val seen = new java.util.HashSet[String]()
     private var curConv: String = null
     private var curKind: String = null
@@ -52,19 +52,60 @@ object Rollup {
       if (curConv == null || conv != curConv || kind != curKind) {
         if (!seen.add(conv + "\u0000" + kind))
           throw new IllegalArgumentException(
-            s"$what: input is not colocated-sorted — series ($conv, $kind) " +
+            s"rollupAllColocated: input is not colocated-sorted — series ($conv, $kind) " +
               "reappears after other rows in the same partition; feed a " +
               "bucket(conv_id)-partitioned, (conv_id, kind, ts)-sorted table " +
               "or use the generic rollupRaw/rollupTier path")
         curConv = conv; curKind = kind; lastT = Long.MinValue
       } else if (t < lastT)
         throw new IllegalArgumentException(
-          s"$what: input is not time-sorted within ($conv, $kind) — " +
+          s"rollupAllColocated: input is not time-sorted within ($conv, $kind) — " +
             s"timestamp $t arrived after $lastT; feed a (conv_id, kind, ts)-" +
             "sorted table or use the generic rollupRaw/rollupTier path")
       lastT = t
     }
   }
+
+  /** The tier measure set, point → bucket: the one definition of what a
+    * TierAgg row holds. `first`/`last` are the values at the smallest and
+    * largest `t`; which row wins among equal timestamps is not pinned.
+    */
+  private[graft] def fold(value: Column, t: Column): Seq[Column] = Seq(
+    count(lit(1)).as("cnt"),
+    sum(value).as("sum"),
+    min(value).as("min"),
+    max(value).as("max"),
+    min_by(value, t).as("first"),
+    max_by(value, t).as("last"))
+
+  /** The measure set's merge, bucket → bucket: cnt/sum add, min/max
+    * combine, `first` comes from the row with the smallest `firstOrder`
+    * and `last` from the row with the largest `lastOrder` — the finer
+    * bucket, the partial's first/last time, or the base-vs-delta side.
+    */
+  private[graft] def merge(firstOrder: Column, lastOrder: Column): Seq[Column] = Seq(
+    sum(col("cnt")).as("cnt"),
+    sum(col("sum")).as("sum"),
+    min(col("min")).as("min"),
+    max(col("max")).as("max"),
+    min_by(col("first"), firstOrder).as("first"),
+    max_by(col("last"), lastOrder).as("last"))
+
+  /** Column names of the measures in TierAgg order. */
+  private[graft] val Measures: Seq[String] = Seq("cnt", "sum", "min", "max", "first", "last")
+
+  private[graft] def aggregate(grouped: RelationalGroupedDataset,
+      measures: Seq[Column]): DataFrame = grouped.agg(measures.head, measures.tail: _*)
+
+  /** Tag aggregated rows with their tier, in TierAgg column order. */
+  private[graft] def finish(df: DataFrame, tier: String): Dataset[TierAgg] = {
+    import df.sparkSession.implicits._
+    df.withColumn("tier", lit(tier))
+      .select((Seq("conv_id", "kind", "tier", "bucket") ++ Measures).map(col): _*)
+      .as[TierAgg]
+  }
+
+  private def align(bucket: Column, step: Long): Column = bucket - pmod(bucket, lit(step))
 
   /** raw points → 1m tier. `points.bucket` is the event time in µs.
     *
@@ -75,141 +116,67 @@ object Rollup {
     */
   def rollupRaw(points: Dataset[SeriesPoint], tier: String,
       saltBuckets: Int = 1): Dataset[TierAgg] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val step = TierStep(tier)
+    import points.sparkSession.implicits._
+    val keyed = Seq($"conv_id", $"kind", align($"bucket", TierStep(tier)).as("bucket"),
+      $"bucket".as("t"), $"value")
+    val byBucket = Seq($"conv_id", $"kind", $"bucket")
 
-    if (saltBuckets <= 1) {
-      return points
-        .select($"conv_id", $"kind",
-          ($"bucket" - pmod($"bucket", lit(step))).as("bucket"),
-          $"bucket".as("t"), $"value")
-        .groupBy($"conv_id", $"kind", $"bucket")
-        .agg(
-          count(lit(1)).as("cnt"),
-          sum($"value").as("sum"),
-          min($"value").as("min"),
-          max($"value").as("max"),
-          min_by($"value", $"t").as("first"),
-          max_by($"value", $"t").as("last"))
-        .withColumn("tier", lit(tier))
-        .select($"conv_id", $"kind", $"tier", $"bucket",
-          $"cnt", $"sum", $"min", $"max", $"first", $"last")
-        .as[TierAgg]
-    }
+    if (saltBuckets <= 1)
+      return finish(aggregate(points.select(keyed: _*).groupBy(byBucket: _*),
+        fold($"value", $"t")), tier)
 
     // phase 1: partial aggregate per (conv, kind, bucket, salt); the salt
     // derives from the raw bucket so replays are deterministic
-    val partial = points
-      .select($"conv_id", $"kind",
-        ($"bucket" - pmod($"bucket", lit(step))).as("bucket"),
-        $"bucket".as("t"), $"value",
-        pmod(hash($"bucket"), lit(saltBuckets)).as("salt"))
-      .groupBy($"conv_id", $"kind", $"bucket", $"salt")
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum($"value").as("sum"),
-        min($"value").as("min"),
-        max($"value").as("max"),
-        min_by($"value", $"t").as("first"),
-        max_by($"value", $"t").as("last"),
-        min($"t").as("first_t"),
-        max($"t").as("last_t"))
+    val partial = aggregate(
+      points.select(keyed :+ pmod(hash($"bucket"), lit(saltBuckets)).as("salt"): _*)
+        .groupBy(byBucket :+ $"salt": _*),
+      fold($"value", $"t") ++ Seq(min($"t").as("first_t"), max($"t").as("last_t")))
 
     // phase 2: final merge per (conv, kind, bucket)
-    partial
-      .groupBy($"conv_id", $"kind", $"bucket")
-      .agg(
-        sum($"cnt").as("cnt"),
-        sum($"sum").as("sum"),
-        min($"min").as("min"),
-        max($"max").as("max"),
-        min_by($"first", $"first_t").as("first"),
-        max_by($"last", $"last_t").as("last"))
-      .withColumn("tier", lit(tier))
-      .select($"conv_id", $"kind", $"tier", $"bucket",
-        $"cnt", $"sum", $"min", $"max", $"first", $"last")
-      .as[TierAgg]
-  }
-
-  /** Zero-shuffle rollup for conv-bucketed input: when every row of a
-    * conversation lives in one partition (an Iceberg table partitioned by
-    * bucket(conv_id) read with storage-partitioned scans — which the
-    * deterministic generator reproduces), the tier aggregate is a
-    * partition-local hash aggregation, no exchange. This is the plan shape
-    * the engine runs at full scale; `rollupRaw` is the generic-layout
-    * fallback.
-    */
-  def rollupColocated(points: Dataset[SeriesPoint], tier: String): Dataset[TierAgg] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val step = TierStep(tier)
-    // rows arrive sorted (conv_id, kind, bucket) within a partition (table
-    // sort order conv_id, ts) → streaming aggregation with O(1) state
-    points.mapPartitions { it =>
-      new Iterator[TierAgg] {
-        // mutable accumulator: one TierAgg allocation per emitted bucket,
-        // zero per-row allocation
-        private val guard = new SortGuard("rollupColocated")
-        private var conv: String = null
-        private var kind: String = null
-        private var bucket = 0L
-        private var cnt = 0L
-        private var sum, mn, mx, first, last = 0.0
-        private var pending: TierAgg = null
-
-        private def flush(): Unit =
-          if (conv != null)
-            pending = TierAgg(conv, kind, tier, bucket, cnt, sum, mn, mx, first, last)
-
-        private def absorb(p: SeriesPoint): Unit = {
-          guard.check(p.conv_id, p.kind, p.bucket)
-          val b = p.bucket - math.floorMod(p.bucket, step)
-          if (conv == null || conv != p.conv_id || kind != p.kind || bucket != b) {
-            flush()
-            conv = p.conv_id; kind = p.kind; bucket = b
-            cnt = 1L; sum = p.value; mn = p.value; mx = p.value
-            first = p.value; last = p.value
-          } else {
-            cnt += 1; sum += p.value
-            if (p.value < mn) mn = p.value
-            if (p.value > mx) mx = p.value
-            last = p.value
-          }
-        }
-
-        def hasNext: Boolean = pending != null || conv != null || it.hasNext
-        def next(): TierAgg = {
-          while (pending == null && it.hasNext) absorb(it.next())
-          if (pending == null) { flush(); conv = null }
-          val r = pending; pending = null; r
-        }
-      }
-    }
+    finish(aggregate(partial.groupBy(byBucket: _*), merge($"first_t", $"last_t")), tier)
   }
 
   /** Chain: aggregate a finer tier into a coarser one (1m→1h, 1h→1d)
     * without touching raw data.
     */
   def rollupTier(finer: Dataset[TierAgg], tier: String): Dataset[TierAgg] = {
-    val spark = finer.sparkSession
-    import spark.implicits._
-    val step = TierStep(tier)
-    finer
-      .withColumn("fbucket", $"bucket") // finer bucket, for first/last order
-      .groupBy($"conv_id", $"kind",
-        ($"bucket" - pmod($"bucket", lit(step))).as("bucket"))
-      .agg(
-        sum($"cnt").as("cnt"),
-        sum($"sum").as("sum"),
-        min($"min").as("min"),
-        max($"max").as("max"),
-        min_by($"first", $"fbucket").as("first"),
-        max_by($"last", $"fbucket").as("last"))
-      .withColumn("tier", lit(tier))
-      .select($"conv_id", $"kind", $"tier", $"bucket",
-        $"cnt", $"sum", $"min", $"max", $"first", $"last")
-      .as[TierAgg]
+    import finer.sparkSession.implicits._
+    finish(aggregate(
+      finer
+        .withColumn("fbucket", $"bucket") // finer bucket, for first/last order
+        .groupBy($"conv_id", $"kind", align($"bucket", TierStep(tier)).as("bucket")),
+      merge($"fbucket", $"fbucket")), tier)
+  }
+
+  /** Broadcasting more touched keys than this falls back to a shuffle
+    * join: an unguarded broadcast of a huge backfill delta's key set
+    * would OOM the driver long before Spark's own 8 GB broadcast cap
+    * fires. ~4M three-column keys is comfortably inside a few hundred MB
+    * built relation; a real deployment tunes this with its driver size.
+    */
+  val MaxBroadcastKeys: Long = 4L * 1000 * 1000
+
+  /** Deltas whose PLAN-TIME size estimate is under this skip the exact
+    * touched-key count: even if every input row touched a distinct
+    * bucket, the key set is safely broadcastable. Keeps the designed
+    * micro-batch path free of any extra action; only a plausibly
+    * backfill-sized delta pays one count() (amortized by the big job it
+    * gates). Estimates can be wrong, but only by enough to matter when
+    * the input is ALREADY large — which is exactly when they are real
+    * file-scan sizes.
+    */
+  val SmallDeltaBytes: Long = 64L * 1024 * 1024
+
+  /** The touched-key side of an incremental merge: broadcast when the
+    * delta's free size estimate is small or its exact key count is under
+    * `maxBroadcastKeys`, else a plain shuffle join — a backfill must not
+    * ride an unguarded driver broadcast.
+    */
+  private def keySide(delta: Dataset[SeriesPoint], touchedKeys: DataFrame,
+      maxBroadcastKeys: Long, smallDeltaBytes: Long): DataFrame => DataFrame = {
+    val bcast = delta.queryExecution.optimizedPlan.stats.sizeInBytes <= smallDeltaBytes ||
+      touchedKeys.count() <= maxBroadcastKeys
+    df => if (bcast) broadcast(df) else df
   }
 
   /** Incremental continuous-aggregate maintenance: merge a DELTA of
@@ -232,25 +199,6 @@ object Rollup {
     * the delta's key count, not the base's size — enters the merge
     * aggregation.
     */
-  /** Broadcasting more touched keys than this falls back to a shuffle
-    * join: an unguarded broadcast of a huge backfill delta's key set
-    * would OOM the driver long before Spark's own 8 GB broadcast cap
-    * fires. ~4M three-column keys is comfortably inside a few hundred MB
-    * built relation; a real deployment tunes this with its driver size.
-    */
-  val MaxBroadcastKeys: Long = 4L * 1000 * 1000
-
-  /** Deltas whose PLAN-TIME size estimate is under this skip the exact
-    * touched-key count: even if every input row touched a distinct
-    * bucket, the key set is safely broadcastable. Keeps the designed
-    * micro-batch path free of any extra action; only a plausibly
-    * backfill-sized delta pays one count() (amortized by the big job it
-    * gates). Estimates can be wrong, but only by enough to matter when
-    * the input is ALREADY large — which is exactly when they are real
-    * file-scan sizes.
-    */
-  val SmallDeltaBytes: Long = 64L * 1024 * 1024
-
   def maintainTier(base: Dataset[TierAgg], delta: Dataset[SeriesPoint],
       tier: String, saltBuckets: Int = 1,
       maxBroadcastKeys: Long = MaxBroadcastKeys,
@@ -260,19 +208,16 @@ object Rollup {
     // the delta rollup's rows ARE the touched keys (one per (conv, kind,
     // bucket)), so no separate distinct is needed. Left unpersisted: the
     // micro-batch path must stay free of extra jobs and cache encoding
-    // (a lazy persist here measured +0.3 s on q40); the exact count below
-    // recomputes it once, but only on the plausibly-backfill path where
-    // that cost is noise against the job it gates.
+    // (a lazy persist here measured +0.3 s on q40); the exact count in
+    // keySide recomputes it once, but only on the plausibly-backfill path
+    // where that cost is noise against the job it gates.
     val deltaAgg = rollupRaw(delta, tier, saltBuckets)
-    val estBytes = delta.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcast = estBytes <= smallDeltaBytes ||
-      deltaAgg.count() <= maxBroadcastKeys
     val keys = Seq("conv_id", "kind", "bucket")
     val touchedKeys = deltaAgg.select($"conv_id", $"kind", $"bucket")
     // micro-batch ingest (the designed use) broadcasts: base never
     // shuffles. A backfill-sized delta falls back to a shuffle join —
     // slower but bounded by executor memory, not the driver heap.
-    val touched = if (bcast) broadcast(touchedKeys) else touchedKeys
+    val touched = keySide(delta, touchedKeys, maxBroadcastKeys, smallDeltaBytes)(touchedKeys)
     val untouched = base.join(touched, keys, "left_anti").as[TierAgg]
     val affected = base.join(touched, keys, "left_semi").as[TierAgg]
     // src orders first/last across the two sides: the append-only
@@ -282,18 +227,7 @@ object Rollup {
     val merged = affected.toDF().withColumn("src", lit(0))
       .unionByName(deltaAgg.toDF().withColumn("src", lit(1)))
       .groupBy($"conv_id", $"kind", $"bucket")
-      .agg(
-        sum($"cnt").as("cnt"),
-        sum($"sum").as("sum"),
-        min($"min").as("min"),
-        max($"max").as("max"),
-        min_by($"first", $"src").as("first"),
-        max_by($"last", $"src").as("last"))
-      .withColumn("tier", lit(tier))
-      .select($"conv_id", $"kind", $"tier", $"bucket",
-        $"cnt", $"sum", $"min", $"max", $"first", $"last")
-      .as[TierAgg]
-    untouched.unionByName(merged)
+    untouched.unionByName(finish(aggregate(merged, merge($"src", $"src")), tier))
   }
 
   /** Chained incremental maintenance of ALL tiers for one ingest delta:
@@ -324,25 +258,17 @@ object Rollup {
     def refresh(baseCoarse: Dataset[TierAgg], finer: Dataset[TierAgg],
         tier: String): Dataset[TierAgg] = {
       val step = TierStep(tier)
-      // broadcast gated the same two-tier way as maintainTier (free size
-      // estimate, exact count only for plausibly-large deltas) — a
-      // backfill must not ride an unguarded driver broadcast
       val touchedKeys = delta
-        .select($"conv_id", $"kind",
-          ($"bucket" - pmod($"bucket", lit(step))).as("bucket"))
+        .select($"conv_id", $"kind", align($"bucket", step).as("bucket"))
         .distinct()
-      val bcast =
-        delta.queryExecution.optimizedPlan.stats.sizeInBytes <= smallDeltaBytes ||
-          touchedKeys.count() <= maxBroadcastKeys
-      def side(df: org.apache.spark.sql.DataFrame) =
-        if (bcast) broadcast(df) else df
+      val side = keySide(delta, touchedKeys, maxBroadcastKeys, smallDeltaBytes)
       val keys = Seq("conv_id", "kind", "bucket")
       val untouched = baseCoarse
-        .join(side(touchedKeys.toDF()), keys, "left_anti").as[TierAgg]
+        .join(side(touchedKeys), keys, "left_anti").as[TierAgg]
       // affected slice of the finer tier: its rows whose COARSE bucket is
       // touched (join on the derived coarse key, finer bucket preserved)
       val affectedFiner = finer
-        .withColumn("cb", $"bucket" - pmod($"bucket", lit(step)))
+        .withColumn("cb", align($"bucket", step))
         .join(side(touchedKeys.toDF("conv_id", "kind", "cb")),
           Seq("conv_id", "kind", "cb"), "left_semi")
         .drop("cb").as[TierAgg]
@@ -354,60 +280,15 @@ object Rollup {
     (m, h, d)
   }
 
-  /** Zero-shuffle tier chaining for conv-bucketed tiers (see
-    * rollupColocated): merge finer structs into coarser buckets
-    * partition-locally.
-    */
-  def rollupTierColocated(finer: Dataset[TierAgg], tier: String): Dataset[TierAgg] = {
-    val spark = finer.sparkSession
-    import spark.implicits._
-    val step = TierStep(tier)
-    // finer rows arrive sorted (conv, kind, bucket) within a partition
-    // (streaming output of rollupColocated) → streaming merge
-    finer.mapPartitions { it =>
-      new Iterator[TierAgg] {
-        private val guard = new SortGuard("rollupTierColocated")
-        private var conv: String = null
-        private var kind: String = null
-        private var bucket = 0L
-        private var cnt = 0L
-        private var sum, mn, mx, first, last = 0.0
-        private var pending: TierAgg = null
-
-        private def flush(): Unit =
-          if (conv != null)
-            pending = TierAgg(conv, kind, tier, bucket, cnt, sum, mn, mx, first, last)
-
-        private def absorb(r: TierAgg): Unit = {
-          guard.check(r.conv_id, r.kind, r.bucket)
-          val b = r.bucket - math.floorMod(r.bucket, step)
-          if (conv == null || conv != r.conv_id || kind != r.kind || bucket != b) {
-            flush()
-            conv = r.conv_id; kind = r.kind; bucket = b
-            cnt = r.cnt; sum = r.sum; mn = r.min; mx = r.max
-            first = r.first; last = r.last
-          } else {
-            cnt += r.cnt; sum += r.sum
-            if (r.min < mn) mn = r.min
-            if (r.max > mx) mx = r.max
-            last = r.last
-          }
-        }
-
-        def hasNext: Boolean = pending != null || conv != null || it.hasNext
-        def next(): TierAgg = {
-          while (pending == null && it.hasNext) absorb(it.next())
-          if (pending == null) { flush(); conv = null }
-          val r = pending; pending = null; r
-        }
-      }
-    }
-  }
-
-  /** Fused single-scan rollup for conv-bucketed sorted input: one pass
-    * emits the 1m, 1h, and 1d tiers together by cascading each finished
-    * fine bucket into the coarser accumulator — no intermediate
-    * materialization between tiers.
+  /** Zero-shuffle rollup for conv-bucketed sorted input: when every row of
+    * a conversation lives in one partition, sorted by (conv_id, kind,
+    * bucket) — an Iceberg table partitioned by bucket(conv_id) read with
+    * storage-partitioned scans, which the deterministic generator
+    * reproduces — one partition-local pass emits the 1m, 1h and 1d tiers
+    * together by cascading each finished fine bucket into the coarser
+    * accumulator: no exchange, no intermediate materialization between
+    * tiers. This is the plan shape the engine runs at full scale;
+    * `rollupRaw`/`rollupTier` are the generic-layout fallback.
     */
   def rollupAllColocated(points: Dataset[SeriesPoint]): Dataset[TierAgg] = {
     val spark = points.sparkSession
@@ -415,6 +296,8 @@ object Rollup {
     val steps = Array("1m" -> TierStep("1m"), "1h" -> TierStep("1h"), "1d" -> TierStep("1d"))
     points.mapPartitions { it =>
       new Iterator[TierAgg] {
+        // one open bucket per level, zero per-row allocation: the row-level
+        // form of fold/merge
         private val L = steps.length
         private val conv = new Array[String](L)
         private val kind = new Array[String](L)
@@ -426,21 +309,24 @@ object Rollup {
         private val first = new Array[Double](L)
         private val last = new Array[Double](L)
         private val queue = new scala.collection.mutable.ArrayDeque[TierAgg](4)
-        private val guard = new SortGuard("rollupAllColocated")
+        private val guard = new SortGuard
 
         /** flush level l into the queue and cascade into level l+1. */
         private def flush(l: Int): Unit = {
           if (conv(l) == null) return
           queue.append(TierAgg(conv(l), kind(l), steps(l)._1, bucket(l),
             cnt(l), sum(l), mn(l), mx(l), first(l), last(l)))
-          if (l + 1 < L) mergeUp(l + 1, conv(l), kind(l), bucket(l),
+          if (l + 1 < L) merge(l + 1, conv(l), kind(l), bucket(l),
             cnt(l), sum(l), mn(l), mx(l), first(l), last(l))
           conv(l) = null
         }
 
-        private def mergeUp(l: Int, c: String, k: String, fineBucket: Long,
+        /** merge measures at time t into level l's open bucket; a point is
+          * merge(0, c, k, t, 1, v, v, v, v, v).
+          */
+        private def merge(l: Int, c: String, k: String, t: Long,
             n: Long, s: Double, lo: Double, hi: Double, f: Double, la: Double): Unit = {
-          val b = fineBucket - math.floorMod(fineBucket, steps(l)._2)
+          val b = t - math.floorMod(t, steps(l)._2)
           if (conv(l) == null || conv(l) != c || kind(l) != k || bucket(l) != b) {
             flush(l)
             conv(l) = c; kind(l) = k; bucket(l) = b
@@ -454,27 +340,14 @@ object Rollup {
           }
         }
 
-        private def absorb(p: SeriesPoint): Unit = {
-          guard.check(p.conv_id, p.kind, p.bucket)
-          val b = p.bucket - math.floorMod(p.bucket, steps(0)._2)
-          if (conv(0) == null || conv(0) != p.conv_id || kind(0) != p.kind ||
-              bucket(0) != b) {
-            flush(0)
-            conv(0) = p.conv_id; kind(0) = p.kind; bucket(0) = b
-            cnt(0) = 1L; sum(0) = p.value; mn(0) = p.value; mx(0) = p.value
-            first(0) = p.value; last(0) = p.value
-          } else {
-            cnt(0) += 1; sum(0) += p.value
-            if (p.value < mn(0)) mn(0) = p.value
-            if (p.value > mx(0)) mx(0) = p.value
-            last(0) = p.value
-          }
-        }
-
         def hasNext: Boolean =
           queue.nonEmpty || conv.exists(_ != null) || it.hasNext
         def next(): TierAgg = {
-          while (queue.isEmpty && it.hasNext) absorb(it.next())
+          while (queue.isEmpty && it.hasNext) {
+            val p = it.next()
+            guard.check(p.conv_id, p.kind, p.bucket)
+            merge(0, p.conv_id, p.kind, p.bucket, 1L, p.value, p.value, p.value, p.value, p.value)
+          }
           if (queue.isEmpty) (0 until L).foreach(flush) // end of partition
           queue.removeHead()
         }

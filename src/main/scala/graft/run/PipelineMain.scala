@@ -76,7 +76,7 @@ object PipelineMain {
 
     maybeAbort("chunks_raw")
 
-    // stage 4: continuous aggregates 1m -> 1h -> 1d (chained, salted),
+    // stage 4: continuous aggregates 1m -> 1h -> 1d (chained, unsalted),
     // then retention: coarse tiers are derived from the FULL fine tier
     // first, after which the fine tiers keep only their horizon
     // (1m: 3 days, 1h: 30 days, 1d: forever — the north rule's

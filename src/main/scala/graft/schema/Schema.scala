@@ -31,7 +31,7 @@ final case class SeriesPoint(
 final case class TierAgg(
     conv_id: String,
     kind: String,
-    tier: String, // raw | 1m | 1h | 1d
+    tier: String, // 1m | 1h | 1d
     bucket: Long, // epoch micros of bucket start
     cnt: Long,
     sum: Double,

@@ -174,7 +174,7 @@ object Derive {
   }
 
   /** Zero-shuffle assemble for conv-bucketed input (all rows of a
-    * conversation in one partition, e.g. after Rollup.rollupColocated):
+    * conversation in one partition, e.g. a bucket(conv_id) table scan):
     * partition-local grouping, no exchange.
     */
   def assembleColocated(points: Dataset[SeriesPoint])

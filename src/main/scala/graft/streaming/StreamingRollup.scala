@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import graft.rollup.Rollup
 import graft.schema.Transcript
 
 /** Structured-Streaming variant of the 1m tier: continuous per-minute
@@ -20,38 +21,25 @@ object StreamingRollup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingRollup")
 
-  /** Per-minute continuous aggregate over a streaming transcript source. */
-  def minuteTier(stream: Dataset[Transcript], lateness: String = "10 minutes"): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .withWatermark("ts", lateness)
-      .groupBy($"conv_id", window($"ts", "1 minute").as("bucket"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
-      .select($"conv_id", unix_micros($"bucket.start").as("bucket"),
-        $"cnt", $"sum", $"min", $"max")
-  }
+  /** Per-minute continuous aggregate over a streaming transcript source,
+    * one row per (conv_id, bucket start) with the TierAgg measures.
+    */
+  def minuteTier(stream: Dataset[Transcript], lateness: String = "10 minutes"): DataFrame =
+    flat(minuteTierWindowed(stream, lateness), "w1m")
 
   /** The 1m tier KEEPING the event-time window struct, so a second
     * stateful aggregation can chain on it (Spark's multiple-stateful-
     * operator support propagates the watermark through the first window
     * aggregate when the next groupBy windows over the window column
-    * itself).
+    * itself). The value is the turn's text length.
     */
   def minuteTierWindowed(stream: Dataset[Transcript],
       lateness: String = "10 minutes"): DataFrame = {
     import stream.sparkSession.implicits._
-    stream
-      .withWatermark("ts", lateness)
-      .groupBy($"conv_id", window($"ts", "1 minute").as("w1m"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
+    Rollup.aggregate(
+      stream.withWatermark("ts", lateness)
+        .groupBy($"conv_id", window($"ts", "1 minute").as("w1m")),
+      Rollup.fold(length($"text").cast("double"), $"ts"))
   }
 
   /** 1h tier chained DIRECTLY on the streaming 1m aggregate — the
@@ -60,32 +48,23 @@ object StreamingRollup {
     * sink. `window($"w1m", "1 hour")` windows over the minute window
     * column, which is what lets the engine propagate the event-time
     * watermark through the first aggregate: an hour bucket finalizes
-    * exactly when its last minute bucket can no longer change. cnt/sum/
-    * min/max are all mergeable partial aggregates, so a finalized 1h row
-    * is identical whether fed by streaming 1m output or a batch rollup
-    * over the same accepted rows — gated by StreamingSpec across
-    * micro-batch boundaries.
+    * exactly when its last minute bucket can no longer change. The
+    * measures merge as in the batch tiers (first/last ordered by minute
+    * start), so a finalized 1h row is identical whether fed by streaming
+    * 1m output or a batch rollup over the same accepted rows — gated by
+    * StreamingSpec across micro-batch boundaries.
     */
-  def hourTierChained(m1Windowed: DataFrame): DataFrame = {
-    val spark = m1Windowed.sparkSession
-    import spark.implicits._
-    hourTierWindowed(m1Windowed)
-      .select($"conv_id", unix_micros($"w1h.start").as("bucket"),
-        $"cnt", $"sum", $"min", $"max")
-  }
+  def hourTierChained(m1Windowed: DataFrame): DataFrame =
+    flat(hourTierWindowed(m1Windowed), "w1h")
 
   /** The 1h tier KEEPING its window struct — the middle link of the
     * three-stateful-operator cascade: a third aggregate can window over
     * `w1h` exactly as this one windows over `w1m`.
     */
-  def hourTierWindowed(m1Windowed: DataFrame): DataFrame = {
-    val spark = m1Windowed.sparkSession
-    import spark.implicits._
-    m1Windowed
-      .groupBy($"conv_id", window($"w1m", "1 hour").as("w1h"))
-      .agg(sum($"cnt").as("cnt"), sum($"sum").as("sum"),
-        min($"min").as("min"), max($"max").as("max"))
-  }
+  def hourTierWindowed(m1Windowed: DataFrame): DataFrame =
+    Rollup.aggregate(
+      m1Windowed.groupBy(col("conv_id"), window(col("w1m"), "1 hour").as("w1h")),
+      Rollup.merge(col("w1m.start"), col("w1m.start")))
 
   /** 1d tier chained on the streaming 1h aggregate: the FULL continuous
     * cascade raw→1m→1h→1d as ONE streaming query with THREE stateful
@@ -93,21 +72,22 @@ object StreamingRollup {
     * window column (`window(w1h, "1 day")`), which is what lets the
     * engine propagate the watermark through every aggregate: a day
     * bucket finalizes when its last hour bucket can no longer change,
-    * which happens when that hour's last minute is sealed. All four
+    * which happens when that hour's last minute is sealed. All six
     * measures are mergeable partials, so a finalized 1d row is identical
     * to the batch rollup over the same accepted rows — gated across
     * micro-batch boundaries in StreamingSpec.
     */
-  def dayTierChained(h1Windowed: DataFrame): DataFrame = {
-    val spark = h1Windowed.sparkSession
-    import spark.implicits._
-    h1Windowed
-      .groupBy($"conv_id", window($"w1h", "1 day").as("w1d"))
-      .agg(sum($"cnt").as("cnt"), sum($"sum").as("sum"),
-        min($"min").as("min"), max($"max").as("max"))
-      .select($"conv_id", unix_micros($"w1d.start").as("bucket"),
-        $"cnt", $"sum", $"min", $"max")
-  }
+  def dayTierChained(h1Windowed: DataFrame): DataFrame =
+    flat(Rollup.aggregate(
+      h1Windowed.groupBy(col("conv_id"), window(col("w1h"), "1 day").as("w1d")),
+      Rollup.merge(col("w1h.start"), col("w1h.start"))), "w1d")
+
+  /** A windowed tier as flat rows: the window struct becomes its start in
+    * epoch µs, the TierAgg bucket key.
+    */
+  private def flat(windowed: DataFrame, w: String): DataFrame =
+    windowed.select(col("conv_id") +: unix_micros(col(s"$w.start")).as("bucket") +:
+      Rollup.Measures.map(col): _*)
 
   /** Per-conversation retained series for the stateful streaming path:
     * `offset` keeps window positions stable across retention trims;

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.ingest.TranscriptGen
-import graft.schema.Transcript
+import graft.rollup.Rollup
+import graft.schema.{SeriesPoint, Transcript}
 import graft.streaming.StreamingRollup
 
 /** Structured-Streaming 1m tier: streamed aggregates equal the batch
@@ -24,6 +25,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** The accepted rows as batch rollup input: one series per
+    * conversation (kind held constant), valued by text length.
+    */
+  private def points(rows: Seq[Transcript]): Dataset[SeriesPoint] = {
+    import spark.implicits._
+    spark.createDataset(rows).select($"conv_id", lit("len").as("kind"),
+      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
+      .as[SeriesPoint]
+  }
+
+  /** A tier's finalized rows (bucket end at or before `cutoff`) in the
+    * streamed tiers' column order.
+    */
+  private def closed(tier: DataFrame, step: Long, cutoff: Long): Array[Row] =
+    tier.where(col("bucket") + step <= cutoff).orderBy("conv_id", "bucket")
+      .select((Seq("conv_id", "bucket") ++ Rollup.Measures).map(col): _*).collect()
+
   test("streamed 1m tier equals batch rollup (AvailableNow, memory sink)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -37,24 +55,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = StreamingRollup.start(tier, "memory", None, "m1_stream", cp)
     q.awaitTermination()
 
-    val streamed = spark.table("m1_stream")
-      .orderBy("conv_id", "bucket").collect()
-
     // append mode finalizes only buckets past the watermark: buckets whose
     // end <= max(ts) - lateness close; the in-flight tail stays open
     val maxTs = rows.map(_.ts.getTime).max * 1000L
     val cutoff = maxTs - 10L * 60 * 1000000
-    val batch = spark.createDataset(rows)
-      .groupBy($"conv_id",
-        unix_micros(date_trunc("minute", $"ts")).as("bucket"))
-      .agg(count(lit(1)).as("cnt"), sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
-      .where($"bucket" + 60000000L <= cutoff)
-      .orderBy("conv_id", "bucket").collect()
+    val step = Rollup.TierStep("1m")
+    val batch = closed(Rollup.rollupRaw(points(rows), "1m").toDF(), step, cutoff)
 
-    assert(batch.length > 0 && streamed.length >= batch.length)
-    val streamedClosed = streamed.filter(_.getLong(1) + 60000000L <= cutoff)
+    assert(batch.length > 0 && spark.table("m1_stream").count() >= batch.length)
+    val streamedClosed = closed(spark.table("m1_stream"), step, cutoff)
     assert(streamedClosed.length == batch.length,
       s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
     streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
@@ -84,41 +93,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.table("h1_chained")
-      .orderBy("conv_id", "bucket").collect()
-
     // append mode finalizes an hour bucket once the watermark passes its
     // end: final watermark = max(ts) - lateness
     val maxTs = rows.map(_.ts.getTime).max * 1000L
     val cutoff = maxTs - 10L * 60 * 1000000
-    val batch = spark.createDataset(rows)
-      .groupBy($"conv_id",
-        unix_micros(date_trunc("hour", $"ts")).as("bucket"))
-      .agg(count(lit(1)).as("cnt"), sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
-      .where($"bucket" + 3600000000L <= cutoff)
-      .orderBy("conv_id", "bucket").collect()
-
-    assert(batch.length > 0, "fixture must close at least one hour bucket")
-    val streamedClosed = streamed.filter(_.getLong(1) + 3600000000L <= cutoff)
-    assert(streamedClosed.length == batch.length,
-      s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
-    streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
-    // and the chained 1h rows equal rolling up the BATCH 1m tier — the
-    // tier-cascade identity (1h-from-1m == 1h-from-raw) under streaming
-    val viaM1 = spark.createDataset(rows)
-      .groupBy($"conv_id", unix_micros(date_trunc("minute", $"ts")).as("m"))
-      .agg(count(lit(1)).as("cnt"), sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
-      .groupBy($"conv_id", ($"m" - pmod($"m", lit(3600000000L))).as("bucket"))
-      .agg(sum($"cnt").as("cnt"), sum($"sum").as("sum"),
-        min($"min").as("min"), max($"max").as("max"))
-      .where($"bucket" + 3600000000L <= cutoff)
-      .orderBy("conv_id", "bucket").collect()
-    assert(viaM1.length == streamedClosed.length)
-    streamedClosed.zip(viaM1).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+    val step = Rollup.TierStep("1h")
+    val streamedClosed = closed(spark.table("h1_chained"), step, cutoff)
+    // the batch 1h tier straight from raw, and rolled up from the batch 1m
+    // tier — the tier-cascade identity (1h-from-1m == 1h-from-raw)
+    val pts = points(rows)
+    for (want <- Seq(Rollup.rollupRaw(pts, "1h"),
+        Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"))) {
+      val batch = closed(want.toDF(), step, cutoff)
+      assert(batch.length > 0, "fixture must close at least one hour bucket")
+      assert(streamedClosed.length == batch.length,
+        s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
+      streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+    }
   }
 
   test("chained 1d tier (THREE stateful operators, one query) finalizes " +
@@ -152,26 +143,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.table("d1_chained")
-      .orderBy("conv_id", "bucket").collect()
-
     val maxTs = rows.map(_.ts.getTime).max * 1000L
     val cutoff = maxTs - 10L * 60 * 1000000
-    val dayMicros = 86400000000L
-    val batch = spark.createDataset(rows)
-      .groupBy($"conv_id",
-        unix_micros(date_trunc("day", $"ts")).as("bucket"))
-      .agg(count(lit(1)).as("cnt"), sum(length($"text")).cast("double").as("sum"),
-        min(length($"text")).cast("double").as("min"),
-        max(length($"text")).cast("double").as("max"))
-      .where($"bucket" + dayMicros <= cutoff)
-      .orderBy("conv_id", "bucket").collect()
-
-    assert(batch.length > 0, "fixture must close at least one day bucket")
-    val streamedClosed = streamed.filter(_.getLong(1) + dayMicros <= cutoff)
-    assert(streamedClosed.length == batch.length,
-      s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
-    streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+    val step = Rollup.TierStep("1d")
+    val streamedClosed = closed(spark.table("d1_chained"), step, cutoff)
+    val pts = points(rows)
+    for (want <- Seq(Rollup.rollupRaw(pts, "1d"),
+        Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"), "1d"))) {
+      val batch = closed(want.toDF(), step, cutoff)
+      assert(batch.length > 0, "fixture must close at least one day bucket")
+      assert(streamedClosed.length == batch.length,
+        s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
+      streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+    }
   }
 
   test("streaming left profile (flatMapGroupsWithState) equals the batch " +
