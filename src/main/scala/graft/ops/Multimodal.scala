@@ -265,7 +265,7 @@ object Multimodal {
     // task retry, unlike round-robin) only when the scan is under-parallel;
     // a large corpus already has enough splits and skips the shuffle.
     // Spread width 8, not defaultParallelism: the codecs cost ~0.1 ms/row
-    // (MediaMicro), so 8-way covers the compute, while the repartition's
+    // outside Spark, so 8-way covers the compute, while the repartition's
     // partitioning propagates through caches to EVERY downstream stage of
     // the media queries — at tiny scale each extra partition is a
     // near-empty task paying fixed launch/deserialization cost.

@@ -1,6 +1,5 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup-pipeline throughput at bench scale: the driver queries exercise
@@ -17,7 +16,11 @@ import org.apache.spark.sql.functions._
   * + 1 near pair — asserted, so the bench is also an at-scale
   * correctness gate.
   *
-  * Usage: runMain graft.run.DedupBench [nDocs] [wordsPerDoc]
+  * The `kernels` leg times the signature kernels alone (minhashSignature,
+  * simhash; best of 3) on the same corpus: kernel changes show only at
+  * 100k+ docs, where the md5 loop is >90% of task time.
+  *
+  * Usage: runMain graft.run.DedupBench [kernels] [nDocs] [wordsPerDoc]
   */
 object DedupBench {
 
@@ -46,33 +49,18 @@ object DedupBench {
   }
 
   def main(args: Array[String]): Unit = {
+    val kernels = args.headOption.contains("kernels")
+    val rest = if (kernels) args.drop(1) else args
     // round down to a whole number of 10-doc groups: a partial trailing
     // group would plant extra exact clones (slots 7/9) that the
     // expected-count check below doesn't model
-    val n = (if (args.length > 0) args(0).toInt else 100000) / 10 * 10
-    val words = if (args.length > 1) args(1).toInt else 80
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val n = (if (rest.length > 0) rest(0).toInt else 100000) / 10 * 10
+    val words = if (rest.length > 1) rest(1).toInt else 80
+    val spark = Harness.session("graft-dedup-bench")
     import spark.implicits._
-
-    // shuffle accounting (r5 verdict #6): total + peak-stage shuffle write
-    // tells whether the banding exchange stays bounded as the corpus grows
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufflePeak = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val b = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleTotal.addAndGet(b)
-        shufflePeak.accumulateAndGet(b, Math.max(_, _))
-        ()
-      }
-    })
+    // shuffle accounting: total + peak-stage shuffle write tells whether
+    // the banding exchange stays bounded as the corpus grows
+    val metrics = new Harness.StageMetrics(spark)
 
     val ld = graft.Bench.load1()
     val docs = spark.range(0, n.toLong, 1,
@@ -84,36 +72,42 @@ object DedupBench {
     val cached = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cached.count()
 
-    val t0 = System.nanoTime()
-    val pairs = graft.ops.Dedup.pipeline(cached, threshold = 0.5)
-      .groupBy($"kind").agg(count(lit(1)).as("cnt"))
-      .as[(String, Long)].collect().toMap
-    val sec = (System.nanoTime() - t0) / 1e9
+    if (kernels) {
+      def time(what: String)(body: => Long): Unit = {
+        val secs = (1 to 3).map { _ =>
+          val (rows, dt) = Harness.timed(body)
+          graft.util.StageCache.release(spark)
+          require(rows == n, s"$what returned $rows rows, expected $n")
+          dt
+        }
+        val best = secs.min
+        println(f"[dedup-bench] kernel=$what docs=$n words=$words " +
+          f"cpus=${spark.sparkContext.defaultParallelism} best=$best%.3f " +
+          f"reps=${secs.map(s => f"$s%.3f").mkString(",")} docs_per_sec=${n / best}%.0f")
+      }
+      time("minhash_signature")(graft.ops.Dedup.minhashSignature(cached, "text").count())
+      time("simhash")(graft.ops.Dedup.simhash(cached).count())
+    } else {
+      val (pairs, sec) = Harness.timed(graft.ops.Dedup.pipeline(cached, threshold = 0.5)
+        .groupBy($"kind").agg(count(lit(1)).as("cnt"))
+        .as[(String, Long)].collect().toMap)
 
-    val groups = n / 10
-    val exactPairs = pairs.getOrElse("exact", 0L)
-    val nearPairs = pairs.getOrElse("near", 0L)
-    // at-scale correctness: every planted relation must surface
-    require(exactPairs == 2L * groups,
-      s"expected ${2L * groups} exact links, got $exactPairs")
-    require(nearPairs >= groups,
-      s"expected >= $groups near pairs (planted), got $nearPairs")
-    // listener events drain asynchronously; poll until the totals settle
-    // so the shuffle numbers cover every completed stage of the pipeline
-    var settled = false
-    var lastSeen = -1L
-    val drainDeadline = System.nanoTime() + 10L * 1000000000L
-    while (!settled && System.nanoTime() < drainDeadline) {
-      val cur = shuffleTotal.get
-      if (cur == lastSeen) settled = true
-      else { lastSeen = cur; Thread.sleep(300) }
+      val groups = n / 10
+      val exactPairs = pairs.getOrElse("exact", 0L)
+      val nearPairs = pairs.getOrElse("near", 0L)
+      // at-scale correctness: every planted relation must surface
+      require(exactPairs == 2L * groups,
+        s"expected ${2L * groups} exact links, got $exactPairs")
+      require(nearPairs >= groups,
+        s"expected >= $groups near pairs (planted), got $nearPairs")
+      val m = metrics.drain()
+      val capDrops = graft.ops.CapBucketsLog.lastOverCount("minhashLsh").getOrElse(0L)
+      println(f"[dedup-bench] docs=$n words=$words wall=$sec%.1fs " +
+        f"docs/s=${n / sec}%.3e exact_pairs=$exactPairs near_pairs=$nearPairs " +
+        f"shuffle_total_mb=${m.shuffleWrite / 1048576.0}%.1f " +
+        f"shuffle_peak_stage_mb=${m.peakStageShuffleWrite / 1048576.0}%.1f " +
+        f"lsh_bucket_cap_drops=$capDrops load1=$ld%.2f")
     }
-    val capDrops = graft.ops.CapBucketsLog.lastOverCount("minhashLsh").getOrElse(0L)
-    println(f"[dedup-bench] docs=$n words=$words wall=$sec%.1fs " +
-      f"docs/s=${n / sec}%.3e exact_pairs=$exactPairs near_pairs=$nearPairs " +
-      f"shuffle_total_mb=${shuffleTotal.get / 1048576.0}%.1f " +
-      f"shuffle_peak_stage_mb=${shufflePeak.get / 1048576.0}%.1f " +
-      f"lsh_bucket_cap_drops=$capDrops load1=$ld%.2f")
     graft.util.StageCache.release(spark)
     cached.unpersist()
     spark.stop()

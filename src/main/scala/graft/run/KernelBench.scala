@@ -28,9 +28,7 @@ object KernelBench {
       var loads = Vector.empty[Double]
       for (_ <- 1 to 3) {
         loads :+= graft.Bench.load1()
-        val t0 = System.nanoTime()
-        body
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
+        best = math.min(best, Harness.timed(body)._2)
       }
       val loadStr = loads.map(l => f"$l%.1f").mkString("/")
       println(f"$name%-10s n=$n w=$w: $best%.3f s  (${denom / best}%.0f " +

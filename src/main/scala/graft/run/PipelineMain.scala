@@ -154,17 +154,8 @@ object PipelineMain {
     val numConvs = if (args.length > 0) args(0).toInt else 200
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val w = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, numConvs, outDir, w, resume = sys.env.get("GRAFT_NO_RESUME").isEmpty)
+    val spark = Harness.session("graft-pipeline")
+    run(spark, numConvs, outDir, w)
     spark.stop()
   }
 }

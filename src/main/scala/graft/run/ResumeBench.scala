@@ -45,38 +45,25 @@ object ResumeBench {
     val numConvs = if (args.length > 0) args(0).toInt else 400
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_resume_bench"
     val w = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-resume-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-resume-bench")
 
     val dirFresh = s"$outDir/fresh"
     val dirKill = s"$outDir/killed"
     val completed = Seq("transcripts", "series_points", "chunks_raw", "tiers")
     val finals = Seq("profiles", "discovery")
 
-    var t0 = System.nanoTime()
-    PipelineMain.run(spark, numConvs, dirFresh, w, resume = false)
-    val freshSec = (System.nanoTime() - t0) / 1e9
-
-    t0 = System.nanoTime()
-    val crashed =
+    val (_, freshSec) =
+      Harness.timed(PipelineMain.run(spark, numConvs, dirFresh, w, resume = false))
+    val (crashed, abortedSec) = Harness.timed {
       try { PipelineMain.run(spark, numConvs, dirKill, w, resume = false,
         abortAfter = Some("tiers")); false }
       catch { case _: PipelineMain.SimulatedCrash => true }
-    val abortedSec = (System.nanoTime() - t0) / 1e9
+    }
     require(crashed, "expected the simulated crash after 'tiers'")
 
     val mtimesBefore = completed.map(s => s -> mtime(s"$dirKill/$s")).toMap
-    t0 = System.nanoTime()
-    PipelineMain.run(spark, numConvs, dirKill, w, resume = true)
-    val resumeSec = (System.nanoTime() - t0) / 1e9
+    val (_, resumeSec) =
+      Harness.timed(PipelineMain.run(spark, numConvs, dirKill, w, resume = true))
 
     val untouched = completed.filter(s => mtime(s"$dirKill/$s") == mtimesBefore(s))
     val hashesEqual = (completed.filterNot(_ == "tiers") ++ finals).forall { s =>

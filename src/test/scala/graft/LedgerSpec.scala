@@ -113,28 +113,14 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("PipelineMain ledger counts come from the writes: they equal fresh " +
       "counts of every stage output, at a bounded number of Spark jobs") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val out = java.nio.file.Files.createTempDirectory("graft_observed").toString
-    val marker = "ledger-spec-drain"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.job.description") == marker) drained.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      PipelineMain.run(spark, 15, out, 16, resume = false)
-      // the bus delivers in order: once the marker job's start arrives,
-      // every job of the run has been counted
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
+    val metrics = new graft.run.Harness.StageMetrics(spark)
+    val jobs =
+      try {
+        val before = metrics.drain()
+        PipelineMain.run(spark, 15, out, 16, resume = false)
+        metrics.drain().since(before).jobs
+      } finally metrics.close()
 
     val counts = ledgerCounts(out)
     assert(counts.keySet == Set("transcripts", "series_points", "chunks_raw", "tiers",
@@ -149,7 +135,7 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where($"kind" === "token_len_t").count())
     // measured 29 at local[2] (76 before counts came from the writes);
     // re-reads, inference or summary jobs creeping back push it over
-    assert(jobs.get() <= 32, s"pipeline ran ${jobs.get()} Spark jobs")
+    assert(jobs <= 32, s"pipeline ran $jobs Spark jobs")
   }
 
   test("PipelineMain kill-resume: a run crashed mid-pipeline resumes to " +

@@ -269,27 +269,21 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // mode trades extra build-time jobs for race-free materialization and
     // is exercised by the StageCache-level specs.
     assume(!sys.env.get("SPARK_GRAFT_EAGER_PERSIST").contains("1"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     // one 12-clone degenerate group: every band bucket of the clones
     // exceeds maxBucket=3 and must be dropped (and counted)
     val docs = ((0 until 12).map(i =>
       (i.toLong, "alpha beta gamma delta epsilon zeta")) ++
       (0 until 8).map(i => (100L + i, s"unique text number $i with words ${i * 7}")))
       .toDF("doc_id", "text")
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = new graft.run.Harness.StageMetrics(spark)
     try {
+      val before = metrics.drain()
       val df = graft.ops.Dedup.minhashLsh(docs, maxBucket = 3)
-      Thread.sleep(1500) // listener bus is async; drain before asserting
-      assert(jobs.get() == 0,
-        s"building the dedup plan must not run any Spark job (ran ${jobs.get()})")
+      val jobs = metrics.drain().since(before).jobs
+      assert(jobs == 0,
+        s"building the dedup plan must not run any Spark job (ran $jobs)")
       df.count() // the single action
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally metrics.close()
     // the accumulator ticks on the broadcast-side aggregation; assert the
     // count arrived without any extra eager action (delivery is async)
     var tries = 0
