@@ -1,6 +1,7 @@
 package graft.dist
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.functions.col
 import graft.kernels.{Mpx, Stomp}
 import graft.schema.MpProfileRow
 
@@ -8,19 +9,25 @@ import graft.schema.MpProfileRow
   *
   * The parallel axis is (conversation, kind, tier, window) —
   * embarrassingly parallel, one kernel call per series (or per
-  * (series, window) for SKIMP). Series longer than `splitThreshold`
-  * additionally split *within* the series into halo'd 2-D tiles — MPX:
-  * (row-block × diagonal-block); STOMP: (row-block × col-block); AB join:
-  * (signed-diagonal-block × B-position-block) — where every task receives
-  * ONLY its tile's slice (≤ 2·tileSize+w−1 points, never the whole
-  * series) and emits a profile SEGMENT that the offset-aware ProfileMerge
-  * Aggregators reduce (the reference's per-thread buffers and batch
-  * merge — cympx.pyx:72-73, stomp.py:340-357 — lifted to partition
-  * granularity).
+  * (series, window) for SKIMP). Every entry point runs through one
+  * fan-out ([[fanOut]]):
+  *   - a series (or AB pair) shorter than `splitThreshold` runs its whole
+  *     kernel and finalizes in the scan stage: zero exchanges;
+  *   - a longer one splits *within* the series into halo'd 2-D tiles —
+  *     MPX: (row-block × diagonal-block); STOMP: (row-block × col-block);
+  *     AB join: (signed-diagonal-block × B-position-block) — where every
+  *     task receives ONLY its tile's slice (≤ 2·tileSize+w−1 points, never
+  *     the whole series). One exchange spreads the tiles; each emits a
+  *     profile [[Segment]] that a [[ProfileMerge]] Aggregator reduces with
+  *     its kernel's offset-aware merge in a second, map-side-combined
+  *     exchange (the reference's per-thread buffers and batch merge —
+  *     cympx.pyx:72-73, stomp.py:340-357 — lifted to partition
+  *     granularity).
   *
-  * Short and long series flow through ONE plan: a short series emits a
-  * single complete partial (merge is identity on it), a long series one
-  * segment per tile — one input scan, one shuffle, map-side combine.
+  * The two branches scan the input separately, so the input passes
+  * through [[graft.util.StageCache.forked]] (persisted when a rescan would
+  * recompute a derived upstream). A caller-known `maxSeriesLen` below
+  * `splitThreshold` drops the tile branch, and with it the fork guard.
   * Each tile re-derives its seed state from its own slice (muinvn stats +
   * O(w) per-diagonal seeds for MPX, one FFT over the column slice for
   * STOMP) exactly like the reference's non-zero batches
@@ -31,6 +38,31 @@ object DistributedMp {
 
   final case class SeriesRow(conv_id: String, kind: String, startBucket: Long,
       values: Array[Double])
+
+  /** The fan-out every entry point shares. `cells` expands an input row
+    * into its eligible kernel calls; a row whose `size` is under
+    * `splitThreshold` computes each cell with `whole`, a longer one cuts
+    * each cell into `tiles`, which are spread across tasks by the
+    * `spreadBy` columns and reduced by `merge`. `maxSeriesLen`, a
+    * caller-known upper bound on `size`, drops the tile subtree — an
+    * exchange plus a merge aggregation over zero rows — when it proves
+    * every row short.
+    */
+  private def fanOut[I, C, T: Encoder, O: Encoder](in: Dataset[I],
+      splitThreshold: Int, maxSeriesLen: Int)(size: I => Int, cells: I => Iterator[C])(
+      whole: C => O, tiles: C => Iterator[T], spreadBy: String*)(
+      merge: Dataset[T] => Dataset[O]): Dataset[O] = {
+    val shortOnly = maxSeriesLen > 0 && maxSeriesLen < splitThreshold
+    // single consumer when the tile branch is dropped: no fork, no persist
+    val rows = if (shortOnly) in else graft.util.StageCache.forked(in)
+    val shortRows = rows.flatMap { r =>
+      if (size(r) < splitThreshold) cells(r).map(whole) else Iterator.empty
+    }
+    if (shortOnly) shortRows
+    else shortRows.union(merge(rows.flatMap { r =>
+      if (size(r) < splitThreshold) Iterator.empty else cells(r).flatMap(tiles)
+    }.repartition(spreadBy.map(col): _*)))
+  }
 
   /** MPX self-join profiles for every series with length >= 2w. */
   def mpxProfiles(series: Dataset[SeriesRow], w: Int, tier: String,
@@ -45,7 +77,7 @@ object DistributedMp {
     */
   final case class MpxTile(conv_id: String, kind: String, w: Int,
       start: Int, dLo: Int, dHi: Int, rowEnd: Int, plen: Int,
-      slice: Array[Double], pre: Option[MpxPartialAt])
+      slice: Array[Double])
 
   /** 2-D (row-block x diagonal-block) tiling of the upper triangle.
     * Each tile re-derives its stats from its own slice (the reference's
@@ -72,7 +104,7 @@ object DistributedMp {
     } yield {
       val colMax = math.min(plen - 1, rHi - 1 + dHi - 1)
       val slice = java.util.Arrays.copyOfRange(s.values, rLo, colMax + w)
-      MpxTile(s.conv_id, s.kind, w, rLo, dLo, dHi, rHi - rLo, plen, slice, None)
+      MpxTile(s.conv_id, s.kind, w, rLo, dLo, dHi, rHi - rLo, plen, slice)
     }
   }
 
@@ -81,104 +113,48 @@ object DistributedMp {
     * sequentially per series; here the (series, window) grid IS the
     * parallel axis, and long series additionally split into halo'd 2-D
     * tiles within a window).
-    *
-    * Short series take a ZERO-EXCHANGE path: the whole kernel runs and
-    * finalizes in the scan stage — their profile partials never ride a
-    * shuffle (the repartition + merge exchanges exist to spread TILES of
-    * long series; for a complete partial both were identity work that
-    * serialized ~2·plen doubles per series twice). The two branches scan
-    * `series` independently — persist the input when its upstream plan is
-    * expensive (a scan of a parquet/Iceberg table is fine; a derived
-    * assembly is worth caching).
     */
-  /** `maxSeriesLen`: a caller-known upper bound on series length. When it
-    * proves every series takes the short path (bound < splitThreshold),
-    * the tile fan-out/merge machinery — a repartition exchange plus a
-    * merge aggregation that would process zero rows — is dropped from the
-    * plan outright, and the single-consumer input needs no fork guard.
-    */
-  def skimpProfiles(seriesIn: Dataset[SeriesRow], windows: Array[Int], tier: String,
+  def skimpProfiles(series: Dataset[SeriesRow], windows: Array[Int], tier: String,
       splitThreshold: Int = 1 << 15, tileSize: Int = 1 << 14,
-      maxSeriesLen: Int = -1): Dataset[MpProfileRow] = {
-    val spark = seriesIn.sparkSession
-    import spark.implicits._
-    val shortOnly = maxSeriesLen > 0 && maxSeriesLen < splitThreshold
-    val series =
-      if (shortOnly) seriesIn // single consumer: no fork, no persist
-      else graft.util.StageCache.forked(seriesIn)
-    val shortRows = series.flatMap { s =>
-      val n = s.values.length
-      windows.iterator.filter(w => n >= 2 * w && n < splitThreshold)
-        .map(w => wholeProfileRow(s, w, tier))
-    }
-    if (shortOnly) return shortRows
-    val tiles = series.flatMap { s =>
-      val n = s.values.length
-      windows.iterator.filter(w => n >= 2 * w && n >= splitThreshold)
-        .flatMap(w => mpxTiles(s, w, tileSize))
-    }
-    shortRows.union(mergeSkimpTasks(tiles, tier))
-  }
+      maxSeriesLen: Int = -1): Dataset[MpProfileRow] =
+    skimpGrid[SeriesRow](series, s => (s, windows), tier, splitThreshold, tileSize,
+      maxSeriesLen)
 
-  /** Whole-series mpx kernel + finalize, identical to the merge path's
-    * finish on a single complete partial (clamp is idempotent).
-    */
-  private def wholeProfileRow(s: SeriesRow, w: Int, tier: String): MpProfileRow = {
-    val st = Mpx.selfStats(s.values, w)
-    val buf = Mpx.newBuf(st.profileLen)
-    Mpx.selfJoinBlock(s.values, w, st, st.minlag + 1, st.profileLen, buf)
-    Mpx.clampBuf(buf)
-    MpProfileRow(s.conv_id, s.kind, tier, w, math.ceil(w / 4.0).toInt,
-      "mpx", "euclidean", join = false,
-      Mpx.selfToEuclidean(buf, w), buf.mpi,
-      Array.empty, Array.empty, Array.empty, Array.empty)
-  }
-
-  /** Spread tiles across tasks, run the tile kernel, tree-merge segments,
-    * and finalize Euclidean profile rows.
-    */
-  private def mergeSkimpTasks(tasks: Dataset[MpxTile], tier: String): Dataset[MpProfileRow] = {
-    val spark = tasks.sparkSession
+  /** SKIMP over any input that names, per row, a series and its windows. */
+  private def skimpGrid[I](in: Dataset[I], grid: I => (SeriesRow, Array[Int]),
+      tier: String, splitThreshold: Int, tileSize: Int,
+      maxSeriesLen: Int): Dataset[MpProfileRow] = {
+    val spark = in.sparkSession
     import spark.implicits._
-    val partials = tasks
-      .repartition($"conv_id", $"w", $"start", $"dLo") // spread tiles across tasks
-      .map { t =>
-        val p = t.pre.getOrElse {
-          val st = Mpx.selfStats(t.slice, t.w)
-          val buf = Mpx.newBuf(t.slice.length - t.w + 1)
-          Mpx.selfJoinTile(t.slice, t.w, st, t.dLo, t.dHi, t.rowEnd, buf)
-          var i = 0
-          while (i < buf.mpi.length) {
-            if (buf.mpi(i) >= 0) buf.mpi(i) += t.start
-            i += 1
-          }
-          MpxPartialAt(t.start, t.plen, buf.mp, buf.mpi)
+    def row(conv: String, kind: String, w: Int, buf: Mpx.PearsonBuf) =
+      MpProfileRow(conv, kind, tier, w, math.ceil(w / 4.0).toInt, "mpx", "euclidean",
+        join = false, Mpx.selfToEuclidean(buf, w), buf.mpi,
+        Array.empty, Array.empty, Array.empty, Array.empty)
+    fanOut(in, splitThreshold, maxSeriesLen)(i => grid(i)._1.values.length, { i =>
+      val (s, ws) = grid(i)
+      ws.iterator.filter(w => s.values.length >= 2 * w).map(w => (s, w))
+    })({ case (s, w) => row(s.conv_id, s.kind, w, Mpx.selfJoin(s.values, w)) },
+      { case (s, w) => mpxTiles(s, w, tileSize) }, "conv_id", "w", "start", "dLo") {
+      _.map { t =>
+        val buf = Mpx.newBuf(t.slice.length - t.w + 1)
+        Mpx.selfJoinTile(t.slice, t.w, Mpx.selfStats(t.slice, t.w), t.dLo, t.dHi,
+          t.rowEnd, buf)
+        var i = 0
+        while (i < buf.mpi.length) {
+          if (buf.mpi(i) >= 0) buf.mpi(i) += t.start
+          i += 1
         }
-        (t.conv_id, t.kind, t.w, p)
-      }
-
-    val mergeAgg = new ProfileMerge.MpxMaxMergeAt().toColumn
-    partials
-      .groupByKey { case (conv, kind, w, _) => (conv, kind, w) }
-      .mapValues { case (_, _, _, p) => p }
-      .agg(mergeAgg)
-      .map { case ((conv, kind, w), partial) =>
-        val ez = math.ceil(w / 4.0).toInt
-        val buf = Mpx.PearsonBuf(partial.mp, partial.pi)
-        Mpx.clampBuf(buf)
-        MpProfileRow(conv, kind, tier, w, ez, "mpx", "euclidean", join = false,
-          Mpx.selfToEuclidean(buf, w), buf.mpi,
-          Array.empty, Array.empty, Array.empty, Array.empty)
-      }
+        ((t.conv_id, t.kind, t.w), Segment(t.start, t.plen, buf))
+      }.groupByKey(_._1).mapValues(_._2).agg(new ProfileMerge.MpxMaxMergeAt().toColumn)
+        .map { case ((conv, kind, w), buf) => row(conv, kind, w, buf) }
+    }
   }
 
   /** SKIMP memoization (ref skimp.py:193-205): reuse (series, window)
     * profiles already present in a prior PMP — only the missing grid
     * cells are computed, then unioned with the prior rows. The have-set
     * is tiny ((conv, kind) -> window set) and broadcasts; the prior
-    * profile rows never reshuffle. Like [[skimpProfiles]], the short and
-    * tile branches each scan the joined input — persist `series` when its
-    * upstream plan is expensive.
+    * profile rows never reshuffle.
     */
   def skimpProfilesReusing(series: Dataset[SeriesRow], windows: Array[Int],
       tier: String, prior: Dataset[MpProfileRow],
@@ -197,17 +173,8 @@ object DistributedMp {
           else row.getAs[scala.collection.Seq[Int]]("haveW").toSet
         (s, windows.filterNot(done.contains))
       }
-    val shortRows = todo.flatMap { case (s, ws) =>
-      val n = s.values.length
-      ws.iterator.filter(w => n >= 2 * w && n < splitThreshold)
-        .map(w => wholeProfileRow(s, w, tier))
-    }
-    val tiles = todo.flatMap { case (s, ws) =>
-      val n = s.values.length
-      ws.iterator.filter(w => n >= 2 * w && n >= splitThreshold)
-        .flatMap(w => mpxTiles(s, w, tileSize))
-    }
-    have.union(shortRows).union(mergeSkimpTasks(tiles, tier))
+    have.union(skimpGrid[(SeriesRow, Array[Int])](todo, identity, tier,
+      splitThreshold, tileSize, -1))
   }
 
   /** One AB-join input pair. */
@@ -220,8 +187,7 @@ object DistributedMp {
   final case class AbTile(conv_a: String, conv_b: String,
       aStart: Int, bLo: Int, bHi: Int, dLo: Int, dHi: Int,
       plenA: Int, plenB: Int,
-      aSlice: Array[Double], bSlice: Array[Double],
-      preA: Option[MpxPartialAt], preB: Option[MpxPartialAt])
+      aSlice: Array[Double], bSlice: Array[Double])
 
   /** Merged AB similarity-join profiles (Euclidean; -1 → ∞ like
     * cympx.pyx:261-274) for each input pair.
@@ -230,112 +196,64 @@ object DistributedMp {
       mpA: Array[Double], piA: Array[Long],
       mpB: Array[Double], piB: Array[Long])
 
+  private def abTiles(p: AbPair, w: Int, tileSize: Int): Iterator[AbTile] = {
+    val plenA = p.a.length - w + 1
+    val plenB = p.b.length - w + 1
+    val bTiles = math.ceil(plenB.toDouble / tileSize).toInt
+    val dMin = -(plenB - 1)
+    val dCount = plenA - 1 - dMin + 1
+    val dTiles = math.ceil(dCount.toDouble / tileSize).toInt
+    for {
+      bb <- (0 until bTiles).iterator
+      bLo = bb * tileSize
+      bHi = math.min((bb + 1) * tileSize, plenB)
+      db <- (0 until dTiles).iterator
+      dLo = dMin + db * tileSize
+      dHi = math.min(dMin + (db + 1) * tileSize, plenA)
+      if math.max(bLo, -(dHi - 1)) < math.min(bHi, plenA - dLo)
+      aStart = math.max(0, bLo + dLo)
+      aEnd = math.min(p.a.length, (bHi - 1) + (dHi - 1) + w)
+      if aStart < aEnd
+    } yield AbTile(p.conv_a, p.conv_b, aStart, bLo, bHi, dLo, dHi,
+      plenA, plenB,
+      java.util.Arrays.copyOfRange(p.a, aStart, aEnd),
+      java.util.Arrays.copyOfRange(p.b, bLo, math.min(p.b.length, bHi - 1 + w)))
+  }
+
   /** Distributed MPX AB-join: short pairs run the whole cympx sweep in
     * one task; long pairs split into halo'd (diagonal-block x
     * B-position-block) tiles — the scale path for the engine's
     * similarity-join / as-of-join analog (ref cympx.pyx:125-284).
     */
-  def mpxAbProfiles(pairsIn: Dataset[AbPair], w: Int,
+  def mpxAbProfiles(pairs: Dataset[AbPair], w: Int,
       splitThreshold: Int = 1 << 15, tileSize: Int = 1 << 14,
       maxSeriesLen: Int = -1): Dataset[AbJoinRow] = {
-    val spark = pairsIn.sparkSession
+    val spark = pairs.sparkSession
     import spark.implicits._
-    // caller-proven all-short input: drop the tile fan-out/merge subtree
-    // (an exchange + two aggregations over zero rows) and the fork guard
-    val shortOnly = maxSeriesLen > 0 && maxSeriesLen < splitThreshold
-    val pairs =
-      if (shortOnly) pairsIn else graft.util.StageCache.forked(pairsIn)
-
-    // zero-exchange short path: both sweeps + finalize in the scan stage
-    val shortRows = pairs.flatMap { p =>
-      val plenA = p.a.length - w + 1
-      val plenB = p.b.length - w + 1
-      if (plenA < 1 || plenB < 1 ||
-          math.max(p.a.length, p.b.length) >= splitThreshold) Iterator.empty
-      else {
-        val sa = Mpx.abStats(p.a, w)
-        val sb = Mpx.abStats(p.b, w)
-        val bufA = Mpx.newBuf(plenA)
-        val bufB = Mpx.newBuf(plenB)
-        Mpx.abJoinBlock(p.a, p.b, w, sa, sb, 0, plenA, bufA, bufB)
-        Mpx.abJoinBlock(p.b, p.a, w, sb, sa, 0, plenB, bufB, bufA)
-        Mpx.clampBuf(bufA)
-        Mpx.clampBuf(bufB)
-        Iterator(AbJoinRow(p.conv_a, p.conv_b, w,
-          Mpx.abToEuclidean(bufA, w), bufA.mpi,
-          Mpx.abToEuclidean(bufB, w), bufB.mpi))
-      }
-    }
-
-    if (shortOnly) return shortRows
-
-    val tasks = pairs.flatMap { p =>
-      val plenA = p.a.length - w + 1
-      val plenB = p.b.length - w + 1
-      if (plenA < 1 || plenB < 1 ||
-          math.max(p.a.length, p.b.length) < splitThreshold) Iterator.empty
-      else {
-        val bTiles = math.ceil(plenB.toDouble / tileSize).toInt
-        val dMin = -(plenB - 1)
-        val dCount = plenA - 1 - dMin + 1
-        val dTiles = math.ceil(dCount.toDouble / tileSize).toInt
-        for {
-          bb <- (0 until bTiles).iterator
-          bLo = bb * tileSize
-          bHi = math.min((bb + 1) * tileSize, plenB)
-          db <- (0 until dTiles).iterator
-          dLo = dMin + db * tileSize
-          dHi = math.min(dMin + (db + 1) * tileSize, plenA)
-          if math.max(bLo, -(dHi - 1)) < math.min(bHi, plenA - dLo)
-          aStart = math.max(0, bLo + dLo)
-          aEnd = math.min(p.a.length, (bHi - 1) + (dHi - 1) + w)
-          if aStart < aEnd
-        } yield AbTile(p.conv_a, p.conv_b, aStart, bLo, bHi, dLo, dHi,
-          plenA, plenB,
-          java.util.Arrays.copyOfRange(p.a, aStart, aEnd),
-          java.util.Arrays.copyOfRange(p.b, bLo, math.min(p.b.length, bHi - 1 + w)),
-          None, None)
-      }
-    }
-
-    val partials = tasks
-      .repartition($"conv_a", $"conv_b", $"bLo", $"dLo")
-      .flatMap { t =>
-        (t.preA, t.preB) match {
-          case (Some(pa), Some(pb)) =>
-            Iterator((t.conv_a, t.conv_b, "a", pa), (t.conv_a, t.conv_b, "b", pb))
-          case _ =>
-            val sa = Mpx.abStats(t.aSlice, w)
-            val sb = Mpx.abStats(t.bSlice, w)
-            val bufA = Mpx.newBuf(sa.profileLen)
-            val bufB = Mpx.newBuf(sb.profileLen)
-            Mpx.abJoinTile(t.aSlice, t.bSlice, w, sa, sb, t.aStart,
-              t.bLo, t.bHi, t.plenA, t.dLo, t.dHi, bufA, bufB)
-            Iterator(
-              (t.conv_a, t.conv_b, "a", MpxPartialAt(t.aStart, t.plenA, bufA.mp, bufA.mpi)),
-              (t.conv_a, t.conv_b, "b", MpxPartialAt(t.bLo, t.plenB, bufB.mp, bufB.mpi)))
+    def row(ca: String, cb: String, a: Mpx.PearsonBuf, b: Mpx.PearsonBuf) =
+      AbJoinRow(ca, cb, w, Mpx.abToEuclidean(a, w), a.mpi, Mpx.abToEuclidean(b, w), b.mpi)
+    fanOut(pairs, splitThreshold, maxSeriesLen)(p => math.max(p.a.length, p.b.length),
+      p => Iterator(p).filter(q => q.a.length >= w && q.b.length >= w))(
+      { p => val (a, b) = Mpx.abJoin(p.a, p.b, w); row(p.conv_a, p.conv_b, a, b) },
+      abTiles(_, w, tileSize), "conv_a", "conv_b", "bLo", "dLo") {
+      _.flatMap { t =>
+        val sa = Mpx.selfStats(t.aSlice, w)
+        val sb = Mpx.selfStats(t.bSlice, w)
+        val bufA = Mpx.newBuf(sa.profileLen)
+        val bufB = Mpx.newBuf(sb.profileLen)
+        Mpx.abJoinTile(t.aSlice, t.bSlice, w, sa, sb, t.aStart,
+          t.bLo, t.bHi, t.plenA, t.dLo, t.dHi, bufA, bufB)
+        Iterator(((t.conv_a, t.conv_b, "a"), Segment(t.aStart, t.plenA, bufA)),
+          ((t.conv_a, t.conv_b, "b"), Segment(t.bLo, t.plenB, bufB)))
+      }.groupByKey(_._1).mapValues(_._2).agg(new ProfileMerge.MpxMaxMergeAt().toColumn)
+        .groupByKey { case ((ca, cb, _), _) => (ca, cb) }
+        .mapGroups { (key: (String, String), it) =>
+          // a side with no tile segment (never seen) stays empty
+          val sides = it.map { case ((_, _, side), buf) => side -> buf }.toMap
+            .withDefaultValue(Mpx.PearsonBuf(Array.empty, Array.empty))
+          row(key._1, key._2, sides("a"), sides("b"))
         }
-      }
-
-    val mergeAgg = new ProfileMerge.MpxMaxMergeAt().toColumn
-    shortRows.union(partials
-      .groupByKey { case (ca, cb, side, _) => (ca, cb, side) }
-      .mapValues { case (_, _, _, p) => p }
-      .agg(mergeAgg)
-      .groupByKey { case ((ca, cb, _), _) => (ca, cb) }
-      .mapGroups { (key: (String, String), it) =>
-        val (ca, cb) = key
-        var mpA: Array[Double] = Array.empty
-        var piA: Array[Long] = Array.empty
-        var mpB: Array[Double] = Array.empty
-        var piB: Array[Long] = Array.empty
-        it.foreach { case ((_, _, side), partial) =>
-          val buf = Mpx.clampBuf(Mpx.PearsonBuf(partial.mp, partial.pi))
-          if (side == "a") { mpA = Mpx.abToEuclidean(buf, w); piA = buf.mpi }
-          else { mpB = Mpx.abToEuclidean(buf, w); piB = buf.mpi }
-        }
-        AbJoinRow(ca, cb, w, mpA, piA, mpB, piB)
-      })
+    }
   }
 
   /** A halo'd STOMP tile: row slice [rLo, rHi-1+w), col slice
@@ -343,8 +261,23 @@ object DistributedMp {
     */
   final case class StompTile(conv_id: String, kind: String,
       rLo: Int, rHi: Int, cLo: Int, cHi: Int, plen: Int,
-      rowSlice: Array[Double], colSlice: Array[Double],
-      pre: Option[StompPartialAt])
+      rowSlice: Array[Double], colSlice: Array[Double])
+
+  private def stompTiles(s: SeriesRow, w: Int, tileSize: Int): Iterator[StompTile] = {
+    val plen = s.values.length - w + 1
+    val b = tileSize
+    val tiles = math.ceil(plen.toDouble / b).toInt
+    for {
+      rb <- (0 until tiles).iterator
+      cb <- (0 until tiles).iterator
+      rLo = rb * b
+      rHi = math.min((rb + 1) * b, plen)
+      cLo = cb * b
+      cHi = math.min((cb + 1) * b, plen)
+    } yield StompTile(s.conv_id, s.kind, rLo, rHi, cLo, cHi, plen,
+      java.util.Arrays.copyOfRange(s.values, rLo, rHi - 1 + w),
+      java.util.Arrays.copyOfRange(s.values, cLo, cHi - 1 + w))
+  }
 
   /** STOMP profiles (with left/right profiles); same unified shape. Long
     * series split into (row-block x col-block) tiles, each seeded by one
@@ -355,60 +288,18 @@ object DistributedMp {
     val spark = series.sparkSession
     import spark.implicits._
     val ez = math.ceil(w / 2.0).toInt
-
-    // zero-exchange short path: whole kernel + finalize in the scan stage
-    val shortRows = series.flatMap { s =>
-      val n = s.values.length
-      if (n < 2 * w || n >= splitThreshold) Iterator.empty
-      else {
+    def row(conv: String, kind: String, r: Stomp.Batch) = MpProfileRow(conv, kind, tier,
+      w, ez, "stomp", "euclidean", join = false, r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi)
+    fanOut(series, splitThreshold, -1)(_.values.length,
+      s => Iterator(s).filter(_.values.length >= 2 * w))({ s =>
         val r = Stomp.stomp(s.values, w)
-        Iterator(MpProfileRow(s.conv_id, s.kind, tier, w, ez, "stomp",
-          "euclidean", join = false, r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi))
-      }
+        row(s.conv_id, s.kind, Stomp.Batch(r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi))
+      }, stompTiles(_, w, tileSize), "conv_id", "rLo", "cLo") {
+      _.map { t =>
+        ((t.conv_id, t.kind), Segment(t.cLo, t.plen, Stomp.tileCompute(t.rLo, t.rHi,
+          t.cLo, t.cHi, t.rowSlice, t.colSlice, w, ez)))
+      }.groupByKey(_._1).mapValues(_._2).agg(new ProfileMerge.StompMinMergeAt().toColumn)
+        .map { case ((conv, kind), r) => row(conv, kind, r) }
     }
-
-    val tasks = series.flatMap { s =>
-      val n = s.values.length
-      // same eligibility bar as the short branch: a series below 2w emits
-      // nothing regardless of which side of splitThreshold it falls on
-      if (n < 2 * w || n < splitThreshold) Iterator.empty
-      else {
-        val plen = n - w + 1
-        val b = tileSize
-        val tiles = math.ceil(plen.toDouble / b).toInt
-        for {
-          rb <- (0 until tiles).iterator
-          cb <- (0 until tiles).iterator
-          rLo = rb * b
-          rHi = math.min((rb + 1) * b, plen)
-          cLo = cb * b
-          cHi = math.min((cb + 1) * b, plen)
-        } yield StompTile(s.conv_id, s.kind, rLo, rHi, cLo, cHi, plen,
-          java.util.Arrays.copyOfRange(s.values, rLo, rHi - 1 + w),
-          java.util.Arrays.copyOfRange(s.values, cLo, cHi - 1 + w), None)
-      }
-    }
-
-    val partials = tasks
-      .repartition($"conv_id", $"rLo", $"cLo")
-      .map { t =>
-        val p = t.pre.getOrElse {
-          val tile = Stomp.tileCompute(t.rLo, t.rHi, t.cLo, t.cHi,
-            t.rowSlice, t.colSlice, w, ez)
-          StompPartialAt(t.cLo, t.plen, tile.mp, tile.pi,
-            tile.lmp, tile.lpi, tile.rmp, tile.rpi)
-        }
-        (t.conv_id, t.kind, p)
-      }
-
-    val mergeAgg = new ProfileMerge.StompMinMergeAt().toColumn
-    shortRows.union(partials
-      .groupByKey { case (conv, kind, _) => (conv, kind) }
-      .mapValues { case (_, _, p) => p }
-      .agg(mergeAgg)
-      .map { case ((conv, kind), r) =>
-        MpProfileRow(conv, kind, tier, w, ez, "stomp", "euclidean", join = false,
-          r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi)
-      })
   }
 }

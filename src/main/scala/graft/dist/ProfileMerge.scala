@@ -2,180 +2,66 @@ package graft.dist
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import graft.kernels.{Mpx, Stomp}
 
-/** Partial profile buffers and their Catalyst Aggregators.
-  *
-  * These are the engine's cross-partition reduction of (profile, index)
-  * pairs: MPX partials merge by elementwise Pearson max
-  * (ref cympx.pyx:104-112), STOMP partials by elementwise Euclidean min
-  * (ref stomp.py:340-357). Registering them as typed Aggregators gives
-  * Spark's partial→final aggregation (map-side combine before the
-  * shuffle), so a series chunked over many partitions reduces as a tree,
-  * not through a single task.
+/** A tile's profile segment: `part` covers global positions [start, start +
+  * its length) of a profile of total length `plen`. `P` is the kernel's own
+  * partial type (`Mpx.PearsonBuf`, `Stomp.Batch`).
   */
-final case class MpxPartial(mp: Array[Double], pi: Array[Long])
+final case class Segment[P](start: Int, plen: Int, part: P)
 
-/** A profile segment covering global positions [start, start+mp.length)
-  * of a profile of total length plen — what a halo'd tile task emits.
-  * A full partial is simply start=0, mp.length==plen.
+/** The engine's cross-partition reduction of tile segments: one typed
+  * Aggregator per algorithm, each applying its kernel's own offset-aware
+  * merge (MPX: elementwise Pearson max, clamped at 1.0, ref
+  * cympx.pyx:104-112; STOMP: elementwise Euclidean min over mp/lmp/rmp,
+  * ref stomp.py:340-357). Typed Aggregators give Spark's partial→final
+  * aggregation (map-side combine before the shuffle), so a series tiled
+  * over many partitions reduces as a tree, not through a single task. The
+  * full-length buffer is allocated on the first reduce; the empty zero
+  * never meets a merge.
   */
-final case class MpxPartialAt(start: Int, plen: Int,
-    mp: Array[Double], pi: Array[Long])
-
-final case class StompPartialAt(start: Int, plen: Int,
-    mp: Array[Double], pi: Array[Long],
-    lmp: Array[Double], lpi: Array[Long],
-    rmp: Array[Double], rpi: Array[Long])
-
-final case class StompPartial(
-    mp: Array[Double], pi: Array[Long],
-    lmp: Array[Double], lpi: Array[Long],
-    rmp: Array[Double], rpi: Array[Long])
-
 object ProfileMerge {
 
-  /** Elementwise Pearson max-merge with clamp at 1.0 on write. */
-  class MpxMaxMerge extends Aggregator[MpxPartial, MpxPartial, MpxPartial] {
-    override def zero: MpxPartial = MpxPartial(Array.empty, Array.empty)
+  class MpxMaxMergeAt extends Aggregator[Segment[Mpx.PearsonBuf], Mpx.PearsonBuf, Mpx.PearsonBuf] {
+    override def zero: Mpx.PearsonBuf = Mpx.PearsonBuf(Array.empty, Array.empty)
 
-    private def mergePair(a: MpxPartial, b: MpxPartial): MpxPartial = {
-      if (a.mp.isEmpty) return b
-      if (b.mp.isEmpty) return a
-      var j = 0
-      while (j < a.mp.length) {
-        if (b.mp(j) > a.mp(j)) {
-          a.mp(j) = if (b.mp(j) > 1.0) 1.0 else b.mp(j)
-          a.pi(j) = b.pi(j)
-        }
-        j += 1
-      }
-      a
+    // a verbatim copy, not a merge: unclamped row-side values above 1.0
+    // must keep their order against later segments, as in the whole sweep
+    private def toFull(s: Segment[Mpx.PearsonBuf]): Mpx.PearsonBuf = {
+      val full = Mpx.newBuf(s.plen)
+      System.arraycopy(s.part.mp, 0, full.mp, s.start, s.part.mp.length)
+      System.arraycopy(s.part.mpi, 0, full.mpi, s.start, s.part.mpi.length)
+      full
     }
 
-    override def reduce(buf: MpxPartial, in: MpxPartial): MpxPartial = mergePair(buf, in)
-    override def merge(a: MpxPartial, b: MpxPartial): MpxPartial = mergePair(a, b)
-    override def finish(r: MpxPartial): MpxPartial = {
-      var j = 0
-      while (j < r.mp.length) { if (r.mp(j) > 1.0) r.mp(j) = 1.0; j += 1 }
-      r
-    }
-    override def bufferEncoder: Encoder[MpxPartial] = Encoders.product[MpxPartial]
-    override def outputEncoder: Encoder[MpxPartial] = Encoders.product[MpxPartial]
+    override def reduce(buf: Mpx.PearsonBuf, in: Segment[Mpx.PearsonBuf]): Mpx.PearsonBuf =
+      if (buf.mp.isEmpty) toFull(in) else Mpx.mergeInto(buf, in.part, in.start)
+    override def merge(a: Mpx.PearsonBuf, b: Mpx.PearsonBuf): Mpx.PearsonBuf =
+      if (a.mp.isEmpty) b else if (b.mp.isEmpty) a else Mpx.mergeInto(a, b)
+    override def finish(r: Mpx.PearsonBuf): Mpx.PearsonBuf = Mpx.clampBuf(r)
+    override def bufferEncoder: Encoder[Mpx.PearsonBuf] = Encoders.product[Mpx.PearsonBuf]
+    override def outputEncoder: Encoder[Mpx.PearsonBuf] = Encoders.product[Mpx.PearsonBuf]
   }
 
-  /** Offset-aware Pearson max-merge: partial segments from halo'd tiles
-    * accumulate into one full-length buffer (allocated on first reduce,
-    * so map-side combine still tree-reduces segments before the shuffle).
-    */
-  class MpxMaxMergeAt extends Aggregator[MpxPartialAt, MpxPartialAt, MpxPartialAt] {
-    override def zero: MpxPartialAt = MpxPartialAt(0, 0, Array.empty, Array.empty)
-
-    private def toFull(p: MpxPartialAt): MpxPartialAt =
-      if (p.start == 0 && p.mp.length == p.plen) p
-      else {
-        val mp = Array.fill(p.plen)(-1.0)
-        val pi = Array.fill(p.plen)(-1L)
-        System.arraycopy(p.mp, 0, mp, p.start, p.mp.length)
-        System.arraycopy(p.pi, 0, pi, p.start, p.pi.length)
-        MpxPartialAt(0, p.plen, mp, pi)
-      }
-
-    private def mergePair(a0: MpxPartialAt, b: MpxPartialAt): MpxPartialAt = {
-      if (a0.plen == 0) return toFull(b)
-      if (b.plen == 0) return a0
-      val a = toFull(a0)
-      var j = 0
-      while (j < b.mp.length) {
-        val g = b.start + j
-        if (b.mp(j) > a.mp(g)) {
-          a.mp(g) = if (b.mp(j) > 1.0) 1.0 else b.mp(j)
-          a.pi(g) = b.pi(j)
-        }
-        j += 1
-      }
-      a
-    }
-
-    override def reduce(buf: MpxPartialAt, in: MpxPartialAt): MpxPartialAt = mergePair(buf, in)
-    override def merge(a: MpxPartialAt, b: MpxPartialAt): MpxPartialAt = mergePair(a, b)
-    override def finish(r0: MpxPartialAt): MpxPartialAt = {
-      val r = toFull(r0)
-      var j = 0
-      while (j < r.mp.length) { if (r.mp(j) > 1.0) r.mp(j) = 1.0; j += 1 }
-      r
-    }
-    override def bufferEncoder: Encoder[MpxPartialAt] = Encoders.product[MpxPartialAt]
-    override def outputEncoder: Encoder[MpxPartialAt] = Encoders.product[MpxPartialAt]
-  }
-
-  /** Offset-aware Euclidean min-merge over the six STOMP arrays. */
-  class StompMinMergeAt extends Aggregator[StompPartialAt, StompPartialAt, StompPartialAt] {
-    override def zero: StompPartialAt = StompPartialAt(0, 0,
+  class StompMinMergeAt extends Aggregator[Segment[Stomp.Batch], Stomp.Batch, Stomp.Batch] {
+    override def zero: Stomp.Batch = Stomp.Batch(
       Array.empty, Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)
 
-    private def toFull(p: StompPartialAt): StompPartialAt =
-      if (p.start == 0 && p.mp.length == p.plen) p
-      else {
-        def fullD(src: Array[Double]) = {
-          val a = Array.fill(p.plen)(Double.PositiveInfinity)
-          System.arraycopy(src, 0, a, p.start, src.length)
-          a
-        }
-        def fullL(src: Array[Long]) = {
-          val a = new Array[Long](p.plen)
-          System.arraycopy(src, 0, a, p.start, src.length)
-          a
-        }
-        StompPartialAt(0, p.plen, fullD(p.mp), fullL(p.pi),
-          fullD(p.lmp), fullL(p.lpi), fullD(p.rmp), fullL(p.rpi))
-      }
-
-    private def mergePair(a0: StompPartialAt, b: StompPartialAt): StompPartialAt = {
-      if (a0.plen == 0) return toFull(b)
-      if (b.plen == 0) return a0
-      val a = toFull(a0)
-      var j = 0
-      while (j < b.mp.length) {
-        val g = b.start + j
-        if (b.mp(j) < a.mp(g)) { a.mp(g) = b.mp(j); a.pi(g) = b.pi(j) }
-        if (b.lmp(j) < a.lmp(g)) { a.lmp(g) = b.lmp(j); a.lpi(g) = b.lpi(j) }
-        if (b.rmp(j) < a.rmp(g)) { a.rmp(g) = b.rmp(j); a.rpi(g) = b.rpi(j) }
-        j += 1
-      }
-      a
+    // a min-merge into (+Inf, index 0) equals a verbatim copy: tile cells
+    // still at +Inf were never written and hold index 0
+    private def toFull(s: Segment[Stomp.Batch]): Stomp.Batch = {
+      def infs() = Array.fill(s.plen)(Double.PositiveInfinity)
+      def zeros() = new Array[Long](s.plen)
+      Stomp.mergeInto(Stomp.Batch(infs(), zeros(), infs(), zeros(), infs(), zeros()),
+        s.part, s.start)
     }
 
-    override def reduce(buf: StompPartialAt, in: StompPartialAt): StompPartialAt = mergePair(buf, in)
-    override def merge(a: StompPartialAt, b: StompPartialAt): StompPartialAt = mergePair(a, b)
-    override def finish(r: StompPartialAt): StompPartialAt = toFull(r)
-    override def bufferEncoder: Encoder[StompPartialAt] = Encoders.product[StompPartialAt]
-    override def outputEncoder: Encoder[StompPartialAt] = Encoders.product[StompPartialAt]
-  }
-
-  /** Elementwise Euclidean min-merge carrying all six profile arrays. */
-  class StompMinMerge extends Aggregator[StompPartial, StompPartial, StompPartial] {
-    override def zero: StompPartial =
-      StompPartial(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)
-
-    private def mergePair(a: StompPartial, b: StompPartial): StompPartial = {
-      if (a.mp.isEmpty) return b
-      if (b.mp.isEmpty) return a
-      var j = 0
-      while (j < a.mp.length) {
-        if (b.mp(j) < a.mp(j)) { a.mp(j) = b.mp(j); a.pi(j) = b.pi(j) }
-        if (a.lmp.nonEmpty && b.lmp.nonEmpty) {
-          if (b.lmp(j) < a.lmp(j)) { a.lmp(j) = b.lmp(j); a.lpi(j) = b.lpi(j) }
-          if (b.rmp(j) < a.rmp(j)) { a.rmp(j) = b.rmp(j); a.rpi(j) = b.rpi(j) }
-        }
-        j += 1
-      }
-      a
-    }
-
-    override def reduce(buf: StompPartial, in: StompPartial): StompPartial = mergePair(buf, in)
-    override def merge(a: StompPartial, b: StompPartial): StompPartial = mergePair(a, b)
-    override def finish(r: StompPartial): StompPartial = r
-    override def bufferEncoder: Encoder[StompPartial] = Encoders.product[StompPartial]
-    override def outputEncoder: Encoder[StompPartial] = Encoders.product[StompPartial]
+    override def reduce(buf: Stomp.Batch, in: Segment[Stomp.Batch]): Stomp.Batch =
+      if (buf.mp.isEmpty) toFull(in) else Stomp.mergeInto(buf, in.part, in.start)
+    override def merge(a: Stomp.Batch, b: Stomp.Batch): Stomp.Batch =
+      if (a.mp.isEmpty) b else if (b.mp.isEmpty) a else Stomp.mergeInto(a, b)
+    override def finish(r: Stomp.Batch): Stomp.Batch = r
+    override def bufferEncoder: Encoder[Stomp.Batch] = Encoders.product[Stomp.Batch]
+    override def outputEncoder: Encoder[Stomp.Batch] = Encoders.product[Stomp.Batch]
   }
 }

@@ -9,20 +9,21 @@ package graft.kernels
   * diagonal-block decomposition mirrors the reference's OpenMP `prange`
   * per-thread buffers (cympx.pyx:72-73): a partition owns a contiguous range
   * of diagonals, accumulates a private (mp, mpi) Pearson buffer, and buffers
-  * merge by elementwise max — the same merge used across Spark partitions
-  * (see graft.dist.ProfileMerge).
+  * merge by elementwise max — [[mergeInto]], which is also the merge the
+  * distributed layer's Aggregator applies to tile segments across Spark
+  * partitions.
   */
 object Mpx {
 
   /** Pearson-domain profile buffer: mp values start at -1 (no match). */
-  final case class PearsonBuf(mp: Array[Double], mpi: Array[Long]) {
-    def copyOf: PearsonBuf = PearsonBuf(mp.clone(), mpi.clone())
-  }
+  final case class PearsonBuf(mp: Array[Double], mpi: Array[Long])
 
   def newBuf(len: Int): PearsonBuf =
     PearsonBuf(Array.fill(len)(-1.0), Array.fill(len)(-1L))
 
-  /** Precomputed per-series terms shared by all diagonal blocks. */
+  /** Precomputed per-series terms shared by all diagonal blocks (of a
+    * self join, or of one side of an AB join, which ignores `minlag`).
+    */
   final case class SelfStats(mu: Array[Double], sig: Array[Double],
       df: Array[Double], dg: Array[Double], profileLen: Int, minlag: Int)
 
@@ -193,15 +194,18 @@ object Mpx {
 
 
   /** Elementwise-max merge of Pearson buffers, clamping stored values at 1.0
-    * (ref cympx.pyx:104-112). `a` is mutated and returned; order-insensitive
-    * up to index ties at equal correlation.
+    * (ref cympx.pyx:104-112): `b` covers positions [offset, offset +
+    * b.mp.length) of `a` (a tile's profile segment; 0 for whole buffers).
+    * `a` is mutated and returned; order-insensitive up to index ties at
+    * equal correlation.
     */
-  def mergeInto(a: PearsonBuf, b: PearsonBuf): PearsonBuf = {
+  def mergeInto(a: PearsonBuf, b: PearsonBuf, offset: Int = 0): PearsonBuf = {
     var j = 0
-    while (j < a.mp.length) {
-      if (b.mp(j) > a.mp(j)) {
-        a.mp(j) = if (b.mp(j) > 1.0) 1.0 else b.mp(j)
-        a.mpi(j) = b.mpi(j)
+    while (j < b.mp.length) {
+      val g = offset + j
+      if (b.mp(j) > a.mp(g)) {
+        a.mp(g) = if (b.mp(j) > 1.0) 1.0 else b.mp(j)
+        a.mpi(g) = b.mpi(j)
       }
       j += 1
     }
@@ -240,31 +244,20 @@ object Mpx {
       crossCorrelation: Boolean = false): (Array[Double], Array[Long]) = {
     require(w >= 4, "window size must be at least 4.")
     require(w <= ts.length / 2.0, "Time series is too short relative to desired window size")
-    val st = selfStats(ts, w)
-    val buf = newBuf(st.profileLen)
-    selfJoinBlock(ts, w, st, st.minlag + 1, st.profileLen, buf)
-    clampBuf(buf)
+    val buf = selfJoin(ts, w)
     if (crossCorrelation) (buf.mp, buf.mpi)
     else (selfToEuclidean(buf, w), buf.mpi)
   }
 
-  /** AB-join stats for one side. */
-  final case class AbStats(mu: Array[Double], sig: Array[Double],
-      df: Array[Double], dg: Array[Double], profileLen: Int)
-
-  def abStats(ts: Array[Double], w: Int): AbStats = {
-    val n = ts.length
-    val profileLen = n - w + 1
-    val (mu, sig) = MovingStats.muinvn(ts, w)
-    val df = new Array[Double](profileLen)
-    val dg = new Array[Double](profileLen)
-    var i = w
-    while (i < n) {
-      df(i - w + 1) = 0.5 * (ts(i) - ts(i - w))
-      dg(i - w + 1) = (ts(i) - mu(i - w + 1)) + (ts(i - w) - mu(i - w))
-      i += 1
-    }
-    AbStats(mu, sig, df, dg, profileLen)
+  /** The whole-series self join, clamped (Pearson domain), without
+    * [[mpxSelf]]'s argument checks — the distributed short path calls it
+    * on series it has already found eligible.
+    */
+  def selfJoin(ts: Array[Double], w: Int): PearsonBuf = {
+    val st = selfStats(ts, w)
+    val buf = newBuf(st.profileLen)
+    selfJoinBlock(ts, w, st, st.minlag + 1, st.profileLen, buf)
+    clampBuf(buf)
   }
 
   /** One directional AB sweep over anchor rows [rowStart, rowEnd) of side A
@@ -272,7 +265,7 @@ object Mpx {
     * :218-237). Updates bufA (indexed by A positions) and bufB (B positions).
     */
   def abJoinBlock(a: Array[Double], b: Array[Double], w: Int,
-      sa: AbStats, sb: AbStats, rowStart: Int, rowEnd: Int,
+      sa: SelfStats, sb: SelfStats, rowStart: Int, rowEnd: Int,
       bufA: PearsonBuf, bufB: PearsonBuf): Unit = {
     var i = rowStart
     while (i < rowEnd) {
@@ -312,7 +305,7 @@ object Mpx {
     * skipped (the reference relies on df(0)=dg(0)=0 for the same effect).
     */
   def abJoinTile(aSlice: Array[Double], bSlice: Array[Double], w: Int,
-      sa: AbStats, sb: AbStats, aStart: Int, bLo: Int, bHi: Int,
+      sa: SelfStats, sb: SelfStats, aStart: Int, bLo: Int, bHi: Int,
       plenA: Int, dLo: Int, dHi: Int,
       bufA: PearsonBuf, bufB: PearsonBuf): Unit = {
     var d = dLo
@@ -370,16 +363,22 @@ object Mpx {
   def mpxAb(ts: Array[Double], query: Array[Double], w: Int,
       crossCorrelation: Boolean = false)
       : (Array[Double], Array[Long], Array[Double], Array[Long]) = {
-    val sa = abStats(ts, w)
-    val sb = abStats(query, w)
+    val (bufA, bufB) = abJoin(ts, query, w)
+    if (crossCorrelation) (bufA.mp, bufA.mpi, bufB.mp, bufB.mpi)
+    else (abToEuclidean(bufA, w), bufA.mpi, abToEuclidean(bufB, w), bufB.mpi)
+  }
+
+  /** Both clamped AB-join buffers (A positions, B positions) in the
+    * Pearson domain; shared by [[mpxAb]] and the distributed short path.
+    */
+  def abJoin(ts: Array[Double], query: Array[Double], w: Int): (PearsonBuf, PearsonBuf) = {
+    val sa = selfStats(ts, w)
+    val sb = selfStats(query, w)
     val bufA = newBuf(sa.profileLen)
     val bufB = newBuf(sb.profileLen)
     // AB pass (A-anchored), then BA pass (B-anchored)
     abJoinBlock(ts, query, w, sa, sb, 0, sa.profileLen, bufA, bufB)
     abJoinBlock(query, ts, w, sb, sa, 0, sb.profileLen, bufB, bufA)
-    clampBuf(bufA)
-    clampBuf(bufB)
-    if (crossCorrelation) (bufA.mp, bufA.mpi, bufB.mp, bufB.mpi)
-    else (abToEuclidean(bufA, w), bufA.mpi, abToEuclidean(bufB, w), bufB.mpi)
+    (clampBuf(bufA), clampBuf(bufB))
   }
 }

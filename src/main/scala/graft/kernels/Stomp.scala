@@ -8,13 +8,13 @@ package graft.kernels
   * FFT convolution, then streams rows sequentially — stomp.py:100-105) is
   * exactly the per-partition recipe used by the distributed orchestration:
   * partitions own contiguous row ranges and merge with elementwise min
-  * (stomp.py:340-357), which is the cross-partition min-reduce the engine's
-  * ProfileMerge Aggregator implements.
+  * (stomp.py:340-357) — [[mergeInto]], which the distributed layer's
+  * Aggregator also applies to tile segments across Spark partitions.
   */
 object Stomp {
 
-  /** One batch's partial profiles. Left/right arrays are null for AB joins
-    * (the reference returns None there).
+  /** One batch's (or tile's) partial profiles. Left/right arrays are null
+    * for AB joins (the reference returns None there).
     */
   final case class Batch(
       mp: Array[Double], pi: Array[Long],
@@ -169,11 +169,6 @@ object Stomp {
     Batch(mp, pi, lmp, lpi, rmp, rpi)
   }
 
-  /** One tile's partial profiles over the column range it owns. */
-  final case class Tile(mp: Array[Double], pi: Array[Long],
-      lmp: Array[Double], lpi: Array[Long],
-      rmp: Array[Double], rpi: Array[Long])
-
   /** Self-join tile over rows [rLo, rHi) x columns [cLo, cHi) from halo'd
     * slices only: `rowSliceRaw` covers positions [rLo, rHi-1+w),
     * `colSliceRaw` covers [cLo, cHi-1+w). Column stats are recomputed from
@@ -186,7 +181,7 @@ object Stomp {
     */
   def tileCompute(rLo: Int, rHi: Int, cLo: Int, cHi: Int,
       rowSliceRaw: Array[Double], colSliceRaw: Array[Double], w: Int,
-      ez: Int): Tile = {
+      ez: Int): Batch = {
     val rows = rHi - rLo
     val cols = cHi - cLo
     val skipRows = Core.findSkipLocations(rowSliceRaw, rows, w)
@@ -261,27 +256,29 @@ object Stomp {
       }
       i += 1
     }
-    Tile(mp, pi, lmp, lpi, rmp, rpi)
+    Batch(mp, pi, lmp, lpi, rmp, rpi)
   }
 
-  /** Elementwise-min merge of batch partials (ref stomp.py:340-357).
-    * Mutates and returns `a`.
+  /** Elementwise-min merge of batch partials (ref stomp.py:340-357): `b`
+    * covers positions [offset, offset + b.mp.length) of `a` (a tile's
+    * column segment; 0 for whole batches). Mutates and returns `a`.
     */
-  def mergeInto(a: Batch, b: Batch): Batch = {
+  def mergeInto(a: Batch, b: Batch, offset: Int = 0): Batch = {
     var j = 0
-    while (j < a.mp.length) {
-      if (b.mp(j) < a.mp(j)) {
-        a.mp(j) = b.mp(j)
-        a.pi(j) = b.pi(j)
+    while (j < b.mp.length) {
+      val g = offset + j
+      if (b.mp(j) < a.mp(g)) {
+        a.mp(g) = b.mp(j)
+        a.pi(g) = b.pi(j)
       }
       if (a.lmp != null) {
-        if (b.lmp(j) < a.lmp(j)) {
-          a.lmp(j) = b.lmp(j)
-          a.lpi(j) = b.lpi(j)
+        if (b.lmp(j) < a.lmp(g)) {
+          a.lmp(g) = b.lmp(j)
+          a.lpi(g) = b.lpi(j)
         }
-        if (b.rmp(j) < a.rmp(j)) {
-          a.rmp(j) = b.rmp(j)
-          a.rpi(j) = b.rpi(j)
+        if (b.rmp(j) < a.rmp(g)) {
+          a.rmp(g) = b.rmp(j)
+          a.rpi(g) = b.rpi(j)
         }
       }
       j += 1
@@ -314,7 +311,7 @@ object Stomp {
     val batches = batchRanges(numQueries, nJobs).map { case (s, e) =>
       batchCompute(s, e, ts, query, w, ez, isJoin, dataMu, dataSig, firstProduct, skipLocs)
     }
-    val merged = batches.reduceLeft(mergeInto)
+    val merged = batches.reduceLeft(mergeInto(_, _))
     Result(merged.mp, merged.pi, merged.lmp, merged.lpi, merged.rmp, merged.rpi, w, ez, isJoin)
   }
 }

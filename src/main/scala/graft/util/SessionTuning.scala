@@ -21,17 +21,13 @@ import org.apache.spark.sql.SparkSession
   * CPU-heavy narrow stages (media decode, signature hashing) are spread
   * by explicit hash repartitions, which AQE never coalesces, so they keep
   * full parallelism.
-  *
-  * Opt-out: SPARK_GRAFT_NO_TUNING=1 leaves the session untouched.
   */
 object SessionTuning {
 
-  private val off = sys.env.get("SPARK_GRAFT_NO_TUNING").contains("1")
   private val applied = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
   def ensure(spark: SparkSession): Unit = {
-    if (off) return
     applied.removeIf(s => s.sparkContext.isStopped)
     if (applied.add(spark)) {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")

@@ -33,22 +33,18 @@ object StageCache {
     * independent consumer stages CONCURRENTLY, so N subtrees of one
     * action can each compute the same cache partitions (the
     * `BlockManager: Block rdd_X already exists` warnings). Eager
-    * materialization (one count() at registration,
-    * SPARK_GRAFT_EAGER_PERSIST=1) closes the race but was measured NET
-    * SLOWER on every multi-persist query once the r8 round made the
-    * raced stages cheap at their source (q39: 3.3 s lazy vs 4.8 s eager
-    * — the extra sequential jobs outweigh the duplicated compute), so
-    * lazy is the default and eagerness is an opt-in experiment flag.
+    * materialization (one count() at registration) closes the race but
+    * was measured NET SLOWER on every multi-persist query once the r8
+    * round made the raced stages cheap at their source (q39: 3.3 s lazy
+    * vs 4.8 s eager — the extra sequential jobs outweigh the duplicated
+    * compute), so persists stay lazy.
     */
-  private val eagerDefault = sys.env.get("SPARK_GRAFT_EAGER_PERSIST").contains("1")
-
   def persist[T](ds: Dataset[T],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
     registry.keySet.removeIf(s => s.sparkContext.isStopped)
     val out = ds.persist(level)
     registry.computeIfAbsent(ds.sparkSession,
       _ => new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()).add(out)
-    if (eagerDefault) out.count(): Unit
     out
   }
 

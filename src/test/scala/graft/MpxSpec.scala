@@ -64,7 +64,7 @@ class MpxSpec extends AnyFunSuite {
         if (s < e) Mpx.selfJoinBlock(ts, w, st, s, e, buf)
         buf
       }
-      val merged = Mpx.clampBuf(bufs.reduce(Mpx.mergeInto))
+      val merged = Mpx.clampBuf(bufs.reduce(Mpx.mergeInto(_, _)))
       val mp = Mpx.selfToEuclidean(merged, w)
       assertAlmostEqual(mp, single, decimal = 10)
       assert(merged.mpi.toSeq == singlePi.toSeq, s"pi mismatch at $nBlocks blocks")
@@ -77,8 +77,8 @@ class MpxSpec extends AnyFunSuite {
     val w = 32
     val (mpa, mpia, mpb, mpib) = Mpx.mpxAb(ts, tsb, w)
 
-    val sa = Mpx.abStats(ts, w)
-    val sb = Mpx.abStats(tsb, w)
+    val sa = Mpx.selfStats(ts, w)
+    val sb = Mpx.selfStats(tsb, w)
     val bufA = Mpx.newBuf(sa.profileLen)
     val bufB = Mpx.newBuf(sb.profileLen)
     // split AB pass into 3 row blocks, BA into 2

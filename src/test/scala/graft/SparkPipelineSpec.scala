@@ -87,6 +87,11 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertAlmostEqual(sSplit.mp, sUnsplit.mp, decimal = 8)
     assertAlmostEqual(sSplit.lmp, sUnsplit.lmp, decimal = 8)
     assertAlmostEqual(sSplit.rmp, sUnsplit.rmp, decimal = 8)
+    for ((name, got, want) <- Seq(("pi", sSplit.pi, sUnsplit.pi),
+        ("lpi", sSplit.lpi, sUnsplit.lpi), ("rpi", sSplit.rpi, sUnsplit.rpi))) {
+      val bad = got.indices.filter(i => got(i) != want(i))
+      assert(bad.isEmpty, s"tiled stomp $name differs at ${bad.take(10)}")
+    }
   }
 
   test("tier retention keeps exactly the post-cutoff buckets (north-rule " +
@@ -144,6 +149,92 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertAlmostEqual(tiled.mpB, mpB, decimal = 8)
     assert(tiled.piA.toSeq == piA.toSeq)
     assert(tiled.piB.toSeq == piB.toSeq)
+  }
+
+  test("mixed-length input: the short and tile branches of one call union to " +
+      "the unsplit rows, and a series below 2w emits no row on either side") {
+    import spark.implicits._
+    val series = Seq(("long", 0, 875), ("s90", 100, 90), ("s75", 300, 75),
+        ("s65", 500, 65), ("s20", 700, 20))
+      .map { case (id, off, n) => SeriesRow(id, "v", 0L, sampledata.slice(off, off + n)) }
+    val ds = spark.createDataset(series)
+    def sameRows(got: Array[MpProfileRow], want: Array[MpProfileRow],
+        windows: Seq[Int]): Unit = {
+      // one row per (series, window) with n >= 2w, whichever branch ran it
+      val eligible = for (s <- series; w <- windows if s.values.length >= 2 * w)
+        yield (s.conv_id, w)
+      assert(got.map(r => (r.conv_id, r.w)).toSet == eligible.toSet)
+      assert(got.length == eligible.length && want.length == eligible.length)
+      val byKey = want.map(r => (r.conv_id, r.w) -> r).toMap
+      for (g <- got) {
+        val u = byKey((g.conv_id, g.w))
+        for ((a, b) <- Seq((g.mp, u.mp), (g.lmp, u.lmp), (g.rmp, u.rmp)))
+          assertAlmostEqual(a, b, decimal = 8)
+        for ((a, b) <- Seq((g.pi, u.pi), (g.lpi, u.lpi), (g.rpi, u.rpi)))
+          assert(a.toSeq == b.toSeq, s"${g.conv_id} w=${g.w}: indices differ")
+      }
+    }
+    // splitThreshold 100: only "long" tiles; with one window no series can
+    // be both >= splitThreshold and < 2w, so the tile-side drop is covered
+    // by the two-window skimp call below
+    sameRows(DistributedMp.mpxProfiles(ds, 32, "raw", splitThreshold = 100,
+        tileSize = 190).collect(),
+      DistributedMp.mpxProfiles(ds, 32, "raw").collect(), Seq(32))
+    sameRows(DistributedMp.stompProfiles(ds, 32, "raw", splitThreshold = 100,
+        tileSize = 190).collect(),
+      DistributedMp.stompProfiles(ds, 32, "raw").collect(), Seq(32))
+    // splitThreshold 70: "s75" takes the tile branch yet is too short for
+    // w=40, "s65" takes the short branch and is too short for w=40
+    sameRows(DistributedMp.skimpProfiles(ds, Array(16, 40), "raw",
+        splitThreshold = 70, tileSize = 190).collect(),
+      DistributedMp.skimpProfiles(ds, Array(16, 40), "raw").collect(), Seq(16, 40))
+
+    // AB pairs: eligible when both sides hold a window; one short and one
+    // tiled pair are eligible, one ineligible pair sits on each side. The
+    // tiled pair's B side is random, not a slice of its A side: an exact
+    // repeat has distance ~0, where sqrt(2w(1-rho)) turns a 1-ulp Pearson
+    // difference into ~5e-8, beyond any 1e-8 gate on Euclidean values
+    val rng = new java.util.Random(11)
+    val byId = series.map(s => s.conv_id -> s.values).toMap +
+      ("r90" -> Array.fill(90)(rng.nextGaussian()))
+    val pairs = spark.createDataset(Seq(("long", "r90"), ("s90", "s75"),
+        ("s20", "s90"), ("long", "s20"))
+      .map { case (a, b) => DistributedMp.AbPair(a, b, byId(a), byId(b)) })
+    val got = DistributedMp.mpxAbProfiles(pairs, 32, splitThreshold = 100,
+      tileSize = 150).collect()
+    val want = DistributedMp.mpxAbProfiles(pairs, 32).collect()
+      .map(r => (r.conv_a, r.conv_b) -> r).toMap
+    assert(got.map(r => (r.conv_a, r.conv_b)).toSet == Set(("long", "r90"), ("s90", "s75")))
+    assert(got.length == 2 && want.size == 2)
+    for (g <- got) {
+      val u = want((g.conv_a, g.conv_b))
+      assertAlmostEqual(g.mpA, u.mpA, decimal = 8)
+      assertAlmostEqual(g.mpB, u.mpB, decimal = 8)
+      assert(g.piA.toSeq == u.piA.toSeq && g.piB.toSeq == u.piB.toSeq,
+        s"${g.conv_a}/${g.conv_b}: indices differ")
+    }
+  }
+
+  test("plan shape: a caller-proven all-short input plans no shuffle; the " +
+      "tile path keeps its spread and merge exchanges") {
+    import spark.implicits._
+    def shuffles(d: org.apache.spark.sql.Dataset[_]): Int =
+      (d.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }).collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.size
+    val ds = spark.createDataset(Seq(SeriesRow("a", "v", 0L, sampledata)))
+    val pairs = spark.createDataset(Seq(
+      DistributedMp.AbPair("x", "y", sampledata, sampledata.take(300))))
+    // the q07-q13/q28 builders pass maxSeriesLen = OracleSqlGen.Cap
+    assert(shuffles(DistributedMp.mpxProfiles(ds, 32, "raw", maxSeriesLen = 1000)) == 0)
+    assert(shuffles(DistributedMp.mpxAbProfiles(pairs, 32, maxSeriesLen = 1000)) == 0)
+    // tile spread + segment merge; the AB join regroups its two sides
+    assert(shuffles(DistributedMp.mpxProfiles(ds, 32, "raw")) == 2)
+    assert(shuffles(DistributedMp.mpxAbProfiles(pairs, 32)) == 3)
   }
 
   test("distributed tiled snippets equal the single-task kernel (indices + " +
@@ -264,11 +355,6 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "jobs (lazy persists) and the bucket-cap accumulator fills in on the " +
       "query's own action") {
     import spark.implicits._
-    // Under the default lazy StageCache (SPARK_GRAFT_EAGER_PERSIST unset)
-    // building a dedup plan must not run any Spark job; the opt-in eager
-    // mode trades extra build-time jobs for race-free materialization and
-    // is exercised by the StageCache-level specs.
-    assume(!sys.env.get("SPARK_GRAFT_EAGER_PERSIST").contains("1"))
     // one 12-clone degenerate group: every band bucket of the clones
     // exceeds maxBucket=3 and must be dropped (and counted)
     val docs = ((0 until 12).map(i =>
