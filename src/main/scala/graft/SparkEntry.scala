@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
@@ -21,19 +21,57 @@ object SparkEntry {
     s.read.parquet(s"$dir/documents.parquet")
   /** The embedding table arrives as ONE scan split at small scale, which
     * serializes every downstream 64-dim cosine/hyperplane fold onto a
-    * single task (q23/q24/q25/q35). Spread by hash(vec_id) — 8-way covers
-    * the compute; wider widths just multiply near-empty tasks — only when
-    * the scan is under-parallel (a large corpus keeps its own splits).
+    * single task (q23/q24/q25/q35): spread it by vec_id (see
+    * [[graft.util.SessionTuning.spread]]) — 8-way covers the compute;
+    * wider widths just multiply near-empty tasks.
     */
-  private def embeddings(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.parquet(s"$dir/embeddings.parquet")
-    val want = math.min(8, s.sparkContext.defaultParallelism)
-    if (base.rdd.getNumPartitions * 2 < want)
-      base.repartition(want, col("vec_id"))
-    else base
-  }
+  private def embeddings(s: SparkSession, dir: String): DataFrame =
+    graft.util.SessionTuning.spread(s.read.parquet(s"$dir/embeddings.parquet"),
+      math.min(8, s.sparkContext.defaultParallelism), "vec_id")
   private def lineitem(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
+
+  /** The q24/q25/q35 oracles hardcode dim=64 (hyperplanes, per-dim sums):
+    * if the data width ever changes the engines would disagree with no
+    * hint, so fail loudly at plan build instead.
+    */
+  private def oracleDim64(e: DataFrame, query: String): Int = {
+    val dim = Similarity.vecDim(e, "embedding")
+    require(dim == 64, s"OracleSqlGen.$query assumes dim=64 but embeddings " +
+      s"have dim=$dim — regenerate the oracle with $query(dim = $dim)")
+    dim
+  }
+
+  /** Per query, how many brute-force top-k neighbors the approximate
+    * top-k also returned.
+    */
+  private def recallHits(brute: DataFrame, approx: DataFrame): DataFrame = {
+    val b = brute.select(col("query_id"), col("neighbor_id"))
+    val a = approx.select(col("query_id").as("aq"), col("neighbor_id").as("an"))
+    b.join(a, b("query_id") === col("aq") && b("neighbor_id") === col("an"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(col("an")).as("n_hits"))
+      .select(col("query_id"), col("n_hits"))
+  }
+
+  /** Per-user event order of the moving-window queries (q05/q14). */
+  private def byUserTs = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
+  /** Events as SeriesPoint columns: one "v" series per user, bucket = µs. */
+  private def points(s: SparkSession, dir: String): Dataset[SeriesPoint] = {
+    import s.implicits._
+    events(s, dir).select($"user_id".cast("string").as("conv_id"), lit("v").as("kind"),
+      unix_micros($"ts".cast("timestamp")).as("bucket"), $"value").as[SeriesPoint]
+  }
+
+  /** A tier in the rollup oracles' shape: user_id, bucket start in epoch
+    * seconds as `tsCol`, cnt and rounded sum/min/max.
+    */
+  private def tierRows(tier: Dataset[_], tsCol: String): DataFrame =
+    tier.select(col("conv_id").cast("long").as("user_id"),
+      (col("bucket") / 1000000L).cast("long").as(tsCol),
+      col("cnt"), round(col("sum"), 4).as("sum_v"),
+      round(col("min"), 6).as("min_v"), round(col("max"), 6).as("max_v"))
 
   /** Events projected to SeriesPoint and stored ONCE per (session, dir) as
     * a bucket(conv_id) table with one sorted file per bucket — the parquet
@@ -45,7 +83,7 @@ object SparkEntry {
     * test and PLAN_DIGEST). The one-time write is the layout cost a real
     * deployment pays at ingest, not per query.
     */
-  def bucketedPoints(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[SeriesPoint] = {
+  def bucketedPoints(s: SparkSession, dir: String): Dataset[SeriesPoint] = {
     import s.implicits._
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
@@ -56,18 +94,11 @@ object SparkEntry {
         val tmpRoot = java.nio.file.Files.createTempDirectory("graft_bucketed")
         // the layout lives for the session only — reclaim the temp dir on
         // JVM exit so repeated driver invocations don't leak /tmp space
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            import java.nio.file.{Files, Path}
-            import java.util.Comparator
-            Files.walk(tmpRoot).sorted(Comparator.reverseOrder[Path]())
-              .forEach(p => Files.deleteIfExists(p))
-          } catch { case _: Throwable => () }))
+        Runtime.getRuntime.addShutdownHook(new Thread(() => {
+          org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile); ()
+        }))
         val path = tmpRoot.resolve(table).toString
-        events(s, dir).select($"user_id".cast("string").as("conv_id"),
-            lit("v").as("kind"), unix_micros($"ts".cast("timestamp")).as("bucket"),
-            $"value")
-          .repartition(buckets, $"conv_id")
+        points(s, dir).repartition(buckets, $"conv_id")
           .write.bucketBy(buckets, "conv_id").sortBy("conv_id", "kind", "bucket")
           .option("path", path)
           .mode("overwrite").saveAsTable(table)
@@ -103,27 +134,12 @@ object SparkEntry {
           round(min($"value"), 6).as("min_v"), round(max($"value"), 6).as("max_v"))
     }),
 
-    "q02_rollup_1h_chain" -> ((s, dir) => {
-      import s.implicits._
-      val pts = events(s, dir).select($"user_id".cast("string").as("conv_id"),
-        lit("v").as("kind"), unix_micros($"ts".cast("timestamp")).as("bucket"), $"value").as[SeriesPoint]
-      val h1 = Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h")
-      h1.select($"conv_id".cast("long").as("user_id"),
-        ($"bucket" / 1000000L).cast("long").as("hour_ts"),
-        $"cnt", round($"sum", 4).as("sum_v"),
-        round($"min", 6).as("min_v"), round($"max", 6).as("max_v"))
-    }),
+    "q02_rollup_1h_chain" -> ((s, dir) =>
+      tierRows(Rollup.rollupTier(Rollup.rollupRaw(points(s, dir), "1m"), "1h"), "hour_ts")),
 
-    "q03_rollup_1d_chain" -> ((s, dir) => {
-      import s.implicits._
-      val pts = events(s, dir).select($"user_id".cast("string").as("conv_id"),
-        lit("v").as("kind"), unix_micros($"ts".cast("timestamp")).as("bucket"), $"value").as[SeriesPoint]
-      val d1 = Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"), "1d")
-      d1.select($"conv_id".cast("long").as("user_id"),
-        ($"bucket" / 1000000L).cast("long").as("day_ts"),
-        $"cnt", round($"sum", 4).as("sum_v"),
-        round($"min", 6).as("min_v"), round($"max", 6).as("max_v"))
-    }),
+    "q03_rollup_1d_chain" -> ((s, dir) =>
+      tierRows(Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(points(s, dir), "1m"),
+        "1h"), "1d"), "day_ts")),
 
     // the 100 TB headline plan under the driver's oracle: the same 1h
     // aggregates as q02, but through the fused zero-shuffle colocated
@@ -133,12 +149,8 @@ object SparkEntry {
     // locality comes from the layout, exactly as it would at scale.
     "q36_rollup_colocated" -> ((s, dir) => {
       import s.implicits._
-      Rollup.rollupAllColocated(bucketedPoints(s, dir))
-        .where($"tier" === "1h")
-        .select($"conv_id".cast("long").as("user_id"),
-          ($"bucket" / 1000000L).cast("long").as("hour_ts"),
-          $"cnt", round($"sum", 4).as("sum_v"),
-          round($"min", 6).as("min_v"), round($"max", 6).as("max_v"))
+      tierRows(Rollup.rollupAllColocated(bucketedPoints(s, dir))
+        .where($"tier" === "1h"), "hour_ts")
     }),
 
     // incremental continuous-aggregate maintenance: the last 2 days of
@@ -149,16 +161,11 @@ object SparkEntry {
     // proves the incremental path exact, boundary bucket included.
     "q40_incremental_rollup" -> ((s, dir) => {
       import s.implicits._
-      val pts = events(s, dir).select($"user_id".cast("string").as("conv_id"),
-        lit("v").as("kind"), unix_micros($"ts".cast("timestamp")).as("bucket"),
-        $"value").as[SeriesPoint]
+      val pts = points(s, dir)
       val cut = pts.agg(max($"bucket")).as[Long].first() - 2 * Rollup.TierStep("1d")
       val baseTier = Rollup.rollupRaw(pts.where($"bucket" < cut), "1m")
-      Rollup.maintainTier(baseTier, pts.where($"bucket" >= cut), "1m")
-        .select($"conv_id".cast("long").as("user_id"),
-          ($"bucket" / 1000000L).cast("long").as("minute_ts"),
-          $"cnt", round($"sum", 4).as("sum_v"),
-          round($"min", 6).as("min_v"), round($"max", 6).as("max_v"))
+      tierRows(Rollup.maintainTier(baseTier, pts.where($"bucket" >= cut), "1m"),
+        "minute_ts")
     }),
 
     // per-bucket order statistics: exact interpolated median/p95 per
@@ -198,14 +205,12 @@ object SparkEntry {
       // moving mean/std over a fixed-point (1e-4) quantization of value:
       // integer window sums are order-insensitive, so Spark's frame scan
       // and DuckDB's segment tree produce bit-identical results
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-        .rowsBetween(-7, 0)
-      val rn = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+      val w = byUserTs.rowsBetween(-7, 0)
       events(s, dir)
         .withColumn("vi", round($"value" * 10000, 0).cast("long"))
         .withColumn("s1", sum($"vi").over(w))
         .withColumn("s2", sum($"vi" * $"vi").over(w))
-        .withColumn("rn", row_number().over(rn))
+        .withColumn("rn", row_number().over(byUserTs))
         .where($"rn" >= 8)
         .select($"user_id", $"event_id",
           floor(($"s1" / 8.0) * 10.0).cast("long").as("mavg_e5"),
@@ -226,13 +231,11 @@ object SparkEntry {
 
     "q14_moving_minmax" -> ((s, dir) => {
       import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-        .rowsBetween(-7, 0)
-      val rn = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+      val w = byUserTs.rowsBetween(-7, 0)
       events(s, dir)
         .withColumn("mmin", min($"value").over(w))
         .withColumn("mmax", max($"value").over(w))
-        .withColumn("rn", row_number().over(rn))
+        .withColumn("rn", row_number().over(byUserTs))
         .where($"rn" >= 8)
         .select($"user_id", $"event_id",
           round($"mmin", 6).as("mmin"), round($"mmax", 6).as("mmax"))
@@ -309,22 +312,10 @@ object SparkEntry {
     "q24_ann_lsh_recall" -> ((s, dir) => {
       import s.implicits._
       val e = embeddings(s, dir).select($"vec_id", $"embedding")
-      // the oracle hardcodes dim=64 hyperplanes; if the data width ever
-      // changes the two engines would bucket differently with no hint —
-      // fail loudly at plan build instead
-      val dim = Similarity.vecDim(e, "embedding")
-      require(dim == 64, s"OracleSqlGen.q24 generates dim=64 hyperplanes but " +
-        s"embeddings have dim=$dim — regenerate the oracle with q24(dim = $dim)")
+      val dim = oracleDim64(e, "q24")
       val q = e.where($"vec_id" < 20)
-      val brute = Similarity.bruteForceTopK(e, q, 10)
-        .select($"query_id", $"neighbor_id")
-      val approx = Similarity.lshTopK(e, q, 10, dim0 = dim)
-        .select($"query_id".as("aq"), $"neighbor_id".as("an"))
-      brute.join(approx, brute("query_id") === $"aq" && brute("neighbor_id") === $"an",
-          "left")
-        .groupBy($"query_id")
-        .agg(count($"an").as("n_hits"))
-        .select($"query_id", $"n_hits")
+      recallHits(Similarity.bruteForceTopK(e, q, 10),
+        Similarity.lshTopK(e, q, 10, dim0 = dim))
     }),
 
     "q35_ann_ivf" -> ((s, dir) => {
@@ -334,20 +325,9 @@ object SparkEntry {
       // action) so the parquet scans once
       val e = graft.util.StageCache.persist(
         embeddings(s, dir).select($"vec_id", $"embedding"))
-      // the oracle hardcodes dim=64 (range(64) per-dim sums) like q24/q25
-      val dim = Similarity.vecDim(e, "embedding")
-      require(dim == 64, s"OracleSqlGen.q35 assumes dim=64 but embeddings " +
-        s"have dim=$dim — regenerate the oracle with q35(dim = $dim)")
+      oracleDim64(e, "q35")
       val q = e.where($"vec_id" < 20)
-      val brute = Similarity.bruteForceTopK(e, q, 10)
-        .select($"query_id", $"neighbor_id")
-      val approx = Similarity.ivfTopK(e, q, 10)
-        .select($"query_id".as("aq"), $"neighbor_id".as("an"))
-      brute.join(approx, brute("query_id") === $"aq" && brute("neighbor_id") === $"an",
-          "left")
-        .groupBy($"query_id")
-        .agg(count($"an").as("n_hits"))
-        .select($"query_id", $"n_hits")
+      recallHits(Similarity.bruteForceTopK(e, q, 10), Similarity.ivfTopK(e, q, 10))
     }),
 
     "q25_embedding_dups" -> ((s, dir) => {
@@ -357,9 +337,7 @@ object SparkEntry {
       // vectors (one component +0.25f) — the recall path then has real
       // work, and the oracle replants identically
       val base = embeddings(s, dir).select($"vec_id", $"embedding")
-      val dim = Similarity.vecDim(base, "embedding")
-      require(dim == 64, s"OracleSqlGen.q25 generates dim=64 hyperplanes but " +
-        s"embeddings have dim=$dim — regenerate the oracle with q25(dim = $dim)")
+      val dim = oracleDim64(base, "q25")
       val planted = base.where($"vec_id" < 20)
         .select(($"vec_id" + 1000000L).as("vec_id"),
           transform($"embedding",

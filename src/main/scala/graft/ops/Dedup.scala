@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
@@ -26,8 +27,6 @@ import graft.ops.ColSyntax._
   * harnesses release between queries/reps).
   */
 object Dedup {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
 
   /** Default LSH bucket-size cap: a degenerate bucket (e.g. millions of
     * exact duplicates sharing every band) makes the candidate equi-join
@@ -60,8 +59,9 @@ object Dedup {
     */
   private def capBuckets(banded: DataFrame, keyCols: Seq[String],
       maxBucket: Int, what: String): DataFrame = {
-    if (maxBucket <= 0) // explicit opt-out: uncapped, but still forked twice
-      return graft.util.StageCache.persist(banded)
+    // explicit opt-out: uncapped, but still forked twice — forked() keeps an
+    // input the caller already cached (embeddingDups' keys) as it is
+    if (maxBucket <= 0) return graft.util.StageCache.forked(banded)
     val acc = CapBucketsLog.accumulatorFor(banded.sparkSession, what, maxBucket)
     val mark = udf(() => { acc.add(1L); true }).asNondeterministic()
     // when(cond, tick) makes the tick's ordering explicit — `cond && tick()`
@@ -75,28 +75,39 @@ object Dedup {
       banded.join(broadcast(over), keyCols, "left_anti"))
   }
 
-  /** Hash-spread an (id, text) projection before a CPU-heavy typed kernel
-    * ONLY when the scan itself is under-parallel (a small corpus arrives
-    * as one file split, serializing the md5 stage onto one core). A
-    * large table already scans with enough splits, and an unconditional
-    * repartition there would shuffle the full text corpus for nothing.
+  /** The one place `ops/` turns bucket keys into candidate pairs (MinHash
+    * and SimHash bands, hyperplane buckets, so media dedup too): cap the
+    * buckets ([[capBuckets]], `maxBucket <= 0` = uncapped), self-equi-join
+    * on `keyCols`, keep `id_a < id_b`; each `payload` column rides through
+    * the exchange as `<name>_a` / `<name>_b`. A pair sharing several keys
+    * appears once per key: each caller deduplicates at its own point.
     */
-  private def spreadForCpu(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < want) df.repartition(want, $"id") else df
+  private[graft] def candidatePairs(keyed: DataFrame, keyCols: Seq[String], idCol: String,
+      payload: Seq[String], maxBucket: Int, what: String): DataFrame = {
+    val capped = capBuckets(keyed, keyCols, maxBucket, what)
+    def side(s: String) = capped.select(keyCols.map(col) ++
+      (col(idCol).as(s"id_$s") +: payload.map(p => col(p).as(s"${p}_$s"))): _*)
+    side("a").join(side("b"), keyCols).where($"id_a" < $"id_b")
+  }
+
+  /** Re-join a verify payload onto (id_a, id_b) pairs by id as `<as>_a` /
+    * `<as>_b`, so array payloads skip the candidate exchange.
+    */
+  private def withSides(pairs: DataFrame, src: DataFrame, idCol: String,
+      valueCol: String, as: String): DataFrame = {
+    def side(s: String) = src.select(col(idCol).as(s"id_$s"), col(valueCol).as(s"${as}_$s"))
+    pairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
   }
 
   /** Exact dedup: md5 of the raw text. Returns (doc_id, content_hash,
     * group_size, keep) where keep marks the minimum doc_id per group.
     */
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val group = Window.partitionBy($"content_hash")
     docs
       .withColumn("content_hash", md5(col(textCol)))
-      .withColumn("group_size",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy($"content_hash")))
-      .withColumn("keep",
-        col(idCol) === min(col(idCol)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"content_hash")))
+      .withColumn("group_size", count(lit(1)).over(group))
+      .withColumn("keep", col(idCol) === min(col(idCol)).over(group))
       .select(col(idCol), $"content_hash", $"group_size", $"keep")
   }
 
@@ -128,6 +139,15 @@ object Dedup {
   // regexes skip the fast path); the typed kernels tokenize per document
   private val wsPattern = java.util.regex.Pattern.compile("\\s+")
 
+  /** (id, text) rows for a per-document md5 kernel, spread full width when
+    * the scan is under-parallel: the md5 kernels scale with cores.
+    */
+  private def docTexts(docs: DataFrame, idCol: String, textCol: String) = {
+    import docs.sparkSession.implicits._
+    graft.util.SessionTuning.spread(docs.select(col(idCol).as("id"), col(textCol).as("t")),
+      docs.sparkSession.sparkContext.defaultParallelism, "id").as[(Long, String)]
+  }
+
   /** MinHash signatures over word-k-shingle TEXTS: sig(f) = lexicographic
     * min of md5(f ':' shingle) over the document's distinct shingles — a
     * valid min-hash family whose values a SQL engine reproduces exactly.
@@ -139,8 +159,7 @@ object Dedup {
       shingleK: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    spreadForCpu(docs.select(col("doc_id").as("id"), col(textCol).as("t")))
-      .as[(Long, String)]
+    docTexts(docs, "doc_id", textCol)
       .mapPartitions { it =>
         // the hashed bytes are identical to md5(f + ":" + shingle) over the
         // concatenated string: the "f:" prefix is pure ASCII, so its UTF-8
@@ -213,24 +232,18 @@ object Dedup {
     val sigs = graft.util.StageCache.persist(minhashSignature(
       docs.withColumnRenamed(idCol, "doc_id"), textCol, numHashes))
 
-    val banded = capBuckets(
-      sigs.select($"id",
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            b => md5(concat_ws("|", slice($"minhash", b * rows + 1, lit(rows)))))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      Seq("band", "bucket"), maxBucket, "minhashLsh")
+    val banded = sigs.select($"id",
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => md5(concat_ws("|", slice($"minhash", b * rows + 1, lit(rows)))))))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
     // id-only payload through the band exchange
-    val l = banded.select($"band", $"bucket", $"id".as("id_a"))
-    val r = banded.select($"band", $"bucket", $"id".as("id_b"))
-    val candidates = l.join(r, Seq("band", "bucket"))
-      .where($"id_a" < $"id_b")
+    val candidates = candidatePairs(banded, Seq("band", "bucket"), "id", Nil,
+        maxBucket, "minhashLsh")
       .select($"id_a", $"id_b")
       .dropDuplicates("id_a", "id_b")
 
-    val sa = sigs.select($"id".as("id_a"), $"shingles".as("sh_a"))
-    val sb = sigs.select($"id".as("id_b"), $"shingles".as("sh_b"))
-    candidates.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
+    withSides(candidates, sigs, "id", "shingles", "sh")
       .withColumn("icnt", size(array_intersect($"sh_a", $"sh_b")))
       .withColumn("jaccard",
         $"icnt".cast("double") / (size($"sh_a") + size($"sh_b") - $"icnt"))
@@ -257,8 +270,7 @@ object Dedup {
     val exactPairs = ex
       // group min over ALL rows (the representative is the min id itself),
       // then keep only the non-representatives as the duplicate side
-      .withColumn("id_a", min(col(idCol)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"content_hash")))
+      .withColumn("id_a", min(col(idCol)).over(Window.partitionBy($"content_hash")))
       .where(!$"keep")
       .select($"id_a", col(idCol).as("id_b"), lit("exact").as("kind"),
         lit(10000L).as("jaccard_e4"))
@@ -278,8 +290,7 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    spreadForCpu(docs.select(col(idCol).as("id"), col(textCol).as("t")))
-      .as[(Long, String)]
+    docTexts(docs, idCol, textCol)
       .mapPartitions { it =>
         val md = md5Local.get()
         val d = new Array[Byte](16)
@@ -337,23 +348,17 @@ object Dedup {
     val sig = graft.util.StageCache.persist(simhash(docs, idCol, textCol))
     def half(pos: Int): Column =
       conv(substring($"simhash", pos, 32), 2, 10).cast("long")
-    val banded = capBuckets(
-      sig.select($"id", half(1).as("h1"), half(33).as("h2"),
+    val banded = sig.select($"id", half(1).as("h1"), half(33).as("h2"),
         posexplode(array(ranges.map { case (off, len) =>
           substring($"simhash", off + 1, len)
         }: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      Seq("band", "bucket"), maxBucket, "simhashPairs")
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
-    val l = banded.select($"band", $"bucket", $"id".as("id_a"),
-      $"h1".as("a1"), $"h2".as("a2"))
-    val r = banded.select($"band", $"bucket", $"id".as("id_b"),
-      $"h1".as("b1"), $"h2".as("b2"))
-    l.join(r, Seq("band", "bucket"))
-      .where($"id_a" < $"id_b")
+    candidatePairs(banded, Seq("band", "bucket"), "id", Seq("h1", "h2"),
+        maxBucket, "simhashPairs")
       .withColumn("hamming",
-        (bit_count($"a1".bitwiseXOR($"b1")) +
-          bit_count($"a2".bitwiseXOR($"b2"))).cast("long"))
+        (bit_count($"h1_a".bitwiseXOR($"h1_b")) +
+          bit_count($"h2_a".bitwiseXOR($"h2_b"))).cast("long"))
       .where($"hamming" <= maxHamming)
       .select($"id_a", $"id_b", $"hamming")
       .dropDuplicates("id_a", "id_b")
@@ -376,21 +381,15 @@ object Dedup {
     // knows the vector width to skip the plan-time take(1) job.
     val vecs = graft.util.StageCache.forked(
       embeds.select(col(idCol), col(vecCol)))
-    val keys = capBuckets(
-      graft.util.StageCache.persist(
-        Similarity.withBucketKeys(vecs, idCol, vecCol, planes, tables,
-            seed = 7, dim0 = dim)
-          .select($"bkey", col(idCol))),
-      Seq("bkey"), maxBucket, "embeddingDups")
-    val l = keys.select($"bkey", col(idCol).as("id_a"))
-    val r = keys.select($"bkey", col(idCol).as("id_b"))
-    val candidates = l.join(r, Seq("bkey"))
-      .where($"id_a" < $"id_b")
+    val keys = graft.util.StageCache.persist(
+      Similarity.withBucketKeys(vecs, idCol, vecCol, planes, tables,
+          seed = 7, dim0 = dim)
+        .select($"bkey", col(idCol)))
+    val candidates = candidatePairs(keys, Seq("bkey"), idCol, Nil, maxBucket,
+        "embeddingDups")
       .select($"id_a", $"id_b")
       .dropDuplicates("id_a", "id_b")
-    val va = vecs.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
-    val vb = vecs.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
-    candidates.join(va, Seq("id_a")).join(vb, Seq("id_b"))
+    withSides(candidates, vecs, idCol, vecCol, "v")
       .withColumn("cosine", Similarity.cosine($"v_a", $"v_b"))
       .where($"cosine" >= threshold)
       .select($"id_a", $"id_b",

@@ -73,11 +73,9 @@ object Multimodal {
 
   final case class MediaMeta(kind: String, width: Int, height: Int, sampleRateHz: Int)
   final case class MediaRow(media_id: Long, meta: MediaMeta, payload: Array[Byte])
-  final case class MediaFeatures(media_id: Long, kind: String, dim: Int,
-      features: Array[Float])
 
-  /** Feature vector length for real image decode (width, height, mean
-    * r/g/b, max r/g/b); stub-decoded audio/video keep `StubDim`.
+  /** Feature dims q27 reports per kind: real image decode (width, height,
+    * mean r/g/b, ...) and audio decode; stub-decoded video keeps `StubDim`.
     */
   val ImageDim = 8
   val AudioDim = 6
@@ -134,16 +132,24 @@ object Multimodal {
   final case class ImageStats(media_id: Long, width: Int, height: Int,
       sum_r: Long, sum_g: Long, sum_b: Long, checksum: Long)
 
+  /** Every integer pixel sum the image consumers read (q37's stats, q39's
+    * dedup vector), so one decode loop serves both.
+    */
+  private final case class PixelSums(w: Int, h: Int, sr: Long, sg: Long,
+      sb: Long, ck: Long, srg: Long, sgb: Long, srb: Long, m1: Long, m2: Long)
+
   /** REAL image decode: ImageIO.read over the payload bytes. Throws on
     * undecodable payloads — a corrupt image must fail loudly, not hash
     * quietly.
     */
-  def decodeImage(mediaId: Long, payload: Array[Byte]): ImageStats = {
+  private def pixelSums(mediaId: Long, payload: Array[Byte]): PixelSums = {
     val img = ImageIO.read(new ByteArrayInputStream(payload))
     require(img != null, s"media $mediaId: payload is not a decodable image")
     val w = img.getWidth
     val h = img.getHeight
     var sr = 0L; var sg = 0L; var sb = 0L; var ck = 0L
+    var srg = 0L; var sgb = 0L; var srb = 0L
+    var m1 = 0L; var m2 = 0L
     var y = 0
     while (y < h) {
       var x = 0
@@ -154,11 +160,20 @@ object Multimodal {
         val b = rgb & 255
         sr += r; sg += g; sb += b
         ck += (x * 131L + y) * (r + 2L * g + 3L * b)
+        srg += r * g; sgb += g * b; srb += r * b
+        m1 += (r * g) % 251
+        m2 += (g * b) % 241
         x += 1
       }
       y += 1
     }
-    ImageStats(mediaId, w, h, sr, sg, sb, ck)
+    PixelSums(w, h, sr, sg, sb, ck, srg, sgb, srb, m1, m2)
+  }
+
+  /** REAL image decode (see [[pixelSums]]) projected to its q37 stats. */
+  def decodeImage(mediaId: Long, payload: Array[Byte]): ImageStats = {
+    val p = pixelSums(mediaId, payload)
+    ImageStats(mediaId, p.w, p.h, p.sr, p.sg, p.sb, p.ck)
   }
 
   /** Deterministic audio geometry: sample count 200..319 at 8 kHz mono —
@@ -208,10 +223,16 @@ object Multimodal {
   final case class AudioStats(media_id: Long, sample_rate: Int, n_samples: Long,
       sum_s: Long, sum_abs: Long, checksum: Long)
 
+  /** Every integer sample sum the audio consumers read (q38's stats, q39's
+    * dedup vector), so one decode loop serves both.
+    */
+  private final case class PcmSums(rate: Int, n: Long, sum: Long, sabs: Long,
+      ck: Long, alt: Long, s2: Long)
+
   /** REAL audio decode: javax.sound.sampled over the payload bytes (WAV
     * PCM is lossless). Throws on undecodable payloads.
     */
-  def decodeAudio(mediaId: Long, payload: Array[Byte]): AudioStats = {
+  private def pcmSums(mediaId: Long, payload: Array[Byte]): PcmSums = {
     val in = audioStream(payload)
     try {
       val fmt = in.getFormat
@@ -221,15 +242,23 @@ object Multimodal {
       val bb = java.nio.ByteBuffer.wrap(bytes).order(
         if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
         else java.nio.ByteOrder.LITTLE_ENDIAN)
-      var sum = 0L; var sabs = 0L; var ck = 0L
+      var sum = 0L; var sabs = 0L; var ck = 0L; var alt = 0L; var s2 = 0L
       var i = 0L
       while (bb.remaining() >= 2) {
         val s = bb.getShort.toLong
         sum += s; sabs += math.abs(s); ck += i * s
+        alt += (1L - 2L * (i % 2)) * s
+        s2 += s * s
         i += 1
       }
-      AudioStats(mediaId, fmt.getSampleRate.toInt, i, sum, sabs, ck)
+      PcmSums(fmt.getSampleRate.toInt, i, sum, sabs, ck, alt, s2)
     } finally in.close()
+  }
+
+  /** REAL audio decode (see [[pcmSums]]) projected to its q38 stats. */
+  def decodeAudio(mediaId: Long, payload: Array[Byte]): AudioStats = {
+    val p = pcmSums(mediaId, payload)
+    AudioStats(mediaId, p.rate, p.n, p.sum, p.sabs, p.ck)
   }
 
   /** STUB decode for video only: deterministic feature vector from
@@ -261,19 +290,14 @@ object Multimodal {
     // The per-row PNG/WAV encode below (and every decode consuming this
     // dataset) is CPU-heavy, but a small documents table arrives as ONE
     // scan split — without a spread the whole media pipeline serializes
-    // onto a single core. Hash-repartition by doc_id (deterministic under
-    // task retry, unlike round-robin) only when the scan is under-parallel;
-    // a large corpus already has enough splits and skips the shuffle.
+    // onto a single core (SessionTuning.spread, by doc_id).
     // Spread width 8, not defaultParallelism: the codecs cost ~0.1 ms/row
     // outside Spark, so 8-way covers the compute, while the repartition's
     // partitioning propagates through caches to EVERY downstream stage of
     // the media queries — at tiny scale each extra partition is a
     // near-empty task paying fixed launch/deserialization cost.
-    val base = docs.select($"doc_id", $"text")
-    val want = math.min(8, spark.sparkContext.defaultParallelism)
-    val spread =
-      if (base.rdd.getNumPartitions * 2 < want) base.repartition(want, $"doc_id")
-      else base
+    val spread = graft.util.SessionTuning.spread(docs.select($"doc_id", $"text"),
+      math.min(8, spark.sparkContext.defaultParallelism), "doc_id")
     spread.as[(Long, String)].map { case (id, text) =>
       if (id % 3 == 0) {
         val (w, h) = imageDims(id)
@@ -298,8 +322,7 @@ object Multimodal {
     * audio values are hash-compared in q37/q38.
     */
   def featureSummary(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
+    import media.sparkSession.implicits._
     media.mapPartitions { it =>
       it.map { m =>
         m.meta.kind match {
@@ -323,8 +346,7 @@ object Multimodal {
     * reproduce.
     */
   def imageStats(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
+    import media.sparkSession.implicits._
     media.filter(_.meta.kind == "image")
       .mapPartitions(it => it.map(m => decodeImage(m.media_id, m.payload)))
       .toDF()
@@ -336,8 +358,7 @@ object Multimodal {
     * decode can reproduce.
     */
   def audioStats(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
+    import media.sparkSession.implicits._
     media.filter(_.meta.kind == "audio")
       .mapPartitions(it => it.map(m => decodeAudio(m.media_id, m.payload)))
       .toDF()
@@ -353,39 +374,17 @@ object Multimodal {
     * non-duplicate cosine 0.99990 at sf0.01 vs 1.0 for a payload copy).
     */
   def imageDedupVec(mediaId: Long, payload: Array[Byte]): Array[Double] = {
-    val img = ImageIO.read(new ByteArrayInputStream(payload))
-    require(img != null, s"media $mediaId: payload is not a decodable image")
-    val w = img.getWidth
-    val h = img.getHeight
-    var sr = 0L; var sg = 0L; var sb = 0L
-    var srg = 0L; var sgb = 0L; var srb = 0L
-    var m1 = 0L; var m2 = 0L
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        val r = (rgb >> 16) & 255
-        val g = (rgb >> 8) & 255
-        val b = rgb & 255
-        sr += r; sg += g; sb += b
-        srg += r * g; sgb += g * b; srb += r * b
-        m1 += (r * g) % 251
-        m2 += (g * b) % 241
-        x += 1
-      }
-      y += 1
-    }
-    val n = w.toLong * h
+    val p = pixelSums(mediaId, payload)
+    val n = p.w.toLong * p.h
     Array(
-      sr / (255.0 * n) - 0.5,
-      sg / (255.0 * n) - 0.5,
-      sb / (255.0 * n) - 0.5,
-      srg / (16256.25 * n) - 1.0,
-      (sgb / (16256.25 * n) - 1.0) / 16.0,
-      (srb / (16256.25 * n) - 1.0) / 16.0,
-      m1 / (125.0 * n) - 1.0,
-      m2 / (120.0 * n) - 1.0)
+      p.sr / (255.0 * n) - 0.5,
+      p.sg / (255.0 * n) - 0.5,
+      p.sb / (255.0 * n) - 0.5,
+      p.srg / (16256.25 * n) - 1.0,
+      (p.sgb / (16256.25 * n) - 1.0) / 16.0,
+      (p.srb / (16256.25 * n) - 1.0) / 16.0,
+      p.m1 / (125.0 * n) - 1.0,
+      p.m2 / (120.0 * n) - 1.0)
   }
 
   /** Media near-dup feature vector from a REAL audio decode (q39): five
@@ -396,32 +395,14 @@ object Multimodal {
     * sides so the doubles match bit-for-bit).
     */
   def audioDedupVec(mediaId: Long, payload: Array[Byte]): Array[Double] = {
-    val in = audioStream(payload)
-    try {
-      val fmt = in.getFormat
-      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-        s"media $mediaId: expected 16-bit mono PCM, got $fmt")
-      val bytes = in.readAllBytes()
-      val bb = java.nio.ByteBuffer.wrap(bytes).order(
-        if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
-      var sum = 0L; var sabs = 0L; var ck = 0L; var alt = 0L; var s2 = 0L
-      var i = 0L
-      while (bb.remaining() >= 2) {
-        val s = bb.getShort.toLong
-        sum += s; sabs += math.abs(s); ck += i * s
-        alt += (1L - 2L * (i % 2)) * s
-        s2 += s * s
-        i += 1
-      }
-      val n = i
-      Array(
-        sum / (32768.0 * n),
-        sabs / (16384.0 * n) - 1.0,
-        ck / (16384.0 * n * (n - 1)),
-        alt / (32768.0 * n),
-        s2 / ((1073741824.0 / 3.0) * n) - 1.0)
-    } finally in.close()
+    val p = pcmSums(mediaId, payload)
+    val n = p.n
+    Array(
+      p.sum / (32768.0 * n),
+      p.sabs / (16384.0 * n) - 1.0,
+      p.ck / (16384.0 * n * (n - 1)),
+      p.alt / (32768.0 * n),
+      p.s2 / ((1073741824.0 / 3.0) * n) - 1.0)
   }
 
   /** Decode → per-kind normalized dedup vectors (media_id, kind, vec):
@@ -432,8 +413,7 @@ object Multimodal {
     * stub; a stub-derived dup verdict would be fake evidence).
     */
   def dedupVectors(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
+    import media.sparkSession.implicits._
     media.filter(m => m.meta.kind == "image" || m.meta.kind == "audio")
       .mapPartitions { it =>
         it.map { m =>
@@ -443,42 +423,5 @@ object Multimodal {
           (m.media_id, m.meta.kind, vec)
         }
       }.toDF("media_id", "kind", "vec")
-  }
-
-  /** Batched feature extraction: one decode call per row, batched per
-    * partition; output is a narrow typed table safe to shuffle. Image and
-    * audio features are real (decoded dims/amplitudes scaled to [0,1]);
-    * video features come from the documented stub.
-    */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        m.meta.kind match {
-          case "image" =>
-            val s = decodeImage(m.media_id, m.payload)
-            val n = s.width.toLong * s.height
-            MediaFeatures(m.media_id, m.meta.kind, ImageDim, Array(
-              s.width.toFloat, s.height.toFloat,
-              (s.sum_r.toDouble / (255.0 * n)).toFloat,
-              (s.sum_g.toDouble / (255.0 * n)).toFloat,
-              (s.sum_b.toDouble / (255.0 * n)).toFloat,
-              (s.checksum.toDouble / (6.0 * 255 * 131 * (s.width + s.height) * n)).toFloat,
-              s.width.toFloat / s.height, 1.0f))
-          case "audio" =>
-            val s = decodeAudio(m.media_id, m.payload)
-            MediaFeatures(m.media_id, m.meta.kind, AudioDim, Array(
-              s.sample_rate.toFloat, s.n_samples.toFloat,
-              (s.sum_s.toDouble / (32768.0 * s.n_samples)).toFloat,
-              (s.sum_abs.toDouble / (32768.0 * s.n_samples)).toFloat,
-              (s.checksum.toDouble / (32768.0 * s.n_samples * s.n_samples)).toFloat,
-              1.0f))
-          case _ =>
-            MediaFeatures(m.media_id, m.meta.kind, StubDim,
-              decodeStub(m.payload, StubDim))
-        }
-      }
-    }
   }
 }

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import graft.ops.ColSyntax._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -23,14 +25,16 @@ object Similarity {
     * (sequential fold — mirrored by OracleSqlGen's list_reduce).
     */
   def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-    val nb = sqrt(aggregate(transform(b, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-    dot / (na * nb)
+    def norm(v: Column) =
+      sqrt(foldSum(transform(v, x => x.cast("double") * x.cast("double"))))
+    foldSum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double"))) /
+      (norm(a) * norm(b))
   }
+
+  /** Strict left-to-right double sum of an array column — the one fold
+    * every dot product here uses (the oracle's list_reduce replays it).
+    */
+  private def foldSum(xs: Column): Column = aggregate(xs, lit(0.0), (acc, v) => acc + v)
 
   /** Brute-force top-k cosine neighbors for each query vector.
     * `queries` must be small (it is broadcast); corpus side streams.
@@ -40,10 +44,16 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.join(q, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", cosine($"qv", $"cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)
+    topK(c.join(q, $"query_id" =!= $"neighbor_id")
+      .withColumn("cosine", cosine($"qv", $"cv")), k)
+  }
+
+  /** The ranking step every top-k path ends with: per query_id, scored
+    * candidates by cosine desc, neighbor_id asc (the oracles' tie rule),
+    * the first k kept, cosine rounded to 4 places.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)
     scored.withColumn("rank", row_number().over(w))
       .where($"rank" <= k)
       .select($"query_id", $"rank", $"neighbor_id", round($"cosine", 4).as("cosine"))
@@ -76,8 +86,7 @@ object Similarity {
     */
   private def bucketBit(vec: Column, signs: String): Column = {
     val signArr = typedLit(signs.map(c => if (c == '+') 1.0 else -1.0).toArray)
-    val dot = aggregate(zip_with(vec, signArr, (x, s) => x.cast("double") * s),
-      lit(0.0), (acc, v) => acc + v)
+    val dot = foldSum(zip_with(vec, signArr, (x, s) => x.cast("double") * s))
     when(dot >= 0, lit("1")).otherwise(lit("0"))
   }
 
@@ -108,9 +117,8 @@ object Similarity {
     * oracle's list_reduce replays it bit-for-bit.
     */
   private def d2(qv: Column, cent: Column): Column =
-    aggregate(zip_with(qv, cent,
-      (v, c) => (v.cast("double") - c) * (v.cast("double") - c)),
-      lit(0.0), (acc, x) => acc + x)
+    foldSum(zip_with(qv, cent,
+      (v, c) => (v.cast("double") - c) * (v.cast("double") - c)))
 
   /** Assign each row to its nearest centroid (ties to the lowest cell):
     * input must carry `qv`; centroids (cell, cent) are broadcast.
@@ -214,13 +222,8 @@ object Similarity {
       }
       chosen += best
     }
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cent",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false),
-        nullable = false)))
+    val centSchema = StructType(Seq(StructField("cell", IntegerType, nullable = false),
+      StructField("cent", ArrayType(DoubleType, containsNull = false), nullable = false)))
     var cents = spark.createDataFrame(
       java.util.Arrays.asList(chosen.toSeq.zipWithIndex.map {
         case (ci, cell) =>
@@ -257,26 +260,20 @@ object Similarity {
       ivfCells(corpus, idCol, vecCol, kCells, lloydRounds, trainFraction)
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_v"),
       quantize(col(vecCol)).as("qv"))
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"dd".asc, $"cell".asc)
+    val pw = Window.partitionBy($"query_id").orderBy($"dd".asc, $"cell".asc)
     val probes = qv.crossJoin(broadcast(cents))
       .withColumn("dd", d2($"qv", $"cent"))
       .withColumn("rn", row_number().over(pw))
       .where($"rn" <= nprobe)
       .select($"query_id", $"q_v", $"cell")
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_v"))
-    val cands = probes.join(cells.select($"cell", col(idCol).as("neighbor_id")),
+    topK(probes.join(cells.select($"cell", col(idCol).as("neighbor_id")),
         Seq("cell"))
       .where($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"q_v", $"neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
       .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine", cosine($"q_v", $"c_v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)
-    cands.withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"neighbor_id", round($"cosine", 4).as("cosine"))
+      .withColumn("cosine", cosine($"q_v", $"c_v")), k)
   }
 
   /** LSH-bucketed approximate top-k: candidates share a bucket under any
@@ -292,15 +289,10 @@ object Similarity {
       .select($"bkey", col(idCol).as("query_id"), col(vecCol).as("q_v")))
     val cb = withBucketKeys(corpus, idCol, vecCol, planes, tables, seed, dim)
       .select($"bkey", col(idCol).as("neighbor_id"), col(vecCol).as("c_v"))
-    val cands = cb.join(qb, Seq("bkey"))
+    topK(cb.join(qb, Seq("bkey"))
       .where($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"neighbor_id", $"q_v", $"c_v")
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine", cosine($"q_v", $"c_v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)
-    cands.withColumn("rank", row_number().over(w))
-      .where($"rank" <= k)
-      .select($"query_id", $"rank", $"neighbor_id", round($"cosine", 4).as("cosine"))
+      .withColumn("cosine", cosine($"q_v", $"c_v")), k)
   }
 }

@@ -1,9 +1,17 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Scale-adaptive execution settings applied once per session by the
   * query builders (guide §2.2: "let AQE coalesce small partitions").
+  *
+  * Contract: every `SparkEntry.queries` builder calls [[ensure]] on the
+  * CALLER's session before it plans, so the first query built on a
+  * session sets the two AQE confs below on it, once, and they stay set for
+  * whatever that session runs afterwards. The call lives in the builders,
+  * not in `run/Harness.session`, so sessions built elsewhere (perfbench,
+  * any external caller of the queries) get the same coalescing.
   *
   * With the default `parallelismFirst=true`, AQE coalesces post-shuffle
   * partitions toward `defaultParallelism` with a 1 MB floor instead of
@@ -19,8 +27,8 @@ import org.apache.spark.sql.SparkSession
   * which is exactly the scale-adaptive behavior the optimization guide
   * prescribes (a constant tuned to local cores is what it warns against).
   * CPU-heavy narrow stages (media decode, signature hashing) are spread
-  * by explicit hash repartitions, which AQE never coalesces, so they keep
-  * full parallelism.
+  * by explicit hash repartitions ([[spread]]), which AQE never
+  * coalesces, so they keep full parallelism.
   */
 object SessionTuning {
 
@@ -34,4 +42,14 @@ object SessionTuning {
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     }
   }
+
+  /** The one under-parallel spread rule: hash-repartition `df` to `width`
+    * partitions by `key` ONLY when it scans in fewer than width/2 splits (a
+    * small table arrives as one file split, serializing a CPU-heavy typed
+    * kernel onto one core; a large table already has enough splits, and an
+    * unconditional repartition would shuffle it for nothing). Hashing by
+    * key, not round-robin, stays deterministic under task retry.
+    */
+  def spread(df: DataFrame, width: Int, key: String): DataFrame =
+    if (df.rdd.getNumPartitions * 2 < width) df.repartition(width, col(key)) else df
 }

@@ -158,4 +158,42 @@ class MultimodalSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** Exact values, not only invariants: the image and audio dedup vectors
+    * of a few seeded ids, pinned as raw IEEE-754 bits (recorded from the
+    * two-pass decoders that preceded the shared pixel/PCM passes). The
+    * q39 oracle compares the same doubles; this keeps the check in tier 1.
+    */
+  test("media dedup vectors are pinned to the bit for seeded ids") {
+    def bits(v: Array[Double]): Seq[Long] =
+      v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val image = Map(
+      0L -> Seq(0xbf78181818181800L, 0x3f73f3f3f3f3f400L, 0xbfdce42424242424L,
+        0xbf8ca8f5418dda40L, 0xbfacdf0021426385L, 0xbfacedf8020c1620L,
+        0x3f949ba5e353f7c0L, 0xbfb0200000000000L),
+      3L -> Seq(0xbf7c24a7228683c0L, 0xbf68292e24ece700L, 0x3fcb0e1d01594844L,
+        0xbfa027e64a9f5a30L, 0x3f9a5d593dbb65bcL, 0x3f99e996563bb6d4L,
+        0xbf7799a81f8ae800L, 0xbfa3b0c3e97f2020L),
+      27L -> Seq(0x3f37cbf1dee86000L, 0x3f551a97d9388800L, 0x3fda8ce3b84e0328L,
+        0x3f82027fb6909900L, 0x3faaa47613cb7628L, 0x3faa9b42867c18e2L,
+        0xbf9d93013fe320e0L, 0xbfa7a75f83717a70L),
+      300L -> Seq(0xbf325b80125b8000L, 0x3f1b89401b894000L, 0xbfdb4064f74064f7L,
+        0x3f8ef25806da4000L, 0xbfab4ac998dd28c5L, 0xbfab3a9cf8029826L,
+        0xbf9d0d66576b9ba0L, 0xbf909c09c09c09c0L))
+    val audio = Map(
+      1L -> Seq(0xbf5dcc6afc2dd9cbL, 0xbf80f55555555540L, 0xbf668eac17d7a6beL,
+        0x3f432b4db108ea59L, 0xbf879949c44c6b00L),
+      4L -> Seq(0xbf52155555555555L, 0x3f73250505050500L, 0xbf61da1fcc914bf0L,
+        0xbf6a1c3c3c3c3c3cL, 0x3f802eb4b9696980L),
+      37L -> Seq(0x3f560c6c045217c4L, 0x3f740e4feeb7a100L, 0x3f70dab3bf561a2eL,
+        0x3f67f716aefcc26eL, 0x3f7f2f82cb577e00L),
+      301L -> Seq(0xbf80b601f6310acaL, 0xbf65800000000000L, 0xbf71273eba8a8e2dL,
+        0xbf76415941b76ae9L, 0xbf6d09fb2d9bf400L))
+    for ((id, want) <- image)
+      assert(bits(Multimodal.imageDedupVec(id, Multimodal.encodePng(id))) == want,
+        s"image $id")
+    for ((id, want) <- audio)
+      assert(bits(Multimodal.audioDedupVec(id, Multimodal.encodeWav(id))) == want,
+        s"audio $id")
+  }
 }

@@ -84,6 +84,69 @@ class RecallSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"LSH must recall all pairs with jaccard >= 0.7 (missing: ${high -- found})")
   }
 
+  /** The candidate-pair operator behind every LSH dedup builder, against
+    * a naive all-pairs join over shared keys. Planted: one hot key holding
+    * 220 ids, a mod-7 key and a small /3 key on every id (so ids share
+    * several keys, some of them inside the hot bucket too), and one
+    * payload column carried through the exchange. Any body that replaces
+    * the cap (e.g. a salted hot-bucket split) must keep this green.
+    */
+  test("candidatePairs equals a naive join over shared keys, uncapped " +
+      "and with a cap that drops exactly the hot bucket") {
+    import spark.implicits._
+    val rows = (0L until 300L).flatMap { id =>
+      val keys = Seq((1, s"m${id % 7}"), (2, s"d${id / 3}")) ++
+        (if (id < 220L) Seq((0, "hot")) else Nil)
+      keys.map { case (band, bucket) => (band, bucket, id, s"p$id") }
+    }
+    val keyed = rows.toDF("band", "bucket", "id", "p")
+    def naive(keep: ((Int, String)) => Boolean): Set[(Long, Long)] =
+      rows.filter(r => keep((r._1, r._2))).groupBy(r => (r._1, r._2)).values
+        .flatMap { g =>
+          val m = g.map(_._3).sorted
+          for (a <- m; b <- m if a < b) yield (a, b)
+        }.toSet
+    def run(maxBucket: Int): (Set[(Long, Long)], Long) = {
+      val out = Dedup.candidatePairs(keyed, Seq("band", "bucket"), "id",
+        Seq("p"), maxBucket, "pairSpec").persist()
+      try {
+        val got = out.select($"id_a", $"id_b", $"p_a", $"p_b")
+          .as[(Long, Long, String, String)].collect()
+        assert(got.forall { case (a, b, _, _) => a < b }, "id_a < id_b on every row")
+        assert(got.forall { case (a, b, pa, pb) => pa == s"p$a" && pb == s"p$b" },
+          "each payload side must belong to its own id")
+        val deduped = out.select($"id_a", $"id_b").dropDuplicates("id_a", "id_b")
+          .as[(Long, Long)].collect()
+        assert(deduped.length == deduped.toSet.size)
+        (deduped.toSet, got.length.toLong)
+      } finally {
+        out.unpersist()
+        graft.util.StageCache.release(spark)
+      }
+    }
+    def sameSet(got: Set[(Long, Long)], want: Set[(Long, Long)], what: String) = {
+      val (missing, extra) = (want -- got, got -- want)
+      assert(missing.isEmpty && extra.isEmpty,
+        s"$what: missing ${missing.take(5)} (${missing.size}), extra ${extra.take(5)} (${extra.size})")
+    }
+    val all = naive(_ => true)
+    val (uncapped, uncappedRows) = run(0)
+    sameSet(uncapped, all, "uncapped pairs vs naive join")
+    assert(uncappedRows > all.size, "fixture must plant pairs sharing several keys")
+
+    val (capped, _) = run(100)
+    sameSet(capped, naive(_ != ((0, "hot"))),
+      "a cap below the hot bucket's size must drop exactly that bucket's pairs")
+    assert(capped.size < all.size)
+    var tries = 0
+    while (!graft.ops.CapBucketsLog.lastOverCount("pairSpec").exists(_ > 0L)
+        && tries < 50) {
+      Thread.sleep(100); tries += 1
+    }
+    assert(graft.ops.CapBucketsLog.lastOverCount("pairSpec").exists(_ > 0L),
+      "the dropped bucket must be counted")
+  }
+
   /** Deterministic near-unit embeddings + planted near-copies. */
   test("embedding LSH dedup recalls planted near-duplicates") {
     import spark.implicits._
