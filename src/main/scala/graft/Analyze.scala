@@ -126,9 +126,10 @@ object Analyze {
   /** stomp entry (ref stomp.py:196) — full left/right profiles. */
   def stomp(ts: Array[Double], w: Int, query: Option[Array[Double]] = None): Profile = {
     val r = Stomp.stomp(ts, w, query)
+    val ez = if (query.isDefined) 0 else math.ceil(w / 2.0).toInt
     Profile(r.mp, r.pi,
       Option(r.lmp).getOrElse(Array.empty), Option(r.lpi).getOrElse(Array.empty),
       Option(r.rmp).getOrElse(Array.empty), Option(r.rpi).getOrElse(Array.empty),
-      r.w, r.ez, r.join, "euclidean", "stomp")
+      w, ez, query.isDefined, "euclidean", "stomp")
   }
 }

@@ -291,10 +291,9 @@ object DistributedMp {
     def row(conv: String, kind: String, r: Stomp.Batch) = MpProfileRow(conv, kind, tier,
       w, ez, "stomp", "euclidean", join = false, r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi)
     fanOut(series, splitThreshold, -1)(_.values.length,
-      s => Iterator(s).filter(_.values.length >= 2 * w))({ s =>
-        val r = Stomp.stomp(s.values, w)
-        row(s.conv_id, s.kind, Stomp.Batch(r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi))
-      }, stompTiles(_, w, tileSize), "conv_id", "rLo", "cLo") {
+      s => Iterator(s).filter(_.values.length >= 2 * w))(
+      s => row(s.conv_id, s.kind, Stomp.stomp(s.values, w)),
+      stompTiles(_, w, tileSize), "conv_id", "rLo", "cLo") {
       _.map { t =>
         ((t.conv_id, t.kind), Segment(t.cLo, t.plen, Stomp.tileCompute(t.rLo, t.rHi,
           t.cLo, t.cHi, t.rowSlice, t.colSlice, w, ez)))

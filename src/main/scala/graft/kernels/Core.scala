@@ -38,22 +38,6 @@ object Core {
     out
   }
 
-  /** z-normalized distance profile from a sliding dot product
-    * (ref core.py:447-478): sqrt(2(w - (prod - w·μd·μq)/(σd·σq))).
-    * Negative radicands yield NaN, matching np.sqrt's quiet NaN under
-    * errstate(ignore); NaN never survives a `<` min-update.
-    */
-  def distanceProfile(prod: Array[Double], w: Int, dataMu: Array[Double],
-      dataSig: Array[Double], queryMu: Double, querySig: Double): Array[Double] = {
-    val out = new Array[Double](prod.length)
-    var i = 0
-    while (i < prod.length) {
-      out(i) = math.sqrt(2.0 * (w - (prod(i) - w * dataMu(i) * queryMu) / (dataSig(i) * querySig)))
-      i += 1
-    }
-    out
-  }
-
   /** In-place exclusion zone: dp[max(0,idx-ez) until min(plen, idx+ez+1)] = ∞
     * unless a join (ref core.py:580-587).
     */

@@ -38,13 +38,7 @@ object Fft {
   /** Full complex FFT of a real signal: returns interleaved [re0, im0, re1,
     * im1, ...] of length 2n.
     */
-  def fftReal(a: Array[Double]): Array[Double] = {
-    val n = a.length
-    val buf = new Array[Double](2 * n)
-    System.arraycopy(a, 0, buf, 0, n)
-    plan(n).realForwardFull(buf)
-    buf
-  }
+  def fftReal(a: Array[Double]): Array[Double] = fftRealPadded(a, a.length)
 
   /** Smallest power of two >= n: JTransforms takes its radix-2 path there,
     * where an awkward length (large prime factor) would fall into
@@ -76,16 +70,6 @@ object Fft {
     */
   def complexMult(x: Array[Double], y: Array[Double]): Array[Double] = {
     val out = new Array[Double](x.length)
-    complexMultInto(x, y, out)
-    out
-  }
-
-  /** Element-wise complex multiply into a caller-provided buffer — the
-    * allocation-free path for tasks issuing many transforms of one length
-    * (each fresh 2p scratch otherwise becomes ~0.5 MB of garbage per row).
-    */
-  def complexMultInto(x: Array[Double], y: Array[Double],
-      out: Array[Double]): Unit = {
     var i = 0
     while (i < x.length) {
       val xr = x(i); val xi = x(i + 1)
@@ -94,6 +78,7 @@ object Fft {
       out(i + 1) = xr * yi + xi * yr
       i += 2
     }
+    out
   }
 
   /** Sliding dot product of `query` over `ts` via FFT convolution; returns
@@ -101,33 +86,20 @@ object Fft {
     * fft(rev(query) ++ 0s)))[m-1:n]).
     */
   def fftConvolve(ts: Array[Double], query: Array[Double]): Array[Double] = {
-    val z = fftConvolveComplex(ts, query)
     val n = ts.length
     val m = query.length
-    val out = new Array[Double](n - m + 1)
+    val yt = new Array[Double](n)
     var i = 0
+    while (i < m) { yt(i) = query(m - 1 - i); i += 1 }
+    val z = complexMult(fftReal(ts), fftReal(yt))
+    ifftComplex(z)
+    val out = new Array[Double](n - m + 1)
+    i = 0
     while (i < out.length) {
       out(i) = z(2 * (m - 1 + i))
       i += 1
     }
     out
-  }
-
-  /** Sliding dot product keeping the complex ifft output (interleaved,
-    * length 2n) — mass2 carries the imaginary residue through its
-    * distance algebra (ref mass2.py:66-85).
-    */
-  def fftConvolveComplex(ts: Array[Double], query: Array[Double]): Array[Double] = {
-    val n = ts.length
-    val m = query.length
-    val x = fftReal(ts)
-    val yt = new Array[Double](n)
-    var i = 0
-    while (i < m) { yt(i) = query(m - 1 - i); i += 1 }
-    val y = fftReal(yt)
-    val z = complexMult(x, y)
-    ifftComplex(z)
-    z
   }
 
   /** Direct O(n·m) sliding dot product (ref core.py:423-444

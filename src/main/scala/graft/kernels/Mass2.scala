@@ -32,70 +32,32 @@ object Mass2 {
     val stats: (Array[Double], Array[Double]) = MovingStats.movingAvgStd(ts, m)
   }
 
-  /** Per-query state reusable across every PreparedTs with the same padded
-    * length p. (Snippet tiles no longer use this — MpDist.dotDistanceMatrix
-    * replaced per-row MASS there; it remains the shared-transform half of
-    * the one-shot mass2 path.)
-    */
-  final class PreparedQuery(val query: Array[Double], val p: Int) {
-    val m: Int = query.length
-    val y: Array[Double] = {
-      val yt = new Array[Double](p)
-      var i = 0
-      while (i < m) { yt(i) = query(m - 1 - i); i += 1 }
-      Fft.fftReal(yt)
-    }
-    val meany: Double = MovingStats.mean(query)
-    val sigmay: Double = MovingStats.std(query)
-  }
-
   def prepare(ts: Array[Double], m: Int): PreparedTs = new PreparedTs(ts, m)
 
-  def prepareQuery(query: Array[Double], p: Int): PreparedQuery =
-    new PreparedQuery(query, p)
-
-  /** Complex distance profile as (re, im) arrays. */
-  def mass2Complex(ts: Array[Double], query: Array[Double],
-      threshold: Double = DefaultThreshold): (Array[Double], Array[Double]) =
-    mass2PreparedComplex(prepare(ts, query.length), query, threshold)
+  /** Real part of the MASS2 distance profile. */
+  def mass2(ts: Array[Double], query: Array[Double],
+      threshold: Double = DefaultThreshold): Array[Double] =
+    mass2Prepared(prepare(ts, query.length), query, threshold)
 
   /** Real part of the MASS2 profile against a prepared series. */
   def mass2Prepared(prep: PreparedTs, query: Array[Double],
-      threshold: Double = DefaultThreshold): Array[Double] =
-    mass2PreparedComplex(prep, query, threshold)._1
-
-  def mass2PreparedComplex(prep: PreparedTs, query: Array[Double],
-      threshold: Double = DefaultThreshold): (Array[Double], Array[Double]) =
-    mass2Both(prep, prepareQuery(query, prep.p), threshold)
-
-  /** MASS2 profile with both sides prepared (requires matching padded
-    * lengths). Values identical to the one-shot path: same transforms.
-    */
-  def mass2Both(prep: PreparedTs, pq: PreparedQuery,
-      threshold: Double = DefaultThreshold): (Array[Double], Array[Double]) = {
-    val plen = prep.n - pq.m + 1
-    val re = new Array[Double](plen)
-    val im = new Array[Double](plen)
-    compute(prep, pq, threshold, new Array[Double](2 * prep.p), re, im)
-    (re, im)
-  }
-
-  private def compute(prep: PreparedTs, pq: PreparedQuery, threshold: Double,
-      z: Array[Double], re: Array[Double], im: Array[Double]): Unit = {
+      threshold: Double = DefaultThreshold): Array[Double] = {
     val n = prep.n
-    val m = pq.m
+    val m = query.length
     require(m == prep.m, s"prepared for m=${prep.m}, got query of length $m")
-    require(pq.p == prep.p, s"query prepared at p=${pq.p}, series at p=${prep.p}")
-    require(z.length == 2 * prep.p, s"scratch ${z.length} != ${2 * prep.p}")
-    val meany = pq.meany
-    val sigmay = pq.sigmay
+    val yt = new Array[Double](prep.p)
+    var i = 0
+    while (i < m) { yt(i) = query(m - 1 - i); i += 1 }
+    val meany = MovingStats.mean(query)
+    val sigmay = MovingStats.std(query)
     val (meanx, sigmax) = prep.stats
 
-    // fft(rev(query) ++ 0s) * fft(ts), inverse — both transforms prepared
-    Fft.complexMultInto(prep.x, pq.y, z)
+    // fft(rev(query) ++ 0s) * fft(ts), inverse, both at the padded length
+    val z = Fft.complexMult(prep.x, Fft.fftReal(yt))
     Fft.ifftComplex(z)
     val plen = n - m + 1
-    var i = 0
+    val re = new Array[Double](plen)
+    i = 0
     while (i < plen) {
       var tmp = sigmax(i) * sigmay
       if (tmp == 0) tmp = 1e-12
@@ -109,21 +71,11 @@ object Mass2 {
         dr = if (sigmay < threshold) 0.0 else m.toDouble
         di = 0.0
       }
-      // complex sqrt
+      // real part of the complex sqrt
       val mag = math.hypot(dr, di)
-      val sr = math.sqrt(math.max((mag + dr) / 2.0, 0.0))
-      val si = {
-        val v = math.sqrt(math.max((mag - dr) / 2.0, 0.0))
-        if (di < 0) -v else v
-      }
-      re(i) = sr
-      if (im != null) im(i) = si
+      re(i) = math.sqrt(math.max((mag + dr) / 2.0, 0.0))
       i += 1
     }
+    re
   }
-
-  /** Real part of the MASS2 distance profile. */
-  def mass2(ts: Array[Double], query: Array[Double],
-      threshold: Double = DefaultThreshold): Array[Double] =
-    mass2Complex(ts, query, threshold)._1
 }

@@ -5,13 +5,15 @@ package graft.kernels
   * distance at the end.
   *
   * Behavioral port of the reference's Cython kernels
-  * (`/root/reference/matrixprofile/algorithms/cympx.pyx:30-284`). The
-  * diagonal-block decomposition mirrors the reference's OpenMP `prange`
-  * per-thread buffers (cympx.pyx:72-73): a partition owns a contiguous range
-  * of diagonals, accumulates a private (mp, mpi) Pearson buffer, and buffers
-  * merge by elementwise max — [[mergeInto]], which is also the merge the
-  * distributed layer's Aggregator applies to tile segments across Spark
-  * partitions.
+  * (`matrixprofile/algorithms/cympx.pyx:30-284`). Each join
+  * has one sweep: [[selfJoinTile]] for the self join, [[abJoinTile]] for the
+  * AB join. The whole-series joins ([[selfJoin]], [[abJoin]]) run that sweep
+  * over every diagonal; a distributed tile runs it over its own diagonal and
+  * row range. The tiles mirror the reference's OpenMP `prange` per-thread
+  * buffers (cympx.pyx:72-73): a tile accumulates a private (mp, mpi) Pearson
+  * buffer, and buffers merge by elementwise max — [[mergeInto]], which is
+  * also the merge the distributed layer's Aggregator applies to tile
+  * segments across Spark partitions.
   */
 object Mpx {
 
@@ -43,27 +45,17 @@ object Mpx {
     SelfStats(mu, sig, df, dg, profileLen, minlag)
   }
 
-  /** Process self-join diagonals [diagStart, diagEnd) into `buf`
-    * (ref cympx.pyx:82-102). Diagonal indexing starts at minlag+1.
-    */
-  def selfJoinBlock(ts: Array[Double], w: Int, st: SelfStats,
-      diagStart: Int, diagEnd: Int, buf: PearsonBuf): Unit =
-    selfSweep(ts, w, st, diagStart, diagEnd, Int.MaxValue, buf)
-
-  /** Tile variant for halo'd chunks: processes diagonals [diagStart,
-    * diagEnd) but only rows (offsets) [0, rowEnd) of each — the 2-D tile a
-    * distributed task owns. `slice` is the series slice starting at the
-    * tile's global row origin; `st` must be the stats OF THE SLICE
-    * (recomputed locally, so no state crosses task boundaries — the tile
-    * analog of the reference's batch seeding, stomp.py:100-105). Buffer
-    * indices are slice-local; the caller globalizes by adding the origin.
-    */
-  def selfJoinTile(slice: Array[Double], w: Int, st: SelfStats,
-      diagStart: Int, diagEnd: Int, rowEnd: Int, buf: PearsonBuf): Unit =
-    selfSweep(slice, w, st, diagStart, math.min(diagEnd, st.profileLen),
-      rowEnd, buf)
-
-  /** The shared sweep. Two adjacent diagonals are interleaved per pass:
+  /** The self-join sweep (ref cympx.pyx:82-102): processes diagonals
+    * [diagStart, diagEnd) but only rows (offsets) [0, rowEnd) of each.
+    * Diagonal indexing starts at minlag+1. [[selfJoin]] passes the whole
+    * series, every diagonal and every row; a distributed task passes its
+    * 2-D tile: `ts` is the series slice starting at the tile's global
+    * row origin and `st` the stats OF THE SLICE (recomputed locally, so no
+    * state crosses task boundaries — the tile analog of the reference's
+    * batch seeding, stomp.py:100-105). Buffer indices are slice-local; the
+    * caller globalizes by adding the origin.
+    *
+    * Two adjacent diagonals are interleaved per pass:
     * the covariance update is a loop-carried FP add (~4-cycle latency), so
     * a single diagonal leaves the FPU mostly idle; two independent chains
     * overlap. A one-iteration delay slot applies the second diagonal's
@@ -76,8 +68,9 @@ object Mpx {
     * bit-equal correlation) resolves to the former; no fixture or random
     * gate exhibits such a cross-kind tie.
     */
-  private def selfSweep(ts: Array[Double], w: Int, st: SelfStats,
-      diagStart: Int, diagEnd: Int, rowBound: Int, buf: PearsonBuf): Unit = {
+  def selfJoinTile(ts: Array[Double], w: Int, st: SelfStats,
+      diagStart: Int, diagEnd: Int, rowEnd: Int, buf: PearsonBuf): Unit = {
+    val dEnd = math.min(diagEnd, st.profileLen)
     val n = ts.length
     val mp = buf.mp
     val mpi = buf.mpi
@@ -87,7 +80,7 @@ object Mpx {
     val mu = st.mu
     val mu0 = mu(0)
     var diag = diagStart
-    while (diag + 1 < diagEnd) {
+    while (diag + 1 < dEnd) {
       val muD1 = mu(diag)
       val muD2 = mu(diag + 1)
       var c1 = 0.0
@@ -101,7 +94,7 @@ object Mpx {
       }
       var offset = 0
       // rows where diag+1 is still in range (and under the tile bound)
-      val offEnd2 = math.min(rowBound, n - w - diag)
+      val offEnd2 = math.min(rowEnd, n - w - diag)
       var pendVal = -2.0
       var pendIdx = -1
       while (offset < offEnd2) {
@@ -136,7 +129,7 @@ object Mpx {
       }
       // last row of the lower diagonal (when diag has one more row in
       // range than diag+1 and the tile bound allows it)
-      if (offset < math.min(rowBound, n - w - diag + 1)) {
+      if (offset < math.min(rowEnd, n - w - diag + 1)) {
         val col1 = offset + diag
         c1 += df(offset) * dg(col1) + df(col1) * dg(offset)
         var cCmp = c1 * sig(offset) * sig(col1)
@@ -163,7 +156,7 @@ object Mpx {
       }
       diag += 2
     }
-    if (diag < diagEnd) {
+    if (diag < dEnd) {
       var c = 0.0
       val muD = mu(diag)
       var i = diag
@@ -172,7 +165,7 @@ object Mpx {
         i += 1
       }
       var offset = 0
-      val offEnd = math.min(rowBound, n - w - diag + 1)
+      val offEnd = math.min(rowEnd, n - w - diag + 1)
       while (offset < offEnd) {
         val col = offset + diag
         c += df(offset) * dg(col) + df(col) * dg(offset)
@@ -256,50 +249,16 @@ object Mpx {
   def selfJoin(ts: Array[Double], w: Int): PearsonBuf = {
     val st = selfStats(ts, w)
     val buf = newBuf(st.profileLen)
-    selfJoinBlock(ts, w, st, st.minlag + 1, st.profileLen, buf)
+    selfJoinTile(ts, w, st, st.minlag + 1, st.profileLen, st.profileLen, buf)
     clampBuf(buf)
   }
 
-  /** One directional AB sweep over anchor rows [rowStart, rowEnd) of side A
-    * against side B (ref cympx.pyx:195-215 and the mirrored BA pass
-    * :218-237). Updates bufA (indexed by A positions) and bufB (B positions).
-    */
-  def abJoinBlock(a: Array[Double], b: Array[Double], w: Int,
-      sa: SelfStats, sb: SelfStats, rowStart: Int, rowEnd: Int,
-      bufA: PearsonBuf, bufB: PearsonBuf): Unit = {
-    var i = rowStart
-    while (i < rowEnd) {
-      val mx = math.min(sa.profileLen - i, sb.profileLen)
-      var cov = 0.0
-      var j = i
-      while (j < i + w) {
-        cov += (a(j) - sa.mu(i)) * (b(j - i) - sb.mu(0))
-        j += 1
-      }
-      j = 0
-      while (j < mx) {
-        val k = j + i
-        cov += sa.df(k) * sb.dg(j) + sa.dg(k) * sb.df(j)
-        val corr = cov * sa.sig(k) * sb.sig(j)
-        if (corr > bufA.mp(k)) {
-          bufA.mp(k) = corr
-          bufA.mpi(k) = j
-        }
-        if (corr > bufB.mp(j)) {
-          bufB.mp(j) = corr
-          bufB.mpi(j) = k
-        }
-        j += 1
-      }
-      i += 1
-    }
-  }
-
-  /** AB-join tile over halo'd slices: processes the signed diagonals
+  /** The AB-join sweep over halo'd slices: processes the signed diagonals
     * d = (global A index) − (global B index) in [dLo, dHi) restricted to
     * B positions [bLo, bHi). `aSlice` starts at global A position
     * `aStart`, `bSlice` at `bLo`; `sa`/`sb` are the stats OF THE SLICES.
-    * Buffers are slice-local; profile indices stored are GLOBAL.
+    * Buffers are slice-local; profile indices stored are GLOBAL. [[abJoin]]
+    * passes whole series (origins 0, all B positions).
     * The per-diagonal seed + df/dg recurrence is the cympx AB sweep
     * (cympx.pyx:195-237) started mid-diagonal, with the first update
     * skipped (the reference relies on df(0)=dg(0)=0 for the same effect).
@@ -310,33 +269,36 @@ object Mpx {
       bufA: PearsonBuf, bufB: PearsonBuf): Unit = {
     var d = dLo
     while (d < dHi) {
-      var j = math.max(bLo, -d)
+      val j = math.max(bLo, -d)
       val jEnd = math.min(bHi, plenA - d)
       if (j < jEnd) {
-        var li = (j + d) - aStart
+        // keep this loop shape (one counter lj, the A-slice index lj + off,
+        // the first update skipped by a flag): the previous tile loop and a
+        // peeled variant ran the whole-series AB join up to ~1.6x slower
+        val off = d - aStart + bLo
         var lj = j - bLo
+        val ljEnd = jEnd - bLo
         var cov = 0.0
         var k = 0
         while (k < w) {
-          cov += (aSlice(li + k) - sa.mu(li)) * (bSlice(lj + k) - sb.mu(lj))
+          cov += (aSlice(lj + off + k) - sa.mu(lj + off)) * (bSlice(lj + k) - sb.mu(lj))
           k += 1
         }
         var first = true
-        while (j < jEnd) {
-          li = (j + d) - aStart
-          lj = j - bLo
+        while (lj < ljEnd) {
+          val li = lj + off
           if (!first) cov += sa.df(li) * sb.dg(lj) + sa.dg(li) * sb.df(lj)
           first = false
           val corr = cov * sa.sig(li) * sb.sig(lj)
           if (corr > bufA.mp(li)) {
             bufA.mp(li) = corr
-            bufA.mpi(li) = j
+            bufA.mpi(li) = lj + bLo
           }
           if (corr > bufB.mp(lj)) {
             bufB.mp(lj) = corr
-            bufB.mpi(lj) = j + d
+            bufB.mpi(lj) = li + aStart
           }
-          j += 1
+          lj += 1
         }
       }
       d += 1
@@ -376,9 +338,14 @@ object Mpx {
     val sb = selfStats(query, w)
     val bufA = newBuf(sa.profileLen)
     val bufB = newBuf(sb.profileLen)
-    // AB pass (A-anchored), then BA pass (B-anchored)
-    abJoinBlock(ts, query, w, sa, sb, 0, sa.profileLen, bufA, bufB)
-    abJoinBlock(query, ts, w, sb, sa, 0, sb.profileLen, bufB, bufA)
+    // AB pass: the A-anchored diagonals [0, plenA); BA pass: the roles
+    // swapped, B-anchored diagonals [0, plenB). Both passes sweep diagonal
+    // 0, as cympx does: the BA pass multiplies its sigmas in the other
+    // order, so dropping its diagonal 0 can move a profile value by 1 ulp
+    abJoinTile(ts, query, w, sa, sb, 0, 0, sb.profileLen, sa.profileLen,
+      0, sa.profileLen, bufA, bufB)
+    abJoinTile(query, ts, w, sb, sa, 0, 0, sa.profileLen, sb.profileLen,
+      0, sb.profileLen, bufB, bufA)
     (clampBuf(bufA), clampBuf(bufB))
   }
 }

@@ -8,14 +8,13 @@ package graft.kernels
   * explicit seed so distributed runs are reproducible.
   */
 object Preprocess {
+  import Core.isNanInf
 
   sealed trait Method
   case object Mean extends Method
   case object Median extends Method
   case object Min extends Method
   case object Max extends Method
-
-  def isNanInf(v: Double): Boolean = v.isNaN || v.isInfinite
 
   def isSubsequenceConstant(sub: Array[Double]): Boolean =
     sub.forall(_ == sub(0))

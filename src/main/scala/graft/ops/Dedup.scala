@@ -38,24 +38,25 @@ object Dedup {
   val DefaultMaxBucket = 1000
 
   /** Drop (band-)buckets larger than `maxBucket` from candidate
-    * generation. The oversized-key set is tiny (it only exists under mass
-    * duplication), so it broadcasts into a left-anti join — the big banded
-    * side is never shuffled for the cap. The count of dropped buckets is
+    * generation. One window over the banded rows, partitioned by the bucket
+    * key, gives each row its bucket's size, so the banded rows (for
+    * MinHash, one md5 per band per document) are derived once and the
+    * filter needs no second pass over them. The count of dropped buckets is
     * NOT counted eagerly (that would make every dedup query two Spark
-    * actions): a named accumulator on the oversized-key rows fills in when
-    * the caller's OWN action materializes the plan, and a session-wide
-    * QueryExecutionListener logs any increase after each action — no
-    * silent caps, one action per query. (An `observe()` metric does not
-    * survive here: the capped output forks into both candidate-join sides,
-    * and the driver's observedMetrics read whichever duplicated
-    * CollectMetrics instance did NOT execute.)
+    * actions): the filter ticks a named accumulator once per oversized
+    * bucket (on its first row) when the caller's OWN action materializes
+    * the plan, and a session-wide QueryExecutionListener logs any increase
+    * after each action — no silent caps, one action per query. (An
+    * `observe()` metric does not survive here: the capped output forks
+    * into both candidate-join sides, and the driver's observedMetrics read
+    * whichever duplicated CollectMetrics instance did NOT execute.)
     *
     * The capped output is persisted: every caller immediately forks it
     * into the two sides of the candidate equi-join, and an unpersisted
-    * fork would run the banding + anti-join twice (and tick the
-    * accumulator twice). Behind the cache the cap materializes once. The
-    * persist handle registers with [[graft.util.StageCache]] — release it
-    * after the consuming action.
+    * fork would run the banding + window twice (and tick the accumulator
+    * twice). Behind the cache the cap materializes once. The persist
+    * handle registers with [[graft.util.StageCache]] — release it after
+    * the consuming action.
     */
   private def capBuckets(banded: DataFrame, keyCols: Seq[String],
       maxBucket: Int, what: String): DataFrame = {
@@ -63,16 +64,19 @@ object Dedup {
     // input the caller already cached (embeddingDups' keys) as it is
     if (maxBucket <= 0) return graft.util.StageCache.forked(banded)
     val acc = CapBucketsLog.accumulatorFor(banded.sparkSession, what, maxBucket)
-    val mark = udf(() => { acc.add(1L); true }).asNondeterministic()
-    // when(cond, tick) makes the tick's ordering explicit — `cond && tick()`
-    // would lean on left-to-right short-circuit, which Catalyst does not
-    // contractually preserve for nondeterministic expressions
-    val over = banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bsize"))
-      .where(when($"bsize" > maxBucket, mark()).otherwise(lit(false)))
-      .select(keyCols.map(col): _*)
-    graft.util.StageCache.persist(
-      banded.join(broadcast(over), keyCols, "left_anti"))
+    val tick = udf(() => { acc.add(1L); false }).asNondeterministic()
+    // one window spec for both columns (one Window operator, one sort):
+    // every row of a bucket ties on the ordering, so exactly one is row 1
+    val bucket = Window.partitionBy(keyCols.map(col): _*).orderBy(keyCols.map(col): _*)
+    // CaseWhen evaluates its branches in order, so only the first row of
+    // an oversized bucket reaches the tick
+    graft.util.StageCache.persist(banded
+      .withColumn("_bsize", count(lit(1)).over(
+        bucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("_brow", row_number().over(bucket))
+      .where(when($"_bsize" <= maxBucket, lit(true))
+        .when($"_brow" === 1, tick()).otherwise(lit(false)))
+      .drop("_bsize", "_brow"))
   }
 
   /** The one place `ops/` turns bucket keys into candidate pairs (MinHash

@@ -37,6 +37,23 @@ class BruteForceOracleSpec extends AnyFunSuite {
     (mp, pi)
   }
 
+  /** Brute force AB profile: for each window of `ts`, the z-normalized
+    * distance to (and index of) its nearest window of `q`.
+    */
+  def bruteForceAb(ts: Array[Double], q: Array[Double],
+      w: Int): (Array[Double], Array[Int]) = {
+    def subs(x: Array[Double]) = Array.tabulate(x.length - w + 1) { i =>
+      val win = x.slice(i, i + w)
+      val mu = win.sum / w
+      val sig = math.sqrt(win.map(v => (v - mu) * (v - mu)).sum / w)
+      win.map(v => (v - mu) / sig)
+    }
+    val b = subs(q)
+    val dist = subs(ts).map(x => b.map(y =>
+      math.sqrt(x.indices.map(k => (x(k) - y(k)) * (x(k) - y(k))).sum)))
+    (dist.map(_.min), dist.map(d => d.indexOf(d.min)))
+  }
+
   test("mpx matches brute-force oracle on random series") {
     val rng = new java.util.Random(1234)
     for (trial <- 1 to 5) {
@@ -60,6 +77,21 @@ class BruteForceOracleSpec extends AnyFunSuite {
       val (oracle, _) = bruteForce(ts, w, ez)
       val r = Stomp.stomp(ts, w)
       assertAlmostEqual(r.mp, oracle, decimal = 6)
+    }
+  }
+
+  test("AB stomp matches a brute-force AB oracle when the query is shorter, " +
+      "as long as, and longer than the series") {
+    val rng = new java.util.Random(4242)
+    for (qLen <- Seq(70, 120, 170)) {
+      val ts = Array.fill(120)(rng.nextDouble() * 10 - 5)
+      val q = Array.fill(qLen)(rng.nextDouble() * 10 - 5)
+      val w = 4 + rng.nextInt(8)
+      val (mp, pi) = bruteForceAb(ts, q, w)
+      val r = Stomp.stomp(ts, w, Some(q))
+      assertAlmostEqual(r.mp, mp, decimal = 6)
+      assert(r.pi.toSeq == pi.toSeq.map(_.toLong), s"|q|=$qLen w=$w: indices differ")
+      assert(r.lmp == null && r.rmp == null)
     }
   }
 
@@ -120,9 +152,7 @@ class BruteForceOracleSpec extends AnyFunSuite {
       // mpx tile sweep directly (no Spark): merge all tiles by hand
       val plen = n - w + 1
       val st = Mpx.selfStats(ts, w)
-      val full = Mpx.newBuf(plen)
-      Mpx.selfJoinBlock(ts, w, st, st.minlag + 1, plen, full)
-      Mpx.clampBuf(full)
+      val full = Mpx.selfJoin(ts, w)
       val merged = Mpx.newBuf(plen)
       val b = tile
       val rTiles = math.ceil(plen.toDouble / b).toInt

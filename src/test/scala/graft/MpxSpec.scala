@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels._
 import Fixtures._
 
-/** Ports of tests/test_mpx.py plus block-decomposition invariance. */
+/** Ports of tests/test_mpx.py plus tile-decomposition invariance. */
 class MpxSpec extends AnyFunSuite {
 
   val small = Array[Double](0, 1, 1, 1, 0, 0, 2, 1, 0, 0, 2, 1)
@@ -61,7 +61,7 @@ class MpxSpec extends AnyFunSuite {
         val s = st.minlag + 1 + b * per
         val e = math.min(st.minlag + 1 + (b + 1) * per, st.profileLen)
         val buf = Mpx.newBuf(st.profileLen)
-        if (s < e) Mpx.selfJoinBlock(ts, w, st, s, e, buf)
+        if (s < e) Mpx.selfJoinTile(ts, w, st, s, e, st.profileLen, buf)
         buf
       }
       val merged = Mpx.clampBuf(bufs.reduce(Mpx.mergeInto(_, _)))
@@ -81,13 +81,16 @@ class MpxSpec extends AnyFunSuite {
     val sb = Mpx.selfStats(tsb, w)
     val bufA = Mpx.newBuf(sa.profileLen)
     val bufB = Mpx.newBuf(sb.profileLen)
-    // split AB pass into 3 row blocks, BA into 2
+    // split the AB pass (A-anchored diagonals [0, plenA)) into 3 blocks and
+    // the BA pass (roles swapped, diagonals [0, plenB)) into 2
     val abCuts = Seq(0, sa.profileLen / 3, 2 * sa.profileLen / 3, sa.profileLen)
     for (i <- 0 until 3)
-      Mpx.abJoinBlock(ts, tsb, w, sa, sb, abCuts(i), abCuts(i + 1), bufA, bufB)
+      Mpx.abJoinTile(ts, tsb, w, sa, sb, 0, 0, sb.profileLen, sa.profileLen,
+        abCuts(i), abCuts(i + 1), bufA, bufB)
     val baCuts = Seq(0, sb.profileLen / 2, sb.profileLen)
     for (i <- 0 until 2)
-      Mpx.abJoinBlock(tsb, ts, w, sb, sa, baCuts(i), baCuts(i + 1), bufB, bufA)
+      Mpx.abJoinTile(tsb, ts, w, sb, sa, 0, 0, sa.profileLen, sb.profileLen,
+        baCuts(i), baCuts(i + 1), bufB, bufA)
     Mpx.clampBuf(bufA); Mpx.clampBuf(bufB)
     assertAlmostEqual(Mpx.abToEuclidean(bufA, w), mpa, decimal = 10)
     assertAlmostEqual(Mpx.abToEuclidean(bufB, w), mpb, decimal = 10)
