@@ -15,6 +15,18 @@ import graft.schema.SeriesPoint
   */
 object SparkEntry {
 
+  // ---- values the ops-family queries share with their oracles (OracleSqlGen)
+  final val NearDupThreshold = 0.3      // q20/q33: minimum Jaccard
+  final val MaxHamming = 3              // q21: maximum SimHash distance
+  final val AnnK = 10                   // q24/q35: neighbours per query,
+  final val AnnQueries = 20             //   for the queries vec_id < 20
+  final val EmbeddingDim = 64           // q24/q25/q35
+  final val EmbedDupThreshold = 0.9     // q25: minimum cosine; near-copies
+  final val PlantedEmbeddings = 20      //   planted for vec_id < 20
+  final val MediaDupThreshold = 0.99995 // q39: minimum cosine; copies
+  final val PlantedMedia = 24           //   re-ingested for media_id < 24
+  final val PlantOffset = 1000000L      // q25/q39: a planted copy's id offset
+
   private def events(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
   private def documents(s: SparkSession, dir: String): DataFrame =
@@ -31,14 +43,15 @@ object SparkEntry {
   private def lineitem(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
 
-  /** The q24/q25/q35 oracles hardcode dim=64 (hyperplanes, per-dim sums):
-    * if the data width ever changes the engines would disagree with no
-    * hint, so fail loudly at plan build instead.
+  /** The q24/q25/q35 oracles are generated for dim = EmbeddingDim
+    * (hyperplanes, per-dim sums): if the data width ever changes the
+    * engines would disagree with no hint, so fail loudly at plan build
+    * instead.
     */
-  private def oracleDim64(e: DataFrame, query: String): Int = {
+  private def oracleDim(e: DataFrame, query: String): Int = {
     val dim = Similarity.vecDim(e, "embedding")
-    require(dim == 64, s"OracleSqlGen.$query assumes dim=64 but embeddings " +
-      s"have dim=$dim — regenerate the oracle with $query(dim = $dim)")
+    require(dim == EmbeddingDim, s"OracleSqlGen.$query is generated for " +
+      s"dim=$EmbeddingDim (SparkEntry.EmbeddingDim) but embeddings have dim=$dim")
     dim
   }
 
@@ -191,7 +204,7 @@ object SparkEntry {
         unix_micros(date_trunc("minute", $"ts".cast("timestamp"))).as("bucket"), lit(1.0).as("value"))
         .groupBy($"conv_id", $"kind", $"bucket")
         .agg(sum($"value").as("value")).as[SeriesPoint]
-      graft.series.Derive.gapFill(pts, Rollup.MicrosPerMin, Some(0.0))
+      graft.series.Derive.gapFill(pts, Rollup.MicrosPerMin, 0.0)
         .groupBy($"conv_id")
         .agg(count(lit(1)).as("n_minutes"),
           sum(when($"value" === 0.0, 1L).otherwise(0L)).as("n_zero_minutes"),
@@ -288,13 +301,13 @@ object SparkEntry {
     }),
 
     "q20_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLsh(documents(s, dir), threshold = 0.3)),
+      Dedup.minhashLsh(documents(s, dir), threshold = NearDupThreshold)),
 
     "q21_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(documents(s, dir), maxHamming = 3)),
+      Dedup.simhashPairs(documents(s, dir), maxHamming = MaxHamming)),
 
     "q33_dedup_pipeline" -> ((s, dir) =>
-      Dedup.pipeline(documents(s, dir), threshold = 0.3)),
+      Dedup.pipeline(documents(s, dir), threshold = NearDupThreshold)),
 
     "q22_fingerprint" -> ((s, dir) => {
       import s.implicits._
@@ -312,10 +325,10 @@ object SparkEntry {
     "q24_ann_lsh_recall" -> ((s, dir) => {
       import s.implicits._
       val e = embeddings(s, dir).select($"vec_id", $"embedding")
-      val dim = oracleDim64(e, "q24")
-      val q = e.where($"vec_id" < 20)
-      recallHits(Similarity.bruteForceTopK(e, q, 10),
-        Similarity.lshTopK(e, q, 10, dim0 = dim))
+      val dim = oracleDim(e, "q24")
+      val q = e.where($"vec_id" < AnnQueries)
+      recallHits(Similarity.bruteForceTopK(e, q, AnnK),
+        Similarity.lshTopK(e, q, AnnK, dim0 = dim))
     }),
 
     "q35_ann_ivf" -> ((s, dir) => {
@@ -325,9 +338,9 @@ object SparkEntry {
       // action) so the parquet scans once
       val e = graft.util.StageCache.persist(
         embeddings(s, dir).select($"vec_id", $"embedding"))
-      oracleDim64(e, "q35")
-      val q = e.where($"vec_id" < 20)
-      recallHits(Similarity.bruteForceTopK(e, q, 10), Similarity.ivfTopK(e, q, 10))
+      oracleDim(e, "q35")
+      val q = e.where($"vec_id" < AnnQueries)
+      recallHits(Similarity.bruteForceTopK(e, q, AnnK), Similarity.ivfTopK(e, q, AnnK))
     }),
 
     "q25_embedding_dups" -> ((s, dir) => {
@@ -337,13 +350,13 @@ object SparkEntry {
       // vectors (one component +0.25f) — the recall path then has real
       // work, and the oracle replants identically
       val base = embeddings(s, dir).select($"vec_id", $"embedding")
-      val dim = oracleDim64(base, "q25")
-      val planted = base.where($"vec_id" < 20)
-        .select(($"vec_id" + 1000000L).as("vec_id"),
+      val dim = oracleDim(base, "q25")
+      val planted = base.where($"vec_id" < PlantedEmbeddings)
+        .select(($"vec_id" + PlantOffset).as("vec_id"),
           transform($"embedding",
-            (x, i) => when(i === pmod($"vec_id", lit(64)).cast("int"), x + lit(0.25f))
+            (x, i) => when(i === pmod($"vec_id", lit(EmbeddingDim)).cast("int"), x + lit(0.25f))
               .otherwise(x)).as("embedding"))
-      Dedup.embeddingDups(base.union(planted), threshold = 0.9, dim = dim)
+      Dedup.embeddingDups(base.union(planted), threshold = EmbedDupThreshold, dim = dim)
     }),
 
     "q27_multimodal_features" -> ((s, dir) =>
@@ -374,8 +387,8 @@ object SparkEntry {
       val media = graft.util.StageCache.persist(
         Multimodal.syntheticMedia(documents(s, dir)))
       val planted = media
-        .filter(m => m.meta.kind != "video" && m.media_id < 24)
-        .map(m => Multimodal.MediaRow(m.media_id + 1000000L, m.meta, m.payload))
+        .filter(m => m.meta.kind != "video" && m.media_id < PlantedMedia)
+        .map(m => Multimodal.MediaRow(m.media_id + PlantOffset, m.meta, m.payload))
       val vecs = graft.util.StageCache.persist(
         Multimodal.dedupVectors(media.union(planted)))
       // maxBucket = 0 (explicit uncapped opt-out): the q39 oracle joins
@@ -389,7 +402,7 @@ object SparkEntry {
       def kindDups(kind: String) = Dedup.embeddingDups(
         vecs.where($"kind" === kind)
           .select($"media_id".as("vec_id"), $"vec".as("embedding")),
-        threshold = 0.99995, maxBucket = 0,
+        threshold = MediaDupThreshold, maxBucket = 0,
         dim = if (kind == "image") Multimodal.ImageDedupDim
           else Multimodal.AudioDedupDim)
         .select(lit(kind).as("kind"), $"id_a", $"id_b", $"cosine_e4")
@@ -418,20 +431,21 @@ object SparkEntry {
     })
   )
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_rollup_1m" ->
-      """SELECT event_type, epoch(date_trunc('minute', ts))::BIGINT AS minute_ts,
+  /** The batch tier oracle: per (key, unit) bucket, cnt and rounded
+    * sum/min/max of value.
+    */
+  private def tierSql(key: String, unit: String): String =
+    s"""SELECT $key, epoch(date_trunc('$unit', ts))::BIGINT AS ${unit}_ts,
          count(*)::BIGINT AS cnt, round(sum(value), 4) AS sum_v,
          round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-         FROM events GROUP BY 1, 2""",
+         FROM events GROUP BY 1, 2"""
+
+  def oracleSql: Map[String, String] = Map(
+    "q01_rollup_1m" -> tierSql("event_type", "minute"),
 
     // the incremental path must equal the full batch recompute, so the
     // oracle IS the batch recompute — per-user 1m tier over all events
-    "q40_incremental_rollup" ->
-      """SELECT user_id, epoch(date_trunc('minute', ts))::BIGINT AS minute_ts,
-         count(*)::BIGINT AS cnt, round(sum(value), 4) AS sum_v,
-         round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-         FROM events GROUP BY 1, 2""",
+    "q40_incremental_rollup" -> tierSql("user_id", "minute"),
 
     // quantile_cont == Hive/Spark `percentile`: both linearly interpolate
     // at rank p*(n-1) over the sorted group
@@ -442,23 +456,11 @@ object SparkEntry {
          round(quantile_cont(value, 0.95), 6) AS p95
          FROM events GROUP BY 1, 2""",
 
-    "q02_rollup_1h_chain" ->
-      """SELECT user_id, epoch(date_trunc('hour', ts))::BIGINT AS hour_ts,
-         count(*)::BIGINT AS cnt, round(sum(value), 4) AS sum_v,
-         round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-         FROM events GROUP BY 1, 2""",
+    "q02_rollup_1h_chain" -> tierSql("user_id", "hour"),
 
-    "q03_rollup_1d_chain" ->
-      """SELECT user_id, epoch(date_trunc('day', ts))::BIGINT AS day_ts,
-         count(*)::BIGINT AS cnt, round(sum(value), 4) AS sum_v,
-         round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-         FROM events GROUP BY 1, 2""",
+    "q03_rollup_1d_chain" -> tierSql("user_id", "day"),
 
-    "q36_rollup_colocated" ->
-      """SELECT user_id, epoch(date_trunc('hour', ts))::BIGINT AS hour_ts,
-         count(*)::BIGINT AS cnt, round(sum(value), 4) AS sum_v,
-         round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-         FROM events GROUP BY 1, 2""",
+    "q36_rollup_colocated" -> tierSql("user_id", "hour"),
 
     "q04_rate_gapfill" ->
       """WITH m AS (SELECT user_id, date_trunc('minute', ts) AS mi, count(*) AS c
@@ -547,29 +549,29 @@ object SparkEntry {
     // (bit-identical doubles over integer-quantized series; kernel_agree
     // columns pinned TRUE gate the fast kernels)
     "q07_matrix_profile" -> OracleSqlGen.q07,
-    "q08_discords" -> OracleSqlGen.q08(),
-    "q09_motifs" -> OracleSqlGen.q09(),
-    "q10_regimes" -> OracleSqlGen.q10(),
-    "q11_snippets" -> OracleSqlGen.q11(),
-    "q12_mpdist_pairs" -> OracleSqlGen.q12(),
-    "q13_pan_matrix_profile" -> OracleSqlGen.q13(),
+    "q08_discords" -> OracleSqlGen.q08,
+    "q09_motifs" -> OracleSqlGen.q09,
+    "q10_regimes" -> OracleSqlGen.q10,
+    "q11_snippets" -> OracleSqlGen.q11,
+    "q12_mpdist_pairs" -> OracleSqlGen.q12,
+    "q13_pan_matrix_profile" -> OracleSqlGen.q13,
     "q15_gorilla_chunks" -> OracleSqlGen.q15,
     "q19_language_id" -> OracleSqlGen.q19,
-    "q20_minhash_lsh" -> OracleSqlGen.q20(),
-    "q21_simhash_pairs" -> OracleSqlGen.q21(),
-    "q33_dedup_pipeline" -> OracleSqlGen.q33(),
+    "q20_minhash_lsh" -> OracleSqlGen.q20,
+    "q21_simhash_pairs" -> OracleSqlGen.q21,
+    "q33_dedup_pipeline" -> OracleSqlGen.q33,
     "q22_fingerprint" -> OracleSqlGen.q22,
-    "q24_ann_lsh_recall" -> OracleSqlGen.q24(),
-    "q35_ann_ivf" -> OracleSqlGen.q35(),
-    "q25_embedding_dups" -> OracleSqlGen.q25(),
+    "q24_ann_lsh_recall" -> OracleSqlGen.q24,
+    "q35_ann_ivf" -> OracleSqlGen.q35,
+    "q25_embedding_dups" -> OracleSqlGen.q25,
     "q27_multimodal_features" -> OracleSqlGen.q27,
     "q37_image_decode" -> OracleSqlGen.q37,
     "q38_audio_decode" -> OracleSqlGen.q38,
-    "q39_media_dedup" -> OracleSqlGen.q39(),
-    "q28_ab_join" -> OracleSqlGen.q28(),
-    "q32_pmp_discords" -> OracleSqlGen.q32(),
-    "q34_pmp_motifs" -> OracleSqlGen.q34(),
-    "q29_annotation_vectors" -> OracleSqlGen.q29(),
-    "q30_hierarchical_clusters" -> OracleSqlGen.q30()
+    "q39_media_dedup" -> OracleSqlGen.q39,
+    "q28_ab_join" -> OracleSqlGen.q28,
+    "q32_pmp_discords" -> OracleSqlGen.q32,
+    "q34_pmp_motifs" -> OracleSqlGen.q34,
+    "q29_annotation_vectors" -> OracleSqlGen.q29,
+    "q30_hierarchical_clusters" -> OracleSqlGen.q30
   )
 }

@@ -51,7 +51,7 @@ object PairwiseDist {
     requireDriverSized(m)
     val y = new Array[Double](m * (m - 1) / 2)
     pairwiseDist(spark, series, w, threshold).collect().foreach { case (i, j, d) =>
-      y(m * i - (i * (i + 1)) / 2 + (j - i - 1)) = d
+      y(Hierarchical.condensedIndex(m, i, j)) = d
     }
     y
   }

@@ -49,8 +49,9 @@ object BruteMp {
     (s1, s2)
   }
 
-  /** The shared pair-distance expression — must stay textually in sync
-    * with OracleSqlGen.pairDistExpr.
+  /** The shared pair-distance expression — must stay operation for
+    * operation in sync with its SQL twin, the private
+    * `OracleSqlGen.pairDistExpr` (self-join, AB-join and snippet oracles).
     */
   def pairDist(dot: Long, s1i: Long, s2i: Long, s1j: Long, s2j: Long, w: Int): Double = {
     val wd = w.toDouble

@@ -5,9 +5,6 @@ package graft.kernels
   */
 object Core {
 
-  /** Profile length for series/query pair (ref core.py:121-138). */
-  def profileLength(tsLen: Int, w: Int): Int = tsLen - w + 1
-
   /** Boolean mask of windows containing NaN/Inf (ref core.py:141-167). */
   def findSkipLocations(ts: Array[Double], profileLen: Int, w: Int): Array[Boolean] = {
     val skip = new Array[Boolean](profileLen)

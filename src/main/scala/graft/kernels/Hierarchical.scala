@@ -29,7 +29,10 @@ object Hierarchical {
       cophenetCorrelation: Double,
       cophenetDistances: Array[Double])
 
-  private def condensedIndex(m: Int, i: Int, j: Int): Int = {
+  /** Index of pair (i, j), i != j, in a SciPy-order condensed matrix of m
+    * observations (pdist / squareform order).
+    */
+  def condensedIndex(m: Int, i: Int, j: Int): Int = {
     val (a, b) = if (i < j) (i, j) else (j, i)
     m * a - (a * (a + 1)) / 2 + (b - a - 1)
   }

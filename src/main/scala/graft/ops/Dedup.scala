@@ -37,6 +37,16 @@ object Dedup {
     */
   val DefaultMaxBucket = 1000
 
+  /** The MinHash-LSH (q20/q33) and [[embeddingDups]] hyperplane-LSH
+    * (q25/q39) shapes, read by their oracles too.
+    */
+  final val NumHashes = 16
+  final val Bands = 8
+  final val ShingleK = 3
+  final val EmbedPlanes = 12
+  final val EmbedTables = 4
+  final val EmbedSeed = 7L
+
   /** Drop (band-)buckets larger than `maxBucket` from candidate
     * generation. One window over the banded rows, partitioned by the bucket
     * key, gives each row its bucket's size, so the banded rows (for
@@ -159,8 +169,8 @@ object Dedup {
     * materializes numHashes arrays per row and is ~an order of magnitude
     * slower). Returns (id, shingles: distinct texts, minhash: hex strings).
     */
-  def minhashSignature(docs: DataFrame, textCol: String, numHashes: Int = 16,
-      shingleK: Int = 3): DataFrame = {
+  def minhashSignature(docs: DataFrame, textCol: String, numHashes: Int = NumHashes,
+      shingleK: Int = ShingleK): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docTexts(docs, "doc_id", textCol)
@@ -226,7 +236,7 @@ object Dedup {
     * jaccard = |A∩B| / (|A| + |B| - |A∩B|) over distinct shingle texts.
     */
   def minhashLsh(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      numHashes: Int = 16, bands: Int = 8, threshold: Double = 0.5,
+      numHashes: Int = NumHashes, bands: Int = Bands, threshold: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val rows = numHashes / bands
     // the md5-heavy signature stage fans out to three consumers (banding +
@@ -268,7 +278,7 @@ object Dedup {
     * representatives.
     */
   def pipeline(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      numHashes: Int = 16, bands: Int = 8, threshold: Double = 0.5,
+      numHashes: Int = NumHashes, bands: Int = Bands, threshold: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val ex = graft.util.StageCache.persist(exact(docs, idCol, textCol))
     val exactPairs = ex
@@ -374,7 +384,7 @@ object Dedup {
     */
   def embeddingDups(embeds: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", threshold: Double = 0.9,
-      planes: Int = 12, tables: Int = 4,
+      planes: Int = EmbedPlanes, tables: Int = EmbedTables,
       maxBucket: Int = DefaultMaxBucket, dim: Int = -1): DataFrame = {
     // vectors are consumed by key generation AND both verify sides: cache
     // the projected scan once — via forked(), so an input that is itself
@@ -387,7 +397,7 @@ object Dedup {
       embeds.select(col(idCol), col(vecCol)))
     val keys = graft.util.StageCache.persist(
       Similarity.withBucketKeys(vecs, idCol, vecCol, planes, tables,
-          seed = 7, dim0 = dim)
+          seed = EmbedSeed, dim0 = dim)
         .select($"bkey", col(idCol)))
     val candidates = candidatePairs(keys, Seq("bkey"), idCol, Nil, maxBucket,
         "embeddingDups")

@@ -21,6 +21,16 @@ import graft.ops.ColSyntax._
   */
 object Similarity {
 
+  /** The [[lshTopK]] (q24) and [[ivfTopK]] (q35) shapes, read by their
+    * oracles too.
+    */
+  final val LshPlanes = 10
+  final val LshTables = 4
+  final val LshSeed = 42L
+  final val IvfCells = 16
+  final val IvfProbes = 2
+  final val IvfLloydRounds = 2
+
   /** Cosine similarity of two float-array columns in double precision
     * (sequential fold — mirrored by OracleSqlGen's list_reduce).
     */
@@ -177,8 +187,8 @@ object Similarity {
     * keeps its recall on clustered data.
     */
   def ivfCells(embeds: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", kCells: Int = 16,
-      lloydRounds: Int = 2, trainFraction: Double = 1.0): (DataFrame, DataFrame) = {
+      vecCol: String = "embedding", kCells: Int = IvfCells,
+      lloydRounds: Int = IvfLloydRounds, trainFraction: Double = 1.0): (DataFrame, DataFrame) = {
     val spark = embeds.sparkSession
     // the quantized projection feeds the seed sample, every assignment
     // round and every Lloyd update — persist it so the corpus scans once,
@@ -254,7 +264,7 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      kCells: Int = 16, nprobe: Int = 2, lloydRounds: Int = 2,
+      kCells: Int = IvfCells, nprobe: Int = IvfProbes, lloydRounds: Int = IvfLloydRounds,
       trainFraction: Double = 1.0): DataFrame = {
     val (cells, cents) =
       ivfCells(corpus, idCol, vecCol, kCells, lloydRounds, trainFraction)
@@ -282,7 +292,7 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      planes: Int = 10, tables: Int = 4, seed: Long = 42L,
+      planes: Int = LshPlanes, tables: Int = LshTables, seed: Long = LshSeed,
       dim0: Int = -1): DataFrame = {
     val dim = if (dim0 > 0) dim0 else vecDim(corpus, vecCol)
     val qb = broadcast(withBucketKeys(queries, idCol, vecCol, planes, tables, seed, dim)

@@ -1,12 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 import graft.dist.DistributedMp
 import graft.dist.DistributedMp.SeriesRow
 import graft.kernels._
+import graft.queries.OracleSqlGen.{ClusterSeries, Clusters, Ez, FlussW, MotifRadius,
+  MpdistSeries, PmpWindows, SnippetSize, W}
 
 /** Integer-quantized per-user series (see OracleSqlGen): the common input
   * of the matrix-profile-family driver queries.
@@ -19,11 +20,11 @@ final case class QSeries(user_id: Long, vi: Array[Long])
   * the kernel's float recurrences cannot be replicated bit-for-bit in SQL,
   * additionally the BruteMp twin whose values the driver hash-compares;
   * a `kernel_agree` column (pinned TRUE by the oracle) gates the kernel
-  * against the twin at 1e-6.
+  * against the twin at 1e-6. The values both engines share (W, Ez, the PMP
+  * windows, ...) live beside OracleSqlGen.Cap and Quant.
   */
 object MpQueries {
 
-  val W = 8
   val AgreeTol = 1e-6
 
   /** quantSeries cached: every MP query feeds the windowed/groupByKey'd
@@ -85,6 +86,26 @@ object MpQueries {
 
   private def e4(v: Double): Long = math.floor(v * 10000.0).toLong
 
+  /** `cols` + kernel_agree of `brute` rows (twin profile `bmp`) left-joined
+    * on `on` to `kern` rows (kernel profile `kmp`): a missing kernel row is
+    * excused only when n < 2w (plen < w+1) at window `w`, otherwise the
+    * profiles agree to AgreeTol.
+    */
+  private def kernelAgree(brute: DataFrame, kern: DataFrame, on: Column, w: Column,
+      cols: Column*): DataFrame =
+    brute.join(kern, on, "left")
+      .select(cols :+ when(col("kmp").isNull, size(col("bmp")) < w + 1)
+        .otherwise(agreeCol(col("bmp"), col("kmp"))).as("kernel_agree"): _*)
+
+  /** The distributed mpx profiles at window W as [[kernelAgree]]'s kern. */
+  private def mpxKernel(qs: Dataset[QSeries]): DataFrame = {
+    val spark = qs.sparkSession
+    import spark.implicits._
+    DistributedMp.mpxProfiles(toSeriesRows(qs), W, "raw",
+        maxSeriesLen = OracleSqlGen.Cap)
+      .map(p => (p.conv_id.toLong, p.mp)).toDF("kuid", "kmp")
+  }
+
   /** q07: per-user profile summary; kernel_agree gates the distributed mpx
     * path (DistributedMp.mpxProfiles) against the brute twin.
     */
@@ -96,14 +117,8 @@ object MpQueries {
       val mi = Core.argmin(r.mp)
       (q.user_id, r.mp.length.toLong, mi.toLong, e4(r.mp(mi)), r.mp)
     }.toDF("user_id", "profile_len", "min_idx", "min_mp_e4", "bmp")
-    val kern = DistributedMp.mpxProfiles(toSeriesRows(qs), W, "raw",
-        maxSeriesLen = OracleSqlGen.Cap)
-      .map(p => (p.conv_id.toLong, p.mp)).toDF("kuid", "kmp")
-    brute.join(kern, $"user_id" === $"kuid", "left")
-      .select($"user_id", $"profile_len", $"min_idx", $"min_mp_e4",
-        // a series too short for the kernel (n < 2w) has nothing to gate
-        when($"kmp".isNull, $"profile_len" < W + 1)
-          .otherwise(agreeCol($"bmp", $"kmp")).as("kernel_agree"))
+    kernelAgree(brute, mpxKernel(qs), $"user_id" === $"kuid", lit(W),
+      $"user_id", $"profile_len", $"min_idx", $"min_mp_e4")
   }
 
   /** q08: top-3 discords over the brute profile — TopK.mpTopKDiscords IS
@@ -113,7 +128,7 @@ object MpQueries {
     import s.implicits._
     quantSeries(s, dir).filter(_.vi.length >= minN(W)).flatMap { q =>
       val r = BruteMp.selfProfile(q.vi, W)
-      TopK.mpTopKDiscords(r.mp, ez = 2, k = 3).zipWithIndex.map { case (d, i) =>
+      TopK.mpTopKDiscords(r.mp, ez = Ez, k = 3).zipWithIndex.map { case (d, i) =>
         (q.user_id, (i + 1).toLong, d)
       }
     }.toDF("user_id", "rank", "discord_idx")
@@ -128,28 +143,20 @@ object MpQueries {
     val qs = quantSeriesCached(s, dir)
     val brute = qs.filter(_.vi.length >= minN(W)).flatMap { q =>
       val r = BruteMp.selfProfile(q.vi, W)
-      BruteMp.motifPairs(r.mp, r.pi, ez = 2, k = 2).zipWithIndex.map {
+      BruteMp.motifPairs(r.mp, r.pi, ez = Ez, k = 2).zipWithIndex.map {
         case ((a, b), i) => (q.user_id, (i + 1).toLong, a.toLong, b.toLong, r.mp)
       }
     }.toDF("user_id", "rank", "motif_a", "motif_b", "bmp")
-    val kern = DistributedMp.mpxProfiles(toSeriesRows(qs), W, "raw",
-        maxSeriesLen = OracleSqlGen.Cap)
-      .map(p => (p.conv_id.toLong, p.mp)).toDF("kuid", "kmp")
-    brute.join(kern, $"user_id" === $"kuid", "left")
-      .select($"user_id", $"rank", $"motif_a", $"motif_b",
-        // a missing kernel row is only excusable when the series is too
-        // short for the kernel (plen < w+1 <=> n < 2w); a silently dropped
-        // row on a long-enough series must read FALSE
-        when($"kmp".isNull, size($"bmp") < W + 1)
-          .otherwise(agreeCol($"bmp", $"kmp")).as("kernel_agree"))
+    kernelAgree(brute, mpxKernel(qs), $"user_id" === $"kuid", lit(W),
+      $"user_id", $"rank", $"motif_a", $"motif_b")
   }
 
-  /** q10: FLUSS regimes at w=4 over the brute profile index — Fluss.cac +
-    * Fluss.extractRegimes are the operators under test, SQL-mirrored.
+  /** q10: FLUSS regimes at w=FlussW over the brute profile index —
+    * Fluss.cac + Fluss.extractRegimes are the operators under test, SQL-mirrored.
     */
   def q10(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val w = 4
+    val w = FlussW
     quantSeries(s, dir).filter(_.vi.length >= minN(w)).flatMap { q =>
       val r = BruteMp.selfProfile(q.vi, w)
       val cac = Fluss.cac(r.pi.map(_.toLong), w)
@@ -159,14 +166,14 @@ object MpQueries {
     }.toDF("user_id", "rank", "regime_idx")
   }
 
-  /** q11: snippets (size=16, w=8, k=2) — padding, candidate fan-out, and
-    * the greedy coverage selection (Snippets.pad/select) run on the brute
+  /** q11: snippets (size=SnippetSize, w=W, k=2) — padding, candidate fan-out,
+    * and the greedy coverage selection (Snippets.pad/select) run on the brute
     * mpdist-vector matrices so every projected value is SQL-mirrored.
     */
   def q11(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val size = 16
-    val w = 8
+    val size = SnippetSize
+    val w = W
     quantSeries(s, dir).filter(_.vi.length >= 2 * size).flatMap { q =>
       val ts = q.vi.map(_.toDouble)
       val padded = Snippets.pad(ts, size)
@@ -195,28 +202,36 @@ object MpQueries {
     qs.joinWith(broadcast(ids), qs("user_id") === ids("uid"), "inner").map(_._1)
   }
 
-  /** q12: MPDist over all pairs of the 5 longest series; MpDist.mpdist
-    * (mpx_ab kernel) gated by kernel_agree against the brute twin.
+  /** MPDist at window W over every pair a < b (by user_id) of the k
+    * longest series: `out(a, b, brute distance, agree)` per pair, where
+    * agree gates MpDist.mpdist (mpx_ab kernel) against the brute twin.
     */
-  def q12(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  private def mpdistPairs[T: Encoder](s: SparkSession, dir: String, k: Int)(
+      out: (Long, Long, Double, Boolean) => T): Dataset[T] = {
     val top = graft.util.StageCache.persist(
-      topKByLength(quantSeriesCached(s, dir).filter(_.vi.length >= W), 5))
+      topKByLength(quantSeriesCached(s, dir).filter(_.vi.length >= W), k))
     val l = top.as("l")
     val r = top.as("r")
     l.joinWith(r, col("l.user_id") < col("r.user_id"), "inner").map { case (a, b) =>
       val bd = BruteMp.mpdist(a.vi, b.vi, W)
       val kd = MpDist.mpdist(a.vi.map(_.toDouble), b.vi.map(_.toDouble), W)
-      (a.user_id, b.user_id, e4(bd), math.abs(kd - bd) < AgreeTol)
-    }.toDF("user_a", "user_b", "mpdist_e4", "kernel_agree")
+      out(a.user_id, b.user_id, bd, math.abs(kd - bd) < AgreeTol)
+    }
   }
 
-  /** q13: PMP summary (min pair distance per window) for windows 8/12/16;
+  /** q12: MPDist over all pairs of the MpdistSeries longest series. */
+  def q12(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    mpdistPairs(s, dir, MpdistSeries)((a, b, d, agree) => (a, b, e4(d), agree))
+      .toDF("user_a", "user_b", "mpdist_e4", "kernel_agree")
+  }
+
+  /** q13: PMP summary (min pair distance per window) for the PMP windows;
     * kernel_agree gates the distributed per-(series,window) skimp fan-out.
     */
   def q13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val windows = Array(8, 12, 16)
+    val windows = PmpWindows.toArray
     val qs = quantSeriesCached(s, dir)
     val brute = qs.flatMap { q =>
       windows.iterator.filter(w => q.vi.length >= minN(w)).map { w =>
@@ -227,14 +242,11 @@ object MpQueries {
     val kern = DistributedMp.skimpProfiles(toSeriesRows(qs), windows, "raw",
         maxSeriesLen = OracleSqlGen.Cap)
       .map(p => (p.conv_id.toLong, p.w.toLong, p.mp)).toDF("kuid", "kw", "kmp")
-    brute.join(kern, $"user_id" === $"kuid" && $"window" === $"kw", "left")
-      .select($"user_id", $"window", $"min_mp_e4",
-        // missing kernel rows only excusable below the kernel's n >= 2w bar
-        when($"kmp".isNull, size($"bmp") < $"window" + 1)
-          .otherwise(agreeCol($"bmp", $"kmp")).as("kernel_agree"))
+    kernelAgree(brute, kern, $"user_id" === $"kuid" && $"window" === $"kw", $"window",
+      $"user_id", $"window", $"min_mp_e4")
   }
 
-  /** q32: PMP top-3 discords over windows 8/12/16 — TopK.pmpTopKDiscords
+  /** q32: PMP top-3 discords over the PMP windows — TopK.pmpTopKDiscords
     * IS the operator under test (ref top_k_discords.py:16-91): global
     * argmax over the 2-D (window-row, position) pan profile with
     * first-in-row-major-scan tie-break, row-wise [c-zone, c+zone)
@@ -244,7 +256,7 @@ object MpQueries {
     */
   def q32(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val windows = Array(8, 12, 16)
+    val windows = PmpWindows.toArray
     quantSeries(s, dir).flatMap { q =>
       val elig = windows.filter(w => q.vi.length >= minN(w))
       if (elig.isEmpty) Iterator.empty
@@ -258,7 +270,7 @@ object MpQueries {
     }.toDF("user_id", "rank", "window", "discord_idx", "discord_mp_e4")
   }
 
-  /** q34: PMP top-2 motifs over windows 8/12/16 — the full
+  /** q34: PMP top-2 motifs over the PMP windows — the full
     * TopK.pmpTopKMotifs selection path (ref top_k_motifs.py:16-171):
     * 2-D argmin with row-major tie-break, per-pick ez = floor(w/2),
     * neighbor re-query bounded by radius·best with exclusion-zone
@@ -272,7 +284,7 @@ object MpQueries {
     */
   def q34(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val windows = Array(8, 12, 16)
+    val windows = PmpWindows.toArray
     quantSeries(s, dir).flatMap { q =>
       val elig = windows.filter(w => q.vi.length >= minN(w))
       if (elig.isEmpty) Iterator.empty
@@ -281,7 +293,7 @@ object MpQueries {
         // agreement check (the self-join is the quadratic part)
         val profiles = elig.map(w => BruteMp.selfProfile(q.vi, w))
         val picks = BruteMp.pmpMotifs(q.vi, elig, profiles, k = 2,
-          maxNeighbors = 2, radius = 3.0)
+          maxNeighbors = 2, radius = MotifRadius)
         val profileLen = profiles.map(_.mp.length).max
         val pmp = profiles.map { p =>
           val row = Array.fill(profileLen)(Double.PositiveInfinity)
@@ -382,32 +394,24 @@ object MpQueries {
     }.toDF("user_id", "profile_len", "mp_argmin", "cmp_argmin", "cmp_min_e4")
   }
 
-  /** q30: pairwise MPDist over the 8 longest series (distributed theta
-    * join) + single-linkage maxclust=3 on the driver (28 scalars — the
-    * reference also clusters driver-side); the oracle replays the same
-    * merges as 5 Kruskal steps, so `same_cluster` is fully gated.
+  /** q30: pairwise MPDist over the ClusterSeries longest series
+    * (distributed theta join) + single-linkage maxclust=Clusters on the
+    * driver (28 scalars — the reference also clusters driver-side); the
+    * oracle replays the same merges as Kruskal steps, so `same_cluster` is
+    * fully gated.
     */
   def q30(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val top = graft.util.StageCache.persist(
-      topKByLength(quantSeriesCached(s, dir).filter(_.vi.length >= W), 8))
-    val l = top.as("l")
-    val r = top.as("r")
-    val pairRows = l.joinWith(r, col("l.user_id") < col("r.user_id"), "inner").map { case (a, b) =>
-      val bd = BruteMp.mpdist(a.vi, b.vi, W)
-      val kd = MpDist.mpdist(a.vi.map(_.toDouble), b.vi.map(_.toDouble), W)
-      (a.user_id, b.user_id, bd, math.abs(kd - bd) < AgreeTol)
-    }.collect() // 28 scalar rows — the linkage input, not series data
+    val pairRows = mpdistPairs(s, dir, ClusterSeries)((a, b, d, agree) => (a, b, d, agree))
+      .collect() // 28 scalar rows — the linkage input, not series data
     val ids = pairRows.flatMap(p => Seq(p._1, p._2)).distinct.sorted
     val m = ids.length
     val idx = ids.zipWithIndex.toMap
     val y = new Array[Double](m * (m - 1) / 2)
     pairRows.foreach { case (a, b, d, _) =>
-      val (i, j) = (idx(a), idx(b))
-      y(m * math.min(i, j) - (math.min(i, j) * (math.min(i, j) + 1)) / 2 +
-        (math.max(i, j) - math.min(i, j) - 1)) = d
+      y(Hierarchical.condensedIndex(m, idx(a), idx(b))) = d
     }
-    val clust = Hierarchical.hierarchicalClusters(y, m, t = 3,
+    val clust = Hierarchical.hierarchicalClusters(y, m, t = Clusters,
       Hierarchical.Single, maxClust = true)
     val out = pairRows.map { case (a, b, d, agree) =>
       (a, b, e4(d), clust.assignments(idx(a)) == clust.assignments(idx(b)), agree)

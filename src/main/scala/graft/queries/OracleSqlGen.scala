@@ -19,11 +19,32 @@ package graft.queries
   * Heavily-reused CTEs are MATERIALIZED — without it DuckDB re-opens the
   * parquet once per reference and trips "too many open files" on the
   * chained suppression/Kruskal steps.
+  *
+  * The query builders take no parameters: each value both engines must
+  * agree on is one constant both read (the MP family's below; the ops
+  * family's in SparkEntry, Dedup and Similarity). Shared fragments, each
+  * built once: windowSumsSql, pairDistExpr (BruteMp.pairDist's twin),
+  * pmpCtes, abJoinCtes + mpdistPairsCtes, topKCte + bruteTopKCtes +
+  * recallHitsSql, nearestCellSql, imageFieldCtes + audioFieldCtes,
+  * mediaDedupCtes and minhashLshCtes.
   */
 object OracleSqlGen {
 
+  import graft.SparkEntry._
+  import graft.ops.{Dedup, Multimodal, Similarity}
+
+  // ---- values the MP queries (MpQueries) share with their oracles ------
   val Cap = 240
   val Quant = 10000L
+  final val W = 8                           // q07-q09, q11, q12, q28-q30
+  final val Ez = 2                          // q08/q09 exclusion zone
+  final val FlussW = 4                      // q10
+  final val SnippetSize = 16                // q11
+  val PmpWindows: Seq[Int] = Seq(8, 12, 16) // q13, q32, q34
+  final val MotifRadius = 3.0               // q34: neighbours within radius·best
+  final val MpdistSeries = 5                // q12: pairs of the 5 longest series
+  final val ClusterSeries = 8               // q30: the 8 longest series,
+  final val Clusters = 3                    //   cut into 3 clusters
 
   def ptsCte: String =
     s"""pts AS MATERIALIZED (
@@ -32,6 +53,39 @@ object OracleSqlGen {
          round(value * $Quant)::BIGINT AS vi
   FROM events
   QUALIFY idx < $Cap)"""
+
+  /** Per-window integer sums s1, s2 of `pts` (named window `fw`). */
+  private def windowSumsSql(w: Int, fw: String): String =
+    s"""SELECT user_id, idx AS i,
+         sum(vi) OVER $fw::BIGINT AS s1,
+         sum(vi * vi) OVER $fw::BIGINT AS s2,
+         count(*) OVER $fw AS wn
+  FROM pts
+  WINDOW $fw AS (PARTITION BY user_id ORDER BY idx ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING)
+  QUALIFY wn = $w"""
+
+  /** The pair z-normalised distance `dist` — BruteMp.pairDist's twin,
+    * operation for operation — from the dot product `d.dot` and the window
+    * sums of `wi`/`wj` joined in `from`; selects `keys` + dist over
+    * `innerKeys` + the num/deni/denj terms.
+    */
+  private def pairDistExpr(w: Int, keys: String, innerKeys: String, from: String): String =
+    s"""SELECT $keys,
+         sqrt(greatest(${2 * w}.0 * (1.0 - CASE WHEN deni = 0.0 OR denj = 0.0 THEN 0.0
+              ELSE num / (deni * denj) END), 0.0)) AS dist
+  FROM (
+    SELECT $innerKeys,
+           d.dot::DOUBLE - wi.s1::DOUBLE * wj.s1::DOUBLE / $w.0 AS num,
+           sqrt(greatest(wi.s2::DOUBLE - wi.s1::DOUBLE * wi.s1::DOUBLE / $w.0, 0.0)) AS deni,
+           sqrt(greatest(wj.s2::DOUBLE - wj.s1::DOUBLE * wj.s1::DOUBLE / $w.0, 0.0)) AS denj
+    FROM $from)"""
+
+  /** [[pairDistExpr]] over a self-join's diagonal dots (j = i + d). */
+  private def selfPairDist(w: Int, dots: String, ws: String): String =
+    pairDistExpr(w, "user_id, i, j", "d.user_id, d.i, d.i + d.d AS j",
+      s"""$dots d
+    JOIN $ws wi ON wi.user_id = d.user_id AND wi.i = d.i
+    JOIN $ws wj ON wj.user_id = d.user_id AND wj.i = d.i + d.d""")
 
   /** CTE chain ws/dg/dots/pd/mp for a self-join at window w; names suffixed
     * so several windows can coexist (q13).
@@ -45,13 +99,7 @@ object OracleSqlGen {
     val minN = MpQueries.minN(w)
     s"""el$sfx AS (SELECT user_id FROM pts GROUP BY 1 HAVING count(*) >= $minN),
 ws$sfx AS (
-  SELECT user_id, idx AS i,
-         sum(vi) OVER fw$sfx::BIGINT AS s1,
-         sum(vi * vi) OVER fw$sfx::BIGINT AS s2,
-         count(*) OVER fw$sfx AS wn
-  FROM pts
-  WINDOW fw$sfx AS (PARTITION BY user_id ORDER BY idx ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING)
-  QUALIFY wn = $w),
+  ${windowSumsSql(w, s"fw$sfx")}),
 dg$sfx AS (
   SELECT a.user_id, a.idx AS t, b.idx - a.idx AS d, a.vi * b.vi AS pr
   FROM pts a JOIN pts b ON a.user_id = b.user_id AND b.idx > a.idx + $minlag
@@ -64,17 +112,7 @@ dots$sfx AS (
   WINDOW dw$sfx AS (PARTITION BY user_id, d ORDER BY t ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING)
   QUALIFY cnt = $w),
 pd$sfx AS (
-  SELECT user_id, i, j,
-         sqrt(greatest(${2 * w}.0 * (1.0 - CASE WHEN deni = 0.0 OR denj = 0.0 THEN 0.0
-              ELSE num / (deni * denj) END), 0.0)) AS dist
-  FROM (
-    SELECT d.user_id, d.i, d.i + d.d AS j,
-           d.dot::DOUBLE - wi.s1::DOUBLE * wj.s1::DOUBLE / $w.0 AS num,
-           sqrt(greatest(wi.s2::DOUBLE - wi.s1::DOUBLE * wi.s1::DOUBLE / $w.0, 0.0)) AS deni,
-           sqrt(greatest(wj.s2::DOUBLE - wj.s1::DOUBLE * wj.s1::DOUBLE / $w.0, 0.0)) AS denj
-    FROM dots$sfx d
-    JOIN ws$sfx wi ON wi.user_id = d.user_id AND wi.i = d.i
-    JOIN ws$sfx wj ON wj.user_id = d.user_id AND wj.i = d.i + d.d)),
+  ${selfPairDist(w, s"dots$sfx", s"ws$sfx")}),
 mp$sfx AS MATERIALIZED (
   SELECT user_id, pos, dist AS mp, other AS pi
   FROM (
@@ -89,7 +127,7 @@ mp$sfx AS MATERIALIZED (
   /** q07: per-user profile summary + kernel_agree pinned TRUE. */
   def q07: String =
     s"""WITH $ptsCte,
-${selfMpCtes(8)}
+${selfMpCtes(W)}
 SELECT user_id, profile_len, pos::BIGINT AS min_idx,
        floor(mp * 10000.0)::BIGINT AS min_mp_e4, TRUE AS kernel_agree
 FROM (
@@ -99,40 +137,41 @@ FROM (
   FROM mp
 ) WHERE rn = 1"""
 
-  private def pickMax(src: String): String =
+  /** Per user, the position of `src` ranked first by `order`. */
+  private def pickPos(src: String, order: String): String =
     s"""(SELECT user_id, pos FROM (
-      SELECT user_id, pos, row_number() OVER (PARTITION BY user_id ORDER BY mp DESC, pos DESC) AS rn
+      SELECT user_id, pos, row_number() OVER (PARTITION BY user_id ORDER BY $order) AS rn
       FROM $src) WHERE rn = 1)"""
 
-  /** q08: top-3 discords, ez=2, argsort-desc tie-break (pos DESC),
+  /** q08: top-3 discords, ez=Ez, argsort-desc tie-break (pos DESC),
     * suppression [d-ez, d+ez-1] (TopK.mpTopKDiscords semantics).
     */
-  def q08(ez: Int = 2): String =
+  def q08: String =
     s"""WITH $ptsCte,
-${selfMpCtes(8)},
-p1 AS ${pickMax("mp")},
+${selfMpCtes(W)},
+p1 AS ${pickPos("mp", "mp DESC, pos DESC")},
 r2 AS (SELECT m.* FROM mp m JOIN p1 ON m.user_id = p1.user_id
-       WHERE m.pos < p1.pos - $ez OR m.pos >= p1.pos + $ez),
-p2 AS ${pickMax("r2")},
+       WHERE m.pos < p1.pos - $Ez OR m.pos >= p1.pos + $Ez),
+p2 AS ${pickPos("r2", "mp DESC, pos DESC")},
 r3 AS (SELECT m.* FROM r2 m JOIN p2 ON m.user_id = p2.user_id
-       WHERE m.pos < p2.pos - $ez OR m.pos >= p2.pos + $ez),
-p3 AS ${pickMax("r3")}
+       WHERE m.pos < p2.pos - $Ez OR m.pos >= p2.pos + $Ez),
+p3 AS ${pickPos("r3", "mp DESC, pos DESC")}
 SELECT user_id, rank, discord_idx FROM (
   SELECT user_id, 1::BIGINT AS rank, pos::BIGINT AS discord_idx FROM p1
   UNION ALL SELECT user_id, 2, pos FROM p2
   UNION ALL SELECT user_id, 3, pos FROM p3)"""
 
-  /** q09: top-2 motif pairs, ez=2, argmin tie lowest pos, inclusive
+  /** q09: top-2 motif pairs, ez=Ez, argmin tie lowest pos, inclusive
     * [x-ez, x+ez] suppression around both endpoints (BruteMp.motifPairs).
     */
-  def q09(ez: Int = 2): String =
+  def q09: String =
     s"""WITH $ptsCte,
-${selfMpCtes(8)},
+${selfMpCtes(W)},
 p1 AS (SELECT user_id, least(pos, pi) AS a, greatest(pos, pi) AS b FROM (
       SELECT user_id, pos, pi, row_number() OVER (PARTITION BY user_id ORDER BY mp ASC, pos ASC) AS rn
       FROM mp) WHERE rn = 1),
 r2 AS (SELECT m.* FROM mp m JOIN p1 ON m.user_id = p1.user_id
-       WHERE (m.pos < p1.a - $ez OR m.pos > p1.a + $ez) AND (m.pos < p1.b - $ez OR m.pos > p1.b + $ez)),
+       WHERE (m.pos < p1.a - $Ez OR m.pos > p1.a + $Ez) AND (m.pos < p1.b - $Ez OR m.pos > p1.b + $Ez)),
 p2 AS (SELECT user_id, least(pos, pi) AS a, greatest(pos, pi) AS b FROM (
       SELECT user_id, pos, pi, row_number() OVER (PARTITION BY user_id ORDER BY mp ASC, pos ASC) AS rn
       FROM r2) WHERE rn = 1)
@@ -143,12 +182,9 @@ SELECT user_id, rank, motif_a, motif_b, TRUE AS kernel_agree FROM (
   /** q10: FLUSS CAC from the brute profile index at w=4, two regimes with
     * ez=5w, empty-tail fallback to position 0 (Core.argmin on all-∞).
     */
-  def q10(w: Int = 4): String = {
+  def q10: String = {
+    val w = FlussW
     val ez = 5 * w
-    def pickMin(src: String): String =
-      s"""(SELECT user_id, pos FROM (
-      SELECT user_id, pos, row_number() OVER (PARTITION BY user_id ORDER BY cac ASC, pos ASC) AS rn
-      FROM $src) WHERE rn = 1)"""
     s"""WITH $ptsCte,
 ${selfMpCtes(w)},
 plen AS (SELECT user_id, count(*)::BIGINT AS pl FROM mp GROUP BY 1),
@@ -173,10 +209,10 @@ cac AS MATERIALIZED (
                  + p.pl::DOUBLE / 2.0) AS v
     FROM cum c JOIN plen p ON c.user_id = p.user_id) c
   JOIN plen p ON c.user_id = p.user_id),
-p1 AS ${pickMin("cac")},
+p1 AS ${pickPos("cac", "cac ASC, pos ASC")},
 r2 AS (SELECT c.* FROM cac c JOIN p1 ON c.user_id = p1.user_id
        WHERE c.pos < p1.pos - $ez OR c.pos >= p1.pos + $ez),
-p2raw AS ${pickMin("r2")},
+p2raw AS ${pickPos("r2", "cac ASC, pos ASC")},
 p2 AS (SELECT p.user_id, coalesce(p2raw.pos, 0) AS pos
        FROM plen p LEFT JOIN p2raw ON p.user_id = p2raw.user_id)
 SELECT user_id, rank, regime_idx FROM (
@@ -184,14 +220,17 @@ SELECT user_id, rank, regime_idx FROM (
   UNION ALL SELECT user_id, 2, pos FROM p2)"""
   }
 
+  /** `pts` plus one self-join chain per PMP window, suffixed `_w<w>`. */
+  private def pmpCtes: String =
+    (ptsCte +: PmpWindows.map(w => selfMpCtes(w, s"_w$w"))).mkString(",\n")
+
   /** q13: global minimum pair distance per (user, window) — the PMP
-    * summary — for windows 8/12/16, kernel_agree pinned TRUE.
+    * summary — for the PMP windows, kernel_agree pinned TRUE.
     */
-  def q13(windows: Seq[Int] = Seq(8, 12, 16)): String = {
-    val ctes = ptsCte +: windows.map(w => selfMpCtes(w, s"_w$w"))
-    val selects = windows.map(w =>
+  def q13: String = {
+    val selects = PmpWindows.map(w =>
       s"""SELECT user_id, $w::BIGINT AS "window", floor(min(dist) * 10000.0)::BIGINT AS min_mp_e4, TRUE AS kernel_agree FROM pd_w$w GROUP BY user_id""")
-    s"""WITH ${ctes.mkString(",\n")}
+    s"""WITH $pmpCtes
 SELECT * FROM (${selects.mkString(" UNION ALL ")})"""
   }
 
@@ -204,9 +243,8 @@ SELECT * FROM (${selects.mkString(" UNION ALL ")})"""
     * remaining cells run out simply stops contributing rows, like the
     * kernel's early exit.
     */
-  def q32(windows: Seq[Int] = Seq(8, 12, 16)): String = {
-    val ctes = ptsCte +: windows.map(w => selfMpCtes(w, s"_w$w"))
-    val union = windows.map(w =>
+  def q32: String = {
+    val union = PmpWindows.map(w =>
       s"""SELECT user_id, $w AS w, pos, mp FROM mp_w$w""").mkString(" UNION ALL ")
     def pick(name: String, src: String): String =
       s"""$name AS MATERIALIZED (
@@ -218,7 +256,7 @@ SELECT * FROM (${selects.mkString(" UNION ALL ")})"""
   SELECT m.user_id, m.w, m.pos, m.mp
   FROM $src m JOIN $p ON m.user_id = $p.user_id JOIN z ON m.user_id = z.user_id
   WHERE NOT (m.w = $p.w AND m.pos >= $p.pos - z.zone AND m.pos < $p.pos + z.zone))"""
-    s"""WITH ${ctes.mkString(",\n")},
+    s"""WITH $pmpCtes,
 pm0 AS MATERIALIZED ($union),
 ${pick("p1", "pm0")},
 z AS MATERIALIZED (SELECT user_id, (w // 2)::BIGINT AS zone FROM p1),
@@ -251,13 +289,12 @@ SELECT user_id, rank, "window", discord_idx, discord_mp_e4 FROM (
     * profile is fresh (the kernel masks dp by the ORIGINAL pmp, not the
     * suppressed copy).
     */
-  def q34(windows: Seq[Int] = Seq(8, 12, 16), radius: Double = 3.0): String = {
-    val ctes = ptsCte +: windows.map(w => selfMpCtes(w, s"_w$w"))
-    val wdUnion = windows.map(w =>
+  def q34: String = {
+    val wdUnion = PmpWindows.map(w =>
       s"""SELECT user_id, $w AS w, i AS s, j, dist FROM pd_w$w
   UNION ALL SELECT user_id, $w AS w, j AS s, i AS j, dist FROM pd_w$w""")
       .mkString(" UNION ALL ")
-    val pmUnion = windows.map(w =>
+    val pmUnion = PmpWindows.map(w =>
       s"""SELECT user_id, $w AS w, pos, mp, pi FROM mp_w$w""").mkString(" UNION ALL ")
 
     def pickBlock(p: String, src: String): String =
@@ -276,7 +313,7 @@ n${p}1 AS MATERIALIZED (
     SELECT d.user_id, d.j,
            row_number() OVER (PARTITION BY d.user_id ORDER BY d.dist ASC, d.j ASC) AS rn
     FROM dp$p d JOIN p$p p ON d.user_id = p.user_id
-    WHERE d.dist <= $radius * p.mp) WHERE rn = 1),
+    WHERE d.dist <= $MotifRadius * p.mp) WHERE rn = 1),
 n${p}2 AS MATERIALIZED (
   SELECT user_id, j FROM (
     SELECT d.user_id, d.j,
@@ -284,9 +321,9 @@ n${p}2 AS MATERIALIZED (
     FROM dp$p d JOIN n${p}1 n ON d.user_id = n.user_id
     JOIN p$p p ON d.user_id = p.user_id
     WHERE NOT (d.j >= n.j - p.ez AND d.j <= n.j + p.ez)
-      AND d.dist <= $radius * p.mp) WHERE rn = 1)"""
+      AND d.dist <= $MotifRadius * p.mp) WHERE rn = 1)"""
 
-    s"""WITH ${ctes.mkString(",\n")},
+    s"""WITH $pmpCtes,
 wdall AS MATERIALIZED ($wdUnion),
 pm0 AS MATERIALIZED ($pmUnion),
 ${pickBlock("1", "pm0")},
@@ -315,7 +352,8 @@ SELECT user_id, rank, "window", motif_a, motif_b, motif_mp_e4, nb1_idx, nb2_idx,
   /** q29: complexity annotation vector + corrected profile argmins at w=8
     * (AnnotationVectors.makeComplexityAv / applyAv over the brute mp).
     */
-  def q29(w: Int = 8): String =
+  def q29: String = {
+    val w = W
     s"""WITH $ptsCte,
 ${selfMpCtes(w)},
 dv AS (
@@ -350,53 +388,37 @@ FROM (
          row_number() OVER (PARTITION BY user_id ORDER BY cmp ASC, pos ASC) AS rnc
   FROM cmp)
 GROUP BY user_id"""
+  }
 
   // ---- AB-join family --------------------------------------------------
 
-  /** Top-k users by (capped) length — only users with at least one full
-    * window rank, mirroring the Spark side's n >= w filter.
+  /** `pts` .. `abd(ua, ub, i, j, dist)`: AB pair distances at window W for
+    * the pairs `prs` (ua, ub) over `nlen` and `topk`, the k longest series
+    * with at least one full window (the Spark side's n >= w filter). The
+    * join with wsq (wn = w) drops the ragged tail windows pos admits.
     */
-  private def topkCte(k: Int, w: Int): String =
-    s"""nlen AS MATERIALIZED (SELECT user_id, count(*)::BIGINT AS n FROM pts GROUP BY 1),
+  private def abJoinCtes(k: Int, prs: String): String =
+    s"""$ptsCte,
+nlen AS MATERIALIZED (SELECT user_id, count(*)::BIGINT AS n FROM pts GROUP BY 1),
 topk AS MATERIALIZED (SELECT user_id, n, row_number() OVER (ORDER BY n DESC, user_id ASC) AS rk
-         FROM nlen WHERE n >= $w QUALIFY rk <= $k)"""
-
-  private def abBaseCtes(w: Int): String =
-    s"""pos AS MATERIALIZED (
+         FROM nlen WHERE n >= $W QUALIFY rk <= $k),
+prs AS ($prs),
+pos AS MATERIALIZED (
   SELECT p.user_id, p.idx - r.range AS i, r.range AS k, p.vi
-  FROM pts p CROSS JOIN range($w) r
+  FROM pts p CROSS JOIN range($W) r
   WHERE p.idx - r.range >= 0),
 wsq AS MATERIALIZED (
-  SELECT user_id, idx AS i,
-         sum(vi) OVER fw::BIGINT AS s1,
-         sum(vi * vi) OVER fw::BIGINT AS s2,
-         count(*) OVER fw AS wn
-  FROM pts
-  WINDOW fw AS (PARTITION BY user_id ORDER BY idx ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING)
-  QUALIFY wn = $w)"""
-
-  /** AB pair distances for (ua, ub) pairs provided by `pairsFrom`. The join
-    * with wsq (wn = w) drops the ragged tail windows pos admits.
-    */
-  private def abDistCtes(w: Int, pairsFrom: String): String =
-    s"""abdot AS MATERIALIZED (
+  ${windowSumsSql(W, "fw")}),
+abdot AS MATERIALIZED (
   SELECT pa.user_id AS ua, pb.user_id AS ub, pa.i, pb.i AS j, sum(pa.vi * pb.vi)::BIGINT AS dot
   FROM pos pa
-  JOIN $pairsFrom pr ON pa.user_id = pr.ua
+  JOIN prs pr ON pa.user_id = pr.ua
   JOIN pos pb ON pb.user_id = pr.ub AND pb.k = pa.k
   GROUP BY 1, 2, 3, 4),
 abd AS MATERIALIZED (
-  SELECT d.ua, d.ub, d.i, d.j,
-         sqrt(greatest(${2 * w}.0 * (1.0 - CASE WHEN deni = 0.0 OR denj = 0.0 THEN 0.0
-              ELSE num / (deni * denj) END), 0.0)) AS dist
-  FROM (
-    SELECT d.ua, d.ub, d.i, d.j,
-           d.dot::DOUBLE - wi.s1::DOUBLE * wj.s1::DOUBLE / $w.0 AS num,
-           sqrt(greatest(wi.s2::DOUBLE - wi.s1::DOUBLE * wi.s1::DOUBLE / $w.0, 0.0)) AS deni,
-           sqrt(greatest(wj.s2::DOUBLE - wj.s1::DOUBLE * wj.s1::DOUBLE / $w.0, 0.0)) AS denj
-    FROM abdot d
+  ${pairDistExpr(W, "d.ua, d.ub, d.i, d.j", "d.ua, d.ub, d.i, d.j", """abdot d
     JOIN wsq wi ON wi.user_id = d.ua AND wi.i = d.i
-    JOIN wsq wj ON wj.user_id = d.ub AND wj.i = d.j) d)"""
+    JOIN wsq wj ON wj.user_id = d.ub AND wj.i = d.j""")} d)"""
 
   /** MPDist from abd: k-th smallest of rowmins ++ colmins with
     * k = ceil(0.05(na+nb)) - 1 (MpDist.mpdist / BruteMp.mpdist).
@@ -415,41 +437,42 @@ mpd AS MATERIALIZED (
   JOIN nlen nb ON nb.user_id = a.ub
   WHERE a.rn = greatest(least(a.cnt - 1, ceil(0.05 * (na.n + nb.n)::DOUBLE)::BIGINT - 1), 0) + 1)"""
 
-  /** q12: MPDist over all pairs of the 5 longest user series. */
-  def q12(w: Int = 8): String =
-    s"""WITH $ptsCte,
-${topkCte(5, w)},
-prs AS (SELECT a.user_id AS ua, b.user_id AS ub FROM topk a JOIN topk b ON a.user_id < b.user_id),
-${abBaseCtes(w)},
-${abDistCtes(w, "prs")},
-$mpdistCtes
+  /** `pts` .. `mpd(ua, ub, mpdist)`: MPDist over every pair ua < ub of the
+    * k longest series (MpQueries.mpdistPairs' twin).
+    */
+  private def mpdistPairsCtes(k: Int): String =
+    s"""${abJoinCtes(k,
+      "SELECT a.user_id AS ua, b.user_id AS ub FROM topk a JOIN topk b ON a.user_id < b.user_id")},
+$mpdistCtes"""
+
+  /** q12: MPDist over all pairs of the MpdistSeries longest user series. */
+  def q12: String =
+    s"""WITH ${mpdistPairsCtes(MpdistSeries)}
 SELECT ua AS user_a, ub AS user_b, floor(mpdist * 10000.0)::BIGINT AS mpdist_e4, TRUE AS kernel_agree
 FROM mpd"""
 
   /** q28: minimum AB-join distance of every user vs the longest series. */
-  def q28(w: Int = 8): String =
-    s"""WITH $ptsCte,
-${topkCte(1, w)},
-prs AS (SELECT n.user_id AS ua, t.user_id AS ub FROM nlen n, topk t WHERE n.user_id <> t.user_id),
-${abBaseCtes(w)},
-${abDistCtes(w, "prs")}
+  def q28: String =
+    s"""WITH ${abJoinCtes(1,
+      "SELECT n.user_id AS ua, t.user_id AS ub FROM nlen n, topk t WHERE n.user_id <> t.user_id")}
 SELECT ua AS user_id, ub AS query_user, floor(min(dist) * 10000.0)::BIGINT AS min_join_dist_e4,
        TRUE AS kernel_agree
 FROM abd GROUP BY 1, 2"""
 
-  /** q30: pairwise MPDist over the 8 longest series + single-linkage
-    * 3-cluster partition via 5 chained Kruskal merge steps (equivalent to
-    * Hierarchical single linkage + fcluster maxclust=3 when distances are
-    * distinct).
+  /** q30: pairwise MPDist over the ClusterSeries longest series +
+    * single-linkage Clusters-cluster partition via ClusterSeries - Clusters
+    * chained Kruskal merge steps (equivalent to Hierarchical single linkage
+    * + fcluster maxclust=Clusters when distances are distinct).
     */
-  def q30(w: Int = 8): String = {
-    val kruskal = (1 to 5).map { step =>
+  def q30: String = {
+    val steps = ClusterSeries - Clusters
+    val kruskal = (1 to steps).map { step =>
       val prev = s"c${step - 1}"
       s"""mk$step AS MATERIALIZED (
   SELECT e.ua, e.ub, a.comp AS ca, b.comp AS cb
   FROM mpd e JOIN $prev a ON e.ua = a.user_id JOIN $prev b ON e.ub = b.user_id
   WHERE a.comp <> b.comp
-    AND (SELECT count(DISTINCT comp) FROM $prev) > 3
+    AND (SELECT count(DISTINCT comp) FROM $prev) > $Clusters
   ORDER BY e.mpdist ASC, e.ua ASC, e.ub ASC LIMIT 1),
 c$step AS MATERIALIZED (
   SELECT c.user_id,
@@ -457,17 +480,12 @@ c$step AS MATERIALIZED (
               THEN (SELECT least(ca, cb) FROM mk$step) ELSE c.comp END AS comp
   FROM $prev c)"""
     }
-    s"""WITH $ptsCte,
-${topkCte(8, w)},
-prs AS (SELECT a.user_id AS ua, b.user_id AS ub FROM topk a JOIN topk b ON a.user_id < b.user_id),
-${abBaseCtes(w)},
-${abDistCtes(w, "prs")},
-$mpdistCtes,
+    s"""WITH ${mpdistPairsCtes(ClusterSeries)},
 c0 AS (SELECT user_id, user_id AS comp FROM topk),
 ${kruskal.mkString(",\n")}
 SELECT p.ua AS user_a, p.ub AS user_b, floor(p.mpdist * 10000.0)::BIGINT AS mpdist_e4,
        (a.comp = b.comp) AS same_cluster, TRUE AS kernel_agree
-FROM mpd p JOIN c5 a ON p.ua = a.user_id JOIN c5 b ON p.ub = b.user_id"""
+FROM mpd p JOIN c$steps a ON p.ua = a.user_id JOIN c$steps b ON p.ub = b.user_id"""
   }
 
   /** q19: language-ID confusion counts — the stopword-vote heuristic
@@ -519,17 +537,12 @@ FROM documents"""
             ELSE strlen(text) END::BIGINT AS content_bytes
 FROM documents"""
 
-  /** q37: REAL image decode, hash-compared. The Spark side PNG-encodes a
-    * deterministic pixel field (Multimodal.imagePixel: v = id*2654435761 +
-    * x*7919 + y*104729; r=v%256, g=(v/256)%256, b=(v/65536)%256), decodes
-    * it back with JDK ImageIO, and reports per-channel sums plus a
-    * position-weighted checksum. This oracle recomputes the identical
-    * values in closed form from the formula — PNG is lossless, so only a
-    * faithful decode matches. The generate_series bounds cover the max
-    * geometry (width ≤ 31 → x ≤ 30; height ≤ 23 → y ≤ 22).
+  /** Decoded pixel field `px(doc_id, w, h, x, y, v)` of every image row
+    * (Multimodal.imagePixel in closed form); the generate_series bounds
+    * cover the max geometry (width ≤ 31 → x ≤ 30; height ≤ 23 → y ≤ 22).
     */
-  def q37: String =
-    """WITH imgs AS (
+  private def imageFieldCtes: String =
+    """imgs AS (
   SELECT doc_id, (16 + doc_id % 16)::BIGINT AS w, (16 + doc_id % 8)::BIGINT AS h
   FROM documents WHERE doc_id % 3 = 0),
 px AS (
@@ -538,7 +551,31 @@ px AS (
   FROM imgs i
   CROSS JOIN generate_series(0, 30) gx(x)
   CROSS JOIN generate_series(0, 22) gy(y)
-  WHERE gx.x < i.w AND gy.y < i.h)
+  WHERE gx.x < i.w AND gy.y < i.h)"""
+
+  /** Decoded sample field `smp(doc_id, n, i, s)` of every audio row
+    * (Multimodal.audioSample in closed form; 319 samples → i ≤ 318). `sep`
+    * splits smp's FROM clause (q38: one line per join, q39: one line).
+    */
+  private def audioFieldCtes(sep: String): String =
+    s"""auds AS (
+  SELECT doc_id, (200 + doc_id % 120)::BIGINT AS n
+  FROM documents WHERE doc_id % 3 = 1),
+smp AS (
+  SELECT a.doc_id, a.n, g.i,
+         (a.doc_id * 2654435761 + g.i * 7919) % 65536 - 32768 AS s
+  FROM auds a${sep}CROSS JOIN generate_series(0, 318) g(i)${sep}WHERE g.i < a.n)"""
+
+  /** q37: REAL image decode, hash-compared. The Spark side PNG-encodes a
+    * deterministic pixel field (Multimodal.imagePixel: v = id*2654435761 +
+    * x*7919 + y*104729; r=v%256, g=(v/256)%256, b=(v/65536)%256), decodes
+    * it back with JDK ImageIO, and reports per-channel sums plus a
+    * position-weighted checksum. This oracle recomputes the identical
+    * values in closed form from the formula — PNG is lossless, so only a
+    * faithful decode matches.
+    */
+  def q37: String =
+    s"""WITH $imageFieldCtes
 SELECT doc_id AS media_id, w AS width, h AS height,
        sum(v % 256)::BIGINT AS sum_r,
        sum((v // 256) % 256)::BIGINT AS sum_g,
@@ -553,19 +590,10 @@ FROM px GROUP BY 1, 2, 3"""
     * javax.sound.sampled, and reports sample sum / absolute-amplitude
     * sum / a frame-index-weighted checksum. This oracle recomputes the
     * identical values in closed form from the formula — PCM is lossless,
-    * so only a faithful decode matches. The generate_series bound covers
-    * the max sample count (319 → i ≤ 318).
+    * so only a faithful decode matches.
     */
   def q38: String =
-    """WITH auds AS (
-  SELECT doc_id, (200 + doc_id % 120)::BIGINT AS n
-  FROM documents WHERE doc_id % 3 = 1),
-smp AS (
-  SELECT a.doc_id, a.n, g.i,
-         (a.doc_id * 2654435761 + g.i * 7919) % 65536 - 32768 AS s
-  FROM auds a
-  CROSS JOIN generate_series(0, 318) g(i)
-  WHERE g.i < a.n)
+    s"""WITH ${audioFieldCtes("\n  ")}
 SELECT doc_id AS media_id, 8000 AS sample_rate, n AS n_samples,
        sum(s)::BIGINT AS sum_s,
        sum(abs(s))::BIGINT AS sum_abs,
@@ -582,8 +610,7 @@ FROM smp GROUP BY 1, 2, 3"""
     * Spark side (Multimodal.imageDedupVec / audioDedupVec +
     * Dedup.embeddingDups).
     */
-  def q39(threshold: Double = 0.99995, planes: Int = 12, tables: Int = 4,
-      seed: Long = 7L): String = {
+  def q39: String = {
     val iv = "[sr / (255.0*(w*h)) - 0.5, sg / (255.0*(w*h)) - 0.5, " +
       "sb / (255.0*(w*h)) - 0.5, srg / (16256.25*(w*h)) - 1.0, " +
       "(sgb / (16256.25*(w*h)) - 1.0) / 16.0, " +
@@ -592,16 +619,7 @@ FROM smp GROUP BY 1, 2, 3"""
     val av = "[ss / (32768.0*n), sa / (16384.0*n) - 1.0, " +
       "ck / (16384.0*n*(n-1)), alt / (32768.0*n), " +
       "s2 / ((1073741824.0/3.0)*n) - 1.0]"
-    s"""WITH imgs AS (
-  SELECT doc_id, (16 + doc_id % 16)::BIGINT AS w, (16 + doc_id % 8)::BIGINT AS h
-  FROM documents WHERE doc_id % 3 = 0),
-px AS (
-  SELECT i.doc_id, i.w, i.h, gx.x, gy.y,
-         i.doc_id * 2654435761 + gx.x * 7919 + gy.y * 104729 AS v
-  FROM imgs i
-  CROSS JOIN generate_series(0, 30) gx(x)
-  CROSS JOIN generate_series(0, 22) gy(y)
-  WHERE gx.x < i.w AND gy.y < i.h),
+    s"""WITH $imageFieldCtes,
 chan AS (
   SELECT doc_id, w, h, x, y, v % 256 AS r, (v // 256) % 256 AS g,
          (v // 65536) % 256 AS b
@@ -612,49 +630,38 @@ ist AS (
     sum(r*g)::BIGINT AS srg, sum(g*b)::BIGINT AS sgb, sum(r*b)::BIGINT AS srb,
     sum((r*g) % 251)::BIGINT AS m1, sum((g*b) % 241)::BIGINT AS m2
   FROM chan GROUP BY 1, 2, 3),
-ivec0 AS (SELECT doc_id AS media_id, $iv AS vec FROM ist),
-ivec AS MATERIALIZED (
-  SELECT * FROM ivec0
-  UNION ALL SELECT media_id + 1000000, vec FROM ivec0 WHERE media_id < 24),
-ikey AS MATERIALIZED (
-  SELECT media_id, unnest(${bkeysSql("vec", planes, tables, seed, 8)}) AS bkey
-  FROM ivec),
-icand AS (
-  SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b
-  FROM ikey a JOIN ikey b ON a.bkey = b.bkey AND a.media_id < b.media_id),
-iver AS (
-  SELECT 'image' AS kind, c.id_a, c.id_b, ${cosSql("va.vec", "vb.vec")} AS cos
-  FROM icand c JOIN ivec va ON va.media_id = c.id_a
-               JOIN ivec vb ON vb.media_id = c.id_b),
-auds AS (
-  SELECT doc_id, (200 + doc_id % 120)::BIGINT AS n
-  FROM documents WHERE doc_id % 3 = 1),
-smp AS (
-  SELECT a.doc_id, a.n, g.i,
-         (a.doc_id * 2654435761 + g.i * 7919) % 65536 - 32768 AS s
-  FROM auds a CROSS JOIN generate_series(0, 318) g(i) WHERE g.i < a.n),
+${mediaDedupCtes("i", "image", iv, "ist", Multimodal.ImageDedupDim)},
+${audioFieldCtes(" ")},
 ast AS (
   SELECT doc_id, n, sum(s)::BIGINT AS ss, sum(abs(s))::BIGINT AS sa,
          sum(i*s)::BIGINT AS ck, sum((1 - 2*(i%2))*s)::BIGINT AS alt,
          sum(s*s)::BIGINT AS s2
   FROM smp GROUP BY 1, 2),
-avec0 AS (SELECT doc_id AS media_id, $av AS vec FROM ast),
-avec AS MATERIALIZED (
-  SELECT * FROM avec0
-  UNION ALL SELECT media_id + 1000000, vec FROM avec0 WHERE media_id < 24),
-akey AS MATERIALIZED (
-  SELECT media_id, unnest(${bkeysSql("vec", planes, tables, seed, 5)}) AS bkey
-  FROM avec),
-acand AS (
-  SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b
-  FROM akey a JOIN akey b ON a.bkey = b.bkey AND a.media_id < b.media_id),
-aver AS (
-  SELECT 'audio' AS kind, c.id_a, c.id_b, ${cosSql("va.vec", "vb.vec")} AS cos
-  FROM acand c JOIN avec va ON va.media_id = c.id_a
-               JOIN avec vb ON vb.media_id = c.id_b)
+${mediaDedupCtes("a", "audio", av, "ast", Multimodal.AudioDedupDim)}
 SELECT kind, id_a, id_b, floor(cos * 10000.0)::BIGINT AS cosine_e4
-FROM (SELECT * FROM iver UNION ALL SELECT * FROM aver) WHERE cos >= $threshold"""
+FROM (SELECT * FROM iver UNION ALL SELECT * FROM aver) WHERE cos >= $MediaDupThreshold"""
   }
+
+  /** One media kind's q39 chain, CTEs prefixed `p`: dedup vectors `vec`
+    * over `stats`, planted copies, bucket keys (embeddingDups' LSH at width
+    * `dim`), candidate join and exact-cosine verify `<p>ver`.
+    */
+  private def mediaDedupCtes(p: String, kind: String, vec: String, stats: String,
+      dim: Int): String =
+    s"""${p}vec0 AS (SELECT doc_id AS media_id, $vec AS vec FROM $stats),
+${p}vec AS MATERIALIZED (
+  SELECT * FROM ${p}vec0
+  UNION ALL SELECT media_id + $PlantOffset, vec FROM ${p}vec0 WHERE media_id < $PlantedMedia),
+${p}key AS MATERIALIZED (
+  SELECT media_id, unnest(${bkeysSql("vec", Dedup.EmbedPlanes, Dedup.EmbedTables, Dedup.EmbedSeed, dim)}) AS bkey
+  FROM ${p}vec),
+${p}cand AS (
+  SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b
+  FROM ${p}key a JOIN ${p}key b ON a.bkey = b.bkey AND a.media_id < b.media_id),
+${p}ver AS (
+  SELECT '$kind' AS kind, c.id_a, c.id_b, ${cosSql("va.vec", "vb.vec")} AS cos
+  FROM ${p}cand c JOIN ${p}vec va ON va.media_id = c.id_a
+               JOIN ${p}vec vb ON vb.media_id = c.id_b)"""
 
   /** q11: snippets — replay of the full pipeline over the padded quantized
     * series: brute pair-distance matrix per candidate, column minima +
@@ -664,7 +671,11 @@ FROM (SELECT * FROM iver UNION ALL SELECT * FROM aver) WHERE cos >= $threshold""
     * Snippets.select. Candidate sums use list_reduce so the fold order
     * matches the kernel's left-to-right accumulation.
     */
-  def q11(w: Int = 8, size: Int = 16): String =
+  def q11: String = {
+    val (w, size) = (W, SnippetSize)
+    def pickSnippet(src: String) = s"""SELECT user_id, c FROM (
+    SELECT user_id, c, row_number() OVER (PARTITION BY user_id ORDER BY s ASC, c ASC) AS rn
+    FROM $src) WHERE rn = 1"""
     s"""WITH $ptsCte,
 pl AS MATERIALIZED (
   SELECT user_id, n, ($size * ceil(n / $size.0))::BIGINT AS padlen
@@ -691,17 +702,7 @@ dots11 AS (
   WINDOW dw AS (PARTITION BY user_id, d ORDER BY t ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING)
   QUALIFY cnt = $w),
 pd11 AS (
-  SELECT user_id, i, j,
-         sqrt(greatest(${2 * w}.0 * (1.0 - CASE WHEN deni = 0.0 OR denj = 0.0 THEN 0.0
-              ELSE num / (deni * denj) END), 0.0)) AS dist
-  FROM (
-    SELECT d.user_id, d.i, d.i + d.d AS j,
-           d.dot::DOUBLE - wi.s1::DOUBLE * wj.s1::DOUBLE / $w.0 AS num,
-           sqrt(greatest(wi.s2::DOUBLE - wi.s1::DOUBLE * wi.s1::DOUBLE / $w.0, 0.0)) AS deni,
-           sqrt(greatest(wj.s2::DOUBLE - wj.s1::DOUBLE * wj.s1::DOUBLE / $w.0, 0.0)) AS denj
-    FROM dots11 d
-    JOIN wsp wi ON wi.user_id = d.user_id AND wi.i = d.i
-    JOIN wsp wj ON wj.user_id = d.user_id AND wj.i = d.i + d.d)),
+  ${selfPairDist(w, "dots11", "wsp")}),
 wd AS MATERIALIZED (
   SELECT user_id, i AS s, j, dist FROM pd11
   UNION ALL
@@ -737,9 +738,7 @@ s1s AS (
   SELECT user_id, c, list_reduce(list_prepend(0.0, list(dv ORDER BY o)), (a, b) -> a + b) AS s
   FROM dv GROUP BY 1, 2),
 p1 AS MATERIALIZED (
-  SELECT user_id, c FROM (
-    SELECT user_id, c, row_number() OVER (PARTITION BY user_id ORDER BY s ASC, c ASC) AS rn
-    FROM s1s) WHERE rn = 1),
+  ${pickSnippet("s1s")}),
 dv1 AS MATERIALIZED (
   SELECT d.user_id, d.o, d.dv AS dv1 FROM dv d JOIN p1 ON d.user_id = p1.user_id AND d.c = p1.c),
 s2s AS (
@@ -747,9 +746,7 @@ s2s AS (
          list_reduce(list_prepend(0.0, list(least(d.dv, v1.dv1) ORDER BY d.o)), (a, b) -> a + b) AS s
   FROM dv d JOIN dv1 v1 ON d.user_id = v1.user_id AND d.o = v1.o GROUP BY 1, 2),
 p2 AS MATERIALIZED (
-  SELECT user_id, c FROM (
-    SELECT user_id, c, row_number() OVER (PARTITION BY user_id ORDER BY s ASC, c ASC) AS rn
-    FROM s2s) WHERE rn = 1),
+  ${pickSnippet("s2s")}),
 dv2 AS MATERIALIZED (
   SELECT d.user_id, d.o, d.dv AS dv2 FROM dv d JOIN p2 ON d.user_id = p2.user_id AND d.c = p2.c),
 msk AS (
@@ -771,37 +768,37 @@ SELECT user_id, rank, snippet_idx, fraction_e4 FROM (
   UNION ALL
   SELECT p2.user_id, 2, p2.c::BIGINT, floor(fr.f2 * 10000.0)::BIGINT
   FROM p2 JOIN fr ON p2.user_id = fr.user_id)"""
+  }
 
   /** q20: MinHash-LSH near-dup pairs — full algorithm mirror (md5-string
     * signatures, banding, id-only candidate join, exact-Jaccard verify);
     * recall vs brute force is gated separately in DedupRecallSpec.
     */
-  def q20(numHashes: Int = 16, bands: Int = 8, shingleK: Int = 3,
-      threshold: Double = 0.3): String =
-    s"""WITH ${minhashLshCtes("documents", numHashes, bands, shingleK, threshold)}
+  def q20: String =
+    s"""WITH ${minhashLshCtes("documents")}
 SELECT id_a, id_b, jaccard_e4 FROM nearp"""
 
   /** The full MinHash-LSH CTE chain over `source` (doc_id, text), ending
     * in `nearp(id_a, id_b, jaccard_e4)` — shared by q20 (whole corpus) and
     * q33 (exact-dedup representatives).
     */
-  private def minhashLshCtes(source: String, numHashes: Int, bands: Int,
-      shingleK: Int, threshold: Double): String = {
-    val rows = numHashes / bands
+  private def minhashLshCtes(source: String): String = {
+    import Dedup.{Bands, NumHashes, ShingleK}
+    val rows = NumHashes / Bands
     s"""tok AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk FROM $source),
 sh AS MATERIALIZED (
-  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - ${shingleK - 2}),
-         i -> array_to_string(tk[i:i+${shingleK - 1}], ' '))) AS shd
-  FROM tok WHERE len(tk) >= $shingleK),
+  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - ${ShingleK - 2}),
+         i -> array_to_string(tk[i:i+${ShingleK - 1}], ' '))) AS shd
+  FROM tok WHERE len(tk) >= $ShingleK),
 minh AS (
   SELECT doc_id, f.range AS f, min(md5(f.range || ':' || s.s)) AS mh
-  FROM (SELECT doc_id, unnest(shd) AS s FROM sh) s CROSS JOIN range($numHashes) f
+  FROM (SELECT doc_id, unnest(shd) AS s FROM sh) s CROSS JOIN range($NumHashes) f
   GROUP BY 1, 2),
 sig AS MATERIALIZED (SELECT doc_id, list(mh ORDER BY f) AS sigl FROM minh GROUP BY 1),
 band AS MATERIALIZED (
   SELECT doc_id, b.range AS band,
          md5(${(0 until rows).map(r => s"sigl[$rows*b.range+${r + 1}]").mkString(" || '|' || ")}) AS bucket
-  FROM sig CROSS JOIN range($bands) b),
+  FROM sig CROSS JOIN range($Bands) b),
 cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          FROM band a JOIN band b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
 ver AS (
@@ -810,20 +807,19 @@ ver AS (
   FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b),
 nearp AS (
   SELECT id_a, id_b, floor(icnt::DOUBLE / (na + nb - icnt) * 10000.0)::BIGINT AS jaccard_e4
-  FROM ver WHERE icnt::DOUBLE / (na + nb - icnt) >= $threshold)"""
+  FROM ver WHERE icnt::DOUBLE / (na + nb - icnt) >= $NearDupThreshold)"""
   }
 
   /** q33: the exact-first dedup pipeline (Dedup.pipeline) — exact md5
     * groups link every non-representative to the group-min id, then the
     * q20 MinHash-LSH chain runs over the representatives only.
     */
-  def q33(numHashes: Int = 16, bands: Int = 8, shingleK: Int = 3,
-      threshold: Double = 0.3): String =
+  def q33: String =
     s"""WITH gm AS MATERIALIZED (
   SELECT doc_id, text, min(doc_id) OVER (PARTITION BY md5(text)) AS mid
   FROM documents),
 reps AS MATERIALIZED (SELECT doc_id, text FROM gm WHERE doc_id = mid),
-${minhashLshCtes("reps", numHashes, bands, shingleK, threshold)}
+${minhashLshCtes("reps")}
 SELECT id_a, id_b, kind, jaccard_e4 FROM (
   SELECT mid AS id_a, doc_id AS id_b, 'exact' AS kind, 10000::BIGINT AS jaccard_e4
   FROM gm WHERE doc_id <> mid
@@ -835,7 +831,7 @@ SELECT id_a, id_b, kind, jaccard_e4 FROM (
     * maxHamming+1 segments (complete by pigeonhole), LSH output == brute
     * force, so this oracle gates banding completeness, not just hashing.
     */
-  def q21(maxHamming: Int = 3): String =
+  def q21: String =
     s"""WITH tok AS (
   SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tk FROM documents),
 bits AS (
@@ -851,13 +847,11 @@ SELECT id_a, id_b, hamming FROM (
          list_sum(list_transform(range(1, 65),
            i -> CASE WHEN substr(a.sig, i::INT, 1) = substr(b.sig, i::INT, 1) THEN 0 ELSE 1 END))::BIGINT AS hamming
   FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id)
-WHERE hamming <= $maxHamming"""
+WHERE hamming <= $MaxHamming"""
 
   // ---- embedding LSH mirrors (shared fold/cosine fragments) -----------
 
-  /** Strict left fold of ±x_j (1-based lambda index) — the SQL twin of
-    * Similarity.bucketBit's aggregate/zip_with fold.
-    */
+  /** Strict left fold of ±x_j — Similarity.bucketBit's fold's SQL twin. */
   private def foldDotSql(vec: String, signs: String): String =
     s"list_reduce(list_prepend(0.0, list_transform($vec, " +
       s"(x, i) -> CASE WHEN substr('$signs', i::INT, 1) = '+' THEN x::DOUBLE ELSE -(x::DOUBLE) END)), (a, b) -> a + b)"
@@ -869,7 +863,7 @@ WHERE hamming <= $maxHamming"""
       dim: Int): String = {
     val keys = (0 until tables).map { t =>
       val bits = (0 until planes).map { p =>
-        val signs = graft.ops.Similarity.hyperplaneSigns(t, p, dim, seed)
+        val signs = Similarity.hyperplaneSigns(t, p, dim, seed)
         s"(CASE WHEN ${foldDotSql(vec, signs)} >= 0 THEN '1' ELSE '0' END)"
       }.mkString(" || ")
       s"'$t:' || $bits"
@@ -883,23 +877,39 @@ WHERE hamming <= $maxHamming"""
       s" / (sqrt(list_reduce(list_prepend(0.0, list_transform($a, x -> x::DOUBLE * x::DOUBLE)), (x, y) -> x + y))" +
       s" * sqrt(list_reduce(list_prepend(0.0, list_transform($b, x -> x::DOUBLE * x::DOUBLE)), (x, y) -> x + y))))"
 
-  /** q24: ANN recall — replays BOTH sides (brute-force top-10 and the
-    * multi-table hyperplane LSH top-10) and counts hits per query.
+  /** Per query, the AnnK best of `src`'s scored rows by cos DESC,
+    * neighbor_id ASC (Similarity's top-k tie rule).
     */
-  def q24(k: Int = 10, planes: Int = 10, tables: Int = 4, seed: Long = 42L,
-      dim: Int = 64): String =
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
-q AS (SELECT * FROM e WHERE vec_id < 20),
+  private def topKCte(name: String, src: String): String =
+    s"""$name AS MATERIALIZED (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
+    FROM $src) WHERE rn <= $AnnK)"""
+
+  /** Brute-force top-k `brute` of the queries `q` over the corpus `e`. */
+  private def bruteTopKCtes: String =
+    s"""q AS (SELECT * FROM e WHERE vec_id < $AnnQueries),
 bs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          ${cosSql("q.embedding", "c.embedding")} AS cos
   FROM e c, q WHERE c.vec_id <> q.vec_id),
-brute AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-    FROM bs) WHERE rn <= $k),
-ck AS MATERIALIZED (SELECT vec_id, unnest(${bkeysSql("embedding", planes, tables, seed, dim)}) AS bkey FROM e),
+${topKCte("brute", "bs")}"""
+
+  /** Per query, the `brute` neighbours `approx` also found (recallHits). */
+  private def recallHitsSql(approx: String): String =
+    s"""SELECT b.query_id, count(l.neighbor_id)::BIGINT AS n_hits
+FROM brute b LEFT JOIN $approx l ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
+GROUP BY 1"""
+
+  /** q24: ANN recall — replays BOTH sides (brute-force top-10 and the
+    * multi-table hyperplane LSH top-10) and counts hits per query.
+    */
+  def q24: String =
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
+$bruteTopKCtes,
+ck AS MATERIALIZED (SELECT vec_id, unnest(${bkeysSql("embedding", Similarity.LshPlanes,
+      Similarity.LshTables, Similarity.LshSeed, EmbeddingDim)}) AS bkey FROM e),
 qk AS MATERIALIZED (SELECT ck.* FROM ck JOIN q ON ck.vec_id = q.vec_id),
 cands AS (
   SELECT DISTINCT qk.vec_id AS query_id, ck.vec_id AS neighbor_id
@@ -907,18 +917,10 @@ cands AS (
 scored AS (
   SELECT c.query_id, c.neighbor_id, ${cosSql("eq.embedding", "ec.embedding")} AS cos
   FROM cands c JOIN e eq ON eq.vec_id = c.query_id JOIN e ec ON ec.vec_id = c.neighbor_id),
-lsh AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-    FROM scored) WHERE rn <= $k)
-SELECT b.query_id, count(l.neighbor_id)::BIGINT AS n_hits
-FROM brute b LEFT JOIN lsh l ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-GROUP BY 1"""
+${topKCte("lsh", "scored")}
+${recallHitsSql("lsh")}"""
 
-  /** Strict left fold of squared L2 between a quantized BIGINT vector and
-    * a double centroid — the SQL twin of Similarity's d2 fold.
-    */
+  /** Squared L2 fold, quantized vector to centroid (Similarity's d2). */
   private def d2Sql(qv: String, cent: String): String =
     s"list_reduce(list_prepend(0.0, list_transform(list_zip($qv, $cent), " +
       s"z -> (z[1]::DOUBLE - z[2]) * (z[1]::DOUBLE - z[2]))), (a, b) -> a + b)"
@@ -930,6 +932,20 @@ GROUP BY 1"""
     s"list_reduce(list_prepend(0::BIGINT, list_transform(list_zip($a, $b), " +
       s"z -> (z[1] - z[2]) * (z[1] - z[2]))), (x, y) -> x + y)"
 
+  /** Per vector of `qvv` (`where`), its nearest cells of `cents` by the d2
+    * fold, ties to the lowest cell (Similarity.assignCells, ivfTopK's
+    * probes): `out` (selected as `id`) and cell, ranks kept by `keep`.
+    */
+  private def nearestCellSql(out: String, id: String, cents: String, where: String,
+      keep: String): String =
+    s"""SELECT $out, cell FROM (
+    SELECT $id, c.cell,
+           row_number() OVER (PARTITION BY q.vec_id ORDER BY ${d2Sql("q.qv", "c.cent")} ASC, c.cell ASC) AS rn
+    FROM qvv q CROSS JOIN $cents c$where) WHERE $keep"""
+
+  private def assignSql(cents: String): String =
+    nearestCellSql("vec_id", "q.vec_id", cents, "", "rn = 1")
+
   /** q35: IVF ANN recall — the inverted-file coarse quantizer replayed
     * end-to-end (Similarity.ivfCells/ivfTopK): quantized vectors; the
     * deterministic k-means++-style seeding (md5-keyed 4·kCells sample,
@@ -940,8 +956,9 @@ GROUP BY 1"""
     * probing; exact cosine ranking inside the probed cells; hit counts vs
     * the brute top-k.
     */
-  def q35(k: Int = 10, kCells: Int = 16, nprobe: Int = 2, dim: Int = 64,
-      lloydRounds: Int = 2): String = {
+  def q35: String = {
+    val kCells = Similarity.IvfCells
+    val lloydRounds = Similarity.IvfLloydRounds
     val mkExpr = "md5('ivf:' || vec_id::VARCHAR)"
     val seedCtes = (1 until kCells).map { i =>
       s"""m$i AS (
@@ -956,13 +973,10 @@ s$i AS MATERIALIZED (
     }.mkString(",\n")
     val lloydCtes = (1 to lloydRounds).map { r =>
       s"""a$r AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT q.vec_id, c.cell,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY ${d2Sql("q.qv", "c.cent")} ASC, c.cell ASC) AS rn
-    FROM qvv q CROSS JOIN c${r - 1} c) WHERE rn = 1),
+  ${assignSql(s"c${r - 1}")}),
 u$r AS (
   SELECT a.cell, r.range AS pos, sum(q.qv[r.range + 1])::BIGINT AS s, count(*) AS cnt
-  FROM a$r a JOIN qvv q ON a.vec_id = q.vec_id CROSS JOIN range($dim) r
+  FROM a$r a JOIN qvv q ON a.vec_id = q.vec_id CROSS JOIN range($EmbeddingDim) r
   GROUP BY 1, 2),
 c$r AS MATERIALIZED (SELECT cell, list(s::DOUBLE / cnt ORDER BY pos) AS cent FROM u$r GROUP BY cell)"""
     }.mkString(",\n")
@@ -979,55 +993,35 @@ c0 AS MATERIALIZED (
   SELECT cell, list_transform(qv, v -> v::DOUBLE) AS cent FROM s${kCells - 1}),
 $lloydCtes,
 af AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT q.vec_id, c.cell,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY ${d2Sql("q.qv", "c.cent")} ASC, c.cell ASC) AS rn
-    FROM qvv q CROSS JOIN $cf c) WHERE rn = 1),
+  ${assignSql(cf)}),
 pr AS MATERIALIZED (
-  SELECT query_id, cell FROM (
-    SELECT q.vec_id AS query_id, c.cell,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY ${d2Sql("q.qv", "c.cent")} ASC, c.cell ASC) AS rn
-    FROM qvv q CROSS JOIN $cf c WHERE q.vec_id < 20) WHERE rn <= $nprobe),
+  ${nearestCellSql("query_id", "q.vec_id AS query_id", cf, s" WHERE q.vec_id < $AnnQueries",
+      s"rn <= ${Similarity.IvfProbes}")}),
 cnd AS (
   SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
   FROM pr p JOIN af a ON a.cell = p.cell AND a.vec_id <> p.query_id),
 scored AS (
   SELECT c.query_id, c.neighbor_id, ${cosSql("eq.embedding", "ec.embedding")} AS cos
   FROM cnd c JOIN e eq ON eq.vec_id = c.query_id JOIN e ec ON ec.vec_id = c.neighbor_id),
-ivf AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-    FROM scored) WHERE rn <= $k),
-q AS (SELECT * FROM e WHERE vec_id < 20),
-bs AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ${cosSql("q.embedding", "c.embedding")} AS cos
-  FROM e c, q WHERE c.vec_id <> q.vec_id),
-brute AS MATERIALIZED (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-    FROM bs) WHERE rn <= $k)
-SELECT b.query_id, count(l.neighbor_id)::BIGINT AS n_hits
-FROM brute b LEFT JOIN ivf l ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-GROUP BY 1"""
+${topKCte("ivf", "scored")},
+$bruteTopKCtes
+${recallHitsSql("ivf")}"""
   }
 
   /** q25: embedding near-dups over the base corpus + 20 planted
     * near-copies (one component +0.25f) — same planting, hyperplanes,
     * candidate join, and verify threshold as the Spark side.
     */
-  def q25(threshold: Double = 0.9, planes: Int = 12, tables: Int = 4,
-      seed: Long = 7L, dim: Int = 64): String =
+  def q25: String =
     s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
 planted AS (
-  SELECT vec_id + 1000000 AS vec_id,
+  SELECT vec_id + $PlantOffset AS vec_id,
          list_transform(embedding, (x, i) -> CASE WHEN i = mp + 1
            THEN (x + 0.25::FLOAT)::FLOAT ELSE x END) AS embedding
-  FROM (SELECT vec_id, embedding, (vec_id % 64)::INT AS mp FROM embeddings WHERE vec_id < 20)),
+  FROM (SELECT vec_id, embedding, (vec_id % $EmbeddingDim)::INT AS mp FROM embeddings WHERE vec_id < $PlantedEmbeddings)),
 alle AS MATERIALIZED (SELECT * FROM base UNION ALL SELECT * FROM planted),
-ak AS MATERIALIZED (SELECT vec_id, unnest(${bkeysSql("embedding", planes, tables, seed, dim)}) AS bkey FROM alle),
+ak AS MATERIALIZED (SELECT vec_id, unnest(${bkeysSql("embedding", Dedup.EmbedPlanes,
+      Dedup.EmbedTables, Dedup.EmbedSeed, EmbeddingDim)}) AS bkey FROM alle),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM ak a JOIN ak b ON a.bkey = b.bkey AND a.vec_id < b.vec_id),
@@ -1035,7 +1029,7 @@ ver AS (
   SELECT c.id_a, c.id_b, ${cosSql("ea.embedding", "eb.embedding")} AS cos
   FROM cand c JOIN alle ea ON ea.vec_id = c.id_a JOIN alle eb ON eb.vec_id = c.id_b)
 SELECT id_a, id_b, floor(cos * 10000.0)::BIGINT AS cosine_e4
-FROM ver WHERE cos >= $threshold"""
+FROM ver WHERE cos >= $EmbedDupThreshold"""
 
   /** q15: Gorilla chunk round-trip summary — counts and first/last decoded
     * values are checkable in SQL; losslessness is pinned TRUE.

@@ -1,11 +1,13 @@
 package graft.run
 
+import graft.Analyze
 import graft.kernels._
 
 /** CLI analog of the reference's catch-all `analyze()` entry point
-  * (ref analyze.py:173-270): read a 1-column series file, compute the
-  * exact matrix profile plus motifs/discords/regimes/snippets/statistics,
-  * print a summary. Usage: runMain graft.run.AnalyzeMain <file> [window].
+  * (ref analyze.py:173-270): read a 1-column series file, print what
+  * `Analyze.analyze(ts, Seq(w))` returns — the exact matrix profile with
+  * its top-3 motifs and discords — plus regimes, snippets and statistics.
+  * Usage: runMain graft.run.AnalyzeMain <file> [window].
   */
 object AnalyzeMain {
   def main(args: Array[String]): Unit = {
@@ -15,18 +17,14 @@ object AnalyzeMain {
     finally src.close()
     val w = if (args.length > 1) args(1).toInt else 32
 
-    val (mp, pi) = Mpx.mpxSelf(ts, w)
-    val ez = math.ceil(w / 4.0).toInt
-    println(f"series n=${ts.length} w=$w profileLen=${mp.length} minMp=${mp.min}%.6f")
-
-    val discords = TopK.mpTopKDiscords(mp, ez, k = 3)
-    println("top3 discords: " + discords.mkString(", "))
-
-    val motifs = TopK.mpTopKMotifs(ts, mp, pi, w, ez, k = 2)
-    println("top2 motifs: " + motifs.map(m =>
+    val Analyze.MpResult(p) = Analyze.analyze(ts, Seq(w)): @unchecked
+    println(f"series n=${ts.length} w=$w profileLen=${p.mp.length} minMp=${p.mp.min}%.6f " +
+      s"algorithm=${p.algorithm} ez=${p.ez}")
+    println(s"top${p.discords.length} discords: " + p.discords.mkString(", "))
+    println(s"top${p.motifs.length} motifs: " + p.motifs.map(m =>
       s"(${m.motifs._1},${m.motifs._2}) neighbors=${m.neighbors.length}").mkString(" | "))
 
-    val cac = Fluss.cac(pi, w)
+    val cac = Fluss.cac(p.pi, w)
     println("regimes: " + Fluss.extractRegimes(cac, w, 3).mkString(", "))
 
     if (ts.length >= 4 * w) {

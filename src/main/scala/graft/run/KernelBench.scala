@@ -4,11 +4,14 @@ import graft.kernels.{Mpx, Scrimp, Stomp}
 
 /** Single-series kernel throughput at the reference's own benchmark
   * config (BASELINE.md: random uniform, n=2^15, w=32, single thread).
-  * Best of 3 timed reps after one warmup, load-stamped per rep so a
-  * contaminated best is visible (the r5 lesson: a single rep under host
-  * load reads as a kernel regression).
+  * Each kernel runs WarmupReps untimed reps first (mpx_ab at n=2^14
+  * takes 1.4-2.4 s per rep for its first 5 reps, 0.5-1.2 s after), then
+  * TimedReps timed reps reported as best and median, load-stamped per rep
+  * so a contaminated rep is visible.
   */
 object KernelBench {
+  private val WarmupReps = 5
+  private val TimedReps = 5
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 1 << 15
     val w = if (args.length > 1) args(1).toInt else 32
@@ -23,16 +26,16 @@ object KernelBench {
     val query = Array.fill(n)(rng.nextDouble())
 
     def time[T](name: String, denom: Long)(body: => T): Unit = {
-      body // warmup (JIT + FFT plan cache)
-      var best = Double.MaxValue
-      var loads = Vector.empty[Double]
-      for (_ <- 1 to 3) {
-        loads :+= graft.Bench.load1()
-        best = math.min(best, Harness.timed(body)._2)
-      }
+      for (_ <- 1 to WarmupReps) body // JIT + FFT plan cache
+      val (secs, loads) = (1 to TimedReps).map { _ =>
+        val load = graft.Bench.load1()
+        (Harness.timed(body)._2, load)
+      }.unzip
+      val sorted = secs.sorted
+      val (best, median) = (sorted.head, sorted(sorted.length / 2))
       val loadStr = loads.map(l => f"$l%.1f").mkString("/")
-      println(f"$name%-10s n=$n w=$w: $best%.3f s  (${denom / best}%.0f " +
-        f"subseq/s)  load1=$loadStr")
+      println(f"$name%-10s n=$n w=$w: best $best%.3f s  median $median%.3f s  " +
+        f"(${denom / best}%.0f subseq/s at best)  load1=$loadStr")
     }
 
     val plen = (n - w + 1).toLong

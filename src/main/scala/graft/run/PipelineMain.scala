@@ -60,7 +60,7 @@ object PipelineMain {
         .as[SeriesPoint]
       val tok = Derive.tokenLen(transcripts)
       val gap = Derive.gapSeconds(transcripts)
-      val rate = Derive.gapFill(Derive.turnRate(transcripts), Rollup.MicrosPerMin, Some(0.0))
+      val rate = Derive.gapFill(Derive.turnRate(transcripts), Rollup.MicrosPerMin, 0.0)
       val all = timed.union(tok).union(gap).union(rate)
       val written = Ledger.write(all, out,
         Seq(sum(($"kind" === "token_len_t").cast("long")).as("turns")), partitionBy = Seq("kind"))

@@ -64,14 +64,10 @@ object Derive {
   }
 
   /** Densify a time-indexed series to a regular grid of `stepMicros`,
-    * filling created buckets with `fillValue` (0 for rates) or
-    * forward-fill when `fillValue` is None.
-    *
-    * Implementation: per-conversation min/max bucket → sequence() +
-    * explode → left join (both sides hash-partitioned on conv_id, no
-    * broadcast of the big side) → fill. This is the engine's analog of
-    * the reference's impute_missing (preprocess.py:140-222), expressed as
-    * relational ops instead of an array pass.
+    * filling created buckets with `fillValue` (0 for rates). This is the
+    * engine's analog of the reference's impute_missing
+    * (preprocess.py:140-222), expressed as relational ops instead of an
+    * array pass.
     *
     * Densification multiplies rows by span/step (a conversation with a
     * year-long span at 1-minute step materializes ~526k rows): at scale,
@@ -81,7 +77,7 @@ object Derive {
     * The default keeps the reference's unbounded behavior.
     */
   def gapFill(points: Dataset[SeriesPoint], stepMicros: Long,
-      fillValue: Option[Double], maxSteps: Long = Long.MaxValue): Dataset[SeriesPoint] = {
+      fillValue: Double, maxSteps: Long = Long.MaxValue): Dataset[SeriesPoint] = {
     val spark = points.sparkSession
     import spark.implicits._
 
@@ -91,86 +87,67 @@ object Derive {
       if (maxSteps >= Long.MaxValue / math.max(stepMicros, 1L)) lo
       else greatest(lo, hi - lit(stepMicros) * (lit(maxSteps) - 1))
 
-    fillValue match {
-      case Some(v) =>
-        // Constant fill densifies with ONE aggregation and SEGMENT
-        // generation: collect each series' sorted (bucket, value) entries
-        // with its bounds, keep the entries that sit ON the grid
-        // (bucket = lo + k·step — the only ones the former grid join
-        // could match), then per entry emit the fill run from its
-        // predecessor plus the entry itself (a sentinel past `hi` emits
-        // the tail run). Every output row costs O(1) — no join probe and
-        // no per-row map lookup (a Spark map literal is an ARRAY;
-        // element_at scans it linearly, which made the first r8 rewrite
-        // O(entries) per grid row) — and `points` is consumed once
-        // instead of twice (the pre-r8 bounds-agg + 3-key left join).
-        //
-        // Contracts this shape adds: (1) buckets must be unique per
-        // (conv_id, kind) — the SeriesPoint series invariant every caller
-        // satisfies by aggregating first; a duplicate now fails loudly at
-        // runtime (sequence() rejects start > stop) where the old join
-        // silently duplicated grid rows. (2) one aggregation buffer holds
-        // a whole series' entries (~24 B per point); callers with
-        // unaggregated multi-million-point groups should pre-filter to
-        // the retention horizon — the maxSteps clamp bounds the OUTPUT
-        // grid, not the collected input.
-        val step = lit(stepMicros)
-        points
-          .groupBy($"conv_id", $"kind")
-          .agg(sort_array(collect_list(struct($"bucket", $"value"))).as("es"),
-            min($"bucket").as("lo0"), max($"bucket").as("hi"))
-          // the aggregate output is a handful of KB, so AQE coalesces it
-          // to one partition — but each row EXPANDS by span/step below.
-          // Spread the generation explicitly (explicit repartitions are
-          // never coalesced); the shuffle moves only the compact
-          // per-series rows, never the generated grid.
-          .repartition(spark.sparkContext.defaultParallelism,
-            $"conv_id", $"kind")
-          .withColumn("lo", clampLo($"lo0", $"hi"))
-          // last grid point (the grid is anchored at the clamped lo)
-          .withColumn("gridHi", $"hi" - pmod($"hi" - $"lo", step))
-          // on-grid entries only (bucket = lo + k·step — the only ones
-          // the former grid join could match); strictly increasing
-          // because series buckets are unique per (conv_id, kind)
-          .withColumn("oges", filter($"es", e =>
-            e.getField("bucket") >= $"lo" &&
-              pmod(e.getField("bucket") - $"lo", step) === 0))
-          .select($"conv_id", $"kind", $"lo", $"oges",
-            posexplode(concat($"oges",
-              // sentinel one step past the grid: its pair emits the tail
-              // fill run, and its own (null-value) point is filtered out
-              array(struct(($"gridHi" + step).as("bucket"),
-                lit(null).cast("double").as("value"))))))
-          .withColumn("prevB", when($"pos" === 0, $"lo" - step)
-            .otherwise(element_at($"oges", $"pos").getField("bucket")))
-          // one PRIMITIVE sequence per segment — fill run plus the entry
-          // endpoint — so the 10⁷-row explode stays on the long-array
-          // fast path (a struct-array transform here allocated one object
-          // per grid row and was 8x slower than the join it replaced)
-          .select($"conv_id", $"kind", $"col".getField("bucket").as("eb"),
-            $"col".getField("value").as("ev"),
-            explode(sequence($"prevB" + step, $"col".getField("bucket"), step))
-              .as("bucket"))
-          .where($"ev".isNotNull || $"bucket" =!= $"eb")
-          .select($"conv_id", $"kind", $"bucket",
-            when($"bucket" === $"eb", $"ev").otherwise(lit(v)).as("value"))
-          .as[SeriesPoint]
-      case None =>
-        // Forward fill keeps the join shape: the fill needs the previous
-        // non-null in grid order, which the window below supplies.
-        val bounds = points
-          .groupBy($"conv_id", $"kind")
-          .agg(min($"bucket").as("lo"), max($"bucket").as("hi"))
-          .select($"conv_id", $"kind", clampLo($"lo", $"hi").as("lo"), $"hi")
-        val grid = bounds.select($"conv_id", $"kind",
-          explode(sequence($"lo", $"hi", lit(stepMicros))).as("bucket"))
-        val joined = grid.join(points, Seq("conv_id", "kind", "bucket"), "left")
-        val ffill = Window.partitionBy($"conv_id", $"kind").orderBy($"bucket")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        joined.withColumn("value",
-          coalesce($"value", last($"value", ignoreNulls = true).over(ffill)))
-          .select($"conv_id", $"kind", $"bucket", $"value").as[SeriesPoint]
-    }
+    // Densify with ONE aggregation and SEGMENT generation: collect each series' sorted (bucket, value) entries
+    // with its bounds, keep the entries that sit ON the grid
+    // (bucket = lo + k·step — the only ones the former grid join
+    // could match), then per entry emit the fill run from its
+    // predecessor plus the entry itself (a sentinel past `hi` emits
+    // the tail run). Every output row costs O(1) — no join probe and
+    // no per-row map lookup (a Spark map literal is an ARRAY;
+    // element_at scans it linearly, which made the first r8 rewrite
+    // O(entries) per grid row) — and `points` is consumed once
+    // instead of twice (the pre-r8 bounds-agg + 3-key left join).
+    //
+    // Contracts this shape adds: (1) buckets must be unique per
+    // (conv_id, kind) — the SeriesPoint series invariant every caller
+    // satisfies by aggregating first; a duplicate now fails loudly at
+    // runtime (sequence() rejects start > stop) where the old join
+    // silently duplicated grid rows. (2) one aggregation buffer holds
+    // a whole series' entries (~24 B per point); callers with
+    // unaggregated multi-million-point groups should pre-filter to
+    // the retention horizon — the maxSteps clamp bounds the OUTPUT
+    // grid, not the collected input.
+    val step = lit(stepMicros)
+    points
+      .groupBy($"conv_id", $"kind")
+      .agg(sort_array(collect_list(struct($"bucket", $"value"))).as("es"),
+        min($"bucket").as("lo0"), max($"bucket").as("hi"))
+      // the aggregate output is a handful of KB, so AQE coalesces it
+      // to one partition — but each row EXPANDS by span/step below.
+      // Spread the generation explicitly (explicit repartitions are
+      // never coalesced); the shuffle moves only the compact
+      // per-series rows, never the generated grid.
+      .repartition(spark.sparkContext.defaultParallelism,
+        $"conv_id", $"kind")
+      .withColumn("lo", clampLo($"lo0", $"hi"))
+      // last grid point (the grid is anchored at the clamped lo)
+      .withColumn("gridHi", $"hi" - pmod($"hi" - $"lo", step))
+      // on-grid entries only (bucket = lo + k·step — the only ones
+      // the former grid join could match); strictly increasing
+      // because series buckets are unique per (conv_id, kind)
+      .withColumn("oges", filter($"es", e =>
+        e.getField("bucket") >= $"lo" &&
+          pmod(e.getField("bucket") - $"lo", step) === 0))
+      .select($"conv_id", $"kind", $"lo", $"oges",
+        posexplode(concat($"oges",
+          // sentinel one step past the grid: its pair emits the tail
+          // fill run, and its own (null-value) point is filtered out
+          array(struct(($"gridHi" + step).as("bucket"),
+            lit(null).cast("double").as("value"))))))
+      .withColumn("prevB", when($"pos" === 0, $"lo" - step)
+        .otherwise(element_at($"oges", $"pos").getField("bucket")))
+      // one PRIMITIVE sequence per segment — fill run plus the entry
+      // endpoint — so the 10⁷-row explode stays on the long-array
+      // fast path (a struct-array transform here allocated one object
+      // per grid row and was 8x slower than the join it replaced)
+      .select($"conv_id", $"kind", $"col".getField("bucket").as("eb"),
+        $"col".getField("value").as("ev"),
+        explode(sequence($"prevB" + step, $"col".getField("bucket"), step))
+          .as("bucket"))
+      .where($"ev".isNotNull || $"bucket" =!= $"eb")
+      .select($"conv_id", $"kind", $"bucket",
+        when($"bucket" === $"eb", $"ev").otherwise(lit(fillValue)).as("value"))
+      .as[SeriesPoint]
   }
 
   /** Zero-shuffle assemble for conv-bucketed input (all rows of a

@@ -28,10 +28,4 @@ object Catalog {
       .sorted
     tables.map(n => (n, "parquet")).toDF("table_name", "format")
   }
-
-  /** Tables registered in the session catalog (SQL-visible surface). */
-  def registeredTables(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.catalog.listTables().select($"name".as("table_name"), $"tableType".as("format"))
-  }
 }

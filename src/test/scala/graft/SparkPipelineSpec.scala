@@ -406,7 +406,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter($"conv_id" === "c_gappy")
     val rate = Derive.turnRate(transcripts)
     val sparse = rate.count()
-    val filled = Derive.gapFill(rate, Rollup.MicrosPerMin, Some(0.0))
+    val filled = Derive.gapFill(rate, Rollup.MicrosPerMin, 0.0)
     val n = filled.count()
     assert(sparse < n, s"expected densification, got $sparse -> $n")
     // full grid: max-min+1 minutes
@@ -422,9 +422,9 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       SeriesPoint("c1", "v", 0L, 1.0),                       // ancient point
       SeriesPoint("c1", "v", 1000L * Rollup.MicrosPerMin, 2.0),
       SeriesPoint("c1", "v", 1002L * Rollup.MicrosPerMin, 3.0)))
-    val unbounded = Derive.gapFill(pts, Rollup.MicrosPerMin, Some(0.0))
+    val unbounded = Derive.gapFill(pts, Rollup.MicrosPerMin, 0.0)
     assert(unbounded.count() == 1003)
-    val bounded = Derive.gapFill(pts, Rollup.MicrosPerMin, Some(0.0), maxSteps = 10)
+    val bounded = Derive.gapFill(pts, Rollup.MicrosPerMin, 0.0, maxSteps = 10)
       .orderBy($"bucket").collect()
     assert(bounded.length == 10, "span must clamp to the newest maxSteps buckets")
     assert(bounded.head.bucket == 993L * Rollup.MicrosPerMin)
@@ -450,7 +450,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       SeriesPoint("c2", "v", 2 * m + m / 2, 6.0), // 150 s: off-grid hi
       // single-entry series: exactly one row, value preserved
       SeriesPoint("c3", "v", 7 * m, 9.0)))
-    val got = Derive.gapFill(pts, m, Some(0.0))
+    val got = Derive.gapFill(pts, m, 0.0)
       .orderBy($"conv_id", $"bucket")
       .as[SeriesPoint].collect()
       .map(p => (p.conv_id, p.bucket / m, p.value))
