@@ -96,7 +96,7 @@ object Analyze {
       case Seq(w) if samplePct >= 1.0 =>
         val (mp, pi) = Mpx.mpxSelf(ts, w)
         MpResult(Profile(mp, pi, Array.empty, Array.empty, Array.empty, Array.empty,
-          w, math.ceil(w / 4.0).toInt, join = false, "euclidean", "mpx"))
+          w, Core.minlag(w), join = false, "euclidean", "mpx"))
       case Seq(w) =>
         val p = Scrimp.scrimpPlusPlus(ts, w)
         MpResult(Profile(p.mp, p.pi, Array.empty, Array.empty, Array.empty, Array.empty,
@@ -126,7 +126,7 @@ object Analyze {
   /** stomp entry (ref stomp.py:196) — full left/right profiles. */
   def stomp(ts: Array[Double], w: Int, query: Option[Array[Double]] = None): Profile = {
     val r = Stomp.stomp(ts, w, query)
-    val ez = if (query.isDefined) 0 else math.ceil(w / 2.0).toInt
+    val ez = if (query.isDefined) 0 else Core.stompZone(w)
     Profile(r.mp, r.pi,
       Option(r.lmp).getOrElse(Array.empty), Option(r.lpi).getOrElse(Array.empty),
       Option(r.rmp).getOrElse(Array.empty), Option(r.rpi).getOrElse(Array.empty),

@@ -26,6 +26,7 @@ object SparkEntry {
   final val MediaDupThreshold = 0.99995 // q39: minimum cosine; copies
   final val PlantedMedia = 24           //   re-ingested for media_id < 24
   final val PlantOffset = 1000000L      // q25/q39: a planted copy's id offset
+  final val MovingWindow = 8            // q05/q14: rows per moving window
 
   private def events(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
@@ -110,11 +111,8 @@ object SparkEntry {
         Runtime.getRuntime.addShutdownHook(new Thread(() => {
           org.apache.commons.io.FileUtils.deleteQuietly(tmpRoot.toFile); ()
         }))
-        val path = tmpRoot.resolve(table).toString
-        points(s, dir).repartition(buckets, $"conv_id")
-          .write.bucketBy(buckets, "conv_id").sortBy("conv_id", "kind", "bucket")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(table)
+        Rollup.writeColocated(points(s, dir), buckets, table,
+          tmpRoot.resolve(table).toString)
       }
     }
     s.table(table).as[SeriesPoint]
@@ -218,16 +216,17 @@ object SparkEntry {
       // moving mean/std over a fixed-point (1e-4) quantization of value:
       // integer window sums are order-insensitive, so Spark's frame scan
       // and DuckDB's segment tree produce bit-identical results
-      val w = byUserTs.rowsBetween(-7, 0)
+      val w = byUserTs.rowsBetween(1 - MovingWindow, 0)
+      val n = MovingWindow.toDouble
       events(s, dir)
         .withColumn("vi", round($"value" * 10000, 0).cast("long"))
         .withColumn("s1", sum($"vi").over(w))
         .withColumn("s2", sum($"vi" * $"vi").over(w))
         .withColumn("rn", row_number().over(byUserTs))
-        .where($"rn" >= 8)
+        .where($"rn" >= MovingWindow)
         .select($"user_id", $"event_id",
-          floor(($"s1" / 8.0) * 10.0).cast("long").as("mavg_e5"),
-          floor(sqrt(greatest($"s2" / 8.0 - ($"s1" / 8.0) * ($"s1" / 8.0),
+          floor(($"s1" / n) * 10.0).cast("long").as("mavg_e5"),
+          floor(sqrt(greatest($"s2" / n - ($"s1" / n) * ($"s1" / n),
             lit(0.0))) * 10.0).cast("long").as("mstd_e5"))
     }),
 
@@ -244,12 +243,12 @@ object SparkEntry {
 
     "q14_moving_minmax" -> ((s, dir) => {
       import s.implicits._
-      val w = byUserTs.rowsBetween(-7, 0)
+      val w = byUserTs.rowsBetween(1 - MovingWindow, 0)
       events(s, dir)
         .withColumn("mmin", min($"value").over(w))
         .withColumn("mmax", max($"value").over(w))
         .withColumn("rn", row_number().over(byUserTs))
-        .where($"rn" >= 8)
+        .where($"rn" >= MovingWindow)
         .select($"user_id", $"event_id",
           round($"mmin", 6).as("mmin"), round($"mmax", 6).as("mmax"))
     }),
@@ -476,17 +475,17 @@ object SparkEntry {
          FROM j GROUP BY user_id""",
 
     "q05_moving_stats" ->
-      """SELECT user_id, event_id,
-         floor((s1 / 8.0) * 10.0)::BIGINT AS mavg_e5,
-         floor(sqrt(greatest(s2 / 8.0 - (s1 / 8.0) * (s1 / 8.0), 0.0))
+      s"""SELECT user_id, event_id,
+         floor((s1 / $MovingWindow.0) * 10.0)::BIGINT AS mavg_e5,
+         floor(sqrt(greatest(s2 / $MovingWindow.0 - (s1 / $MovingWindow.0) * (s1 / $MovingWindow.0), 0.0))
                * 10.0)::BIGINT AS mstd_e5
          FROM (SELECT user_id, event_id,
                  sum(vi) OVER w AS s1, sum(vi * vi) OVER w AS s2,
                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
                FROM (SELECT *, round(value * 10000)::BIGINT AS vi FROM events)
                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-         WHERE rn >= 8""",
+                            ROWS BETWEEN ${MovingWindow - 1} PRECEDING AND CURRENT ROW))
+         WHERE rn >= $MovingWindow""",
 
     "q06_stats_global" ->
       """SELECT event_type, count(*)::BIGINT AS cnt, round(avg(value), 4) AS avg_v,
@@ -496,14 +495,14 @@ object SparkEntry {
          FROM events GROUP BY event_type""",
 
     "q14_moving_minmax" ->
-      """SELECT user_id, event_id, round(mmin, 6) AS mmin, round(mmax, 6) AS mmax
+      s"""SELECT user_id, event_id, round(mmin, 6) AS mmin, round(mmax, 6) AS mmax
          FROM (SELECT user_id, event_id,
                  min(value) OVER w AS mmin, max(value) OVER w AS mmax,
                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
                FROM events
                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-         WHERE rn >= 8""",
+                            ROWS BETWEEN ${MovingWindow - 1} PRECEDING AND CURRENT ROW))
+         WHERE rn >= $MovingWindow""",
 
     "q16_dedup_exact" ->
       """SELECT source, count(*)::BIGINT AS n_docs,

@@ -2,7 +2,7 @@ package graft.dist
 
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
-import graft.kernels.{Mpx, Stomp}
+import graft.kernels.{Core, Mpx, Stomp}
 import graft.schema.MpProfileRow
 
 /** Distributed matrix-profile orchestration.
@@ -88,8 +88,7 @@ object DistributedMp {
   private def mpxTiles(s: SeriesRow, w: Int, tileSize: Int): Iterator[MpxTile] = {
     val n = s.values.length
     val plen = n - w + 1
-    val minlag = math.ceil(w / 4.0).toInt
-    val dStart = minlag + 1
+    val dStart = Core.minlag(w) + 1
     val b = tileSize
     val rTiles = math.ceil(plen.toDouble / b).toInt
     for {
@@ -127,7 +126,7 @@ object DistributedMp {
     val spark = in.sparkSession
     import spark.implicits._
     def row(conv: String, kind: String, w: Int, buf: Mpx.PearsonBuf) =
-      MpProfileRow(conv, kind, tier, w, math.ceil(w / 4.0).toInt, "mpx", "euclidean",
+      MpProfileRow(conv, kind, tier, w, Core.minlag(w), "mpx", "euclidean",
         join = false, Mpx.selfToEuclidean(buf, w), buf.mpi,
         Array.empty, Array.empty, Array.empty, Array.empty)
     fanOut(in, splitThreshold, maxSeriesLen)(i => grid(i)._1.values.length, { i =>
@@ -287,7 +286,7 @@ object DistributedMp {
       splitThreshold: Int = 1 << 15, tileSize: Int = 1 << 14): Dataset[MpProfileRow] = {
     val spark = series.sparkSession
     import spark.implicits._
-    val ez = math.ceil(w / 2.0).toInt
+    val ez = Core.stompZone(w)
     def row(conv: String, kind: String, r: Stomp.Batch) = MpProfileRow(conv, kind, tier,
       w, ez, "stomp", "euclidean", join = false, r.mp, r.pi, r.lmp, r.lpi, r.rmp, r.rpi)
     fanOut(series, splitThreshold, -1)(_.values.length,

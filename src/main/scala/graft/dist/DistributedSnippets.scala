@@ -128,7 +128,7 @@ object DistributedSnippets {
       withNeighbors: Boolean): DataFrame = {
     require(size >= 4, "snippet_size must be an integer >= 4")
     require(tilesPerTask >= 1, "tilesPerTask must be >= 1")
-    val w = if (windowSize0 > 0) windowSize0 else math.floor(size / 2.0).toInt
+    val w = Snippets.windowSize(size, windowSize0)
     require(w < size, "window_size must be smaller than snippet_size")
     val spark = series.sparkSession
     import spark.implicits._

@@ -69,7 +69,7 @@ object BruteMp {
   def selfProfile(v: Array[Long], w: Int): SelfResult = {
     val n = v.length
     val plen = n - w + 1
-    val minlag = math.ceil(w / 4.0).toInt
+    val minlag = Core.minlag(w)
     val (s1, s2) = windowSums(v, w)
     val mp = Array.fill(plen)(Double.PositiveInfinity)
     val pi = Array.fill(plen)(-1)
@@ -232,25 +232,21 @@ object BruteMp {
     out.toSeq
   }
 
-  /** One PMP motif pick: winning window row, ordered pair endpoints, the
-    * pair distance, and the accepted MASS-bound neighbors (ref
-    * top_k_motifs.py:16-171 under the brute formula).
+  /** One PMP motif pick (ref top_k_motifs.py:16-171 under the brute
+    * formula).
     */
-  final case class PmpMotifPick(row: Int, a: Int, b: Int, dist: Double,
-      neighbors: Seq[Int])
+  type PmpMotifPick = TopK.MotifPick
 
-  /** Brute twin of TopK.pmpTopKMotifs (ref top_k_motifs.py:16-171): global
-    * 2-D argmin over the per-window profiles with row-major first-min
-    * tie-break, per-pick ez = floor(w/2) of the WINNING row's window,
-    * neighbor re-query bounded by radius·best over a fresh distance
-    * profile anchored at the pair's lower endpoint, and exclusion-zone
-    * suppression around the endpoints and each accepted neighbor — on the
-    * neighbor profile AND the winning row. The neighbor profile uses the
-    * brute pair-distance expression in place of MASS, so every compared
-    * double is SQL-replayable (OracleSqlGen.q34); positions within minlag
-    * of the anchor fall inside the anchor's exclusion zone (ez >= minlag),
-    * so the oracle's lag-restricted pair set covers every position that
-    * can matter.
+  /** Brute twin of TopK.pmpTopKMotifs (ref top_k_motifs.py:16-171): the
+    * same selection step, [[TopK.selectMotifs]] (2-D first-min argmin,
+    * per-pick ez = floor(w/2) of the WINNING row's window, radius-bounded
+    * neighbor re-query, suppression on the neighbor profile AND the
+    * winning row), over a fresh neighbor profile anchored at the pair's
+    * lower endpoint. That profile uses the brute pair-distance expression
+    * in place of MASS, so every compared double is SQL-replayable
+    * (OracleSqlGen.q34); positions within minlag of the anchor fall inside
+    * the anchor's exclusion zone (ez >= minlag), so the oracle's
+    * lag-restricted pair set covers every position that can matter.
     */
   def pmpMotifs(v: Array[Long], windows: Array[Int], k: Int = 2,
       maxNeighbors: Int = 2, radius: Double = 3.0): Seq[PmpMotifPick] =
@@ -264,65 +260,18 @@ object BruteMp {
   def pmpMotifs(v: Array[Long], windows: Array[Int],
       profiles: Array[SelfResult], k: Int, maxNeighbors: Int,
       radius: Double): Seq[PmpMotifPick] = {
-    val tmp = profiles.map(_.mp.clone())
-    val (s1s, s2s) = windows.map(w => windowSums(v, w)).unzip
-    val picks = scala.collection.mutable.ArrayBuffer.empty[PmpMotifPick]
-
-    def zone(arr: Array[Double], idx: Int, ez: Int): Unit = {
-      var j = math.max(0, idx - ez)
-      val end = math.min(arr.length, idx + ez + 1)
-      while (j < end) { arr(j) = Double.PositiveInfinity; j += 1 }
-    }
-
-    var ki = 0
-    var done = false
-    while (ki < k && !done) {
-      // row-major first-min 2-D argmin (strict <)
-      var bestR = -1; var bestC = -1; var best = Double.PositiveInfinity
-      for (r <- tmp.indices; c <- tmp(r).indices)
-        if (tmp(r)(c) < best) { best = tmp(r)(c); bestR = r; bestC = c }
-      if (bestR < 0 || best.isInfinite) done = true
-      else {
-        val w = windows(bestR)
-        val ez = math.floor(w / 2.0).toInt
-        val pair = profiles(bestR).pi(bestC)
-        val a = math.min(bestC, pair)
-        val b = math.max(bestC, pair)
-        // fresh neighbor profile anchored at `a` (brute formula)
-        val plen = tmp(bestR).length
-        val (s1, s2) = (s1s(bestR), s2s(bestR))
-        val dp = new Array[Double](plen)
-        var j = 0
-        while (j < plen) {
+    val sums = windows.map(w => windowSums(v, w))
+    TopK.selectMotifs(profiles.map(_.mp.clone()), v.length, k, maxNeighbors, radius)(
+      r => (windows(r), Core.topKZone(windows(r))),
+      (r, c) => profiles(r).pi(c).toLong, { (r, w, a) =>
+        val (s1, s2) = sums(r)
+        Array.tabulate(s1.length) { j =>
           var dot = 0L
           var t = 0
           while (t < w) { dot += v(a + t) * v(j + t); t += 1 }
-          dp(j) = pairDist(dot, s1(a), s2(a), s1(j), s2(j), w)
-          j += 1
+          pairDist(dot, s1(a), s2(a), s1(j), s2(j), w)
         }
-        for (idx <- Seq(a, b)) {
-          zone(dp, idx, ez)
-          zone(tmp(bestR), idx, ez)
-        }
-        val neighbors = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var ni = 0
-        var nDone = false
-        while (ni < maxNeighbors && !nDone) {
-          val nIdx = Core.argmin(dp)
-          val nDist = dp(nIdx)
-          if (Core.isNanInf(nDist) || !(radius * best >= nDist)) nDone = true
-          else {
-            neighbors += nIdx
-            zone(dp, nIdx, ez)
-            zone(tmp(bestR), nIdx, ez)
-          }
-          ni += 1
-        }
-        picks += PmpMotifPick(bestR, a, b, best, neighbors.toSeq)
-      }
-      ki += 1
-    }
-    picks.toSeq
+      })
   }
 
   /** mpdist-vector twin over quantized arrays: MpDist.mpdistVector with the

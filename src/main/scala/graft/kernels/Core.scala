@@ -35,6 +35,19 @@ object Core {
     out
   }
 
+  /** MPX/SCRIMP exclusion zone: a self join skips lags |i - j| <= minlag =
+    * ceil(w/4) (ref cympx.pyx:58; scrimp.py uses the same zone).
+    */
+  def minlag(w: Int): Int = math.ceil(w / 4.0).toInt
+
+  /** STOMP's self-join exclusion zone ceil(w/2) (ref stomp.py). */
+  def stompZone(w: Int): Int = math.ceil(w / 2.0).toInt
+
+  /** Top-k motif and discord exclusion zone floor(w/2), the default when
+    * the caller names none (ref top_k_motifs.py, top_k_discords.py).
+    */
+  def topKZone(w: Int): Int = math.floor(w / 2.0).toInt
+
   /** In-place exclusion zone: dp[max(0,idx-ez) until min(plen, idx+ez+1)] = ∞
     * unless a join (ref core.py:580-587).
     */
@@ -48,17 +61,15 @@ object Core {
     }
   }
 
-  /** Pearson → Euclidean: sqrt(2w(1-ρ)), ∞ stays ∞ (ref core.py:590-622). */
-  def pearsonToEuclidean(a: Array[Double], w: Int): Array[Double] = {
-    val out = new Array[Double](a.length)
-    var i = 0
-    while (i < a.length) {
-      out(i) = if (a(i).isInfinite) Double.PositiveInfinity
-               else math.sqrt(2.0 * w * (1.0 - a(i)))
-      i += 1
-    }
-    out
-  }
+  /** The z-normalized Euclidean distance of a window pair with Pearson
+    * correlation `rho`: sqrt(2w(1-ρ)) (ref core.py:590-622). Callers keep
+    * their own sentinel rule around it.
+    */
+  def pearsonDist(w: Int, rho: Double): Double = math.sqrt(2.0 * w * (1.0 - rho))
+
+  /** Pearson → Euclidean over an array, ∞ stays ∞. */
+  def pearsonToEuclidean(a: Array[Double], w: Int): Array[Double] =
+    a.map(rho => if (rho.isInfinite) Double.PositiveInfinity else pearsonDist(w, rho))
 
   /** Metric inference over a profile array (ref core.py:625-643): the
     * values are assumed Pearson iff all finite entries lie in [0, 1].

@@ -11,6 +11,14 @@ import org.jtransforms.fft.DoubleFFT_1D
   */
 object Fft {
 
+  // JTransforms fans every transform of 8,192 points or more out over
+  // JLargeArrays' own pool: nproc non-daemon threads kept alive for 60 s.
+  // That holds a finished main open for a minute after its last FFT, and
+  // inside a Spark task it starts nproc extra threads on top of the
+  // executor's task slots, which already own the cores. One thread keeps
+  // every transform on its caller's thread; the values are unchanged.
+  pl.edu.icm.jlargearrays.ConcurrencyUtils.setNumberOfThreads(1)
+
   // DoubleFFT_1D construction builds O(n) twiddle/permutation tables —
   // rebuilt per call it dominates short transforms. One small LRU of
   // plans per thread (transform state is not shared-safe; ThreadLocal

@@ -32,7 +32,7 @@ object Mpx {
   def selfStats(ts: Array[Double], w: Int): SelfStats = {
     val n = ts.length
     val profileLen = n - w + 1
-    val minlag = math.ceil(w / 4.0).toInt
+    val minlag = Core.minlag(w)
     val (mu, sig) = MovingStats.muinvn(ts, w)
     val df = new Array[Double](profileLen)
     val dg = new Array[Double](profileLen)
@@ -220,15 +220,8 @@ object Mpx {
   /** Pearson → Euclidean in place for self-join output
     * (ref cympx.pyx:114-117: no -1 special case for self joins).
     */
-  def selfToEuclidean(buf: PearsonBuf, w: Int): Array[Double] = {
-    val out = new Array[Double](buf.mp.length)
-    var i = 0
-    while (i < out.length) {
-      out(i) = math.sqrt(2.0 * w * (1.0 - buf.mp(i)))
-      i += 1
-    }
-    out
-  }
+  def selfToEuclidean(buf: PearsonBuf, w: Int): Array[Double] =
+    buf.mp.map(Core.pearsonDist(w, _))
 
   /** Complete single-threaded self-join (ref mpx.py:20-100 + cympx.pyx
     * mpx_parallel): returns (mp, mpi) in Euclidean or Pearson domain.
@@ -308,16 +301,8 @@ object Mpx {
   /** Pearson → Euclidean for AB-join output: -1 (never matched) → ∞
     * (ref cympx.pyx:261-274).
     */
-  def abToEuclidean(buf: PearsonBuf, w: Int): Array[Double] = {
-    val out = new Array[Double](buf.mp.length)
-    var i = 0
-    while (i < out.length) {
-      out(i) = if (buf.mp(i) == -1.0) Double.PositiveInfinity
-               else math.sqrt(2.0 * w * (1.0 - buf.mp(i)))
-      i += 1
-    }
-    out
-  }
+  def abToEuclidean(buf: PearsonBuf, w: Int): Array[Double] =
+    buf.mp.map(rho => if (rho == -1.0) Double.PositiveInfinity else Core.pearsonDist(w, rho))
 
   /** Complete AB similarity join (ref cympx.pyx:125-284 mpx_ab_parallel):
     * returns (mpA, mpiA, mpB, mpiB).

@@ -58,7 +58,7 @@ object Scrimp {
     val n = ts.length
     val step = math.floor(w * stepSizePct).toInt
     val plen = n - w + 1
-    val ez = math.ceil(w / 4.0).toInt
+    val ez = Core.minlag(w)
 
     var mp = new Array[Double](plen)
     val mpi = new Array[Long](plen)

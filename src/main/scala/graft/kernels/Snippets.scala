@@ -78,15 +78,21 @@ object Snippets {
     }
   }
 
+  /** The MPDist window: `windowSize0` when positive, else the default
+    * floor(snippetSize/2) (ref snippets.py).
+    */
+  def windowSize(snippetSize: Int, windowSize0: Int): Int =
+    if (windowSize0 > 0) windowSize0 else math.floor(snippetSize / 2.0).toInt
+
   /** Full snippets pipeline, single-threaded (ref snippets.py:17-126). */
   def snippets(ts: Array[Double], snippetSize: Int, numSnippets: Int = 2,
       windowSize0: Int = 0): Seq[Snippet] = {
     require(snippetSize >= 4, "snippet_size must be an integer >= 4")
     require(ts.length >= 2 * snippetSize, "Time series is too short relative to snippet length")
-    val windowSize = if (windowSize0 > 0) windowSize0 else math.floor(snippetSize / 2.0).toInt
-    require(windowSize < snippetSize, "window_size must be smaller than snippet_size")
+    val w = windowSize(snippetSize, windowSize0)
+    require(w < snippetSize, "window_size must be smaller than snippet_size")
     val padded = pad(ts, snippetSize)
-    val (indices, distances) = candidateDistances(padded, snippetSize, windowSize)
+    val (indices, distances) = candidateDistances(padded, snippetSize, w)
     select(ts, padded, indices, distances, snippetSize, numSnippets)
   }
 }

@@ -174,7 +174,7 @@ object Stomp {
     require(w >= 4, "window size must be at least 4.")
     val rows = query.getOrElse(ts)
     require(w <= rows.length / 2.0, "Time series is too short relative to desired window size")
-    val ez = if (query.isDefined) 0 else math.ceil(w / 2.0).toInt
+    val ez = if (query.isDefined) 0 else Core.stompZone(w)
     val plen = ts.length - w + 1
     val merged = batchRanges(rows.length - w + 1, nJobs).map { case (s, e) =>
       tileCompute(s, e, 0, plen, java.util.Arrays.copyOfRange(rows, s, e - 1 + w),

@@ -91,18 +91,29 @@ object Multimodal {
   val ImageDedupDim = 8
   val AudioDedupDim = 5
 
+  // ---- the synthetic media formulas, which OracleSqlGen recomputes from
+  // the id in closed form (q27/q37/q38/q39)
+  final val IdMul = 2654435761L  // pixel and sample: v = id*IdMul + ...
+  final val PosMul = 7919L       //   + x*PosMul (pixel), + i*PosMul (sample)
+  final val RowMul = 104729L     //   + y*RowMul (pixel)
+  final val MinSide = 16         // image width MinSide + id % WidthSpan,
+  final val WidthSpan = 16       //   height MinSide + id % HeightSpan
+  final val HeightSpan = 8
+  final val MinSamples = 200     // audio samples MinSamples + id % SampleSpan
+  final val SampleSpan = 120
+
   /** Deterministic synthetic image geometry: width 16..31, height 16..23.
     * Integer-only so a SQL oracle can recompute it from the id.
     */
   def imageDims(id: Long): (Int, Int) =
-    ((16 + id % 16).toInt, (16 + id % 8).toInt)
+    ((MinSide + id % WidthSpan).toInt, (MinSide + id % HeightSpan).toInt)
 
   /** Deterministic packed-RGB pixel: v = id*2654435761 + x*7919 + y*104729,
     * r = v%256, g = (v/256)%256, b = (v/65536)%256 — integer arithmetic
     * only, mirrored operation-for-operation by the q37 oracle SQL.
     */
   def imagePixel(id: Long, x: Int, y: Int): Int = {
-    val v = id * 2654435761L + x * 7919L + y * 104729L
+    val v = id * IdMul + x * PosMul + y * RowMul
     val r = (v % 256).toInt
     val g = ((v / 256) % 256).toInt
     val b = ((v / 65536) % 256).toInt
@@ -181,14 +192,14 @@ object Multimodal {
     */
   val AudioSampleRate = 8000
 
-  def audioSamples(id: Long): Int = (200 + id % 120).toInt
+  def audioSamples(id: Long): Int = (MinSamples + id % SampleSpan).toInt
 
   /** Deterministic 16-bit PCM sample: v = id*2654435761 + i*7919;
     * s = (v % 65536) - 32768 — mirrored operation-for-operation by the
     * q38 oracle SQL (int64-safe, no wraparound).
     */
   def audioSample(id: Long, i: Int): Short =
-    ((id * 2654435761L + i * 7919L) % 65536L - 32768L).toShort
+    ((id * IdMul + i * PosMul) % 65536L - 32768L).toShort
 
   /** Real WAV encode of the seeded PCM samples: RIFF/fmt/data header +
     * little-endian int16 frames (the container is hand-written — it is

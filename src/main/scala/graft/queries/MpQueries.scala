@@ -76,7 +76,7 @@ object MpQueries {
     * one side) — below this the oracle's mp CTE would omit partnerless
     * positions while the brute twin reports the full profile length.
     */
-  def minN(w: Int): Int = w - 1 + 2 * (math.ceil(w / 4.0).toInt + 1)
+  def minN(w: Int): Int = w - 1 + 2 * (Core.minlag(w) + 1)
 
   /** max |a-b| < tol elementwise over two double-array columns (codegen). */
   private def agreeCol(a: Column, b: Column): Column =
@@ -295,19 +295,11 @@ object MpQueries {
         val picks = BruteMp.pmpMotifs(q.vi, elig, profiles, k = 2,
           maxNeighbors = 2, radius = MotifRadius)
         val profileLen = profiles.map(_.mp.length).max
-        val pmp = profiles.map { p =>
-          val row = Array.fill(profileLen)(Double.PositiveInfinity)
-          System.arraycopy(p.mp, 0, row, 0, p.mp.length)
-          row
+        val rows = elig.zip(profiles).map { case (w, p) =>
+          Skimp.padRow(w, p.mp, p.pi.map(_.toLong), profileLen, toEuclidean = false)
         }
-        val pmpi = profiles.map { p =>
-          val row = Array.fill(profileLen)(-1L)
-          var i = 0
-          while (i < p.pi.length) { row(i) = p.pi(i).toLong; i += 1 }
-          row
-        }
-        val kern = TopK.pmpTopKMotifs(q.vi.map(_.toDouble), pmp, pmpi, elig,
-          None, k = 2, maxNeighbors = 2)
+        val kern = TopK.pmpTopKMotifs(q.vi.map(_.toDouble), rows.map(_.mp),
+          rows.map(_.pi), elig, None, k = 2, maxNeighbors = 2)
         val agree = kern.length == picks.length && kern.zip(picks).forall {
           case (km, bp) =>
             km.motifs._1._1 == bp.row &&

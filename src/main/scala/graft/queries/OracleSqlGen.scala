@@ -91,7 +91,7 @@ object OracleSqlGen {
     * so several windows can coexist (q13).
     */
   def selfMpCtes(w: Int, sfx: String = ""): String = {
-    val minlag = math.ceil(w / 4.0).toInt
+    val minlag = graft.kernels.Core.minlag(w)
     // same per-user length bound as the Spark side (MpQueries.minN): a
     // series with n in [w+minlag+1, minN) has >=1 admissible pair, so the
     // mp CTE would emit rows Spark omits — filter eligibility in dg so both
@@ -517,6 +517,11 @@ FROM best WHERE rn = 1 GROUP BY 1, 2"""
                    (acc, t) -> md5(acc || '|' || t)) AS fingerprint
 FROM documents"""
 
+  // Multimodal.imageDims / audioSamples of a documents row, in SQL
+  private val ImageWidth = s"(${Multimodal.MinSide} + doc_id % ${Multimodal.WidthSpan})"
+  private val ImageHeight = s"(${Multimodal.MinSide} + doc_id % ${Multimodal.HeightSpan})"
+  private val AudioSamples = s"(${Multimodal.MinSamples} + doc_id % ${Multimodal.SampleSpan})"
+
   /** q27: multimodal plumbing facts — id/kind/dim/content size. Image rows
     * (doc_id % 3 = 0) carry real PNG payloads whose encoded size is
     * encoder-dependent, so the oracle checks the DECODED pixel-buffer size
@@ -525,46 +530,53 @@ FROM documents"""
     * values are spec-asserted, not hash-compared; real image decode values
     * are hash-compared by q37.
     */
-  def q27: String =
-    """SELECT doc_id AS media_id,
+  def q27: String = {
+    import Multimodal.{AudioDim, ImageDim, StubDim}
+    s"""SELECT doc_id AS media_id,
        CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio'
             ELSE 'video' END AS kind,
-       CASE WHEN doc_id % 3 = 0 THEN 8 WHEN doc_id % 3 = 1 THEN 6
-            ELSE 32 END AS dim,
+       CASE WHEN doc_id % 3 = 0 THEN $ImageDim WHEN doc_id % 3 = 1 THEN $AudioDim
+            ELSE $StubDim END AS dim,
        CASE WHEN doc_id % 3 = 0
-            THEN 3 * (16 + doc_id % 16) * (16 + doc_id % 8)
-            WHEN doc_id % 3 = 1 THEN 2 * (200 + doc_id % 120)
+            THEN 3 * $ImageWidth * $ImageHeight
+            WHEN doc_id % 3 = 1 THEN 2 * $AudioSamples
             ELSE strlen(text) END::BIGINT AS content_bytes
 FROM documents"""
+  }
 
   /** Decoded pixel field `px(doc_id, w, h, x, y, v)` of every image row
     * (Multimodal.imagePixel in closed form); the generate_series bounds
     * cover the max geometry (width ≤ 31 → x ≤ 30; height ≤ 23 → y ≤ 22).
     */
-  private def imageFieldCtes: String =
-    """imgs AS (
-  SELECT doc_id, (16 + doc_id % 16)::BIGINT AS w, (16 + doc_id % 8)::BIGINT AS h
+  private def imageFieldCtes: String = {
+    import Multimodal.{HeightSpan, IdMul, MinSide, PosMul, RowMul, WidthSpan}
+    s"""imgs AS (
+  SELECT doc_id, $ImageWidth::BIGINT AS w, $ImageHeight::BIGINT AS h
   FROM documents WHERE doc_id % 3 = 0),
 px AS (
   SELECT i.doc_id, i.w, i.h, gx.x, gy.y,
-         i.doc_id * 2654435761 + gx.x * 7919 + gy.y * 104729 AS v
+         i.doc_id * $IdMul + gx.x * $PosMul + gy.y * $RowMul AS v
   FROM imgs i
-  CROSS JOIN generate_series(0, 30) gx(x)
-  CROSS JOIN generate_series(0, 22) gy(y)
+  CROSS JOIN generate_series(0, ${MinSide + WidthSpan - 2}) gx(x)
+  CROSS JOIN generate_series(0, ${MinSide + HeightSpan - 2}) gy(y)
   WHERE gx.x < i.w AND gy.y < i.h)"""
+  }
 
   /** Decoded sample field `smp(doc_id, n, i, s)` of every audio row
     * (Multimodal.audioSample in closed form; 319 samples → i ≤ 318). `sep`
     * splits smp's FROM clause (q38: one line per join, q39: one line).
     */
-  private def audioFieldCtes(sep: String): String =
+  private def audioFieldCtes(sep: String): String = {
+    import Multimodal.{IdMul, MinSamples, PosMul, SampleSpan}
+    val lastI = MinSamples + SampleSpan - 2
     s"""auds AS (
-  SELECT doc_id, (200 + doc_id % 120)::BIGINT AS n
+  SELECT doc_id, $AudioSamples::BIGINT AS n
   FROM documents WHERE doc_id % 3 = 1),
 smp AS (
   SELECT a.doc_id, a.n, g.i,
-         (a.doc_id * 2654435761 + g.i * 7919) % 65536 - 32768 AS s
-  FROM auds a${sep}CROSS JOIN generate_series(0, 318) g(i)${sep}WHERE g.i < a.n)"""
+         (a.doc_id * $IdMul + g.i * $PosMul) % 65536 - 32768 AS s
+  FROM auds a${sep}CROSS JOIN generate_series(0, $lastI) g(i)${sep}WHERE g.i < a.n)"""
+  }
 
   /** q37: REAL image decode, hash-compared. The Spark side PNG-encodes a
     * deterministic pixel field (Multimodal.imagePixel: v = id*2654435761 +
@@ -594,7 +606,7 @@ FROM px GROUP BY 1, 2, 3"""
     */
   def q38: String =
     s"""WITH ${audioFieldCtes("\n  ")}
-SELECT doc_id AS media_id, 8000 AS sample_rate, n AS n_samples,
+SELECT doc_id AS media_id, ${Multimodal.AudioSampleRate} AS sample_rate, n AS n_samples,
        sum(s)::BIGINT AS sum_s,
        sum(abs(s))::BIGINT AS sum_abs,
        sum(i * s)::BIGINT AS checksum

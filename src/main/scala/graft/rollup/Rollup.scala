@@ -280,6 +280,17 @@ object Rollup {
     (m, h, d)
   }
 
+  /** Saves `points` as table `table` at `path` in the layout
+    * [[rollupAllColocated]] reads without an exchange (and its SortGuard
+    * checks): `buckets` bucket(conv_id) files, one per bucket, each sorted
+    * by (conv_id, kind, bucket).
+    */
+  def writeColocated(points: Dataset[SeriesPoint], buckets: Int, table: String,
+      path: String): Unit =
+    points.repartition(buckets, col("conv_id"))
+      .write.bucketBy(buckets, "conv_id").sortBy("conv_id", "kind", "bucket")
+      .option("path", path).mode("overwrite").saveAsTable(table)
+
   /** Zero-shuffle rollup for conv-bucketed sorted input: when every row of
     * a conversation lives in one partition, sorted by (conv_id, kind,
     * bucket) — an Iceberg table partitioned by bucket(conv_id) read with

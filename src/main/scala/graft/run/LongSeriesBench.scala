@@ -2,6 +2,7 @@ package graft.run
 
 import graft.dist.DistributedMp
 import graft.dist.DistributedMp.SeriesRow
+import graft.kernels.Core
 
 /** Single long-series matrix profile through the halo'd-tile path —
   * the scale evidence for splitting one 10^6..10^7-point series across
@@ -69,7 +70,7 @@ object LongSeriesBench {
           s"expected ${windows.length} PMP rows, got ${rows.length}")
         val pairs = windows.map { ww =>
           val plen = (n - ww + 1).toLong
-          val minlag = math.ceil(ww / 4.0).toLong
+          val minlag = Core.minlag(ww).toLong
           (plen - minlag - 1) * (plen - minlag) / 2
         }.sum
         val tasks = windows.map { ww =>
@@ -102,7 +103,7 @@ object LongSeriesBench {
 
       case _ =>
         val plen = n - w + 1
-        val minlag = math.ceil(w / 4.0).toInt
+        val minlag = Core.minlag(w)
         // mpx sweeps the upper triangle once; stomp computes the full matrix
         val stomp = algo == "stomp"
         val pairs =

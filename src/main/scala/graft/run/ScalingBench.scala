@@ -115,18 +115,14 @@ object ScalingBench {
 
   /** The bucketed points table and its write seconds (NaN: already on disk). */
   private def bucketedTable(spark: SparkSession, c: Config): (String, Double) = {
-    import spark.implicits._
     // buckets is part of the identity: reusing files written with a
     // different bucket count under new CLUSTERED BY metadata would make
     // Spark trust wrong bucket ids for the zero-exchange scan
     val table = s"graft_storage_rollup_${c.convs}_${c.turnsScale}_${c.buckets}"
     val path = s"/tmp/graft_storage_rollup/$table"
     val writeSec = if (Files.exists(Paths.get(path, "_SUCCESS"))) Double.NaN
-      else Harness.timed(graft.ingest.TranscriptGen
-        .generatePoints(spark, c.convs, turnsScale = c.turnsScale)
-        .repartition(c.buckets, $"conv_id")
-        .write.bucketBy(c.buckets, "conv_id").sortBy("conv_id", "kind", "bucket")
-        .option("path", path).mode("overwrite").saveAsTable(table))._2
+      else Harness.timed(Rollup.writeColocated(graft.ingest.TranscriptGen
+        .generatePoints(spark, c.convs, turnsScale = c.turnsScale), c.buckets, table, path))._2
     // the data survives JVM restarts but the in-memory catalog does not;
     // an external bucketed table keeps the zero-exchange bucketed scan
     // (the files carry their bucket ids in their names)

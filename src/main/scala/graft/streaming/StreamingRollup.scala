@@ -133,7 +133,7 @@ object StreamingRollup {
       fromWindow: Int): Seq[(Int, Double)] = {
     val plen = all.length - w + 1
     if (plen <= 0) return Seq.empty
-    val minlag = math.ceil(w / 4.0).toInt
+    val minlag = graft.kernels.Core.minlag(w)
     val from = math.max(0, fromWindow)
     if (from >= plen) return Seq.empty
     val (mu, sig) = graft.kernels.MovingStats.muinvn(all, w) // sig = 1/std
@@ -179,7 +179,7 @@ object StreamingRollup {
           if (corr > best) best = corr
           j += 1
         }
-        (i, math.sqrt(math.max(2.0 * w * (1.0 - math.min(best, 1.0)), 0.0)))
+        (i, graft.kernels.Core.pearsonDist(w, math.min(best, 1.0)))
       }
     }
   }

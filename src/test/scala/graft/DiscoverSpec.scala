@@ -91,6 +91,27 @@ class DiscoverSpec extends AnyFunSuite {
     discords.foreach { case (r, c) => assert(!pmp(r)(c).isInfinite) }
   }
 
+  test("one-window pmp top-k motifs pick what mp top-k motifs picks at the same exclusion zone") {
+    // Compared on the first pick only. From the second pick on, the two
+    // entry points differ by design: mpTopKMotifs masks its neighbor
+    // profile by the suppressed profile, pmpTopKMotifs by the input row,
+    // so it can re-accept positions an earlier pick took as neighbors
+    // (q34's oracle replays the latter rule).
+    val w = 32
+    val (mp, pi) = Mpx.mpxSelf(sampledata, w)
+    val row = Skimp.skimp(sampledata, Array(w)).head
+    for (ez <- Seq(0, 8, 16)) {
+      val mpMotifs = TopK.mpTopKMotifs(sampledata, mp, pi, w, ez, k = 1)
+      val pmpMotifs = TopK.pmpTopKMotifs(sampledata, Array(row.mp), Array(row.pi),
+        Array(w), exclusionZone = Some(ez), k = 1)
+      assert(mpMotifs.length == 1 && mpMotifs.head.neighbors.nonEmpty, s"ez=$ez")
+      assert(pmpMotifs.map(m => (m.motifs, m.neighbors.toSeq)) ==
+        mpMotifs.map { case TopK.Motif((a, b), nbrs) =>
+          (((0, a), (0, b)), nbrs.toSeq.map(n => (0, n)))
+        }, s"ez=$ez")
+    }
+  }
+
   test("pick_mp projects a window row out of a PMP (utils.py:45-100)") {
     val rows = Skimp.skimp(sampledata, Array(16, 32))
     val picked = Skimp.pickMp(rows, 32, sampledata.length)

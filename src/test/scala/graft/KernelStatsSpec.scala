@@ -41,6 +41,18 @@ class KernelStatsSpec extends AnyFunSuite {
     assertAlmostEqual(Fft.fftConvolve(ts, q), Fft.slidingDotProduct(ts, q), decimal = 8)
   }
 
+  test("an FFT of 8,192+ points runs on its caller's thread: no pool thread is left alive") {
+    val poolThread = "pool-\\d+-thread-\\d+".r
+    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && poolThread.matches(t.getName)).toSet
+    val before = poolThreads()
+    val ts = Array.tabulate(1 << 15)(i => math.sin(i * 0.01))
+    val out = Fft.fftConvolve(ts, ts.slice(100, 132))
+    assert(out.length == ts.length - 31)
+    val started = (poolThreads() -- before).map(_.getName)
+    assert(started.isEmpty, s"FFT left pool threads alive: ${started.mkString(", ")}")
+  }
+
   test("mass2 (test_mass2.py:19-31)") {
     val ts = Array[Double](1, 1, 1, 2, 1, 1, 4, 5)
     val q = Array[Double](2, 1, 1, 4)
