@@ -146,11 +146,10 @@ object SparkEntry {
     }),
 
     "q02_rollup_1h_chain" -> ((s, dir) =>
-      tierRows(Rollup.rollupTier(Rollup.rollupRaw(points(s, dir), "1m"), "1h"), "hour_ts")),
+      tierRows(Rollup.rollupChain(points(s, dir), "1h").last, "hour_ts")),
 
     "q03_rollup_1d_chain" -> ((s, dir) =>
-      tierRows(Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(points(s, dir), "1m"),
-        "1h"), "1d"), "day_ts")),
+      tierRows(Rollup.rollupChain(points(s, dir), "1d").last, "day_ts")),
 
     // the 100 TB headline plan under the driver's oracle: the same 1h
     // aggregates as q02, but through the fused zero-shuffle colocated

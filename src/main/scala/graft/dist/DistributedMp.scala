@@ -42,11 +42,11 @@ object DistributedMp {
   /** The fan-out every entry point shares. `cells` expands an input row
     * into its eligible kernel calls; a row whose `size` is under
     * `splitThreshold` computes each cell with `whole`, a longer one cuts
-    * each cell into `tiles`, which are spread across tasks by the
-    * `spreadBy` columns and reduced by `merge`. `maxSeriesLen`, a
-    * caller-known upper bound on `size`, drops the tile subtree — an
-    * exchange plus a merge aggregation over zero rows — when it proves
-    * every row short.
+    * each cell into `tiles`, which are hash-spread over
+    * `defaultParallelism` partitions by the `spreadBy` columns and reduced
+    * by `merge`. `maxSeriesLen`, a caller-known upper bound on `size`,
+    * drops the tile subtree — an exchange plus a merge aggregation over
+    * zero rows — when it proves every row short.
     */
   private def fanOut[I, C, T: Encoder, O: Encoder](in: Dataset[I],
       splitThreshold: Int, maxSeriesLen: Int)(size: I => Int, cells: I => Iterator[C])(
@@ -58,10 +58,12 @@ object DistributedMp {
     val shortRows = rows.flatMap { r =>
       if (size(r) < splitThreshold) cells(r).map(whole) else Iterator.empty
     }
+    // a fixed partition count plans REPARTITION_BY_NUM, which AQE never
+    // coalesces: a few large tiles must stay spread over the cores
     if (shortOnly) shortRows
     else shortRows.union(merge(rows.flatMap { r =>
       if (size(r) < splitThreshold) Iterator.empty else cells(r).flatMap(tiles)
-    }.repartition(spreadBy.map(col): _*)))
+    }.repartition(in.sparkSession.sparkContext.defaultParallelism, spreadBy.map(col): _*)))
   }
 
   /** MPX self-join profiles for every series with length >= 2w. */

@@ -1,10 +1,10 @@
 package graft.rollup
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.{SeriesPoint, TierAgg}
 
-/** Continuous aggregates at retention tiers raw→1m→1h→1d.
+/** Continuous aggregates at the retention tiers raw→1m→1h→1d ([[Rollup.Ladder]]).
   *
   * Each tier stores the per-bucket struct (cnt, sum, min, max, first,
   * last) so the next tier re-aggregates the previous one instead of
@@ -23,8 +23,32 @@ import graft.schema.{SeriesPoint, TierAgg}
 object Rollup {
 
   val MicrosPerMin: Long = 60L * 1000000L
-  val TierStep: Map[String, Long] = Map(
-    "1m" -> MicrosPerMin, "1h" -> 60 * MicrosPerMin, "1d" -> 1440 * MicrosPerMin)
+  private val MicrosPerDay: Long = 1440 * MicrosPerMin
+
+  /** One rung of the retention ladder: its name, its bucket step in µs and
+    * how far behind the newest bucket it keeps buckets (None: forever).
+    * `table` names it under the pipeline's tiers/ directory: m1, h1, d1.
+    */
+  final case class Tier(name: String, step: Long, horizon: Option[Long]) {
+    def table: String = name.reverse
+  }
+
+  /** The retention ladder, finest first; each tier rolls up the one before
+    * it. Every tier builder iterates this one list.
+    */
+  val Ladder: Seq[Tier] = Seq(
+    Tier("1m", MicrosPerMin, Some(3 * MicrosPerDay)),
+    Tier("1h", 60 * MicrosPerMin, Some(30 * MicrosPerDay)),
+    Tier("1d", MicrosPerDay, None))
+
+  val TierStep: Map[String, Long] = Ladder.map(t => t.name -> t.step).toMap
+
+  /** The ladder from its finest tier up to and including `tier`. */
+  def ladderTo(tier: String): Seq[Tier] =
+    Ladder.take(Ladder.indexWhere(_.name == tier) + 1).ensuring(_.nonEmpty, s"unknown tier $tier")
+
+  /** A tier row's key, which is also the colocated layout's sort order. */
+  private val Key = Seq("conv_id", "kind", "bucket")
 
   /** Loud-failure guard for the colocated rollup's input contract: within a
     * partition each (conv, kind) series must arrive as ONE contiguous run
@@ -119,7 +143,7 @@ object Rollup {
     import points.sparkSession.implicits._
     val keyed = Seq($"conv_id", $"kind", align($"bucket", TierStep(tier)).as("bucket"),
       $"bucket".as("t"), $"value")
-    val byBucket = Seq($"conv_id", $"kind", $"bucket")
+    val byBucket = Key.map(col)
 
     if (saltBuckets <= 1)
       return finish(aggregate(points.select(keyed: _*).groupBy(byBucket: _*),
@@ -136,7 +160,7 @@ object Rollup {
     finish(aggregate(partial.groupBy(byBucket: _*), merge($"first_t", $"last_t")), tier)
   }
 
-  /** Chain: aggregate a finer tier into a coarser one (1m→1h, 1h→1d)
+  /** Link: aggregate a finer tier into a coarser one (1m→1h, 1h→1d)
     * without touching raw data.
     */
   def rollupTier(finer: Dataset[TierAgg], tier: String): Dataset[TierAgg] = {
@@ -146,6 +170,19 @@ object Rollup {
         .withColumn("fbucket", $"bucket") // finer bucket, for first/last order
         .groupBy($"conv_id", $"kind", align($"bucket", TierStep(tier)).as("bucket")),
       merge($"fbucket", $"fbucket")), tier)
+  }
+
+  /** The batch chain raw → … → `upTo` along the ladder: the finest tier by
+    * [[rollupRaw]] (unsalted), each coarser one by [[rollupTier]] from
+    * `stage`'s result for the tier before it — the tier itself, or a
+    * written-and-reread copy. Returns `stage`'s result for every tier.
+    */
+  def rollupChain(points: Dataset[SeriesPoint], upTo: String = Ladder.last.name,
+      stage: (Tier, Dataset[TierAgg]) => Dataset[TierAgg] = (_, tier) => tier):
+      Seq[Dataset[TierAgg]] = {
+    val rungs = ladderTo(upTo)
+    val finest = stage(rungs.head, rollupRaw(points, rungs.head.name))
+    rungs.tail.scanLeft(finest)((finer, t) => stage(t, rollupTier(finer, t.name)))
   }
 
   /** Broadcasting more touched keys than this falls back to a shuffle
@@ -212,73 +249,69 @@ object Rollup {
     // keySide recomputes it once, but only on the plausibly-backfill path
     // where that cost is noise against the job it gates.
     val deltaAgg = rollupRaw(delta, tier, saltBuckets)
-    val keys = Seq("conv_id", "kind", "bucket")
-    val touchedKeys = deltaAgg.select($"conv_id", $"kind", $"bucket")
+    val touchedKeys = deltaAgg.select(Key.map(col): _*)
     // micro-batch ingest (the designed use) broadcasts: base never
     // shuffles. A backfill-sized delta falls back to a shuffle join —
     // slower but bounded by executor memory, not the driver heap.
     val touched = keySide(delta, touchedKeys, maxBroadcastKeys, smallDeltaBytes)(touchedKeys)
-    val untouched = base.join(touched, keys, "left_anti").as[TierAgg]
-    val affected = base.join(touched, keys, "left_semi").as[TierAgg]
+    val untouched = base.join(touched, Key, "left_anti").as[TierAgg]
+    val affected = base.join(touched, Key, "left_semi").as[TierAgg]
     // src orders first/last across the two sides: the append-only
     // contract puts every base point before every delta point within a
     // bucket, so `first` comes from the base row when one exists (src 0)
     // and `last` from the delta row (src 1)
     val merged = affected.toDF().withColumn("src", lit(0))
       .unionByName(deltaAgg.toDF().withColumn("src", lit(1)))
-      .groupBy($"conv_id", $"kind", $"bucket")
+      .groupBy(Key.map(col): _*)
     untouched.unionByName(finish(aggregate(merged, merge($"src", $"src")), tier))
   }
 
-  /** Chained incremental maintenance of ALL tiers for one ingest delta:
-    * the 1m tier absorbs the delta via [[maintainTier]]; each coarser
-    * tier then REFRESHES only the buckets the delta touched, recomputed
-    * from the (already-maintained) finer tier — replacement, not
-    * addition, because a touched coarse bucket's old row already
-    * contains the finer buckets that just changed. first/last at coarse
-    * tiers come from rollupTier's fbucket ordering, so only the 1m merge
-    * needs the append-only contract.
+  /** Chained incremental maintenance of every ladder tier for one ingest
+    * delta; `bases` and the result hold the tiers in ladder order. The
+    * finest tier absorbs the delta via [[maintainTier]]; each coarser tier
+    * then REFRESHES only the buckets the delta touched, recomputed from
+    * the (already-maintained) finer tier — replacement, not addition,
+    * because a touched coarse bucket's old row already contains the finer
+    * buckets that just changed. first/last at coarse tiers come from
+    * rollupTier's fbucket ordering, so only the finest merge needs the
+    * append-only contract.
     *
     * Scale shape: no base tier ever shuffles. Every touched-key set
     * derives from the DELTA (small → broadcast); each coarse recompute
     * reads only the finer tier's affected slice — cost is bounded by
     * delta keys × tier fan-in (≤60/≤24), independent of base size.
     */
-  def maintainAllTiers(base1m: Dataset[TierAgg], base1h: Dataset[TierAgg],
-      base1d: Dataset[TierAgg], delta: Dataset[SeriesPoint],
+  def maintainAllTiers(bases: Seq[Dataset[TierAgg]], delta: Dataset[SeriesPoint],
       saltBuckets: Int = 1,
       maxBroadcastKeys: Long = MaxBroadcastKeys,
-      smallDeltaBytes: Long = SmallDeltaBytes):
-      (Dataset[TierAgg], Dataset[TierAgg], Dataset[TierAgg]) = {
-    val spark = base1m.sparkSession
+      smallDeltaBytes: Long = SmallDeltaBytes): Seq[Dataset[TierAgg]] = {
+    require(bases.length == Ladder.length, s"one base per ladder tier, got ${bases.length}")
+    val spark = delta.sparkSession
     import spark.implicits._
-    val m = maintainTier(base1m, delta, "1m", saltBuckets, maxBroadcastKeys,
-      smallDeltaBytes)
+    val finest = maintainTier(bases.head, delta, Ladder.head.name, saltBuckets,
+      maxBroadcastKeys, smallDeltaBytes)
 
     def refresh(baseCoarse: Dataset[TierAgg], finer: Dataset[TierAgg],
-        tier: String): Dataset[TierAgg] = {
-      val step = TierStep(tier)
-      val touchedKeys = delta
-        .select($"conv_id", $"kind", align($"bucket", step).as("bucket"))
-        .distinct()
+        tier: Tier): Dataset[TierAgg] = {
+      val touchedKeys =
+        delta.select($"conv_id", $"kind", align($"bucket", tier.step).as("bucket")).distinct()
       val side = keySide(delta, touchedKeys, maxBroadcastKeys, smallDeltaBytes)
-      val keys = Seq("conv_id", "kind", "bucket")
-      val untouched = baseCoarse
-        .join(side(touchedKeys), keys, "left_anti").as[TierAgg]
+      val untouched = baseCoarse.join(side(touchedKeys), Key, "left_anti").as[TierAgg]
       // affected slice of the finer tier: its rows whose COARSE bucket is
       // touched (join on the derived coarse key, finer bucket preserved)
       val affectedFiner = finer
-        .withColumn("cb", align($"bucket", step))
+        .withColumn("cb", align($"bucket", tier.step))
         .join(side(touchedKeys.toDF("conv_id", "kind", "cb")),
           Seq("conv_id", "kind", "cb"), "left_semi")
         .drop("cb").as[TierAgg]
-      untouched.unionByName(rollupTier(affectedFiner, tier))
+      untouched.unionByName(rollupTier(affectedFiner, tier.name))
     }
 
-    val h = refresh(base1h, m, "1h")
-    val d = refresh(base1d, h, "1d")
-    (m, h, d)
+    Ladder.zip(bases).tail.scanLeft(finest) { case (finer, (t, base)) => refresh(base, finer, t) }
   }
+
+  /** The colocated layout's bucket key. */
+  private val ColocatedKey = "conv_id"
 
   /** Saves `points` as table `table` at `path` in the layout
     * [[rollupAllColocated]] reads without an exchange (and its SortGuard
@@ -287,9 +320,18 @@ object Rollup {
     */
   def writeColocated(points: Dataset[SeriesPoint], buckets: Int, table: String,
       path: String): Unit =
-    points.repartition(buckets, col("conv_id"))
-      .write.bucketBy(buckets, "conv_id").sortBy("conv_id", "kind", "bucket")
+    points.repartition(buckets, col(ColocatedKey))
+      .write.bucketBy(buckets, ColocatedKey).sortBy(Key.head, Key.tail: _*)
       .option("path", path).mode("overwrite").saveAsTable(table)
+
+  /** Registers the files a [[writeColocated]] of an earlier JVM left at
+    * `path` as table `table`, in the same layout (the bucket ids are in the
+    * file names). `buckets` must be the count the files were written with.
+    */
+  def registerColocated(spark: SparkSession, buckets: Int, table: String, path: String): Unit =
+    spark.sql(s"CREATE TABLE $table (${Encoders.product[SeriesPoint].schema.toDDL}) " +
+      s"USING parquet CLUSTERED BY ($ColocatedKey) SORTED BY (${Key.mkString(", ")}) " +
+      s"INTO $buckets BUCKETS LOCATION '$path'")
 
   /** Zero-shuffle rollup for conv-bucketed sorted input: when every row of
     * a conversation lives in one partition, sorted by (conv_id, kind,
@@ -304,7 +346,7 @@ object Rollup {
   def rollupAllColocated(points: Dataset[SeriesPoint]): Dataset[TierAgg] = {
     val spark = points.sparkSession
     import spark.implicits._
-    val steps = Array("1m" -> TierStep("1m"), "1h" -> TierStep("1h"), "1d" -> TierStep("1d"))
+    val steps = Ladder.toArray
     points.mapPartitions { it =>
       new Iterator[TierAgg] {
         // one open bucket per level, zero per-row allocation: the row-level
@@ -325,7 +367,7 @@ object Rollup {
         /** flush level l into the queue and cascade into level l+1. */
         private def flush(l: Int): Unit = {
           if (conv(l) == null) return
-          queue.append(TierAgg(conv(l), kind(l), steps(l)._1, bucket(l),
+          queue.append(TierAgg(conv(l), kind(l), steps(l).name, bucket(l),
             cnt(l), sum(l), mn(l), mx(l), first(l), last(l)))
           if (l + 1 < L) merge(l + 1, conv(l), kind(l), bucket(l),
             cnt(l), sum(l), mn(l), mx(l), first(l), last(l))
@@ -337,7 +379,7 @@ object Rollup {
           */
         private def merge(l: Int, c: String, k: String, t: Long,
             n: Long, s: Double, lo: Double, hi: Double, f: Double, la: Double): Unit = {
-          val b = t - math.floorMod(t, steps(l)._2)
+          val b = t - math.floorMod(t, steps(l).step)
           if (conv(l) == null || conv(l) != c || kind(l) != k || bucket(l) != b) {
             flush(l)
             conv(l) = c; kind(l) = k; bucket(l) = b

@@ -76,24 +76,28 @@ object PipelineMain {
 
     maybeAbort("chunks_raw")
 
-    // stage 4: continuous aggregates 1m -> 1h -> 1d (chained, unsalted),
-    // then retention: coarse tiers are derived from the FULL fine tier
-    // first, after which the fine tiers keep only their horizon
-    // (1m: 3 days, 1h: 30 days, 1d: forever — the north rule's
-    // "retention drops old fine-tier buckets")
+    // stage 4: continuous aggregates along the ladder 1m -> 1h -> 1d
+    // (chained, unsalted), then retention: coarse tiers are derived from
+    // the FULL fine tier (`<tier>_full`), after which a tier with a horizon
+    // keeps the buckets within it of the newest 1m bucket
+    var retention: Option[String] = None
     val tiersPath = ledger.stage("tiers") { out =>
       val (raw, rawSeen) = Ledger.observe(points.where($"kind" === "token_len_t"))
-      val m1 = Ledger.write(Rollup.rollupRaw(raw, "1m"), s"$out/m1_full",
-        Seq(max($"bucket").as("maxBucket")))
-      val m1r = Ledger.read[TierAgg](spark, s"$out/m1_full")
-      Ledger.write(Rollup.rollupTier(m1r, "1h"), s"$out/h1_full")
-      val h1r = Ledger.read[TierAgg](spark, s"$out/h1_full")
-      Ledger.write(Rollup.rollupTier(h1r, "1d"), s"$out/d1")
-      val maxBucket = m1.long("maxBucket")
-      val day = 24L * 3600 * 1000000
-      Ledger.write(Rollup.applyRetention(m1r, maxBucket - 3 * day), s"$out/m1")
-      Ledger.write(Rollup.applyRetention(h1r, maxBucket - 30 * day), s"$out/h1")
-      (rawSeen.rows, m1.rows)
+      def fullPath(t: Rollup.Tier) = s"$out/${t.table}${if (t.horizon.isDefined) "_full" else ""}"
+      val written = scala.collection.mutable.ArrayBuffer.empty[Ledger.Observed]
+      val tiers = Rollup.rollupChain(raw, stage = (t, agg) => {
+        written += Ledger.write(agg, fullPath(t), Seq(max($"bucket").as("newest")))
+        Ledger.read[TierAgg](spark, fullPath(t))
+      })
+      val newest = written.head.long("newest")
+      val drops = for (((t, tier), full) <- Rollup.Ladder.zip(tiers).zip(written);
+          h <- t.horizon) yield {
+        val kept = Ledger.write(Rollup.applyRetention(tier, newest - h), s"$out/${t.table}")
+        s"${t.name} dropped ${full.rows - kept.rows} of ${full.rows} buckets " +
+          s"(horizon ${h / Rollup.TierStep("1d")}d)"
+      }
+      retention = Some(drops.mkString(", "))
+      (rawSeen.rows, written.head.rows)
     }
 
     maybeAbort("tiers")
@@ -105,8 +109,8 @@ object PipelineMain {
     // short branch and the tile branch). The tier label follows the kind.
     var subsequences: Option[Long] = None
     val profilesPath = ledger.stage("profiles") { out =>
-      val tierPoints = Seq("m1", "h1", "d1")
-        .map(t => Rollup.tierSeries(Ledger.read[TierAgg](spark, s"$tiersPath/$t")).toDF())
+      val tierPoints = Rollup.Ladder
+        .map(t => Rollup.tierSeries(Ledger.read[TierAgg](spark, s"$tiersPath/${t.table}")).toDF())
       // unionByName: the partitioned points table reads `kind` last
       val allPoints = (points.where($"kind".isin("token_len", "gap_s", "turn_rate")).toDF()
         +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
@@ -148,6 +152,8 @@ object PipelineMain {
     println(f"[pipeline] convs=$numConvs points=$nPoints profiles=${rowsOut("profiles")} " +
       f"subsequences=$nSubseq discovery=${rowsOut("discovery")} " +
       f"wall=${wallS}%.1fs points/s=${nPoints / wallS}%.0f")
+    // counted on this run's tier writes (the run that wrote resumed tiers reported theirs)
+    retention.foreach(r => println(s"[pipeline] retention: $r"))
   }
 
   def main(args: Array[String]): Unit = {

@@ -2,6 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.rollup.Rollup
 
 /** Kill-resume evidence for the checkpoint ledger: run the pipeline to
   * completion in one directory, crash a second run after the `tiers`
@@ -68,7 +69,7 @@ object ResumeBench {
     val untouched = completed.filter(s => mtime(s"$dirKill/$s") == mtimesBefore(s))
     val hashesEqual = (completed.filterNot(_ == "tiers") ++ finals).forall { s =>
       contentHash(spark, s"$dirFresh/$s") == contentHash(spark, s"$dirKill/$s")
-    } && Seq("m1", "h1", "d1").forall { t =>
+    } && Rollup.Ladder.map(_.table).forall { t =>
       contentHash(spark, s"$dirFresh/tiers/$t") == contentHash(spark, s"$dirKill/tiers/$t")
     }
 

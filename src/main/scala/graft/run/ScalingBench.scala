@@ -123,17 +123,8 @@ object ScalingBench {
     val writeSec = if (Files.exists(Paths.get(path, "_SUCCESS"))) Double.NaN
       else Harness.timed(Rollup.writeColocated(graft.ingest.TranscriptGen
         .generatePoints(spark, c.convs, turnsScale = c.turnsScale), c.buckets, table, path))._2
-    // the data survives JVM restarts but the in-memory catalog does not;
-    // an external bucketed table keeps the zero-exchange bucketed scan
-    // (the files carry their bucket ids in their names)
-    if (!spark.catalog.tableExists(table))
-      spark.sql(
-        s"""CREATE TABLE $table
-           |(conv_id STRING, kind STRING, bucket BIGINT, value DOUBLE)
-           |USING parquet
-           |CLUSTERED BY (conv_id) SORTED BY (conv_id, kind, bucket)
-           |INTO ${c.buckets} BUCKETS
-           |LOCATION '$path'""".stripMargin)
+    // the data survives JVM restarts but the in-memory catalog does not
+    if (!spark.catalog.tableExists(table)) Rollup.registerColocated(spark, c.buckets, table, path)
     (table, writeSec)
   }
 

@@ -1,18 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.rollup.Rollup
 import graft.schema.Transcript
 
-/** Structured-Streaming variant of the 1m tier: continuous per-minute
-  * aggregates over a transcript stream with event-time watermarking for
-  * late turns.
+/** Structured-Streaming variant of the tiers: continuous aggregates along
+  * the retention ladder over a transcript stream, with event-time
+  * watermarking for late turns.
   *
   * The batch reference has no streaming (pure arrays); this is the
   * engine's continuous-ingest path: readStream → watermark → windowed
-  * aggregate → append sink. Late rows inside the watermark update their
+  * aggregates → append sink. Late rows inside the watermark update their
   * minute bucket; rows later than `lateness` are dropped — the batch
   * backfill (PipelineMain) reconciles them on the next run via the
   * ledger.
@@ -21,73 +21,29 @@ object StreamingRollup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingRollup")
 
-  /** Per-minute continuous aggregate over a streaming transcript source,
-    * one row per (conv_id, bucket start) with the TierAgg measures.
+  /** The continuous-aggregate cascade raw → … → `upTo` along
+    * [[Rollup.Ladder]] as ONE streaming query with one stateful operator
+    * per tier: flat rows (conv_id, bucket start in epoch µs, the TierAgg
+    * measures of the turns' text length). Each coarser tier windows over
+    * the finer tier's window column, which is what lets the engine
+    * propagate the event-time watermark: a coarse bucket finalizes exactly
+    * when its last finer bucket can no longer change. The measures merge
+    * as in the batch tiers, so a finalized row equals the batch rollup over
+    * the same accepted rows — gated by StreamingSpec across micro-batches.
     */
-  def minuteTier(stream: Dataset[Transcript], lateness: String = "10 minutes"): DataFrame =
-    flat(minuteTierWindowed(stream, lateness), "w1m")
-
-  /** The 1m tier KEEPING the event-time window struct, so a second
-    * stateful aggregation can chain on it (Spark's multiple-stateful-
-    * operator support propagates the watermark through the first window
-    * aggregate when the next groupBy windows over the window column
-    * itself). The value is the turn's text length.
-    */
-  def minuteTierWindowed(stream: Dataset[Transcript],
+  def cascade(stream: Dataset[Transcript], upTo: String,
       lateness: String = "10 minutes"): DataFrame = {
     import stream.sparkSession.implicits._
-    Rollup.aggregate(
-      stream.withWatermark("ts", lateness)
-        .groupBy($"conv_id", window($"ts", "1 minute").as("w1m")),
+    def bucketOf(time: Column, t: Rollup.Tier) = window(time, s"${t.step} microseconds").as("w")
+    val rungs = Rollup.ladderTo(upTo)
+    val finest = Rollup.aggregate(
+      stream.withWatermark("ts", lateness).groupBy($"conv_id", bucketOf($"ts", rungs.head)),
       Rollup.fold(length($"text").cast("double"), $"ts"))
+    rungs.tail.foldLeft(finest) { (finer, t) =>
+      Rollup.aggregate(finer.groupBy($"conv_id", bucketOf($"w", t)),
+        Rollup.merge($"w.start", $"w.start"))
+    }.select($"conv_id" +: unix_micros($"w.start").as("bucket") +: Rollup.Measures.map(col): _*)
   }
-
-  /** 1h tier chained DIRECTLY on the streaming 1m aggregate — the
-    * continuous-aggregate cascade (raw→1m→1h) as ONE streaming query with
-    * two stateful operators, instead of a batch backfill over the 1m
-    * sink. `window($"w1m", "1 hour")` windows over the minute window
-    * column, which is what lets the engine propagate the event-time
-    * watermark through the first aggregate: an hour bucket finalizes
-    * exactly when its last minute bucket can no longer change. The
-    * measures merge as in the batch tiers (first/last ordered by minute
-    * start), so a finalized 1h row is identical whether fed by streaming
-    * 1m output or a batch rollup over the same accepted rows — gated by
-    * StreamingSpec across micro-batch boundaries.
-    */
-  def hourTierChained(m1Windowed: DataFrame): DataFrame =
-    flat(hourTierWindowed(m1Windowed), "w1h")
-
-  /** The 1h tier KEEPING its window struct — the middle link of the
-    * three-stateful-operator cascade: a third aggregate can window over
-    * `w1h` exactly as this one windows over `w1m`.
-    */
-  def hourTierWindowed(m1Windowed: DataFrame): DataFrame =
-    Rollup.aggregate(
-      m1Windowed.groupBy(col("conv_id"), window(col("w1m"), "1 hour").as("w1h")),
-      Rollup.merge(col("w1m.start"), col("w1m.start")))
-
-  /** 1d tier chained on the streaming 1h aggregate: the FULL continuous
-    * cascade raw→1m→1h→1d as ONE streaming query with THREE stateful
-    * operators. Each link windows over the previous link's event-time
-    * window column (`window(w1h, "1 day")`), which is what lets the
-    * engine propagate the watermark through every aggregate: a day
-    * bucket finalizes when its last hour bucket can no longer change,
-    * which happens when that hour's last minute is sealed. All six
-    * measures are mergeable partials, so a finalized 1d row is identical
-    * to the batch rollup over the same accepted rows — gated across
-    * micro-batch boundaries in StreamingSpec.
-    */
-  def dayTierChained(h1Windowed: DataFrame): DataFrame =
-    flat(Rollup.aggregate(
-      h1Windowed.groupBy(col("conv_id"), window(col("w1h"), "1 day").as("w1d")),
-      Rollup.merge(col("w1h.start"), col("w1h.start"))), "w1d")
-
-  /** A windowed tier as flat rows: the window struct becomes its start in
-    * epoch µs, the TierAgg bucket key.
-    */
-  private def flat(windowed: DataFrame, w: String): DataFrame =
-    windowed.select(col("conv_id") +: unix_micros(col(s"$w.start")).as("bucket") +:
-      Rollup.Measures.map(col): _*)
 
   /** Per-conversation retained series for the stateful streaming path:
     * `offset` keeps window positions stable across retention trims;
@@ -203,7 +159,7 @@ object StreamingRollup {
     * equal-time points are all accepted in sorted order). Feed this
     * operator from a watermarked upstream (e.g. the 1m tier) or an
     * in-order source; dropped stragglers are reconciled by the batch
-    * backfill, like minuteTier's. Note the state schema is versioned by
+    * backfill, like the tier cascade's. Note the state schema is versioned by
     * this library — resuming a checkpoint written by an older build that
     * lacked the high-water fields requires a fresh checkpoint.
     */

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{lit, max, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.rollup.Rollup
 import graft.run.{Ledger, PipelineMain}
+import graft.schema.TierAgg
 
 /** Checkpoint-resume semantics of the per-stage lineage ledger (north
   * rule: runs resumable from checkpoint with per-partition lineage +
@@ -115,10 +118,11 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft_observed").toString
     val metrics = new graft.run.Harness.StageMetrics(spark)
+    var log = ""
     val jobs =
       try {
         val before = metrics.drain()
-        PipelineMain.run(spark, 15, out, 16, resume = false)
+        log = captured(PipelineMain.run(spark, 15, out, 16, resume = false))
         metrics.drain().since(before).jobs
       } finally metrics.close()
 
@@ -136,6 +140,28 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // measured 29 at local[2] (76 before counts came from the writes);
     // re-reads, inference or summary jobs creeping back push it over
     assert(jobs <= 32, s"pipeline ran $jobs Spark jobs")
+
+    // retention along the ladder: a tier with a horizon keeps exactly its
+    // full table's buckets within the horizon of the newest 1m bucket, and
+    // the reported drop is the row difference; the horizonless 1d tier
+    // keeps every day the full 1h tier covers
+    def tier(t: String) = Ledger.read[TierAgg](spark, s"$out/tiers/$t")
+    val newest = tier("m1_full").agg(max($"bucket")).as[Long].first()
+    for (t <- Rollup.Ladder; h <- t.horizon) {
+      val full = tier(s"${t.table}_full")
+      assert(tier(t.table).collect().toSet == full.where($"bucket" >= newest - h).collect().toSet,
+        s"${t.table} is not ${t.table}_full cut at its horizon")
+      val reported = raw"\[pipeline\] retention: .*${t.name} dropped (\d+) of (\d+) buckets".r
+        .findFirstMatchIn(log).getOrElse(fail(s"no ${t.name} drop reported:\n$log"))
+      assert(reported.group(2).toLong == full.count())
+      assert(reported.group(1).toLong == full.count() - fresh(s"tiers/${t.table}"))
+      if (t.name == "1m") assert(reported.group(1).toLong > 0, "fixture must drop 1m buckets")
+    }
+    val days = Rollup.TierStep("1d")
+    assert(tier("d1").select($"conv_id", $"kind", $"bucket").as[(String, String, Long)]
+      .collect().toSet == tier("h1_full")
+      .select($"conv_id", $"kind", ($"bucket" - pmod($"bucket", lit(days))).as("bucket"))
+      .as[(String, String, Long)].collect().toSet, "d1 must be untrimmed")
   }
 
   test("PipelineMain kill-resume: a run crashed mid-pipeline resumes to " +

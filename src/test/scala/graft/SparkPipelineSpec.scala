@@ -226,14 +226,18 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("plan shape: a caller-proven all-short input plans no shuffle; the " +
       "tile path keeps its spread and merge exchanges") {
     import spark.implicits._
-    def shuffles(d: org.apache.spark.sql.Dataset[_]): Int =
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def exchanges(d: org.apache.spark.sql.Dataset[_]): Seq[ShuffleExchangeExec] =
       (d.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan
         case p => p
-      }).collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }.size
+      }).collect { case e: ShuffleExchangeExec => e }
+    def shuffles(d: org.apache.spark.sql.Dataset[_]): Int = exchanges(d).size
+    // the tile spread alone has a fixed partition count, so AQE cannot
+    // coalesce a few large tiles into one task
+    def fixedCount(d: org.apache.spark.sql.Dataset[_]): Int =
+      exchanges(d).count(_.shuffleOrigin == REPARTITION_BY_NUM)
     val ds = spark.createDataset(Seq(SeriesRow("a", "v", 0L, sampledata)))
     val pairs = spark.createDataset(Seq(
       DistributedMp.AbPair("x", "y", sampledata, sampledata.take(300))))
@@ -243,6 +247,9 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // tile spread + segment merge; the AB join regroups its two sides
     assert(shuffles(DistributedMp.mpxProfiles(ds, 32, "raw")) == 2)
     assert(shuffles(DistributedMp.mpxAbProfiles(pairs, 32)) == 3)
+    assert(fixedCount(DistributedMp.mpxProfiles(ds, 32, "raw")) == 1)
+    assert(fixedCount(DistributedMp.mpxAbProfiles(pairs, 32)) == 1)
+    assert(fixedCount(DistributedMp.stompProfiles(ds, 32, "raw")) == 1)
   }
 
   test("distributed tiled snippets equal the single-task kernel (indices + " +
@@ -576,7 +583,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base1m = Rollup.rollupRaw(basePts, "1m")
     val base1h = Rollup.rollupTier(base1m, "1h")
     val base1d = Rollup.rollupTier(base1h, "1d")
-    val (m, h, d) = Rollup.maintainAllTiers(base1m, base1h, base1d,
+    val Seq(m, h, d) = Rollup.maintainAllTiers(Seq(base1m, base1h, base1d),
       raw.where($"bucket" >= cut))
     val full1m = Rollup.rollupRaw(raw, "1m")
     val full1h = Rollup.rollupTier(full1m, "1h")
@@ -683,7 +690,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // maintainAllTiers under the same forced threshold: all tiers exact
     val base1h = Rollup.rollupTier(base, "1h")
     val base1d = Rollup.rollupTier(base1h, "1d")
-    val (m2, h2, d2) = Rollup.maintainAllTiers(base, base1h, base1d, delta,
+    val Seq(m2, h2, d2) = Rollup.maintainAllTiers(Seq(base, base1h, base1d), delta,
       maxBroadcastKeys = 1L, smallDeltaBytes = 0L)
     val full1h = Rollup.rollupTier(Rollup.rollupRaw(raw, "1m"), "1h")
     val full1d = Rollup.rollupTier(full1h, "1d")

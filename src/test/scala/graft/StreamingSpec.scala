@@ -50,7 +50,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val source = MemoryStream[Transcript]
     source.addData(rows)
-    val tier = StreamingRollup.minuteTier(source.toDS())
+    val tier = StreamingRollup.cascade(source.toDS(), "1m")
     val cp = java.nio.file.Files.createTempDirectory("graft_stream_cp").toString
     val q = StreamingRollup.start(tier, "memory", None, "m1_stream", cp)
     q.awaitTermination()
@@ -77,8 +77,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       TranscriptGen.genConversation(42L, 8)).sortBy(_.ts.getTime)
 
     val source = MemoryStream[Transcript]
-    val h1 = StreamingRollup.hourTierChained(
-      StreamingRollup.minuteTierWindowed(source.toDS()))
+    val h1 = StreamingRollup.cascade(source.toDS(), "1h")
     val cp = java.nio.file.Files.createTempDirectory("graft_h1_cp").toString
     val q = h1.writeStream.outputMode("append").format("memory")
       .queryName("h1_chained").option("checkpointLocation", cp).start()
@@ -126,9 +125,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = base :+ sentinel
 
     val source = MemoryStream[Transcript]
-    val d1 = StreamingRollup.dayTierChained(
-      StreamingRollup.hourTierWindowed(
-        StreamingRollup.minuteTierWindowed(source.toDS())))
+    val d1 = StreamingRollup.cascade(source.toDS(), "1d")
     val cp = java.nio.file.Files.createTempDirectory("graft_d1_cp").toString
     val q = d1.writeStream.outputMode("append").format("memory")
       .queryName("d1_chained").option("checkpointLocation", cp).start()
