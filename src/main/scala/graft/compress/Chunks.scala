@@ -5,7 +5,8 @@ import graft.schema.SeriesPoint
 
 /** Compressed per-(conversation, kind) chunk structs: Gorilla XOR value
   * bytes + delta-of-delta timestamp bytes, at most `maxPoints` points per
-  * chunk so a single hot conversation still splits across tasks.
+  * chunk. The cap bounds a chunk's size, not a task's: `encode` groups by
+  * (conv, kind) and sorts each whole series in one task.
   */
 final case class SeriesChunk(
     conv_id: String,

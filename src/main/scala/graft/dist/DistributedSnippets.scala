@@ -15,7 +15,7 @@ import graft.kernels.{MpDist, Snippets}
   * depends only on ts[i .. i+size-2] (the column minima window and the
   * row moving-min window both end there) plus the size-1-point candidate.
   * So the fan-out axis is (candidate × tile-group): each task receives a
-  * slice of ≤ tilesPerTask·tileSize+size-2 points and one candidate —
+  * slice of ≤ TilesPerTask·tileSize+size-2 points and one candidate —
   * sub-linear task input, like DistributedMp's halo'd MP tiles — and emits
   * one dv chunk per tileSize tile, each built from a rolling-diagonal
   * exact-dot distance matrix (MpDist.dotDistanceMatrix — no per-row FFT
@@ -34,11 +34,14 @@ import graft.kernels.{MpDist, Snippets}
   */
 object DistributedSnippets {
 
+  /** tileSize tiles per (candidate, tile-group) task. */
+  private val TilesPerTask = 4
+
   final case class SnippetRow(conv_id: String, rank: Int, index: Long,
       fraction: Double)
 
   /** One (candidate, tile-group) task: `tsSlice` covers dv offsets
-    * [g0, g0 + tilesPerTask*tileSize) plus the size-2 halo; `cand` is the
+    * [g0, g0 + TilesPerTask*tileSize) plus the size-2 halo; `cand` is the
     * size-1-point snippet candidate at global offset ci*size. The task
     * still emits one DvChunk per tileSize tile (the greedy-selection rounds
     * downstream are keyed on per-tile t0); grouping several tiles per task
@@ -51,13 +54,12 @@ object DistributedSnippets {
   final case class DvChunk(conv_id: String, ci: Int, t0: Int,
       dv: Array[Double])
 
-  private def tileGen(s: SeriesRow, size: Int, tileSize: Int,
-      tilesPerTask: Int): Iterator[SnipTile] = {
+  private def tileGen(s: SeriesRow, size: Int, tileSize: Int): Iterator[SnipTile] = {
     if (s.values.length < 2 * size) return Iterator.empty
     val padded = Snippets.pad(s.values, size)
     val padlen = padded.length
     val dvLen = padlen - size + 2 // mpdistVector output length, |tsB| = size-1
-    val span = tileSize * tilesPerTask
+    val span = tileSize * TilesPerTask
     val cands = Array.range(0, padlen - size, size)
     for {
       ci <- cands.indices.iterator
@@ -96,12 +98,10 @@ object DistributedSnippets {
       fraction: Double, neighbors: Array[Long])
 
   def snippets(series: Dataset[SeriesRow], size: Int, numSnippets: Int = 2,
-      windowSize0: Int = 0, tileSize: Int = 1 << 14,
-      tilesPerTask: Int = 4): Dataset[SnippetRow] = {
+      windowSize0: Int = 0, tileSize: Int = 1 << 14): Dataset[SnippetRow] = {
     val spark = series.sparkSession
     import spark.implicits._
-    core(series, size, numSnippets, windowSize0, tileSize, tilesPerTask,
-        withNeighbors = false)
+    core(series, size, numSnippets, windowSize0, tileSize, withNeighbors = false)
       .select($"conv_id", $"rank", $"index", $"fraction")
       .as[SnippetRow]
   }
@@ -114,20 +114,17 @@ object DistributedSnippets {
     * (collect + flatten + sort), never on the driver.
     */
   def snippetsWithNeighbors(series: Dataset[SeriesRow], size: Int,
-      numSnippets: Int = 2, windowSize0: Int = 0, tileSize: Int = 1 << 14,
-      tilesPerTask: Int = 4): Dataset[SnippetNbrRow] = {
+      numSnippets: Int = 2, windowSize0: Int = 0,
+      tileSize: Int = 1 << 14): Dataset[SnippetNbrRow] = {
     val spark = series.sparkSession
     import spark.implicits._
-    core(series, size, numSnippets, windowSize0, tileSize, tilesPerTask,
-        withNeighbors = true)
+    core(series, size, numSnippets, windowSize0, tileSize, withNeighbors = true)
       .as[SnippetNbrRow]
   }
 
   private def core(series: Dataset[SeriesRow], size: Int, numSnippets: Int,
-      windowSize0: Int, tileSize: Int, tilesPerTask: Int,
-      withNeighbors: Boolean): DataFrame = {
+      windowSize0: Int, tileSize: Int, withNeighbors: Boolean): DataFrame = {
     require(size >= 4, "snippet_size must be an integer >= 4")
-    require(tilesPerTask >= 1, "tilesPerTask must be >= 1")
     val w = Snippets.windowSize(size, windowSize0)
     require(w < size, "window_size must be smaller than snippet_size")
     val spark = series.sparkSession
@@ -146,7 +143,7 @@ object DistributedSnippets {
     // task and stalls the stage on stragglers
     val groupParts = spark.sparkContext.defaultParallelism * 8
     val chunks = graft.util.StageCache.persist(
-      series.flatMap(s => tileGen(s, size, tileSize, tilesPerTask))
+      series.flatMap(s => tileGen(s, size, tileSize))
         .repartition(groupParts, $"conv_id", $"ci", $"g0")
         .flatMap(t => groupChunks(t, w, size, tileSize)))
 

@@ -408,12 +408,16 @@ object Rollup {
     }
   }
 
+  private val TierKindSep = "@"
+  /** Whether a series kind is a tier's, `<kind>@<tier>` ([[tierSeries]]). */
+  def isTierKind(kind: Column): Column = kind.contains(TierKindSep)
+
   /** Tier value series (bucket mean) for the per-tier matrix profiles. */
   def tierSeries(tiers: Dataset[TierAgg]): Dataset[SeriesPoint] = {
     val spark = tiers.sparkSession
     import spark.implicits._
     tiers.select($"conv_id",
-      concat($"kind", lit("@"), $"tier").as("kind"),
+      concat($"kind", lit(TierKindSep), $"tier").as("kind"),
       $"bucket", ($"sum" / $"cnt").as("value")).as[SeriesPoint]
   }
 

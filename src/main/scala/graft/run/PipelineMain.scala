@@ -50,20 +50,12 @@ object PipelineMain {
     maybeAbort("transcripts")
     val transcripts = Ledger.read[Transcript](spark, transcriptsPath)
 
-    // stage 2: derived series points (time-indexed for rollup, position-
-    // indexed token_len/gap_s for golden-gated profiles); every transcript
-    // turn yields exactly one token_len_t point, so that kind's count is
-    // the stage's input count
+    // stage 2: derived series points (Derive.series); every transcript turn
+    // yields exactly one token_len_t point, so that kind's count is the
+    // stage's input count
     val pointsPath = ledger.stage("series_points") { out =>
-      val timed = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
-        unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-        .as[SeriesPoint]
-      val tok = Derive.tokenLen(transcripts)
-      val gap = Derive.gapSeconds(transcripts)
-      val rate = Derive.gapFill(Derive.turnRate(transcripts), Rollup.MicrosPerMin, 0.0)
-      val all = timed.union(tok).union(gap).union(rate)
-      val written = Ledger.write(all, out,
-        Seq(sum(($"kind" === "token_len_t").cast("long")).as("turns")), partitionBy = Seq("kind"))
+      val written = Ledger.write(Derive.series(transcripts), out,
+        Seq(sum(($"kind" === Derive.TokenLenT).cast("long")).as("turns")), partitionBy = Seq("kind"))
       (written.long("turns"), written.rows)
     }
     maybeAbort("series_points")
@@ -71,7 +63,7 @@ object PipelineMain {
 
     // stage 3: Gorilla-compressed chunk structs for the raw tier
     ledger.stage("chunks_raw") { out =>
-      (0L, Ledger.write(Chunks.encode(points.where($"kind" === "token_len_t")), out).rows)
+      (0L, Ledger.write(Chunks.encode(points.where($"kind" === Derive.TokenLenT)), out).rows)
     }
 
     maybeAbort("chunks_raw")
@@ -82,7 +74,7 @@ object PipelineMain {
     // keeps the buckets within it of the newest 1m bucket
     var retention: Option[String] = None
     val tiersPath = ledger.stage("tiers") { out =>
-      val (raw, rawSeen) = Ledger.observe(points.where($"kind" === "token_len_t"))
+      val (raw, rawSeen) = Ledger.observe(points.where($"kind" === Derive.TokenLenT))
       def fullPath(t: Rollup.Tier) = s"$out/${t.table}${if (t.horizon.isDefined) "_full" else ""}"
       val written = scala.collection.mutable.ArrayBuffer.empty[Ledger.Observed]
       val tiers = Rollup.rollupChain(raw, stage = (t, agg) => {
@@ -112,13 +104,13 @@ object PipelineMain {
       val tierPoints = Rollup.Ladder
         .map(t => Rollup.tierSeries(Ledger.read[TierAgg](spark, s"$tiersPath/${t.table}")).toDF())
       // unionByName: the partitioned points table reads `kind` last
-      val allPoints = (points.where($"kind".isin("token_len", "gap_s", "turn_rate")).toDF()
-        +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
+      val rawKinds = points.where($"kind".isin(Derive.TokenLen, Derive.GapS, Derive.TurnRate))
+      val allPoints = (rawKinds.toDF() +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
       val series = Derive.assemble(allPoints)
         .map { case (c, k, s, v) => SeriesRow(c, k, s, v) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val profiles = DistributedMp.mpxProfiles(series, w, "raw")
-        .withColumn("tier", when($"kind".contains("@"), lit("tier")).otherwise(lit("raw")))
+        .withColumn("tier", when(Rollup.isTierKind($"kind"), lit("tier")).otherwise(lit("raw")))
         .as[MpProfileRow]
       val written = Ledger.write(profiles, out, Seq(sum(size($"mp")).as("subsequences")))
       series.unpersist()

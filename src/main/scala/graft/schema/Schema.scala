@@ -20,7 +20,7 @@ final case class Transcript(
   */
 final case class SeriesPoint(
     conv_id: String,
-    kind: String, // token_len | gap_s | turn_rate
+    kind: String, // a Derive kind, or `<kind>@<tier>` for a tier series
     bucket: Long,
     value: Double)
 

@@ -1,8 +1,9 @@
 package graft.series
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.rollup.Rollup
 import graft.schema.{SeriesPoint, Transcript}
 
 /** Per-conversation series derivation from the transcript table.
@@ -17,34 +18,40 @@ import graft.schema.{SeriesPoint, Transcript}
   */
 object Derive {
 
-  private val turnOrder = Window.partitionBy("conv_id").orderBy("turn_idx")
-
-  /** Position-indexed token-length series: value = length(text) at
-    * bucket = turn_idx.
+  /** The stored series kinds: time-indexed `token_len_t` (bucket = epoch
+    * µs) feeds the tiers; position-indexed `token_len` and `gap_s` (bucket
+    * = turn index) and the gap-filled `turn_rate` feed the profiles.
     */
-  def tokenLen(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
+  val TokenLenT = "token_len_t"
+  val TokenLen = "token_len"
+  val GapS = "gap_s"
+  val TurnRate = "turn_rate"
+
+  /** A turn's token length, the value of both token-length kinds. */
+  val tokenLength: Column = length(col("text")).cast("double")
+
+  /** Every stored series: the per-turn kinds and the gap-filled turn rate. */
+  def series(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] =
+    perTurn(transcripts).union(gapFill(turnRate(transcripts), Rollup.MicrosPerMin, 0.0))
+
+  /** The per-turn kinds in one scan and one `lag` over the turn order: both
+    * token-length kinds, and `gap_s` (value_i = ts_i − ts_{i−1} in seconds
+    * at µs precision, bucket i − 1; a conversation's first turn has none).
+    */
+  def perTurn(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
     val spark = transcripts.sparkSession
     import spark.implicits._
+    def point(kind: String, bucket: Column, value: Column) =
+      struct(lit(kind).as("kind"), bucket.cast("long").as("bucket"), value.as("value"))
     transcripts
-      .select($"conv_id", lit("token_len").as("kind"),
-        $"turn_idx".cast("long").as("bucket"),
-        length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
-  }
-
-  /** Position-indexed inter-turn gap series in seconds:
-    * value_i = (ts_i - ts_{i-1}) for i >= 1, at µs precision.
-    */
-  def gapSeconds(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
-    val spark = transcripts.sparkSession
-    import spark.implicits._
-    transcripts
-      .select($"conv_id", $"turn_idx", $"ts")
-      .withColumn("prev_ts", lag($"ts", 1).over(turnOrder))
-      .where($"prev_ts".isNotNull)
-      .select($"conv_id", lit("gap_s").as("kind"),
-        ($"turn_idx" - 1).cast("long").as("bucket"),
-        (unix_micros($"ts") - unix_micros($"prev_ts")).cast("double") / 1e6 as "value")
+      .select($"conv_id", $"turn_idx", $"ts", tokenLength.as("len"),
+        lag($"ts", 1).over(Window.partitionBy("conv_id").orderBy("turn_idx")).as("prev_ts"))
+      .select($"conv_id", explode(array_compact(array(
+        point(TokenLenT, unix_micros($"ts"), $"len"),
+        point(TokenLen, $"turn_idx", $"len"),
+        when($"prev_ts".isNotNull, point(GapS, $"turn_idx" - 1,
+          (unix_micros($"ts") - unix_micros($"prev_ts")).cast("double") / 1e6))))).as("p"))
+      .select($"conv_id", $"p.kind", $"p.bucket", $"p.value")
       .as[SeriesPoint]
   }
 
@@ -59,7 +66,7 @@ object Derive {
       .groupBy($"conv_id",
         (unix_micros(date_trunc("minute", $"ts"))).as("bucket"))
       .agg(count(lit(1)).cast("double").as("value"))
-      .select($"conv_id", lit("turn_rate").as("kind"), $"bucket", $"value")
+      .select($"conv_id", lit(TurnRate).as("kind"), $"bucket", $"value")
       .as[SeriesPoint]
   }
 
@@ -201,7 +208,7 @@ object Derive {
 
   /** Assemble per-conversation contiguous value arrays ordered by bucket —
     * the Dataset ↔ kernel boundary. Returns (conv_id, kind, startBucket,
-    * step, values).
+    * values).
     */
   def assemble(points: Dataset[SeriesPoint]): Dataset[(String, String, Long, Array[Double])] = {
     val spark = points.sparkSession

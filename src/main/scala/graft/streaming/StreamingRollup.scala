@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.rollup.Rollup
 import graft.schema.Transcript
+import graft.series.Derive
 
 /** Structured-Streaming variant of the tiers: continuous aggregates along
   * the retention ladder over a transcript stream, with event-time
@@ -38,7 +39,7 @@ object StreamingRollup {
     val rungs = Rollup.ladderTo(upTo)
     val finest = Rollup.aggregate(
       stream.withWatermark("ts", lateness).groupBy($"conv_id", bucketOf($"ts", rungs.head)),
-      Rollup.fold(length($"text").cast("double"), $"ts"))
+      Rollup.fold(Derive.tokenLength, $"ts"))
     rungs.tail.foldLeft(finest) { (finer, t) =>
       Rollup.aggregate(finer.groupBy($"conv_id", bucketOf($"w", t)),
         Rollup.merge($"w.start", $"w.start"))

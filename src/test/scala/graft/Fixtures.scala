@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+import graft.schema.{SeriesPoint, Transcript}
+import graft.series.Derive
+
 /** Golden fixture loaders (files copied verbatim from the reference's
-  * tests/ directory, see FIXTURES.md §2).
+  * tests/ directory, see FIXTURES.md §2), and the rollup input the specs
+  * derive from transcripts.
   */
 object Fixtures {
   def load(name: String): Array[Double] = {
@@ -13,6 +19,10 @@ object Fixtures {
   }
 
   lazy val sampledata: Array[Double] = load("sampledata.txt")
+
+  /** The `token_len_t` series the pipeline rolls into tiers. */
+  def tokenLenT(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] =
+    Derive.perTurn(transcripts).where(col("kind") === Derive.TokenLenT)
 
   def assertAlmostEqual(actual: Array[Double], desired: Array[Double],
       decimal: Int = 7): Unit = {

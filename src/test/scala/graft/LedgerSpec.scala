@@ -7,6 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.rollup.Rollup
 import graft.run.{Ledger, PipelineMain}
 import graft.schema.TierAgg
+import graft.series.Derive
 
 /** Checkpoint-resume semantics of the per-stage lineage ledger (north
   * rule: runs resumable from checkpoint with per-partition lineage +
@@ -135,8 +136,14 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
         "tiers" -> "tiers/m1_full", "profiles" -> "profiles", "discovery" -> "discovery"))
       assert(counts(stage)._2 == fresh(table), s"$stage rowsOut")
     assert(counts("series_points")._1 == fresh("transcripts"))
-    assert(counts("tiers")._1 == spark.read.parquet(s"$out/series_points")
-      .where($"kind" === "token_len_t").count())
+    // the derivation's shape: each token-length kind has a point per turn,
+    // gap_s one per turn after its conversation's first
+    val kinds = spark.read.parquet(s"$out/series_points").groupBy($"kind").count()
+      .as[(String, Long)].collect().toMap
+    val convs = spark.read.parquet(s"$out/transcripts").select($"conv_id").distinct().count()
+    assert(Seq(kinds(Derive.TokenLenT), kinds(Derive.TokenLen), kinds(Derive.GapS) + convs)
+      .forall(_ == counts("series_points")._1), kinds)
+    assert(counts("tiers")._1 == kinds(Derive.TokenLenT))
     // measured 29 at local[2] (76 before counts came from the writes);
     // re-reads, inference or summary jobs creeping back push it over
     assert(jobs <= 32, s"pipeline ran $jobs Spark jobs")

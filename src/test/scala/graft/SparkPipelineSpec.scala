@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -29,6 +31,12 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** A Dataset's physical plan before AQE re-plans it. */
+  private def physical(ds: Dataset[_]): SparkPlan = ds.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case p => p
+  }
+
   test("generator is deterministic and stable under partitioning") {
     import spark.implicits._
     val a = TranscriptGen.generate(spark, 20).orderBy("conv_id", "turn_idx").collect()
@@ -44,8 +52,15 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipeline golden gate: c_sample gap series -> mpx matches reference goldens") {
     import spark.implicits._
-    val transcripts = spark.createDataset(TranscriptGen.fixtureConversations(42L))
-    val gap = Derive.gapSeconds(transcripts.filter($"conv_id" === "c_sample"))
+    // a stored transcript table: the per-turn kinds come from one scan of
+    // it, and the stored series add one more, for the turn rate
+    val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
+    spark.createDataset(TranscriptGen.fixtureConversations(42L)).write.parquet(s"$dir/t")
+    val transcripts = spark.read.parquet(s"$dir/t").as[Transcript]
+    def scans(ds: Dataset[_]): Int = physical(ds).collect { case s: FileSourceScanExec => s }.size
+    assert(scans(Derive.perTurn(transcripts)) == 1 && scans(Derive.series(transcripts)) == 2)
+    val gap = Derive.perTurn(transcripts.filter($"conv_id" === "c_sample"))
+      .where($"kind" === Derive.GapS)
     val series = Derive.assemble(gap).collect()
     assert(series.length == 1)
     val values = series.head._4
@@ -106,9 +121,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "retention: fine tiers keep short horizons)") {
     import spark.implicits._
     val transcripts = spark.createDataset(TranscriptGen.fixtureConversations(42L))
-    val pts = transcripts.select($"conv_id", lit("t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val pts = tokenLenT(transcripts)
     val m1 = Rollup.rollupRaw(pts, "1m")
     val all = m1.collect()
     val cutoff = all.map(_.bucket).sorted.apply(all.length / 2)
@@ -327,10 +340,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a bucketed+sorted table (the 100 TB layout) feeds the zero-shuffle " +
       "colocated rollup straight from storage") {
     import spark.implicits._
-    val fromText = TranscriptGen.generate(spark, 30)
-      .select($"conv_id", lit("token_len_t").as("kind"),
-        unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val fromText = tokenLenT(TranscriptGen.generate(spark, 30))
     for (raw <- Seq(fromText, TranscriptGen.generatePoints(spark, 40))) {
       // destroy any incidental clustering, then write the engine's scale
       // layout: bucket(conv_id) with one file per bucket (repartition by
@@ -471,9 +481,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("rollup tiers chain losslessly and salting is invariant") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 10)
-    val raw = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val raw = tokenLenT(transcripts)
 
     val m1 = Rollup.rollupRaw(raw, "1m")
     val h1 = Rollup.rollupTier(m1, "1h")
@@ -500,18 +508,11 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("tier rollup plans aggregate with HashAggregate only; the plain 1m " +
       "plan combines map-side under its single exchange") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import spark.implicits._
     val pts = TranscriptGen.generatePoints(spark, 5)
-    def physical(ds: org.apache.spark.sql.Dataset[_]): SparkPlan =
-      ds.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
     val m1 = Rollup.rollupRaw(pts, "1m")
     val plans = Seq(
       "rollupRaw" -> m1,
@@ -535,9 +536,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "bucket, new buckets, empty delta)") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 10)
-    val raw = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val raw = tokenLenT(transcripts)
     // cutoff mid-range and UNALIGNED to the 1m grid so the bucket
     // containing it holds base AND delta points (the merge boundary case);
     // later buckets are delta-only (the new-bucket case)
@@ -573,9 +572,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "maintained finer tier and equals full recompute") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 10)
-    val raw = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val raw = tokenLenT(transcripts)
     val (lo, hi) = raw.agg(min($"bucket"), max($"bucket"))
       .as[(Long, Long)].first()
     val cut = lo + (hi - lo) / 2 + 31L * 1000000L
@@ -651,9 +648,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "threshold falls back to a shuffle join with identical results") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 10)
-    val raw = transcripts.select($"conv_id", lit("token_len_t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val raw = tokenLenT(transcripts)
     val (lo, hi) = raw.agg(min($"bucket"), max($"bucket"))
       .as[(Long, Long)].first()
     val cut = lo + (hi - lo) / 2 + 31L * 1000000L
@@ -704,7 +699,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "stays inside its rank-error bound under any partitioning") {
     import spark.implicits._
     val raw = TranscriptGen.generate(spark, 10)
-      .select($"conv_id", length($"text").cast("double").as("value"))
+      .select($"conv_id", Derive.tokenLength.as("value"))
     val n = raw.count()
     assert(n > 1000, s"need a group large enough to exercise the sketch, got $n")
     // accuracy=100 → rank error ≤ n/100; the exact values at the bounding
@@ -731,9 +726,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // c_const has exactly one turn per 30s -> 1m tier cnt=2 everywhere
     val transcripts = spark.createDataset(TranscriptGen.fixtureConversations(42L))
       .filter($"conv_id" === "c_const")
-    val raw = transcripts.select($"conv_id", lit("t").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    val raw = tokenLenT(transcripts)
     val m1 = Rollup.rollupRaw(raw, "1m").collect()
     assert(m1.forall(_.cnt == 2), m1.map(_.cnt).toSeq.take(5).toString)
     assert(m1.forall(r => r.min == 64.0 && r.max == 64.0))
@@ -752,9 +745,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("string-free points generator equals length(text) derivation") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 15, includeFixtures = false)
-    val fromText = transcripts.select($"conv_id", lit("tok").as("kind"),
-      unix_micros($"ts".cast("timestamp")).as("bucket"),
-      length($"text").cast("double").as("value")).as[SeriesPoint]
+    val fromText = tokenLenT(transcripts).map(_.copy(kind = "tok"))
       .orderBy("conv_id", "bucket").collect().toSeq
     val direct = TranscriptGen.generatePoints(spark, 15)
       .orderBy("conv_id", "bucket").collect().toSeq
@@ -764,7 +755,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("gorilla chunk codec round-trips through Spark") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 5)
-    val pts = Derive.tokenLen(transcripts)
+    val pts = Derive.perTurn(transcripts).where($"kind" === Derive.TokenLen)
     val decoded = Chunks.decode(Chunks.encode(pts, maxPoints = 50))
     val a = pts.orderBy("conv_id", "bucket").collect().toSeq
     val b = decoded.orderBy("conv_id", "bucket").collect().toSeq
@@ -774,7 +765,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("chunk compaction merges fragmented micro-batch chunks losslessly") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 5)
-    val pts = Derive.tokenLen(transcripts)
+    val pts = Derive.perTurn(transcripts).where($"kind" === Derive.TokenLen)
     // fragment hard (a micro-batch ingest shape), then compact back
     val fragmented = Chunks.encode(pts, maxPoints = 16)
     val compacted = Chunks.compact(fragmented, maxPoints = 4096)

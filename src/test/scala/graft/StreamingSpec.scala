@@ -26,13 +26,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   /** The accepted rows as batch rollup input: one series per
-    * conversation (kind held constant), valued by text length.
+    * conversation, valued by text length.
     */
   private def points(rows: Seq[Transcript]): Dataset[SeriesPoint] = {
     import spark.implicits._
-    spark.createDataset(rows).select($"conv_id", lit("len").as("kind"),
-      unix_micros($"ts").as("bucket"), length($"text").cast("double").as("value"))
-      .as[SeriesPoint]
+    Fixtures.tokenLenT(spark.createDataset(rows))
   }
 
   /** A tier's finalized rows (bucket end at or before `cutoff`) in the
