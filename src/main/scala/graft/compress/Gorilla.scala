@@ -21,8 +21,6 @@ object Gorilla {
     private var buf = new Array[Byte](initial)
     private var bitPos = 0L
 
-    def lengthBits: Long = bitPos
-
     private def ensure(bits: Long): Unit = {
       val needBytes = ((bitPos + bits + 7) / 8).toInt
       if (needBytes > buf.length) {

@@ -44,15 +44,15 @@ object DistributedMp {
     * `splitThreshold` computes each cell with `whole`, a longer one cuts
     * each cell into `tiles`, which are hash-spread over
     * `defaultParallelism` partitions by the `spreadBy` columns and reduced
-    * by `merge`. `maxSeriesLen`, a caller-known upper bound on `size`,
-    * drops the tile subtree — an exchange plus a merge aggregation over
-    * zero rows — when it proves every row short.
+    * by `merge`. `maxSeriesLen`, a caller-known upper bound on `size`
+    * (negative: unknown), drops the tile subtree — an exchange plus a
+    * merge aggregation over zero rows — when it proves every row short.
     */
   private def fanOut[I, C, T: Encoder, O: Encoder](in: Dataset[I],
       splitThreshold: Int, maxSeriesLen: Int)(size: I => Int, cells: I => Iterator[C])(
       whole: C => O, tiles: C => Iterator[T], spreadBy: String*)(
       merge: Dataset[T] => Dataset[O]): Dataset[O] = {
-    val shortOnly = maxSeriesLen > 0 && maxSeriesLen < splitThreshold
+    val shortOnly = maxSeriesLen >= 0 && maxSeriesLen < splitThreshold
     // single consumer when the tile branch is dropped: no fork, no persist
     val rows = if (shortOnly) in else graft.util.StageCache.forked(in)
     val shortRows = rows.flatMap { r =>

@@ -1,5 +1,6 @@
 package graft.run
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ingest.TranscriptGen
@@ -19,7 +20,8 @@ import graft.schema._
   * discords/regimes per profile. Every stage's ledger row counts are
   * observed on the stage's own write (no re-read of its output), tables
   * are read back with their schemas pinned (no inference job), and all
-  * raw and tier series share one MP plan. Usage:
+  * raw and tier series share one MP plan. The summary's `compiles=` is the
+  * JVM-wide count of codegen compiles during the run (no Spark job). Usage:
   *   runMain graft.run.PipelineMain [numConvs] [outDir] [window]
   */
 object PipelineMain {
@@ -42,6 +44,7 @@ object PipelineMain {
       fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
     }
     val t0 = System.nanoTime()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     // stage 1: transcript table (the production engine scans Iceberg here)
     val transcriptsPath = ledger.stage("transcripts") { out =>
@@ -97,8 +100,8 @@ object PipelineMain {
     // stage 5: per-tier matrix profiles (mpx with chunk min/max-merge):
     // the position-indexed raw kinds and the m1/h1/d1 tier series
     // (kinds `<kind>@<tier>`) assemble into ONE cached input for ONE
-    // mpxProfiles plan — it scans its input twice (the zero-exchange
-    // short branch and the tile branch). The tier label follows the kind.
+    // mpxProfiles plan, which drops its tile branch when the longest cached
+    // series is short. The tier label follows the kind.
     var subsequences: Option[Long] = None
     val profilesPath = ledger.stage("profiles") { out =>
       val tierPoints = Rollup.Ladder
@@ -109,7 +112,8 @@ object PipelineMain {
       val series = Derive.assemble(allPoints)
         .map { case (c, k, s, v) => SeriesRow(c, k, s, v) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val profiles = DistributedMp.mpxProfiles(series, w, "raw")
+      val longest = series.select(max(size($"values"))).as[Option[Int]].first().getOrElse(0)
+      val profiles = DistributedMp.mpxProfiles(series, w, "raw", maxSeriesLen = longest)
         .withColumn("tier", when(Rollup.isTierKind($"kind"), lit("tier")).otherwise(lit("raw")))
         .as[MpProfileRow]
       val written = Ledger.write(profiles, out, Seq(sum(size($"mp")).as("subsequences")))
@@ -137,13 +141,14 @@ object PipelineMain {
     // or the ledger rows of stages skipped on resume); only a skipped
     // profiles stage needs a scan, for its subsequence total
     val wallS = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     def rowsOut(stage: String): Long = ledger.rows(stage).get._2
     val nPoints = rowsOut("series_points")
     val nSubseq = subsequences.getOrElse(Ledger.read[MpProfileRow](spark, profilesPath)
       .select(sum(size($"mp"))).as[Option[Long]].first().getOrElse(0L))
     println(f"[pipeline] convs=$numConvs points=$nPoints profiles=${rowsOut("profiles")} " +
       f"subsequences=$nSubseq discovery=${rowsOut("discovery")} " +
-      f"wall=${wallS}%.1fs points/s=${nPoints / wallS}%.0f")
+      f"wall=${wallS}%.1fs points/s=${nPoints / wallS}%.0f compiles=$compiles")
     // counted on this run's tier writes (the run that wrote resumed tiers reported theirs)
     retention.foreach(r => println(s"[pipeline] retention: $r"))
   }

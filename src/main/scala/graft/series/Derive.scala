@@ -2,19 +2,20 @@ package graft.series
 
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.rollup.Rollup
 import graft.schema.{SeriesPoint, Transcript}
 
 /** Per-conversation series derivation from the transcript table.
   *
-  * All derivations are declarative (window functions over the stable
-  * (conv_id, turn_idx) order) so Catalyst prunes columns at the scan —
-  * only conv_id, turn_idx, ts and length(text) are read — and whole-stage
-  * codegen covers the arithmetic. The reference's equivalent is the
-  * dataset loader + `to_np_array` coercion (datasets.py:132-219,
-  * core.py:78-102); the ordering contract (conv_id, turn_idx) is the
-  * engine's per-row invariant.
+  * Every stored kind comes from ONE pass per conversation, the shape of
+  * the reference's `to_np_array` coercion (core.py:78-102; loader
+  * datasets.py:132-219): the scan reads conv_id, turn_idx, ts and
+  * length(text), one exchange groups each conversation into one task in
+  * turn_idx order (the engine's per-row invariant), and an iterator emits
+  * its points. A declarative form (a `lag` window, a per-minute aggregate
+  * densified by `gapFill`) takes four exchanges and twice the generated
+  * classes, enough to overflow Spark's codegen cache so that every
+  * pipeline run recompiled its code.
   */
 object Derive {
 
@@ -30,43 +31,44 @@ object Derive {
   /** A turn's token length, the value of both token-length kinds. */
   val tokenLength: Column = length(col("text")).cast("double")
 
-  /** Every stored series: the per-turn kinds and the gap-filled turn rate. */
-  def series(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] =
-    perTurn(transcripts).union(gapFill(turnRate(transcripts), Rollup.MicrosPerMin, 0.0))
+  /** One turn as the derivation reads it; a null `ts` or `text` stays None. */
+  final case class Turn(turn_idx: Int, us: Option[Long], minute: Option[Long],
+      len: Option[Double])
 
-  /** The per-turn kinds in one scan and one `lag` over the turn order: both
-    * token-length kinds, and `gap_s` (value_i = ts_i − ts_{i−1} in seconds
-    * at µs precision, bucket i − 1; a conversation's first turn has none).
+  /** Every stored series, per conversation in turn order:
+    *   - `token_len_t` (bucket = the turn's µs) and `token_len` (bucket =
+    *     turn_idx), both valued by the token length;
+    *   - `gap_s`: (µs_i − µs_{i−1}) / 1e6 at bucket turn_idx − 1; the first
+    *     turn, and a turn after a null `ts`, have none;
+    *   - `turn_rate`: turns per minute on the dense minute grid from the
+    *     first minute to the last, 0.0 where no turn falls (`gapFill`'s
+    *     grid), held as minute counts only: O(minutes) per conversation.
     */
-  def perTurn(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
-    val spark = transcripts.sparkSession
-    import spark.implicits._
-    def point(kind: String, bucket: Column, value: Column) =
-      struct(lit(kind).as("kind"), bucket.cast("long").as("bucket"), value.as("value"))
-    transcripts
-      .select($"conv_id", $"turn_idx", $"ts", tokenLength.as("len"),
-        lag($"ts", 1).over(Window.partitionBy("conv_id").orderBy("turn_idx")).as("prev_ts"))
-      .select($"conv_id", explode(array_compact(array(
-        point(TokenLenT, unix_micros($"ts"), $"len"),
-        point(TokenLen, $"turn_idx", $"len"),
-        when($"prev_ts".isNotNull, point(GapS, $"turn_idx" - 1,
-          (unix_micros($"ts") - unix_micros($"prev_ts")).cast("double") / 1e6))))).as("p"))
-      .select($"conv_id", $"p.kind", $"p.bucket", $"p.value")
-      .as[SeriesPoint]
-  }
-
-  /** Time-indexed turn-rate series: turns per minute bucket,
-    * bucket = epoch-micros of the minute start. Sparse — gap-fill
-    * densifies it.
-    */
-  def turnRate(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
+  def series(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
     val spark = transcripts.sparkSession
     import spark.implicits._
     transcripts
-      .groupBy($"conv_id",
-        (unix_micros(date_trunc("minute", $"ts"))).as("bucket"))
-      .agg(count(lit(1)).cast("double").as("value"))
-      .select($"conv_id", lit(TurnRate).as("kind"), $"bucket", $"value")
+      .select($"conv_id", $"turn_idx", unix_micros($"ts").as("us"),
+        unix_micros(date_trunc("minute", $"ts")).as("minute"), tokenLength.as("len"))
+      .groupBy($"conv_id").as[String, Turn]
+      .flatMapSortedGroups($"turn_idx") { (conv, turns) =>
+        val perMinute = new scala.collection.mutable.LongMap[Int]()
+        var prevUs: Option[Long] = None
+        turns.flatMap { t =>
+          t.minute.foreach(m => perMinute(m) = perMinute.getOrElse(m, 0) + 1)
+          val gap = prevUs.map(p => (conv, GapS, Some(t.turn_idx - 1L),
+            t.us.map(u => (u - p).toDouble / 1e6)))
+          prevUs = t.us
+          Iterator((conv, TokenLenT, t.us, t.len),
+            (conv, TokenLen, Some(t.turn_idx.toLong), t.len)) ++ gap
+        } ++ {
+          val hi = perMinute.keysIterator.maxOption.getOrElse(Long.MinValue)
+          perMinute.keysIterator.minOption.iterator
+            .flatMap(Iterator.iterate(_)(_ + Rollup.MicrosPerMin).takeWhile(_ <= hi))
+            .map(m => (conv, TurnRate, Some(m), Some(perMinute.getOrElse(m, 0).toDouble)))
+        }
+      }
+      .toDF("conv_id", "kind", "bucket", "value")
       .as[SeriesPoint]
   }
 
@@ -94,26 +96,20 @@ object Derive {
       if (maxSteps >= Long.MaxValue / math.max(stepMicros, 1L)) lo
       else greatest(lo, hi - lit(stepMicros) * (lit(maxSteps) - 1))
 
-    // Densify with ONE aggregation and SEGMENT generation: collect each series' sorted (bucket, value) entries
-    // with its bounds, keep the entries that sit ON the grid
-    // (bucket = lo + k·step — the only ones the former grid join
-    // could match), then per entry emit the fill run from its
-    // predecessor plus the entry itself (a sentinel past `hi` emits
-    // the tail run). Every output row costs O(1) — no join probe and
-    // no per-row map lookup (a Spark map literal is an ARRAY;
-    // element_at scans it linearly, which made the first r8 rewrite
-    // O(entries) per grid row) — and `points` is consumed once
-    // instead of twice (the pre-r8 bounds-agg + 3-key left join).
+    // Densify with ONE aggregation and SEGMENT generation: collect each
+    // series' sorted (bucket, value) entries with its bounds, keep the
+    // entries ON the grid (bucket = lo + k·step), then per entry emit the
+    // fill run from its predecessor plus the entry itself (a sentinel past
+    // `hi` emits the tail run). Every output row costs O(1): no join probe
+    // and no per-row map lookup (a Spark map literal is an ARRAY, which
+    // element_at scans linearly), and `points` is read once.
     //
-    // Contracts this shape adds: (1) buckets must be unique per
-    // (conv_id, kind) — the SeriesPoint series invariant every caller
-    // satisfies by aggregating first; a duplicate now fails loudly at
-    // runtime (sequence() rejects start > stop) where the old join
-    // silently duplicated grid rows. (2) one aggregation buffer holds
-    // a whole series' entries (~24 B per point); callers with
-    // unaggregated multi-million-point groups should pre-filter to
-    // the retention horizon — the maxSteps clamp bounds the OUTPUT
-    // grid, not the collected input.
+    // Contracts: (1) buckets are unique per (conv_id, kind), the
+    // SeriesPoint invariant; a duplicate fails loudly (sequence() rejects
+    // start > stop). (2) one aggregation buffer holds a whole series'
+    // entries (~24 B per point): the maxSteps clamp bounds the OUTPUT
+    // grid, not the collected input, so pre-filter multi-million-point
+    // groups to the retention horizon.
     val step = lit(stepMicros)
     points
       .groupBy($"conv_id", $"kind")
@@ -129,9 +125,8 @@ object Derive {
       .withColumn("lo", clampLo($"lo0", $"hi"))
       // last grid point (the grid is anchored at the clamped lo)
       .withColumn("gridHi", $"hi" - pmod($"hi" - $"lo", step))
-      // on-grid entries only (bucket = lo + k·step — the only ones
-      // the former grid join could match); strictly increasing
-      // because series buckets are unique per (conv_id, kind)
+      // on-grid entries only; strictly increasing because series
+      // buckets are unique per (conv_id, kind)
       .withColumn("oges", filter($"es", e =>
         e.getField("bucket") >= $"lo" &&
           pmod(e.getField("bucket") - $"lo", step) === 0))
@@ -144,9 +139,8 @@ object Derive {
       .withColumn("prevB", when($"pos" === 0, $"lo" - step)
         .otherwise(element_at($"oges", $"pos").getField("bucket")))
       // one PRIMITIVE sequence per segment — fill run plus the entry
-      // endpoint — so the 10⁷-row explode stays on the long-array
-      // fast path (a struct-array transform here allocated one object
-      // per grid row and was 8x slower than the join it replaced)
+      // endpoint — so the 10⁷-row explode stays on the long-array fast
+      // path (a struct-array transform allocates one object per grid row)
       .select($"conv_id", $"kind", $"col".getField("bucket").as("eb"),
         $"col".getField("value").as("ev"),
         explode(sequence($"prevB" + step, $"col".getField("bucket"), step))

@@ -22,7 +22,16 @@ object Fixtures {
 
   /** The `token_len_t` series the pipeline rolls into tiers. */
   def tokenLenT(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] =
-    Derive.perTurn(transcripts).where(col("kind") === Derive.TokenLenT)
+    Derive.series(transcripts).where(col("kind") === Derive.TokenLenT)
+
+  /** Run `body` on a fresh temp directory named `prefix…`, deleted with
+    * everything in it afterwards.
+    */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 
   def assertAlmostEqual(actual: Array[Double], desired: Array[Double],
       decimal: Int = 7): Unit = {

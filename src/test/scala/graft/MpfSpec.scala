@@ -128,9 +128,11 @@ class MpfSpec extends AnyFunSuite with BeforeAndAfterAll {
       16, "raw").collect().sortBy(r => (r.conv_id, r.kind))
 
     // write/read through the extension dispatch with the SAME path
-    val dir = java.nio.file.Files.createTempDirectory("graft_mpf").toString + "/profiles.mpf"
-    ProfileIO.write(spark.createDataset(rows.toSeq), dir)
-    val back = ProfileIO.read(spark, dir).collect().sortBy(r => (r.conv_id, r.kind))
+    val back = Fixtures.withTempDir("graft_mpf") { tmp =>
+      val dir = s"$tmp/profiles.mpf"
+      ProfileIO.write(spark.createDataset(rows.toSeq), dir)
+      ProfileIO.read(spark, dir).collect().sortBy(r => (r.conv_id, r.kind))
+    }
     assert(back.length == rows.length,
       "every (conv, kind, tier, w) row must survive the file layout")
     back.zip(rows).foreach { case (b, r) =>
@@ -193,9 +195,10 @@ class MpfSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(o.avType == "default")
     // and the canonical re-encode of the decoded message round-trips,
     // through the single-file convenience pair as well
-    val tmp = java.nio.file.Files.createTempFile("graft_mpf", ".mpf").toString
-    Mpf.writeFile(tmp, o)
-    val rt = Mpf.readFile(tmp)
+    val rt = Fixtures.withTempDir("graft_mpf") { dir =>
+      Mpf.writeFile(s"$dir/one.mpf", o)
+      Mpf.readFile(s"$dir/one.mpf")
+    }
     assert(rt.klass == o.klass && rt.windows == o.windows &&
       rt.samplePct == o.samplePct && rt.avType == o.avType)
     assert(rt.mp.get.ez == 2 &&

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -52,31 +53,97 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipeline golden gate: c_sample gap series -> mpx matches reference goldens") {
     import spark.implicits._
-    // a stored transcript table: the per-turn kinds come from one scan of
-    // it, and the stored series add one more, for the turn rate
-    val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
-    spark.createDataset(TranscriptGen.fixtureConversations(42L)).write.parquet(s"$dir/t")
-    val transcripts = spark.read.parquet(s"$dir/t").as[Transcript]
-    def scans(ds: Dataset[_]): Int = physical(ds).collect { case s: FileSourceScanExec => s }.size
-    assert(scans(Derive.perTurn(transcripts)) == 1 && scans(Derive.series(transcripts)) == 2)
-    val gap = Derive.perTurn(transcripts.filter($"conv_id" === "c_sample"))
-      .where($"kind" === Derive.GapS)
-    val series = Derive.assemble(gap).collect()
-    assert(series.length == 1)
-    val values = series.head._4
-    assert(values.length == 875)
-    // derived series equals sampledata + 60s at µs quantization
-    for (i <- values.indices)
-      assert(math.abs(values(i) - 60.0 - sampledata(i)) < 1e-5,
-        s"i=$i ${values(i)} vs ${sampledata(i)}")
-    // MP through the distributed path matches the reference golden at 4dp
-    // (z-normalization absorbs the +60 shift; µs quantization < 1e-6)
-    val rows = DistributedMp.mpxProfiles(
-      spark.createDataset(Seq(SeriesRow("c_sample", "gap_s", 0L, values))), 32, "raw")
-      .collect()
-    assert(rows.length == 1)
-    assertAlmostEqual(rows.head.mp, load("mpx_mp.txt"), decimal = 4)
-    assert(rows.head.pi.toSeq == load("mpx_mpi.txt").map(_.toLong - 1).toSeq)
+    // a stored transcript table: every stored kind comes from one scan of
+    // it and one exchange, which groups each conversation into one task
+    withTempDir("graft_golden") { dir =>
+      spark.createDataset(TranscriptGen.fixtureConversations(42L)).write.parquet(s"$dir/t")
+      val transcripts = spark.read.parquet(s"$dir/t").as[Transcript]
+      val plan = physical(Derive.series(transcripts))
+      assert(plan.collect { case s: FileSourceScanExec => s }.size == 1)
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+      assert(exchanges.size == 1 && exchanges.head.startsWith("hashpartitioning(conv_id"),
+        exchanges)
+      val gap = Derive.series(transcripts.filter($"conv_id" === "c_sample"))
+        .where($"kind" === Derive.GapS)
+      val series = Derive.assemble(gap).collect()
+      assert(series.length == 1)
+      val values = series.head._4
+      assert(values.length == 875)
+      // derived series equals sampledata + 60s at µs quantization
+      for (i <- values.indices)
+        assert(math.abs(values(i) - 60.0 - sampledata(i)) < 1e-5,
+          s"i=$i ${values(i)} vs ${sampledata(i)}")
+      // MP through the distributed path matches the reference golden at 4dp
+      // (z-normalization absorbs the +60 shift; µs quantization < 1e-6)
+      val rows = DistributedMp.mpxProfiles(
+        spark.createDataset(Seq(SeriesRow("c_sample", "gap_s", 0L, values))), 32, "raw")
+        .collect()
+      assert(rows.length == 1)
+      assertAlmostEqual(rows.head.mp, load("mpx_mp.txt"), decimal = 4)
+      assert(rows.head.pi.toSeq == load("mpx_mpi.txt").map(_.toLong - 1).toSeq)
+    }
+  }
+
+  /** The declarative derivation `Derive.series` replaced, kept as its
+    * reference: the per-turn kinds from one `lag` over the turn order,
+    * unioned with the per-minute turn count densified by `gapFill`.
+    */
+  private def seriesReference(transcripts: Dataset[Transcript]): Dataset[SeriesPoint] = {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    def point(kind: String, bucket: org.apache.spark.sql.Column,
+        value: org.apache.spark.sql.Column) =
+      struct(lit(kind).as("kind"), bucket.cast("long").as("bucket"), value.as("value"))
+    val perTurn = transcripts
+      .select($"conv_id", $"turn_idx", $"ts", Derive.tokenLength.as("len"),
+        lag($"ts", 1).over(Window.partitionBy("conv_id").orderBy("turn_idx")).as("prev_ts"))
+      .select($"conv_id", explode(array_compact(array(
+        point(Derive.TokenLenT, unix_micros($"ts"), $"len"),
+        point(Derive.TokenLen, $"turn_idx", $"len"),
+        when($"prev_ts".isNotNull, point(Derive.GapS, $"turn_idx" - 1,
+          (unix_micros($"ts") - unix_micros($"prev_ts")).cast("double") / 1e6))))).as("p"))
+      .select($"conv_id", $"p.kind", $"p.bucket", $"p.value")
+      .as[SeriesPoint]
+    val turnRate = transcripts
+      .groupBy($"conv_id", unix_micros(date_trunc("minute", $"ts")).as("bucket"))
+      .agg(count(lit(1)).cast("double").as("value"))
+      .select($"conv_id", lit(Derive.TurnRate).as("kind"), $"bucket", $"value")
+      .as[SeriesPoint]
+    perTurn.union(Derive.gapFill(turnRate, Rollup.MicrosPerMin, 0.0))
+  }
+
+  test("one-pass series derivation equals the lag + gap-fill reference, " +
+      "nulls and out-of-order timestamps included") {
+    import spark.implicits._
+    val t0 = TranscriptGen.EpochMicros
+    val m = Rollup.MicrosPerMin
+    def turn(conv: String, i: Int, text: String, us: Option[Long]) =
+      Transcript(conv, i, "user", text, null, us.map(TranscriptGen.tsFromMicros).orNull)
+    val odd = Seq(
+      // ts not increasing in turn_idx: negative gaps, minutes out of order
+      turn("x_backwards", 0, "aaaa", Some(t0 + 5 * m + 17)),
+      turn("x_backwards", 1, "bb", Some(t0 + m + 3)),
+      turn("x_backwards", 2, "c", Some(t0 + 7 * m + 250000)),
+      turn("x_backwards", 3, "dddddd", Some(t0 + m + 9)),
+      turn("x_one", 0, "a single turn", Some(t0 + 42 * m)),
+      // a null text, then a null ts, then turns after it
+      turn("x_nulls", 0, "first", Some(t0)),
+      turn("x_nulls", 1, null, Some(t0 + 30000000L)),
+      turn("x_nulls", 2, "a turn without a time", None),
+      turn("x_nulls", 3, "after the null ts", Some(t0 + 4 * m + 1)),
+      turn("x_nulls", 4, "z", Some(t0 + 6 * m)))
+    val transcripts = TranscriptGen.generate(spark, 20).union(spark.createDataset(odd))
+    val got = Derive.series(transcripts).toDF()
+    val want = seriesReference(transcripts).toDF()
+    assert(got.exceptAll(want).count() == 0, "points the reference lacks")
+    assert(want.exceptAll(got).count() == 0, "reference points missing")
+    // the edge cases are present, so the equality covers them
+    val nulls = got.where($"conv_id" === "x_nulls")
+    assert(nulls.where($"value".isNull).count() == 3) // 2 for the text, 1 gap for the ts
+    assert(nulls.where($"bucket".isNull).count() == 1)
+    assert(got.where($"conv_id" === "x_one" && $"kind" === Derive.GapS).count() == 0)
+    assert(got.where($"conv_id" === "x_backwards" && $"kind" === Derive.GapS &&
+      $"value" < 0).count() == 2)
   }
 
   test("tiled split/merge path equals unsplit kernel (min-reduce gate)") {
@@ -239,7 +306,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("plan shape: a caller-proven all-short input plans no shuffle; the " +
       "tile path keeps its spread and merge exchanges") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
     def exchanges(d: org.apache.spark.sql.Dataset[_]): Seq[ShuffleExchangeExec] =
       (d.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -346,33 +413,34 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // layout: bucket(conv_id) with one file per bucket (repartition by
       // the same hash the bucketing uses) sorted by (conv_id, kind,
       // bucket) — the parquet stand-in for the Iceberg bucket(conv_id) table
-      val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-      raw.orderBy(rand(7)).repartition(8, $"conv_id")
-        .write.bucketBy(8, "conv_id").sortBy("conv_id", "kind", "bucket")
-        .option("path", s"$dir/points_bucketed")
-        .mode("overwrite").saveAsTable("points_bucketed")
-      try {
-        val scanned = spark.table("points_bucketed").as[SeriesPoint]
-        val colocated = Rollup.rollupAllColocated(scanned)
-        // no exchange anywhere: the layout, not a shuffle, provides locality
-        val plan = colocated.queryExecution.executedPlan.toString
-        assert(!plan.contains("Exchange"),
-          s"colocated rollup over the bucketed table must not shuffle:\n$plan")
-        val genericBy = (d: org.apache.spark.sql.Dataset[TierAgg]) =>
-          d.collect().map(t => (t.conv_id, t.kind, t.tier, t.bucket) -> t).toMap
-        val got = genericBy(colocated)
-        val m1 = Rollup.rollupRaw(raw, "1m")
-        val want = genericBy(m1.union(Rollup.rollupTier(m1, "1h"))
-          .union(Rollup.rollupTier(Rollup.rollupTier(m1, "1h"), "1d")))
-        assert(got.keySet == want.keySet && got.nonEmpty,
-          s"bucket sets differ: ${got.size} vs ${want.size}")
-        got.foreach { case (k, g) =>
-          val w = want(k)
-          assert(g.cnt == w.cnt && g.min == w.min && g.max == w.max &&
-            g.first == w.first && g.last == w.last, s"$k: $g vs $w")
-          assert(math.abs(g.sum - w.sum) < 1e-6, s"$k: sum ${g.sum} vs ${w.sum}")
-        }
-      } finally spark.sql("DROP TABLE IF EXISTS points_bucketed")
+      withTempDir("graft_bucketed") { dir =>
+        raw.orderBy(rand(7)).repartition(8, $"conv_id")
+          .write.bucketBy(8, "conv_id").sortBy("conv_id", "kind", "bucket")
+          .option("path", s"$dir/points_bucketed")
+          .mode("overwrite").saveAsTable("points_bucketed")
+        try {
+          val scanned = spark.table("points_bucketed").as[SeriesPoint]
+          val colocated = Rollup.rollupAllColocated(scanned)
+          // no exchange anywhere: the layout, not a shuffle, provides locality
+          val plan = colocated.queryExecution.executedPlan.toString
+          assert(!plan.contains("Exchange"),
+            s"colocated rollup over the bucketed table must not shuffle:\n$plan")
+          val genericBy = (d: org.apache.spark.sql.Dataset[TierAgg]) =>
+            d.collect().map(t => (t.conv_id, t.kind, t.tier, t.bucket) -> t).toMap
+          val got = genericBy(colocated)
+          val m1 = Rollup.rollupRaw(raw, "1m")
+          val want = genericBy(m1.union(Rollup.rollupTier(m1, "1h"))
+            .union(Rollup.rollupTier(Rollup.rollupTier(m1, "1h"), "1d")))
+          assert(got.keySet == want.keySet && got.nonEmpty,
+            s"bucket sets differ: ${got.size} vs ${want.size}")
+          got.foreach { case (k, g) =>
+            val w = want(k)
+            assert(g.cnt == w.cnt && g.min == w.min && g.max == w.max &&
+              g.first == w.first && g.last == w.last, s"$k: $g vs $w")
+            assert(math.abs(g.sum - w.sum) < 1e-6, s"$k: sum ${g.sum} vs ${w.sum}")
+          }
+        } finally spark.sql("DROP TABLE IF EXISTS points_bucketed")
+      }
     }
   }
 
@@ -421,9 +489,9 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val transcripts = spark.createDataset(TranscriptGen.fixtureConversations(42L))
       .filter($"conv_id" === "c_gappy")
-    val rate = Derive.turnRate(transcripts)
-    val sparse = rate.count()
-    val filled = Derive.gapFill(rate, Rollup.MicrosPerMin, 0.0)
+    // the minutes holding a turn, against the stored (gap-filled) turn rate
+    val sparse = transcripts.select(date_trunc("minute", $"ts")).distinct().count()
+    val filled = Derive.series(transcripts).where($"kind" === Derive.TurnRate)
     val n = filled.count()
     assert(sparse < n, s"expected densification, got $sparse -> $n")
     // full grid: max-min+1 minutes
@@ -509,7 +577,6 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("tier rollup plans aggregate with HashAggregate only; the plain 1m " +
       "plan combines map-side under its single exchange") {
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import spark.implicits._
     val pts = TranscriptGen.generatePoints(spark, 5)
@@ -566,6 +633,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val noop = Rollup.maintainTier(base, emptyDelta, "1m")
       .orderBy("conv_id", "kind", "bucket").collect()
     assert(noop.toSeq == base.orderBy("conv_id", "kind", "bucket").collect().toSeq)
+    graft.util.StageCache.release(spark)
   }
 
   test("chained incremental maintenance refreshes 1h/1d from the " +
@@ -621,27 +689,31 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (anti + semi branch) and ZERO exchanges; every exchange in the
     // plan belongs to the DELTA side (its 1m aggregation + touched-key
     // distinct, each referenced twice, + the bounded affected-bucket
-    // merge ⇒ ≤ 6), and both base joins are broadcasts.
-    val baseDir = java.nio.file.Files
-      .createTempDirectory("graft_maintain_digest").toString
-    base1m.write.mode("overwrite").parquet(baseDir)
-    val baseStored = spark.read.parquet(baseDir).as[TierAgg]
-    val dig1 = graft.run.PlanDigest.of(
-      Rollup.maintainTier(baseStored, raw.where($"bucket" >= cut), "1m").toDF())
-    assert(dig1.broadcasts >= 2, s"maintainTier digest: $dig1")
-    assert(dig1.exchanges <= 6, s"maintainTier digest: $dig1")
-    assert(dig1.scans >= 2, s"maintainTier digest: $dig1")
-    // and the maintained rows off the stored base still equal recompute
-    val viaStored = Rollup.maintainTier(baseStored, raw.where($"bucket" >= cut), "1m")
-      .orderBy("conv_id", "kind", "bucket").select(cols.map(col): _*).collect()
-    val wantRows = full1m
-      .orderBy("conv_id", "kind", "bucket").select(cols.map(col): _*).collect()
-    assert(viaStored.length == wantRows.length)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
+    // merge ⇒ ≤ 6), and both base joins are broadcasts. The bound holds
+    // for a delta fed straight from the derivation (a lineage, which
+    // maintainTier persists once: the derivation's exchange sits in the
+    // cached plan, not under each of the delta's reads) and for one read
+    // back from storage.
+    withTempDir("graft_maintain_digest") { baseDir =>
+      base1m.write.mode("overwrite").parquet(s"$baseDir/base")
+      raw.where($"bucket" >= cut).write.mode("overwrite").parquet(s"$baseDir/delta")
+      val baseStored = spark.read.parquet(s"$baseDir/base").as[TierAgg]
+      val deltaStored = spark.read.parquet(s"$baseDir/delta").as[SeriesPoint]
+      for (delta <- Seq(raw.where($"bucket" >= cut), deltaStored)) {
+        val dig1 = graft.run.PlanDigest.of(
+          Rollup.maintainTier(baseStored, delta, "1m").toDF())
+        assert(dig1.broadcasts >= 2, s"maintainTier digest: $dig1")
+        assert(dig1.exchanges <= 6, s"maintainTier digest: $dig1")
+        assert(dig1.scans >= 2, s"maintainTier digest: $dig1")
+      }
+      // and the maintained rows off the stored base still equal recompute
+      val viaStored = Rollup.maintainTier(baseStored, raw.where($"bucket" >= cut), "1m")
+        .orderBy("conv_id", "kind", "bucket").select(cols.map(col): _*).collect()
+      val wantRows = full1m
+        .orderBy("conv_id", "kind", "bucket").select(cols.map(col): _*).collect()
+      assert(viaStored.length == wantRows.length)
     }
-    rm(new java.io.File(baseDir))
+    graft.util.StageCache.release(spark)
   }
 
   test("maintainTier guards the touched-key broadcast: a delta over the " +
@@ -755,7 +827,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("gorilla chunk codec round-trips through Spark") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 5)
-    val pts = Derive.perTurn(transcripts).where($"kind" === Derive.TokenLen)
+    val pts = Derive.series(transcripts).where($"kind" === Derive.TokenLen)
     val decoded = Chunks.decode(Chunks.encode(pts, maxPoints = 50))
     val a = pts.orderBy("conv_id", "bucket").collect().toSeq
     val b = decoded.orderBy("conv_id", "bucket").collect().toSeq
@@ -765,7 +837,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("chunk compaction merges fragmented micro-batch chunks losslessly") {
     import spark.implicits._
     val transcripts = TranscriptGen.generate(spark, 5)
-    val pts = Derive.perTurn(transcripts).where($"kind" === Derive.TokenLen)
+    val pts = Derive.series(transcripts).where($"kind" === Derive.TokenLen)
     // fragment hard (a micro-batch ingest shape), then compact back
     val fragmented = Chunks.encode(pts, maxPoints = 16)
     val compacted = Chunks.compact(fragmented, maxPoints = 4096)
@@ -796,16 +868,17 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = DistributedMp.mpxProfiles(
       spark.createDataset(Seq(
         DistributedMp.SeriesRow("c_sample", "gap_s", 0L, sampledata))), 32, "raw")
-    val dir = java.nio.file.Files.createTempDirectory("graft_io").toString
-    for (ext <- Seq("json", "parquet")) {
-      val path = s"$dir/profiles.$ext"
-      graft.run.ProfileIO.write(rows, path)
-      val back = graft.run.ProfileIO.read(spark, path).collect()
-      val orig = rows.collect()
-      assert(back.length == orig.length)
-      assertAlmostEqual(back.head.mp, orig.head.mp, decimal = 12)
-      assert(back.head.pi.toSeq == orig.head.pi.toSeq)
-      assert(back.head.w == 32 && back.head.algorithm == "mpx")
+    withTempDir("graft_io") { dir =>
+      for (ext <- Seq("json", "parquet")) {
+        val path = s"$dir/profiles.$ext"
+        graft.run.ProfileIO.write(rows, path)
+        val back = graft.run.ProfileIO.read(spark, path).collect()
+        val orig = rows.collect()
+        assert(back.length == orig.length)
+        assertAlmostEqual(back.head.mp, orig.head.mp, decimal = 12)
+        assert(back.head.pi.toSeq == orig.head.pi.toSeq)
+        assert(back.head.w == 32 && back.head.algorithm == "mpx")
+      }
     }
   }
 

@@ -9,6 +9,7 @@ import graft.ingest.TranscriptGen
 import graft.rollup.Rollup
 import graft.schema.{SeriesPoint, Transcript}
 import graft.streaming.StreamingRollup
+import Fixtures.withTempDir
 
 /** Structured-Streaming 1m tier: streamed aggregates equal the batch
   * rollup on the same data; late rows beyond the watermark are dropped.
@@ -49,22 +50,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val source = MemoryStream[Transcript]
     source.addData(rows)
     val tier = StreamingRollup.cascade(source.toDS(), "1m")
-    val cp = java.nio.file.Files.createTempDirectory("graft_stream_cp").toString
-    val q = StreamingRollup.start(tier, "memory", None, "m1_stream", cp)
-    q.awaitTermination()
+    withTempDir("graft_stream_cp") { cp =>
+      val q = StreamingRollup.start(tier, "memory", None, "m1_stream", cp)
+      q.awaitTermination()
 
-    // append mode finalizes only buckets past the watermark: buckets whose
-    // end <= max(ts) - lateness close; the in-flight tail stays open
-    val maxTs = rows.map(_.ts.getTime).max * 1000L
-    val cutoff = maxTs - 10L * 60 * 1000000
-    val step = Rollup.TierStep("1m")
-    val batch = closed(Rollup.rollupRaw(points(rows), "1m").toDF(), step, cutoff)
+      // append mode finalizes only buckets past the watermark: buckets whose
+      // end <= max(ts) - lateness close; the in-flight tail stays open
+      val maxTs = rows.map(_.ts.getTime).max * 1000L
+      val cutoff = maxTs - 10L * 60 * 1000000
+      val step = Rollup.TierStep("1m")
+      val batch = closed(Rollup.rollupRaw(points(rows), "1m").toDF(), step, cutoff)
 
-    assert(batch.length > 0 && spark.table("m1_stream").count() >= batch.length)
-    val streamedClosed = closed(spark.table("m1_stream"), step, cutoff)
-    assert(streamedClosed.length == batch.length,
-      s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
-    streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+      assert(batch.length > 0 && spark.table("m1_stream").count() >= batch.length)
+      val streamedClosed = closed(spark.table("m1_stream"), step, cutoff)
+      assert(streamedClosed.length == batch.length,
+        s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
+      streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+    }
   }
 
   test("chained 1h tier (two stateful operators, one query) finalizes " +
@@ -76,36 +78,37 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val source = MemoryStream[Transcript]
     val h1 = StreamingRollup.cascade(source.toDS(), "1h")
-    val cp = java.nio.file.Files.createTempDirectory("graft_h1_cp").toString
-    val q = h1.writeStream.outputMode("append").format("memory")
-      .queryName("h1_chained").option("checkpointLocation", cp).start()
-    // three micro-batches so hour buckets straddle state boundaries
-    val cut1 = rows.length / 3
-    val cut2 = 2 * rows.length / 3
-    source.addData(rows.take(cut1))
-    q.processAllAvailable()
-    source.addData(rows.slice(cut1, cut2))
-    q.processAllAvailable()
-    source.addData(rows.drop(cut2))
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft_h1_cp") { cp =>
+      val q = h1.writeStream.outputMode("append").format("memory")
+        .queryName("h1_chained").option("checkpointLocation", cp).start()
+      // three micro-batches so hour buckets straddle state boundaries
+      val cut1 = rows.length / 3
+      val cut2 = 2 * rows.length / 3
+      source.addData(rows.take(cut1))
+      q.processAllAvailable()
+      source.addData(rows.slice(cut1, cut2))
+      q.processAllAvailable()
+      source.addData(rows.drop(cut2))
+      q.processAllAvailable()
+      q.stop()
 
-    // append mode finalizes an hour bucket once the watermark passes its
-    // end: final watermark = max(ts) - lateness
-    val maxTs = rows.map(_.ts.getTime).max * 1000L
-    val cutoff = maxTs - 10L * 60 * 1000000
-    val step = Rollup.TierStep("1h")
-    val streamedClosed = closed(spark.table("h1_chained"), step, cutoff)
-    // the batch 1h tier straight from raw, and rolled up from the batch 1m
-    // tier — the tier-cascade identity (1h-from-1m == 1h-from-raw)
-    val pts = points(rows)
-    for (want <- Seq(Rollup.rollupRaw(pts, "1h"),
-        Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"))) {
-      val batch = closed(want.toDF(), step, cutoff)
-      assert(batch.length > 0, "fixture must close at least one hour bucket")
-      assert(streamedClosed.length == batch.length,
-        s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
-      streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+      // append mode finalizes an hour bucket once the watermark passes its
+      // end: final watermark = max(ts) - lateness
+      val maxTs = rows.map(_.ts.getTime).max * 1000L
+      val cutoff = maxTs - 10L * 60 * 1000000
+      val step = Rollup.TierStep("1h")
+      val streamedClosed = closed(spark.table("h1_chained"), step, cutoff)
+      // the batch 1h tier straight from raw, and rolled up from the batch 1m
+      // tier — the tier-cascade identity (1h-from-1m == 1h-from-raw)
+      val pts = points(rows)
+      for (want <- Seq(Rollup.rollupRaw(pts, "1h"),
+          Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"))) {
+        val batch = closed(want.toDF(), step, cutoff)
+        assert(batch.length > 0, "fixture must close at least one hour bucket")
+        assert(streamedClosed.length == batch.length,
+          s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
+        streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+      }
     }
   }
 
@@ -124,32 +127,33 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val source = MemoryStream[Transcript]
     val d1 = StreamingRollup.cascade(source.toDS(), "1d")
-    val cp = java.nio.file.Files.createTempDirectory("graft_d1_cp").toString
-    val q = d1.writeStream.outputMode("append").format("memory")
-      .queryName("d1_chained").option("checkpointLocation", cp).start()
-    // three micro-batches so day buckets straddle state boundaries
-    val cut1 = rows.length / 3
-    val cut2 = 2 * rows.length / 3
-    source.addData(rows.take(cut1))
-    q.processAllAvailable()
-    source.addData(rows.slice(cut1, cut2))
-    q.processAllAvailable()
-    source.addData(rows.drop(cut2))
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft_d1_cp") { cp =>
+      val q = d1.writeStream.outputMode("append").format("memory")
+        .queryName("d1_chained").option("checkpointLocation", cp).start()
+      // three micro-batches so day buckets straddle state boundaries
+      val cut1 = rows.length / 3
+      val cut2 = 2 * rows.length / 3
+      source.addData(rows.take(cut1))
+      q.processAllAvailable()
+      source.addData(rows.slice(cut1, cut2))
+      q.processAllAvailable()
+      source.addData(rows.drop(cut2))
+      q.processAllAvailable()
+      q.stop()
 
-    val maxTs = rows.map(_.ts.getTime).max * 1000L
-    val cutoff = maxTs - 10L * 60 * 1000000
-    val step = Rollup.TierStep("1d")
-    val streamedClosed = closed(spark.table("d1_chained"), step, cutoff)
-    val pts = points(rows)
-    for (want <- Seq(Rollup.rollupRaw(pts, "1d"),
-        Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"), "1d"))) {
-      val batch = closed(want.toDF(), step, cutoff)
-      assert(batch.length > 0, "fixture must close at least one day bucket")
-      assert(streamedClosed.length == batch.length,
-        s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
-      streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+      val maxTs = rows.map(_.ts.getTime).max * 1000L
+      val cutoff = maxTs - 10L * 60 * 1000000
+      val step = Rollup.TierStep("1d")
+      val streamedClosed = closed(spark.table("d1_chained"), step, cutoff)
+      val pts = points(rows)
+      for (want <- Seq(Rollup.rollupRaw(pts, "1d"),
+          Rollup.rollupTier(Rollup.rollupTier(Rollup.rollupRaw(pts, "1m"), "1h"), "1d"))) {
+        val batch = closed(want.toDF(), step, cutoff)
+        assert(batch.length > 0, "fixture must close at least one day bucket")
+        assert(streamedClosed.length == batch.length,
+          s"${streamedClosed.length} closed streamed vs ${batch.length} batch")
+        streamedClosed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
+      }
     }
   }
 
@@ -164,28 +168,29 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val source = MemoryStream[StreamingRollup.PointIn]
     val scored = StreamingRollup.streamingLeftProfile(source.toDS(), w)
-    val cp = java.nio.file.Files.createTempDirectory("graft_lp_cp").toString
-    val q = scored.writeStream.outputMode("append").format("memory")
-      .queryName("lp_stream").option("checkpointLocation", cp).start()
-    // two micro-batches so windows straddle a state boundary
-    source.addData(pts.take(25).toSeq)
-    q.processAllAvailable()
-    source.addData(pts.drop(25).toSeq)
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft_lp_cp") { cp =>
+      val q = scored.writeStream.outputMode("append").format("memory")
+        .queryName("lp_stream").option("checkpointLocation", cp).start()
+      // two micro-batches so windows straddle a state boundary
+      source.addData(pts.take(25).toSeq)
+      q.processAllAvailable()
+      source.addData(pts.drop(25).toSeq)
+      q.processAllAvailable()
+      q.stop()
 
-    val streamed = spark.table("lp_stream")
-      .as[StreamingRollup.LeftProfileScore].collect()
-      .map(s => (s.pos, s.dist)).sortBy(_._1)
-    val batch = StreamingRollup.leftProfileScores(vals, w, 0)
-      .filter(!_._2.isInfinite).map { case (i, d) => (i.toLong, d) }
-    assert(streamed.length == batch.length,
-      s"${streamed.length} streamed vs ${batch.length} batch windows")
-    streamed.zip(batch).foreach { case ((p1, d1), (p2, d2)) =>
-      assert(p1 == p2 && math.abs(d1 - d2) < 1e-9, s"pos $p1/$p2 dist $d1/$d2")
+      val streamed = spark.table("lp_stream")
+        .as[StreamingRollup.LeftProfileScore].collect()
+        .map(s => (s.pos, s.dist)).sortBy(_._1)
+      val batch = StreamingRollup.leftProfileScores(vals, w, 0)
+        .filter(!_._2.isInfinite).map { case (i, d) => (i.toLong, d) }
+      assert(streamed.length == batch.length,
+        s"${streamed.length} streamed vs ${batch.length} batch windows")
+      streamed.zip(batch).foreach { case ((p1, d1), (p2, d2)) =>
+        assert(p1 == p2 && math.abs(d1 - d2) < 1e-9, s"pos $p1/$p2 dist $d1/$d2")
+      }
+      // each window is emitted exactly once (by the batch that completes it)
+      assert(streamed.map(_._1).distinct.length == streamed.length)
     }
-    // each window is emitted exactly once (by the batch that completes it)
-    assert(streamed.map(_._1).distinct.length == streamed.length)
   }
 
   test("leftProfileScores diagonal recurrence matches a direct O(H*w) " +
@@ -276,39 +281,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val source = MemoryStream[StreamingRollup.PointIn]
     val scored = StreamingRollup.streamingLeftProfile(source.toDS(), w)
-    val cp = java.nio.file.Files.createTempDirectory("graft_lp_late_cp").toString
-    val q = scored.writeStream.outputMode("append").format("memory")
-      .queryName("lp_late_stream").option("checkpointLocation", cp).start()
-    // batch 1: points 0..19; batch 2: SHUFFLED points 25..49 (out of order
-    // within the batch — must be sorted) PLUS stale points 20..24 that are
-    // older than batch 2's own contribution but NEWER than batch 1's max —
-    // in-order relative to state, so accepted after the sort; batch 3:
-    // replays 5..9 (older than the high-water mark) AND redelivers point
-    // 49 (exactly AT the high-water mark — an at-least-once duplicate) —
-    // all must be dropped
-    source.addData((0 until 20).map(pt))
-    q.processAllAvailable()
-    val b2 = scala.util.Random.javaRandomToRandom(
-      new java.util.Random(7)).shuffle((20 until 50).toList)
-    source.addData(b2.map(pt))
-    q.processAllAvailable()
-    source.addData((5 until 10).map(pt) :+ pt(49))
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft_lp_late_cp") { cp =>
+      val q = scored.writeStream.outputMode("append").format("memory")
+        .queryName("lp_late_stream").option("checkpointLocation", cp).start()
+      // batch 1: points 0..19; batch 2: SHUFFLED points 25..49 (out of order
+      // within the batch — must be sorted) PLUS stale points 20..24 that are
+      // older than batch 2's own contribution but NEWER than batch 1's max —
+      // in-order relative to state, so accepted after the sort; batch 3:
+      // replays 5..9 (older than the high-water mark) AND redelivers point
+      // 49 (exactly AT the high-water mark — an at-least-once duplicate) —
+      // all must be dropped
+      source.addData((0 until 20).map(pt))
+      q.processAllAvailable()
+      val b2 = scala.util.Random.javaRandomToRandom(
+        new java.util.Random(7)).shuffle((20 until 50).toList)
+      source.addData(b2.map(pt))
+      q.processAllAvailable()
+      source.addData((5 until 10).map(pt) :+ pt(49))
+      q.processAllAvailable()
+      q.stop()
 
-    val streamed = spark.table("lp_late_stream")
-      .as[StreamingRollup.LeftProfileScore].collect()
-      .map(s => (s.pos, s.dist)).sortBy(_._1)
-    // the accepted stream is exactly vals in order; the stale replay must
-    // contribute nothing (same window set, emitted exactly once)
-    val batch = StreamingRollup.leftProfileScores(vals, w, 0)
-      .filter(!_._2.isInfinite).map { case (i, d) => (i.toLong, d) }
-    assert(streamed.length == batch.length,
-      s"${streamed.length} streamed vs ${batch.length} batch windows " +
-        "(late replay must not append or re-emit)")
-    streamed.zip(batch).foreach { case ((p1, d1), (p2, d2)) =>
-      assert(p1 == p2 && math.abs(d1 - d2) < 1e-9, s"pos $p1/$p2 dist $d1/$d2")
+      val streamed = spark.table("lp_late_stream")
+        .as[StreamingRollup.LeftProfileScore].collect()
+        .map(s => (s.pos, s.dist)).sortBy(_._1)
+      // the accepted stream is exactly vals in order; the stale replay must
+      // contribute nothing (same window set, emitted exactly once)
+      val batch = StreamingRollup.leftProfileScores(vals, w, 0)
+        .filter(!_._2.isInfinite).map { case (i, d) => (i.toLong, d) }
+      assert(streamed.length == batch.length,
+        s"${streamed.length} streamed vs ${batch.length} batch windows " +
+          "(late replay must not append or re-emit)")
+      streamed.zip(batch).foreach { case ((p1, d1), (p2, d2)) =>
+        assert(p1 == p2 && math.abs(d1 - d2) < 1e-9, s"pos $p1/$p2 dist $d1/$d2")
+      }
+      assert(streamed.map(_._1).distinct.length == streamed.length)
     }
-    assert(streamed.map(_._1).distinct.length == streamed.length)
   }
 }
