@@ -91,10 +91,11 @@ object SparkEntry {
     * a bucket(conv_id) table with one sorted file per bucket — the parquet
     * stand-in for the engine's Iceberg bucket(conv_id) scale layout.
     * Repartitioning by the SAME hash the bucketing uses puts each write
-    * task on exactly one bucket, so every bucket is a single file and the
-    * sortBy order survives the read: the colocated rollup over this table
-    * plans with ZERO exchanges (gated by SparkPipelineSpec's storage-layout
-    * test and PLAN_DIGEST). The one-time write is the layout cost a real
+    * task on exactly one bucket, so every bucket is a single file: the
+    * colocated rollup over this table plans with ZERO exchanges and one
+    * in-partition sort, since the scan does not report its files' order
+    * (gated by SparkPipelineSpec's storage-layout test and PLAN_DIGEST).
+    * The one-time write is the layout cost a real
     * deployment pays at ingest, not per query.
     */
   def bucketedPoints(s: SparkSession, dir: String): Dataset[SeriesPoint] = {

@@ -5,8 +5,10 @@ import graft.schema.SeriesPoint
 
 /** Compressed per-(conversation, kind) chunk structs: Gorilla XOR value
   * bytes + delta-of-delta timestamp bytes, at most `maxPoints` points per
-  * chunk. The cap bounds a chunk's size, not a task's: `encode` groups by
-  * (conv, kind) and sorts each whole series in one task.
+  * chunk. The cap bounds a chunk's size, not a task's: `encode` sends each
+  * (conv, kind) series to one task, whose sort by bucket spills to disk
+  * rather than holding the series, and cuts chunks as the sorted points
+  * stream by.
   */
 final case class SeriesChunk(
     conv_id: String,
@@ -23,13 +25,12 @@ object Chunks {
     val spark = points.sparkSession
     import spark.implicits._
     points
-      .groupByKey(p => (p.conv_id, p.kind))
-      .flatMapGroups { (key: (String, String), it: Iterator[SeriesPoint]) =>
-        val sorted = it.map(p => (p.bucket, p.value)).toArray.sortBy(_._1)
-        sorted.grouped(maxPoints).zipWithIndex.map { case (chunk, idx) =>
-          SeriesChunk(key._1, key._2, idx, chunk.head._1, chunk.length,
-            Gorilla.encodeTimestamps(chunk.map(_._1)),
-            Gorilla.encodeValues(chunk.map(_._2)))
+      .groupBy($"conv_id", $"kind").as[(String, String), SeriesPoint]
+      .flatMapSortedGroups($"bucket") { (key, it) =>
+        it.grouped(maxPoints).zipWithIndex.map { case (chunk, idx) =>
+          SeriesChunk(key._1, key._2, idx, chunk.head.bucket, chunk.length,
+            Gorilla.encodeTimestamps(chunk.map(_.bucket).toArray),
+            Gorilla.encodeValues(chunk.map(_.value).toArray))
         }
       }
   }

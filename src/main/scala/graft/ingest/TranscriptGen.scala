@@ -135,13 +135,17 @@ object TranscriptGen {
     }
   }
 
-  /** Distributed string-free points generation (benchmark path). */
+  /** Distributed string-free points generation (benchmark path), in the
+    * layout the colocated rollup requires, stated in the plan: hash
+    * partitioned by conv_id, sorted by (conv_id, kind, bucket).
+    */
   def generatePoints(spark: SparkSession, numConvs: Int, seed: Long = 42L,
       turnsScale: Int = 1): Dataset[graft.schema.SeriesPoint] = {
     import spark.implicits._
-    spark.range(0, numConvs.toLong, 1,
-        math.max(1, math.min(numConvs, spark.sparkContext.defaultParallelism * 2)))
+    val parts = math.max(1, math.min(numConvs, spark.sparkContext.defaultParallelism * 2))
+    spark.range(0, numConvs.toLong, 1, parts)
       .flatMap(k => genPoints(seed, k, turnsScale))
+      .repartition(parts, $"conv_id").sortWithinPartitions($"conv_id", $"kind", $"bucket")
   }
 
   /** Distributed generation: one task per conversation-range.

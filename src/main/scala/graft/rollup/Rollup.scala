@@ -50,46 +50,6 @@ object Rollup {
   /** A tier row's key, which is also the colocated layout's sort order. */
   private val Key = Seq("conv_id", "kind", "bucket")
 
-  /** Loud-failure guard for the colocated rollup's input contract: within a
-    * partition each (conv, kind) series must arrive as ONE contiguous run
-    * with non-decreasing time. A violated contract used to emit split
-    * buckets (duplicate rows per bucket) and silently wrong first/last —
-    * now a WITHIN-PARTITION violation (unsorted rows, interleaved
-    * conversations) throws with the offending key instead of producing
-    * quietly corrupt rollups. The guard is necessarily partition-local:
-    * a conversation SPLIT ACROSS partitions (each piece internally
-    * sorted) still emits one row per piece undetected — detecting that
-    * requires the very shuffle this path exists to avoid, so colocation
-    * itself remains the caller's contract (an Iceberg bucket(conv_id)
-    * layout provides it by construction; the storage-layout spec proves
-    * that path, and rollupRaw is the layout-agnostic fallback). State per
-    * partition: one set entry per (conv, kind) group — bounded by the
-    * partition's group count, the same order as the aggregation state
-    * itself.
-    */
-  private final class SortGuard {
-    private val seen = new java.util.HashSet[String]()
-    private var curConv: String = null
-    private var curKind: String = null
-    private var lastT = Long.MinValue
-    def check(conv: String, kind: String, t: Long): Unit = {
-      if (curConv == null || conv != curConv || kind != curKind) {
-        if (!seen.add(conv + "\u0000" + kind))
-          throw new IllegalArgumentException(
-            s"rollupAllColocated: input is not colocated-sorted — series ($conv, $kind) " +
-              "reappears after other rows in the same partition; feed a " +
-              "bucket(conv_id)-partitioned, (conv_id, kind, ts)-sorted table " +
-              "or use the generic rollupRaw/rollupTier path")
-        curConv = conv; curKind = kind; lastT = Long.MinValue
-      } else if (t < lastT)
-        throw new IllegalArgumentException(
-          s"rollupAllColocated: input is not time-sorted within ($conv, $kind) — " +
-            s"timestamp $t arrived after $lastT; feed a (conv_id, kind, ts)-" +
-            "sorted table or use the generic rollupRaw/rollupTier path")
-      lastT = t
-    }
-  }
-
   /** The tier measure set, point → bucket: the one definition of what a
     * TierAgg row holds. `first`/`last` are the values at the smallest and
     * largest `t`; which row wins among equal timestamps is not pinned.
@@ -317,9 +277,9 @@ object Rollup {
   private val ColocatedKey = "conv_id"
 
   /** Saves `points` as table `table` at `path` in the layout
-    * [[rollupAllColocated]] reads without an exchange (and its SortGuard
-    * checks): `buckets` bucket(conv_id) files, one per bucket, each sorted
-    * by (conv_id, kind, bucket).
+    * [[rollupAllColocated]] requires of its input, so its plan reads the
+    * bucketed scan without an exchange: `buckets` bucket(conv_id) files,
+    * one per bucket, each sorted by (conv_id, kind, bucket).
     */
   def writeColocated(points: Dataset[SeriesPoint], buckets: Int, table: String,
       path: String): Unit =
@@ -336,79 +296,79 @@ object Rollup {
       s"USING parquet CLUSTERED BY ($ColocatedKey) SORTED BY (${Key.mkString(", ")}) " +
       s"INTO $buckets BUCKETS LOCATION '$path'")
 
-  /** Zero-shuffle rollup for conv-bucketed sorted input: when every row of
-    * a conversation lives in one partition, sorted by (conv_id, kind,
-    * bucket) — an Iceberg table partitioned by bucket(conv_id) read with
-    * storage-partitioned scans, which the deterministic generator
-    * reproduces — one partition-local pass emits the 1m, 1h and 1d tiers
-    * together by cascading each finished fine bucket into the coarser
-    * accumulator: no exchange, no intermediate materialization between
-    * tiers. This is the plan shape the engine runs at full scale;
-    * `rollupRaw`/`rollupTier` are the generic-layout fallback.
+  /** Every ladder tier in one pass per conversation: its points, sorted by
+    * (kind, bucket), stream through one open bucket per tier, and each
+    * finished fine bucket cascades into the coarser accumulator, so no
+    * intermediate tier is materialized. The grouping is a plan
+    * requirement (clustered by conv_id, sorted by (conv_id, kind,
+    * bucket)), so the planner adds an exchange or a sort only where the
+    * input lacks it: a [[writeColocated]] table keeps its bucketed scan
+    * and plans no exchange, an input already hash-partitioned and sorted
+    * that way (TranscriptGen.generatePoints) plans neither, and any other
+    * input pays one exchange and one sort but is still exact. This is the
+    * plan shape the engine runs at full scale; `rollupRaw`/`rollupTier`
+    * are the generic chain.
     */
   def rollupAllColocated(points: Dataset[SeriesPoint]): Dataset[TierAgg] = {
     val spark = points.sparkSession
     import spark.implicits._
     val steps = Ladder.toArray
-    points.mapPartitions { it =>
-      new Iterator[TierAgg] {
-        // one open bucket per level, zero per-row allocation: the row-level
-        // form of fold/merge
-        private val L = steps.length
-        private val conv = new Array[String](L)
-        private val kind = new Array[String](L)
-        private val bucket = new Array[Long](L)
-        private val cnt = new Array[Long](L)
-        private val sum = new Array[Double](L)
-        private val mn = new Array[Double](L)
-        private val mx = new Array[Double](L)
-        private val first = new Array[Double](L)
-        private val last = new Array[Double](L)
-        private val queue = new scala.collection.mutable.ArrayDeque[TierAgg](4)
-        private val guard = new SortGuard
+    points.groupBy(col(ColocatedKey)).as[String, SeriesPoint]
+      .flatMapSortedGroups($"kind", $"bucket") { (conv, it) =>
+        new Iterator[TierAgg] {
+          // one open bucket per level (kind null: none), zero per-row
+          // allocation: the row-level form of fold/merge
+          private val L = steps.length
+          private val kind = new Array[String](L)
+          private val bucket = new Array[Long](L)
+          private val cnt = new Array[Long](L)
+          private val sum = new Array[Double](L)
+          private val mn = new Array[Double](L)
+          private val mx = new Array[Double](L)
+          private val first = new Array[Double](L)
+          private val last = new Array[Double](L)
+          private val queue = new scala.collection.mutable.ArrayDeque[TierAgg](4)
 
-        /** flush level l into the queue and cascade into level l+1. */
-        private def flush(l: Int): Unit = {
-          if (conv(l) == null) return
-          queue.append(TierAgg(conv(l), kind(l), steps(l).name, bucket(l),
-            cnt(l), sum(l), mn(l), mx(l), first(l), last(l)))
-          if (l + 1 < L) merge(l + 1, conv(l), kind(l), bucket(l),
-            cnt(l), sum(l), mn(l), mx(l), first(l), last(l))
-          conv(l) = null
-        }
-
-        /** merge measures at time t into level l's open bucket; a point is
-          * merge(0, c, k, t, 1, v, v, v, v, v).
-          */
-        private def merge(l: Int, c: String, k: String, t: Long,
-            n: Long, s: Double, lo: Double, hi: Double, f: Double, la: Double): Unit = {
-          val b = t - math.floorMod(t, steps(l).step)
-          if (conv(l) == null || conv(l) != c || kind(l) != k || bucket(l) != b) {
-            flush(l)
-            conv(l) = c; kind(l) = k; bucket(l) = b
-            cnt(l) = n; sum(l) = s; mn(l) = lo; mx(l) = hi
-            first(l) = f; last(l) = la
-          } else {
-            cnt(l) += n; sum(l) += s
-            if (lo < mn(l)) mn(l) = lo
-            if (hi > mx(l)) mx(l) = hi
-            last(l) = la
+          /** flush level l into the queue and cascade into level l+1. */
+          private def flush(l: Int): Unit = {
+            if (kind(l) == null) return
+            queue.append(TierAgg(conv, kind(l), steps(l).name, bucket(l),
+              cnt(l), sum(l), mn(l), mx(l), first(l), last(l)))
+            if (l + 1 < L) merge(l + 1, kind(l), bucket(l),
+              cnt(l), sum(l), mn(l), mx(l), first(l), last(l))
+            kind(l) = null
           }
-        }
 
-        def hasNext: Boolean =
-          queue.nonEmpty || conv.exists(_ != null) || it.hasNext
-        def next(): TierAgg = {
-          while (queue.isEmpty && it.hasNext) {
-            val p = it.next()
-            guard.check(p.conv_id, p.kind, p.bucket)
-            merge(0, p.conv_id, p.kind, p.bucket, 1L, p.value, p.value, p.value, p.value, p.value)
+          /** merge measures at time t into level l's open bucket; a point is
+            * merge(0, k, t, 1, v, v, v, v, v).
+            */
+          private def merge(l: Int, k: String, t: Long,
+              n: Long, s: Double, lo: Double, hi: Double, f: Double, la: Double): Unit = {
+            val b = t - math.floorMod(t, steps(l).step)
+            if (kind(l) == null || kind(l) != k || bucket(l) != b) {
+              flush(l)
+              kind(l) = k; bucket(l) = b
+              cnt(l) = n; sum(l) = s; mn(l) = lo; mx(l) = hi
+              first(l) = f; last(l) = la
+            } else {
+              cnt(l) += n; sum(l) += s
+              if (lo < mn(l)) mn(l) = lo
+              if (hi > mx(l)) mx(l) = hi
+              last(l) = la
+            }
           }
-          if (queue.isEmpty) (0 until L).foreach(flush) // end of partition
-          queue.removeHead()
+
+          def hasNext: Boolean = queue.nonEmpty || kind.exists(_ != null) || it.hasNext
+          def next(): TierAgg = {
+            while (queue.isEmpty && it.hasNext) {
+              val p = it.next()
+              merge(0, p.kind, p.bucket, 1L, p.value, p.value, p.value, p.value, p.value)
+            }
+            if (queue.isEmpty) (0 until L).foreach(flush) // end of the conversation
+            queue.removeHead()
+          }
         }
       }
-    }
   }
 
   private val TierKindSep = "@"

@@ -8,7 +8,6 @@ import graft.series.Derive
 import graft.rollup.Rollup
 import graft.compress.Chunks
 import graft.dist.DistributedMp
-import graft.dist.DistributedMp.SeriesRow
 import graft.kernels.{Fluss, TopK}
 import graft.schema._
 
@@ -110,7 +109,6 @@ object PipelineMain {
       val rawKinds = points.where($"kind".isin(Derive.TokenLen, Derive.GapS, Derive.TurnRate))
       val allPoints = (rawKinds.toDF() +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
       val series = Derive.assemble(allPoints)
-        .map { case (c, k, s, v) => SeriesRow(c, k, s, v) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val longest = series.select(max(size($"values"))).as[Option[Int]].first().getOrElse(0)
       val profiles = DistributedMp.mpxProfiles(series, w, "raw", maxSeriesLen = longest)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import graft.rollup.Rollup
 import graft.schema.{SeriesPoint, Transcript}
+import graft.dist.DistributedMp.SeriesRow
 
 /** Per-conversation series derivation from the transcript table.
   *
@@ -201,10 +202,9 @@ object Derive {
   }
 
   /** Assemble per-conversation contiguous value arrays ordered by bucket —
-    * the Dataset ↔ kernel boundary. Returns (conv_id, kind, startBucket,
-    * values).
+    * the Dataset ↔ kernel boundary, one MP input row per (conv, kind).
     */
-  def assemble(points: Dataset[SeriesPoint]): Dataset[(String, String, Long, Array[Double])] = {
+  def assemble(points: Dataset[SeriesPoint]): Dataset[SeriesRow] = {
     val spark = points.sparkSession
     import spark.implicits._
     // codegen'd path: struct sort orders by bucket (first field), so the
@@ -213,8 +213,8 @@ object Derive {
       .groupBy($"conv_id", $"kind")
       .agg(sort_array(collect_list(struct($"bucket", $"value"))).as("pts"))
       .select($"conv_id", $"kind",
-        element_at($"pts", 1).getField("bucket").as("start"),
+        element_at($"pts", 1).getField("bucket").as("startBucket"),
         transform($"pts", p => p.getField("value")).as("values"))
-      .as[(String, String, Long, Array[Double])]
+      .as[SeriesRow]
   }
 }

@@ -67,7 +67,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .where($"kind" === Derive.GapS)
       val series = Derive.assemble(gap).collect()
       assert(series.length == 1)
-      val values = series.head._4
+      val values = series.head.values
       assert(values.length == 875)
       // derived series equals sampledata + 60s at µs quantization
       for (i <- values.indices)
@@ -404,41 +404,49 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Asserts the colocated rollup of `points`, collected, equals the batch
+    * chain's three tiers, rows and values, under EXCEPT ALL both ways;
+    * returns the row count. Collected first, because that plan is the
+    * rollup's own: under an aggregate (a count, the EXCEPT ALL) Spark
+    * keeps a bucketed scan it drops when nothing above needs it. Inputs
+    * have integral values and distinct times per series, so sums and
+    * first/last have one right answer.
+    */
+  private def assertColocatedEqualsChain(points: Dataset[SeriesPoint]): Long = {
+    val got = spark.createDataFrame(Rollup.rollupAllColocated(points).collect().toSeq)
+    val want = Rollup.rollupChain(points).map(_.toDF()).reduce(_ union _)
+    val (extra, missing) = (got.exceptAll(want).count(), want.exceptAll(got).count())
+    assert(extra == 0 && missing == 0,
+      s"colocated vs chain: $extra extra, $missing missing of ${want.count()} rows")
+    want.count()
+  }
+
+  /** The scan of a colocated plan, which must keep its bucketed read and
+    * plan no exchange: the layout, not a shuffle, provides the grouping.
+    */
+  private def assertBucketedNoExchange(ds: Dataset[_]): Unit = {
+    val plan = physical(ds)
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"colocated rollup over the bucketed table must not shuffle:\n$plan")
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1 && scans.head.bucketedScan &&
+      scans.head.metadata("Bucketed") == "true", s"not a bucketed scan:\n$plan")
+  }
+
   test("a bucketed+sorted table (the 100 TB layout) feeds the zero-shuffle " +
       "colocated rollup straight from storage") {
     import spark.implicits._
     val fromText = tokenLenT(TranscriptGen.generate(spark, 30))
     for (raw <- Seq(fromText, TranscriptGen.generatePoints(spark, 40))) {
       // destroy any incidental clustering, then write the engine's scale
-      // layout: bucket(conv_id) with one file per bucket (repartition by
-      // the same hash the bucketing uses) sorted by (conv_id, kind,
-      // bucket) — the parquet stand-in for the Iceberg bucket(conv_id) table
+      // layout — the parquet stand-in for the Iceberg bucket(conv_id) table
       withTempDir("graft_bucketed") { dir =>
-        raw.orderBy(rand(7)).repartition(8, $"conv_id")
-          .write.bucketBy(8, "conv_id").sortBy("conv_id", "kind", "bucket")
-          .option("path", s"$dir/points_bucketed")
-          .mode("overwrite").saveAsTable("points_bucketed")
+        Rollup.writeColocated(raw.orderBy(rand(7)), 8, "points_bucketed",
+          s"$dir/points_bucketed")
         try {
           val scanned = spark.table("points_bucketed").as[SeriesPoint]
-          val colocated = Rollup.rollupAllColocated(scanned)
-          // no exchange anywhere: the layout, not a shuffle, provides locality
-          val plan = colocated.queryExecution.executedPlan.toString
-          assert(!plan.contains("Exchange"),
-            s"colocated rollup over the bucketed table must not shuffle:\n$plan")
-          val genericBy = (d: org.apache.spark.sql.Dataset[TierAgg]) =>
-            d.collect().map(t => (t.conv_id, t.kind, t.tier, t.bucket) -> t).toMap
-          val got = genericBy(colocated)
-          val m1 = Rollup.rollupRaw(raw, "1m")
-          val want = genericBy(m1.union(Rollup.rollupTier(m1, "1h"))
-            .union(Rollup.rollupTier(Rollup.rollupTier(m1, "1h"), "1d")))
-          assert(got.keySet == want.keySet && got.nonEmpty,
-            s"bucket sets differ: ${got.size} vs ${want.size}")
-          got.foreach { case (k, g) =>
-            val w = want(k)
-            assert(g.cnt == w.cnt && g.min == w.min && g.max == w.max &&
-              g.first == w.first && g.last == w.last, s"$k: $g vs $w")
-            assert(math.abs(g.sum - w.sum) < 1e-6, s"$k: sum ${g.sum} vs ${w.sum}")
-          }
+          assertBucketedNoExchange(Rollup.rollupAllColocated(scanned))
+          assert(assertColocatedEqualsChain(scanned) > 0)
         } finally spark.sql("DROP TABLE IF EXISTS points_bucketed")
       }
     }
@@ -579,7 +587,9 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import spark.implicits._
-    val pts = TranscriptGen.generatePoints(spark, 5)
+    // points with no declared layout (generatePoints' hash partitioning
+    // by conv_id would already cluster the 1m grouping)
+    val pts = spark.createDataset((0L until 5).flatMap(TranscriptGen.genPoints(42L, _)))
     val m1 = Rollup.rollupRaw(pts, "1m")
     val plans = Seq(
       "rollupRaw" -> m1,
@@ -808,10 +818,12 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the colocated rollup is gated against the generic plan by the
     // storage-layout spec; this one gates the colocated assemble
     val pts = TranscriptGen.generatePoints(spark, 40)
-    val ga = Derive.assemble(pts).collect().map(r => (r._1, r._2) -> r).toMap
+    val ga = Derive.assemble(pts).collect().map(r => (r.conv_id, r.kind) -> r).toMap
     val ca = Derive.assembleColocated(pts).collect().map(r => (r._1, r._2) -> r).toMap
     assert(ga.keySet == ca.keySet && ga.nonEmpty)
-    ga.foreach { case (k, g) => assert(g._4.toSeq == ca(k)._4.toSeq && g._3 == ca(k)._3) }
+    ga.foreach { case (k, g) =>
+      assert(g.values.toSeq == ca(k)._4.toSeq && g.startBucket == ca(k)._3)
+    }
   }
 
   test("string-free points generator equals length(text) derivation") {
@@ -898,29 +910,62 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(enc.length < grid.length, s"ts bytes ${enc.length} for ${grid.length} points")
   }
 
-  test("colocated rollup fails fast on input that violates the sorted " +
-      "contract instead of silently emitting split buckets") {
+  test("colocated rollup equals rollupChain on unsorted, interleaved and " +
+      "cross-partition-split input: the plan, not the caller, groups it") {
     import spark.implicits._
-    val t0 = TranscriptGen.EpochMicros
-    def pt(c: String, t: Long) = SeriesPoint(c, "tok", t, 1.0)
-    // time goes backwards within one conversation
-    val unsorted = spark.createDataset(Seq(
-      pt("c1", t0 + 120000000L), pt("c1", t0))).coalesce(1)
-    val e1 = intercept[org.apache.spark.SparkException] {
-      Rollup.rollupAllColocated(unsorted).collect()
+    val pts = spark.createDataset((0L until 12).flatMap(TranscriptGen.genPoints(42L, _)))
+    val inputs = Seq(
+      // time goes backwards within each conversation
+      "unsorted" -> pts.orderBy(rand(3)).coalesce(1),
+      // conversations interleave, each in time order
+      "interleaved" -> pts.orderBy($"bucket").coalesce(1),
+      // each conversation split over partitions, every piece sorted
+      "split" -> pts.repartitionByRange(4, $"bucket")
+        .sortWithinPartitions($"conv_id", $"kind", $"bucket"))
+    for ((name, input) <- inputs)
+      withClue(s"$name: ")(assert(assertColocatedEqualsChain(input) > 0))
+  }
+
+  test("the generator states its layout in the plan: the colocated rollup " +
+      "over its cached output plans no exchange and no sort") {
+    import org.apache.spark.sql.execution.SortExec
+    val points = TranscriptGen.generatePoints(spark, 40).persist()
+    try {
+      // materialized first, as Bench does before its timed rollup leg: an
+      // adaptive cached plan reports its partitioning only once it has run
+      points.count()
+      // InMemoryTableScanExec is a leaf: collect stops at the cached scan
+      val plan = physical(Rollup.rollupAllColocated(points))
+      val added = plan.collect { case e: ShuffleExchangeExec => e; case s: SortExec => s }
+      assert(added.isEmpty, s"above the cached scan:\n$plan")
+      assert(assertColocatedEqualsChain(points) > 0)
+    } finally points.unpersist()
+  }
+
+  test("a colocated table of small row groups, read in file splits, keeps " +
+      "its bucketed scan: every bucket is one row, not one per split") {
+    // 8 KiB row groups read at 16 KiB splits: without the plan's
+    // clustering requirement Spark drops the bucketed read, splits each
+    // bucket file over tasks, and one bucket becomes one row per piece
+    import spark.implicits._
+    withTempDir("graft_rowgroups") { dir =>
+      val table = "points_small_row_groups"
+      spark.conf.set("parquet.block.size", "8192")
+      try Rollup.writeColocated(TranscriptGen.generatePoints(spark, 200), 4, table,
+        s"$dir/$table")
+      finally spark.conf.unset("parquet.block.size")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+      try {
+        val scanned = spark.table(table).as[SeriesPoint]
+        // a plain scan, which needs no clustering, does split
+        assert(scanned.toDF().rdd.getNumPartitions > 4)
+        assert(assertColocatedEqualsChain(scanned) == 25286) // distinct tier keys
+        assertBucketedNoExchange(Rollup.rollupAllColocated(scanned))
+      } finally {
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+      }
     }
-    assert(e1.getMessage.contains("not time-sorted"), e1.getMessage)
-    // a conversation reappears after another one's rows (shuffled layout)
-    val interleaved = spark.createDataset(Seq(
-      pt("c1", t0), pt("c2", t0), pt("c1", t0 + 60000000L))).coalesce(1)
-    val e2 = intercept[org.apache.spark.SparkException] {
-      Rollup.rollupAllColocated(interleaved).collect()
-    }
-    assert(e2.getMessage.contains("not colocated-sorted"), e2.getMessage)
-    // valid sorted input still streams through untouched
-    val ok = spark.createDataset(Seq(
-      pt("c1", t0), pt("c1", t0 + 60000000L), pt("c2", t0))).coalesce(1)
-    assert(Rollup.rollupAllColocated(ok).collect().count(_.tier == "1m") == 3)
   }
 
   test("operator-internal persisted stages release through StageCache: no " +
