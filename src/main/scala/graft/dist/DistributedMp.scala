@@ -46,7 +46,8 @@ object DistributedMp {
     * `defaultParallelism` partitions by the `spreadBy` columns and reduced
     * by `merge`. `maxSeriesLen`, a caller-known upper bound on `size`
     * (negative: unknown), drops the tile subtree — an exchange plus a
-    * merge aggregation over zero rows — when it proves every row short.
+    * merge aggregation over zero rows — when it proves every row short;
+    * a row that breaks that bound by reaching `splitThreshold` throws.
     */
   private def fanOut[I, C, T: Encoder, O: Encoder](in: Dataset[I],
       splitThreshold: Int, maxSeriesLen: Int)(size: I => Int, cells: I => Iterator[C])(
@@ -56,7 +57,10 @@ object DistributedMp {
     // single consumer when the tile branch is dropped: no fork, no persist
     val rows = if (shortOnly) in else graft.util.StageCache.forked(in)
     val shortRows = rows.flatMap { r =>
-      if (size(r) < splitThreshold) cells(r).map(whole) else Iterator.empty
+      val n = size(r)
+      require(n < splitThreshold || !shortOnly, s"a row of size $n is at or over " +
+        s"splitThreshold $splitThreshold, but the caller bound maxSeriesLen = $maxSeriesLen")
+      if (n < splitThreshold) cells(r).map(whole) else Iterator.empty
     }
     // a fixed partition count plans REPARTITION_BY_NUM, which AQE never
     // coalesces: a few large tiles must stay spread over the cores

@@ -133,16 +133,13 @@ object Rollup {
   }
 
   /** The batch chain raw → … → `upTo` along the ladder: the finest tier by
-    * [[rollupRaw]] (unsalted), each coarser one by [[rollupTier]] from
-    * `stage`'s result for the tier before it — the tier itself, or a
-    * written-and-reread copy. Returns `stage`'s result for every tier.
+    * [[rollupRaw]] (unsalted), each coarser one by [[rollupTier]] from the
+    * tier before it. Returns every tier's plan, finest first.
     */
-  def rollupChain(points: Dataset[SeriesPoint], upTo: String = Ladder.last.name,
-      stage: (Tier, Dataset[TierAgg]) => Dataset[TierAgg] = (_, tier) => tier):
-      Seq[Dataset[TierAgg]] = {
+  def rollupChain(points: Dataset[SeriesPoint],
+      upTo: String = Ladder.last.name): Seq[Dataset[TierAgg]] = {
     val rungs = ladderTo(upTo)
-    val finest = stage(rungs.head, rollupRaw(points, rungs.head.name))
-    rungs.tail.scanLeft(finest)((finer, t) => stage(t, rollupTier(finer, t.name)))
+    rungs.tail.scanLeft(rollupRaw(points, rungs.head.name))((finer, t) => rollupTier(finer, t.name))
   }
 
   /** Broadcasting more touched keys than this falls back to a shuffle
@@ -306,8 +303,9 @@ object Rollup {
     * and plans no exchange, an input already hash-partitioned and sorted
     * that way (TranscriptGen.generatePoints) plans neither, and any other
     * input pays one exchange and one sort but is still exact. This is the
-    * plan shape the engine runs at full scale; `rollupRaw`/`rollupTier`
-    * are the generic chain.
+    * plan shape the engine runs at full scale, and the one the pipeline's
+    * tiers stage (`PipelineMain`) runs over its stored points;
+    * `rollupRaw`/`rollupTier` are the generic chain.
     */
   def rollupAllColocated(points: Dataset[SeriesPoint]): Dataset[TierAgg] = {
     val spark = points.sparkSession

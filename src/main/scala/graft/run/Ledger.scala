@@ -98,25 +98,18 @@ object Ledger {
     def rows: Long = long("rows")
   }
 
-  /** Attach `count(lit(1)) as rows` plus `extra` to `ds`. The metrics are
-    * only right when the returned plan runs exactly once: observe the top
-    * of a write plan, or an input with a single consumer — a
-    * CollectMetrics node in a forked plan reports whichever copy did not
-    * run (see `ops.Dedup.capBuckets`).
-    */
-  def observe[T](ds: Dataset[T], extra: Column*): (Dataset[T], Observed) = {
-    val obs = new Observation()
-    (ds.observe(obs, count(lit(1)).as("rows"), extra: _*), new Observed(obs))
-  }
-
   /** Overwrite `out` with `ds` as parquet (partitioned by `partitionBy`)
-    * and return the metrics observed on that same write.
+    * and return `count(lit(1)) as rows` plus `extra`, observed on that same
+    * write: the top of the write plan runs exactly once, so the metrics
+    * are right (a CollectMetrics node in a forked plan reports whichever
+    * copy did not run, see `ops.Dedup.capBuckets`).
     */
   def write[T](ds: Dataset[T], out: String, extra: Seq[Column] = Nil,
       partitionBy: Seq[String] = Nil): Observed = {
-    val (observed, metrics) = observe(ds, extra: _*)
+    val obs = new Observation()
+    val observed = ds.observe(obs, count(lit(1)).as("rows"), extra: _*)
     val writer = observed.write.mode(SaveMode.Overwrite)
     (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*)).parquet(out)
-    metrics
+    new Observed(obs)
   }
 }

@@ -3,6 +3,7 @@ package graft.run
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ingest.TranscriptGen
 import graft.series.Derive
 import graft.rollup.Rollup
@@ -14,8 +15,8 @@ import graft.schema._
 /** End-to-end rollup + matrix-profile pipeline over the synthetic
   * transcript table, checkpoint-resumable via the Ledger.
   *
-  * Stages: transcripts → series (token_len, gap_s, turn_rate) →
-  * gap-fill → Gorilla chunks → tiers 1m→1h→1d → per-tier MP (mpx) →
+  * Stages: transcripts → series (token_len, gap_s, turn_rate) → gap-fill
+  * → Gorilla chunks → tiers 1m→1h→1d in one pass → per-tier MP (mpx) →
   * discords/regimes per profile. Every stage's ledger row counts are
   * observed on the stage's own write (no re-read of its output), tables
   * are read back with their schemas pinned (no inference job), and all
@@ -70,28 +71,30 @@ object PipelineMain {
 
     maybeAbort("chunks_raw")
 
-    // stage 4: continuous aggregates along the ladder 1m -> 1h -> 1d
-    // (chained, unsalted), then retention: coarse tiers are derived from
-    // the FULL fine tier (`<tier>_full`), after which a tier with a horizon
-    // keeps the buckets within it of the newest 1m bucket
+    // stage 4: continuous aggregates 1m -> 1h -> 1d in one
+    // Rollup.rollupAllColocated pass (one exchange), persisted once and
+    // written as every tier's FULL table `<tier>_full` (uncoalesced: Spark
+    // keeps a cached plan's shuffle partitions); the 1m write's sum(cnt) is
+    // the stage's input. A tier with a horizon keeps, in `<tier>`, the
+    // buckets within it of the newest 1m bucket
     var retention: Option[String] = None
     val tiersPath = ledger.stage("tiers") { out =>
-      val (raw, rawSeen) = Ledger.observe(points.where($"kind" === Derive.TokenLenT))
-      def fullPath(t: Rollup.Tier) = s"$out/${t.table}${if (t.horizon.isDefined) "_full" else ""}"
-      val written = scala.collection.mutable.ArrayBuffer.empty[Ledger.Observed]
-      val tiers = Rollup.rollupChain(raw, stage = (t, agg) => {
-        written += Ledger.write(agg, fullPath(t), Seq(max($"bucket").as("newest")))
-        Ledger.read[TierAgg](spark, fullPath(t))
-      })
-      val newest = written.head.long("newest")
-      val drops = for (((t, tier), full) <- Rollup.Ladder.zip(tiers).zip(written);
-          h <- t.horizon) yield {
-        val kept = Ledger.write(Rollup.applyRetention(tier, newest - h), s"$out/${t.table}")
-        s"${t.name} dropped ${full.rows - kept.rows} of ${full.rows} buckets " +
-          s"(horizon ${h / Rollup.TierStep("1d")}d)"
-      }
-      retention = Some(drops.mkString(", "))
-      (rawSeen.rows, written.head.rows)
+      val all = Rollup.rollupAllColocated(points.where($"kind" === Derive.TokenLenT))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        def full(t: Rollup.Tier) = all.where($"tier" === t.name)
+        val written = Rollup.Ladder.map(t => Ledger.write(full(t),
+          s"$out/${t.table}${if (t.horizon.isDefined) "_full" else ""}",
+          Seq(max($"bucket").as("newest"), sum($"cnt").as("points"))))
+        val newest = written.head.long("newest")
+        val drops = for ((t, fullSeen) <- Rollup.Ladder.zip(written); h <- t.horizon) yield {
+          val kept = Ledger.write(Rollup.applyRetention(full(t), newest - h), s"$out/${t.table}")
+          s"${t.name} dropped ${fullSeen.rows - kept.rows} of ${fullSeen.rows} buckets " +
+            s"(horizon ${h / Rollup.TierStep("1d")}d)"
+        }
+        retention = Some(drops.mkString(", "))
+        (written.head.long("points"), written.head.rows)
+      } finally all.unpersist()
     }
 
     maybeAbort("tiers")
@@ -109,15 +112,16 @@ object PipelineMain {
       val rawKinds = points.where($"kind".isin(Derive.TokenLen, Derive.GapS, Derive.TurnRate))
       val allPoints = (rawKinds.toDF() +: tierPoints).reduce(_ unionByName _).as[SeriesPoint]
       val series = Derive.assemble(allPoints)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val longest = series.select(max(size($"values"))).as[Option[Int]].first().getOrElse(0)
-      val profiles = DistributedMp.mpxProfiles(series, w, "raw", maxSeriesLen = longest)
-        .withColumn("tier", when(Rollup.isTierKind($"kind"), lit("tier")).otherwise(lit("raw")))
-        .as[MpProfileRow]
-      val written = Ledger.write(profiles, out, Seq(sum(size($"mp")).as("subsequences")))
-      series.unpersist()
-      subsequences = Some(written.long("subsequences"))
-      (0L, written.rows)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val longest = series.select(max(size($"values"))).as[Option[Int]].first().getOrElse(0)
+        val profiles = DistributedMp.mpxProfiles(series, w, "raw", maxSeriesLen = longest)
+          .withColumn("tier", when(Rollup.isTierKind($"kind"), lit("tier")).otherwise(lit("raw")))
+          .as[MpProfileRow]
+        val written = Ledger.write(profiles, out, Seq(sum(size($"mp")).as("subsequences")))
+        subsequences = Some(written.long("subsequences"))
+        (0L, written.rows)
+      } finally series.unpersist()
     }
 
     maybeAbort("profiles")

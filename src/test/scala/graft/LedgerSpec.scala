@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.rollup.Rollup
 import graft.run.{Ledger, PipelineMain}
-import graft.schema.TierAgg
+import graft.schema.{SeriesPoint, TierAgg}
 import graft.series.Derive
 import Fixtures.withTempDir
 
@@ -134,6 +134,8 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
           log = captured(PipelineMain.run(spark, 15, out, 16, resume = false))
           metrics.drain().since(before).jobs
         } finally metrics.close()
+      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty, "a stage cache outlived the run")
 
       assert(summary(log).startsWith("[pipeline] convs=15 "))
       val counts = ledgerCounts(out)
@@ -153,7 +155,7 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Seq(kinds(Derive.TokenLenT), kinds(Derive.TokenLen), kinds(Derive.GapS) + convs)
         .forall(_ == counts("series_points")._1), kinds)
       assert(counts("tiers")._1 == kinds(Derive.TokenLenT))
-      // measured 29 at local[2] (76 before counts came from the writes);
+      // measured 24 at local[2] (76 before counts came from the writes);
       // re-reads, inference or summary jobs creeping back push it over
       assert(jobs <= 32, s"pipeline ran $jobs Spark jobs")
 
@@ -178,6 +180,16 @@ class LedgerSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().toSet == tier("h1_full")
         .select($"conv_id", $"kind", ($"bucket" - pmod($"bucket", lit(days))).as("bucket"))
         .as[(String, String, Long)].collect().toSet, "d1 must be untrimmed")
+
+      // the tiers stage's one colocated pass equals the chained rollup of
+      // the stored token_len_t points, tier by tier
+      val stored = Ledger.read[SeriesPoint](spark, s"$out/series_points")
+        .where($"kind" === Derive.TokenLenT)
+      for ((t, chained) <- Rollup.Ladder.zip(Rollup.rollupChain(stored))) {
+        val got = tier(s"${t.table}${if (t.horizon.isDefined) "_full" else ""}").toDF()
+        assert(got.exceptAll(chained.toDF()).isEmpty && chained.toDF().exceptAll(got).isEmpty,
+          s"tier ${t.name} differs from rollupChain")
+      }
     }
   }
 

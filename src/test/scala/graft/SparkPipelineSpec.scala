@@ -332,6 +332,19 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fixedCount(DistributedMp.stompProfiles(ds, 32, "raw")) == 1)
   }
 
+  test("a row that breaks the caller's maxSeriesLen bound throws, never drops") {
+    import spark.implicits._
+    val ds = spark.createDataset(Seq(SeriesRow("a", "v", 0L, sampledata)))
+    // 875 points: at or over splitThreshold, but the caller claimed <= 50,
+    // so no tile branch is planned that could take the row
+    val e = intercept[Exception] {
+      DistributedMp.mpxProfiles(ds, 32, "raw", splitThreshold = 100, maxSeriesLen = 50).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("a row of size 875 is at or over " +
+      "splitThreshold 100, but the caller bound maxSeriesLen = 50")), e.toString)
+  }
+
   test("distributed tiled snippets equal the single-task kernel (indices + " +
       "fractions), tasks carry slices not the series") {
     import spark.implicits._
