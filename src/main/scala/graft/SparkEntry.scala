@@ -17,7 +17,6 @@ object SparkEntry {
 
   // ---- values the ops-family queries share with their oracles (OracleSqlGen)
   final val NearDupThreshold = 0.3      // q20/q33: minimum Jaccard
-  final val MaxHamming = 3              // q21: maximum SimHash distance
   final val AnnK = 10                   // q24/q35: neighbours per query,
   final val AnnQueries = 20             //   for the queries vec_id < 20
   final val EmbeddingDim = 64           // q24/q25/q35
@@ -303,7 +302,7 @@ object SparkEntry {
       Dedup.minhashLsh(documents(s, dir), threshold = NearDupThreshold)),
 
     "q21_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(documents(s, dir), maxHamming = MaxHamming)),
+      Dedup.simhashPairs(documents(s, dir))),
 
     "q33_dedup_pipeline" -> ((s, dir) =>
       Dedup.pipeline(documents(s, dir), threshold = NearDupThreshold)),

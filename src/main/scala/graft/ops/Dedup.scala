@@ -37,12 +37,15 @@ object Dedup {
     */
   val DefaultMaxBucket = 1000
 
-  /** The MinHash-LSH (q20/q33) and [[embeddingDups]] hyperplane-LSH
-    * (q25/q39) shapes, read by their oracles too.
+  /** The MinHash-LSH (q20/q33), SimHash (q21) and [[embeddingDups]]
+    * hyperplane-LSH (q25/q39) shapes, read by their oracles too. The
+    * builders take none of them as a parameter: a query built with any
+    * other value would have no oracle.
     */
   final val NumHashes = 16
   final val Bands = 8
   final val ShingleK = 3
+  final val MaxHamming = 3
   final val EmbedPlanes = 12
   final val EmbedTables = 4
   final val EmbedSeed = 7L
@@ -116,13 +119,13 @@ object Dedup {
   /** Exact dedup: md5 of the raw text. Returns (doc_id, content_hash,
     * group_size, keep) where keep marks the minimum doc_id per group.
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def exact(docs: DataFrame): DataFrame = {
     val group = Window.partitionBy($"content_hash")
     docs
-      .withColumn("content_hash", md5(col(textCol)))
+      .withColumn("content_hash", md5($"text"))
       .withColumn("group_size", count(lit(1)).over(group))
-      .withColumn("keep", col(idCol) === min(col(idCol)).over(group))
-      .select(col(idCol), $"content_hash", $"group_size", $"keep")
+      .withColumn("keep", $"doc_id" === min($"doc_id").over(group))
+      .select($"doc_id", $"content_hash", $"group_size", $"keep")
   }
 
   // one digest per task thread; digest() resets it, so reuse is safe and
@@ -156,9 +159,9 @@ object Dedup {
   /** (id, text) rows for a per-document md5 kernel, spread full width when
     * the scan is under-parallel: the md5 kernels scale with cores.
     */
-  private def docTexts(docs: DataFrame, idCol: String, textCol: String) = {
+  private def docTexts(docs: DataFrame) = {
     import docs.sparkSession.implicits._
-    graft.util.SessionTuning.spread(docs.select(col(idCol).as("id"), col(textCol).as("t")),
+    graft.util.SessionTuning.spread(docs.select(col("doc_id").as("id"), col("text").as("t")),
       docs.sparkSession.sparkContext.defaultParallelism, "id").as[(Long, String)]
   }
 
@@ -166,35 +169,34 @@ object Dedup {
     * min of md5(f ':' shingle) over the document's distinct shingles — a
     * valid min-hash family whose values a SQL engine reproduces exactly.
     * One typed pass per document (the expression-tree alternative
-    * materializes numHashes arrays per row and is ~an order of magnitude
+    * materializes NumHashes arrays per row and is ~an order of magnitude
     * slower). Returns (id, shingles: distinct texts, minhash: hex strings).
     */
-  def minhashSignature(docs: DataFrame, textCol: String, numHashes: Int = NumHashes,
-      shingleK: Int = ShingleK): DataFrame = {
+  def minhashSignature(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docTexts(docs, "doc_id", textCol)
+    docTexts(docs)
       .mapPartitions { it =>
         // the hashed bytes are identical to md5(f + ":" + shingle) over the
         // concatenated string: the "f:" prefix is pure ASCII, so its UTF-8
         // encoding never interacts with the shingle's (no surrogate can
         // span the boundary) — precompute each slot's prefix bytes once
         val md = md5Local.get()
-        val pfx = Array.tabulate(numHashes)(f => (f.toString + ":").getBytes("UTF-8"))
+        val pfx = Array.tabulate(NumHashes)(f => (f.toString + ":").getBytes("UTF-8"))
         val cand = new Array[Byte](16)
         it.flatMap { case (id, text) =>
           // Locale.ROOT: JVM-default-locale lowercasing (e.g. tr_TR dotless
           // ı) would silently diverge from SQL lower() semantics
           val toks = wsPattern.split(text.trim.toLowerCase(java.util.Locale.ROOT))
-          if (toks.length < shingleK) Iterator.empty
+          if (toks.length < ShingleK) Iterator.empty
           else {
-            val nSh = toks.length - shingleK + 1
+            val nSh = toks.length - ShingleK + 1
             val seen = new java.util.LinkedHashSet[String]()
             var i = 0
             while (i < nSh) {
               val sb = new java.lang.StringBuilder()
               var j = 0
-              while (j < shingleK) {
+              while (j < ShingleK) {
                 if (j > 0) sb.append(' ')
                 sb.append(toks(i + j))
                 j += 1
@@ -206,13 +208,13 @@ object Dedup {
             // hex "ff..ff" ceiling); strict unsigned compare preserves the
             // old first-wins-on-tie behavior, and hex order == byte order,
             // so the final hex strings are byte-identical to the old path
-            val mins = Array.fill(numHashes)(Array.fill(16)(0xFF.toByte))
+            val mins = Array.fill(NumHashes)(Array.fill(16)(0xFF.toByte))
             val shIt = seen.iterator()
             while (shIt.hasNext) {
               val sh = shIt.next()
               val shBytes = sh.getBytes("UTF-8")
               var f = 0
-              while (f < numHashes) {
+              while (f < NumHashes) {
                 md.update(pfx(f))
                 md.update(shBytes)
                 md.digest(cand, 0, 16)
@@ -235,19 +237,17 @@ object Dedup {
     * shingle sets re-joined by id for the exact-Jaccard verify.
     * jaccard = |A∩B| / (|A| + |B| - |A∩B|) over distinct shingle texts.
     */
-  def minhashLsh(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      numHashes: Int = NumHashes, bands: Int = Bands, threshold: Double = 0.5,
+  def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val rows = numHashes / bands
+    val rows = NumHashes / Bands
     // the md5-heavy signature stage fans out to three consumers (banding +
     // both verify sides) with different downstream partitionings — persist
     // it so the corpus is scanned and hashed ONCE, not 3x (at 100 TB this
     // would be a checkpoint to parquet instead)
-    val sigs = graft.util.StageCache.persist(minhashSignature(
-      docs.withColumnRenamed(idCol, "doc_id"), textCol, numHashes))
+    val sigs = graft.util.StageCache.persist(minhashSignature(docs))
 
     val banded = sigs.select($"id",
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        posexplode(transform(sequence(lit(0), lit(Bands - 1)),
           b => md5(concat_ws("|", slice($"minhash", b * rows + 1, lit(rows)))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
@@ -277,20 +277,17 @@ object Dedup {
     * (jaccard_e4 = 10000), near rows are LSH-verified pairs between
     * representatives.
     */
-  def pipeline(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      numHashes: Int = NumHashes, bands: Int = Bands, threshold: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val ex = graft.util.StageCache.persist(exact(docs, idCol, textCol))
+  def pipeline(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val ex = graft.util.StageCache.persist(exact(docs))
     val exactPairs = ex
       // group min over ALL rows (the representative is the min id itself),
       // then keep only the non-representatives as the duplicate side
-      .withColumn("id_a", min(col(idCol)).over(Window.partitionBy($"content_hash")))
+      .withColumn("id_a", min($"doc_id").over(Window.partitionBy($"content_hash")))
       .where(!$"keep")
-      .select($"id_a", col(idCol).as("id_b"), lit("exact").as("kind"),
+      .select($"id_a", $"doc_id".as("id_b"), lit("exact").as("kind"),
         lit(10000L).as("jaccard_e4"))
-    val reps = docs.join(ex.where($"keep").select(col(idCol)), Seq(idCol))
-    val nearPairs = minhashLsh(reps, idCol, textCol, numHashes, bands,
-      threshold, maxBucket)
+    val reps = docs.join(ex.where($"keep").select($"doc_id"), Seq("doc_id"))
+    val nearPairs = minhashLsh(reps, threshold)
       .select($"id_a", $"id_b", lit("near").as("kind"), $"jaccard_e4")
     exactPairs.union(nearPairs)
   }
@@ -300,11 +297,10 @@ object Dedup {
     * The string form keeps every step (votes, banding, Hamming) exactly
     * reproducible in SQL without 64-bit overflow tricks.
     */
-  def simhash(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+  def simhash(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docTexts(docs, idCol, textCol)
+    docTexts(docs)
       .mapPartitions { it =>
         val md = md5Local.get()
         val d = new Array[Byte](16)
@@ -335,17 +331,15 @@ object Dedup {
       .toDF("id", "simhash")
   }
 
-  /** Near-dup pairs within `maxHamming` bits. Banding uses
-    * bands = maxHamming + 1 segments of the 64-char signature, so by
+  /** Near-dup pairs within [[MaxHamming]] bits. Banding uses
+    * bands = MaxHamming + 1 segments of the 64-char signature, so by
     * pigeonhole every qualifying pair shares at least one untouched band —
     * candidate generation is COMPLETE (recall 1.0 vs brute force, see
     * DedupRecallSpec) and the driver oracle is a brute-force all-pairs
     * Hamming scan.
     */
-  def simhashPairs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 3,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val bands = maxHamming + 1
+  def simhashPairs(docs: DataFrame): DataFrame = {
+    val bands = MaxHamming + 1
     val base = 64 / bands
     val extra = 64 % bands
     // band b covers [off(b), off(b)+len(b)) with len = base (+1 for the
@@ -359,7 +353,7 @@ object Dedup {
     // no re-join of signatures by id, and the hamming test is integer
     // XOR + popcount (the same integer as the oracle's per-char zip count,
     // ~50x cheaper than two 64-element split arrays per candidate)
-    val sig = graft.util.StageCache.persist(simhash(docs, idCol, textCol))
+    val sig = graft.util.StageCache.persist(simhash(docs))
     def half(pos: Int): Column =
       conv(substring($"simhash", pos, 32), 2, 10).cast("long")
     val banded = sig.select($"id", half(1).as("h1"), half(33).as("h2"),
@@ -369,11 +363,11 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
     candidatePairs(banded, Seq("band", "bucket"), "id", Seq("h1", "h2"),
-        maxBucket, "simhashPairs")
+        DefaultMaxBucket, "simhashPairs")
       .withColumn("hamming",
         (bit_count($"h1_a".bitwiseXOR($"h1_b")) +
           bit_count($"h2_a".bitwiseXOR($"h2_b"))).cast("long"))
-      .where($"hamming" <= maxHamming)
+      .where($"hamming" <= MaxHamming)
       .select($"id_a", $"id_b", $"hamming")
       .dropDuplicates("id_a", "id_b")
   }
@@ -382,9 +376,7 @@ object Dedup {
     * random-hyperplane LSH bucketing + exact cosine verify. Candidates are
     * id-keyed bucket equi-joins; vectors re-joined for the verify stage.
     */
-  def embeddingDups(embeds: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", threshold: Double = 0.9,
-      planes: Int = EmbedPlanes, tables: Int = EmbedTables,
+  def embeddingDups(embeds: DataFrame, threshold: Double = 0.9,
       maxBucket: Int = DefaultMaxBucket, dim: Int = -1): DataFrame = {
     // vectors are consumed by key generation AND both verify sides: cache
     // the projected scan once — via forked(), so an input that is itself
@@ -393,17 +385,16 @@ object Dedup {
     // stage is cached as an id+bkey projection so its
     // (tables x planes x dim) folds run once. Pass `dim` when the caller
     // knows the vector width to skip the plan-time take(1) job.
-    val vecs = graft.util.StageCache.forked(
-      embeds.select(col(idCol), col(vecCol)))
+    val vecs = graft.util.StageCache.forked(embeds.select($"vec_id", $"embedding"))
     val keys = graft.util.StageCache.persist(
-      Similarity.withBucketKeys(vecs, idCol, vecCol, planes, tables,
+      Similarity.withBucketKeys(vecs, "embedding", EmbedPlanes, EmbedTables,
           seed = EmbedSeed, dim0 = dim)
-        .select($"bkey", col(idCol)))
-    val candidates = candidatePairs(keys, Seq("bkey"), idCol, Nil, maxBucket,
+        .select($"bkey", $"vec_id"))
+    val candidates = candidatePairs(keys, Seq("bkey"), "vec_id", Nil, maxBucket,
         "embeddingDups")
       .select($"id_a", $"id_b")
       .dropDuplicates("id_a", "id_b")
-    withSides(candidates, vecs, idCol, vecCol, "v")
+    withSides(candidates, vecs, "vec_id", "embedding", "v")
       .withColumn("cosine", Similarity.cosine($"v_a", $"v_b"))
       .where($"cosine" >= threshold)
       .select($"id_a", $"id_b",

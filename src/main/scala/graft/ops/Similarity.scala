@@ -22,7 +22,7 @@ import graft.ops.ColSyntax._
 object Similarity {
 
   /** The [[lshTopK]] (q24) and [[ivfTopK]] (q35) shapes, read by their
-    * oracles too.
+    * oracles too. Every builder reads `vec_id` and `embedding`.
     */
   final val LshPlanes = 10
   final val LshTables = 4
@@ -50,10 +50,9 @@ object Similarity {
     * `queries` must be small (it is broadcast); corpus side streams.
     * Returns (query_id, rank, neighbor_id, cosine).
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queries.select($"vec_id".as("query_id"), $"embedding".as("qv")))
+    val c = corpus.select($"vec_id".as("neighbor_id"), $"embedding".as("cv"))
     topK(c.join(q, $"query_id" =!= $"neighbor_id")
       .withColumn("cosine", cosine($"qv", $"cv")), k)
   }
@@ -104,7 +103,7 @@ object Similarity {
     * `planes` hyperplanes. Output columns: all input columns + bkey.
     * Pass `dim` when already known to avoid the plan-build take(1) job.
     */
-  def withBucketKeys(df: DataFrame, idCol: String, vecCol: String,
+  def withBucketKeys(df: DataFrame, vecCol: String,
       planes: Int, tables: Int, seed: Long, dim0: Int = -1): DataFrame = {
     val dim = if (dim0 > 0) dim0 else vecDim(df, vecCol)
     val keys = (0 until tables).map { t =>
@@ -133,13 +132,12 @@ object Similarity {
   /** Assign each row to its nearest centroid (ties to the lowest cell):
     * input must carry `qv`; centroids (cell, cent) are broadcast.
     */
-  private def assignCells(vecs: DataFrame, cents: DataFrame,
-      idCol: String): DataFrame =
+  private def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(cents))
       .withColumn("dd", d2($"qv", $"cent"))
-      .groupBy(col(idCol))
+      .groupBy($"vec_id")
       .agg(min(struct($"dd", $"cell")).as("m"))
-      .select(col(idCol), $"m.cell".as("cell"))
+      .select($"vec_id", $"m.cell".as("cell"))
 
   /** Exact integer squared L2 between two quantized vectors (seeding
     * runs entirely in Long arithmetic so the oracle's BIGINT fold matches
@@ -153,7 +151,7 @@ object Similarity {
   }
 
   /** Deterministic IVF coarse quantizer — the inverted-file ANN scale
-    * path (vs hyperplane LSH): `kCells` cells from `lloydRounds` unrolled
+    * path (vs hyperplane LSH): `kCells` cells from [[IvfLloydRounds]] unrolled
     * Lloyd iterations over integer-quantized vectors (round(x·1e4)).
     *
     * Seeding is k-means++-style and fully deterministic: (1) a uniform
@@ -167,7 +165,7 @@ object Similarity {
     * Integer per-dim sums make the centroid means exactly reproducible in
     * SQL (the same reason the MP oracles quantize); every double distance
     * is a strict left fold. Empty cells drop out of the update identically
-    * in both engines. Returns (cells: (idCol, cell),
+    * in both engines. Returns (cells: (vec_id, cell),
     * centroids: (cell, cent: Array[Double])).
     *
     * Cache lifecycle: the quantized projection and each round's centroid
@@ -186,15 +184,14 @@ object Similarity {
     * proportional. RecallSpec gates that a half-sample-trained index
     * keeps its recall on clustered data.
     */
-  def ivfCells(embeds: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", kCells: Int = IvfCells,
-      lloydRounds: Int = IvfLloydRounds, trainFraction: Double = 1.0): (DataFrame, DataFrame) = {
+  private def ivfCells(embeds: DataFrame, kCells: Int,
+      trainFraction: Double): (DataFrame, DataFrame) = {
     val spark = embeds.sparkSession
     // the quantized projection feeds the seed sample, every assignment
     // round and every Lloyd update — persist it so the corpus scans once,
     // not per consumer (same cache lifecycle as the Dedup signature stages)
     val vecs = graft.util.StageCache.persist(
-      embeds.select(col(idCol), quantize(col(vecCol)).as("qv")))
+      embeds.select($"vec_id", quantize($"embedding").as("qv")))
     // training subset for the Lloyd updates: md5-keyed hash filter (first
     // 8 hex chars as a uniform draw in [0, 2^32)) — deterministic and
     // partition-invariant, unlike Dataset.sample; 1.0 trains on everything
@@ -203,14 +200,14 @@ object Similarity {
     val train =
       if (trainFraction >= 1.0) vecs
       else vecs.where(
-        conv(substring(md5(concat(lit("ivftrain:"), col(idCol).cast("string"))),
+        conv(substring(md5(concat(lit("ivftrain:"), $"vec_id".cast("string"))),
           1, 8), 16, 10).cast("long") <
           (trainFraction * 4294967296.0).toLong)
     val cand = train
-      .withColumn("mk", md5(concat(lit("ivf:"), col(idCol).cast("string"))))
-      .orderBy($"mk", col(idCol))
+      .withColumn("mk", md5(concat(lit("ivf:"), $"vec_id".cast("string"))))
+      .orderBy($"mk", $"vec_id")
       .limit(4 * kCells)
-      .select(col(idCol).cast("long"), $"qv")
+      .select($"vec_id".cast("long"), $"qv")
       .collect() // bounded: 4*kCells rows whatever the corpus size
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
     val chosen = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -239,14 +236,14 @@ object Similarity {
         case (ci, cell) =>
           org.apache.spark.sql.Row(cell, cand(ci)._2.map(_.toDouble).toSeq)
       }: _*), centSchema)
-    for (_ <- 1 to lloydRounds) {
-      val a = assignCells(train, cents, idCol)
+    for (_ <- 1 to IvfLloydRounds) {
+      val a = assignCells(train, cents)
       // Lloyd update: per-dim integer sums -> double means (one shared
       // division expression per component in both engines); persisted
       // because the next round's assignment, the final assignment and the
       // probe side all consume it — 16 rows, but computing it is a full
       // training-set aggregation
-      cents = graft.util.StageCache.persist(a.join(train, Seq(idCol))
+      cents = graft.util.StageCache.persist(a.join(train, Seq("vec_id"))
         .select($"cell", posexplode($"qv").as(Seq("pos", "v")))
         .groupBy($"cell", $"pos")
         .agg(sum($"v").as("s"), count(lit(1)).as("cnt"))
@@ -255,7 +252,7 @@ object Similarity {
           ($"s".cast("double") / $"cnt").as("comp")))).as("pc"))
         .select($"cell", transform($"pc", p => p.getField("comp")).as("cent")))
     }
-    (assignCells(vecs, cents, idCol), cents)
+    (assignCells(vecs, cents), cents)
   }
 
   /** IVF approximate top-k: probe the `nprobe` nearest cells per query,
@@ -263,21 +260,19 @@ object Similarity {
     * bruteForceTopK.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      kCells: Int = IvfCells, nprobe: Int = IvfProbes, lloydRounds: Int = IvfLloydRounds,
+      kCells: Int = IvfCells, nprobe: Int = IvfProbes,
       trainFraction: Double = 1.0): DataFrame = {
-    val (cells, cents) =
-      ivfCells(corpus, idCol, vecCol, kCells, lloydRounds, trainFraction)
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_v"),
-      quantize(col(vecCol)).as("qv"))
+    val (cells, cents) = ivfCells(corpus, kCells, trainFraction)
+    val qv = queries.select($"vec_id".as("query_id"), $"embedding".as("q_v"),
+      quantize($"embedding").as("qv"))
     val pw = Window.partitionBy($"query_id").orderBy($"dd".asc, $"cell".asc)
     val probes = qv.crossJoin(broadcast(cents))
       .withColumn("dd", d2($"qv", $"cent"))
       .withColumn("rn", row_number().over(pw))
       .where($"rn" <= nprobe)
       .select($"query_id", $"q_v", $"cell")
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_v"))
-    topK(probes.join(cells.select($"cell", col(idCol).as("neighbor_id")),
+    val cv = corpus.select($"vec_id".as("neighbor_id"), $"embedding".as("c_v"))
+    topK(probes.join(cells.select($"cell", $"vec_id".as("neighbor_id")),
         Seq("cell"))
       .where($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"q_v", $"neighbor_id")
@@ -287,18 +282,17 @@ object Similarity {
   }
 
   /** LSH-bucketed approximate top-k: candidates share a bucket under any
-    * of `tables` hyperplane sets. Returns the same schema as
+    * of [[LshTables]] hyperplane sets. Returns the same schema as
     * bruteForceTopK (ranks within retrieved candidates).
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      planes: Int = LshPlanes, tables: Int = LshTables, seed: Long = LshSeed,
       dim0: Int = -1): DataFrame = {
-    val dim = if (dim0 > 0) dim0 else vecDim(corpus, vecCol)
-    val qb = broadcast(withBucketKeys(queries, idCol, vecCol, planes, tables, seed, dim)
-      .select($"bkey", col(idCol).as("query_id"), col(vecCol).as("q_v")))
-    val cb = withBucketKeys(corpus, idCol, vecCol, planes, tables, seed, dim)
-      .select($"bkey", col(idCol).as("neighbor_id"), col(vecCol).as("c_v"))
+    val dim = if (dim0 > 0) dim0 else vecDim(corpus, "embedding")
+    def keyed(df: DataFrame) = withBucketKeys(df, "embedding", LshPlanes, LshTables, LshSeed, dim)
+    val qb = broadcast(keyed(queries)
+      .select($"bkey", $"vec_id".as("query_id"), $"embedding".as("q_v")))
+    val cb = keyed(corpus)
+      .select($"bkey", $"vec_id".as("neighbor_id"), $"embedding".as("c_v"))
     topK(cb.join(qb, Seq("bkey"))
       .where($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"neighbor_id", $"q_v", $"c_v")

@@ -840,7 +840,7 @@ SELECT id_a, id_b, kind, jaccard_e4 FROM (
 
   /** q21: SimHash near-dups — brute-force all-pairs Hamming over the
     * SQL-recomputed md5-bit signatures. Because the Spark side bands with
-    * maxHamming+1 segments (complete by pigeonhole), LSH output == brute
+    * Dedup.MaxHamming + 1 segments (complete by pigeonhole), LSH output == brute
     * force, so this oracle gates banding completeness, not just hashing.
     */
   def q21: String =
@@ -859,7 +859,7 @@ SELECT id_a, id_b, hamming FROM (
          list_sum(list_transform(range(1, 65),
            i -> CASE WHEN substr(a.sig, i::INT, 1) = substr(b.sig, i::INT, 1) THEN 0 ELSE 1 END))::BIGINT AS hamming
   FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id)
-WHERE hamming <= $MaxHamming"""
+WHERE hamming <= ${Dedup.MaxHamming}"""
 
   // ---- embedding LSH mirrors (shared fold/cosine fragments) -----------
 

@@ -85,7 +85,7 @@ object DedupBench {
           f"cpus=${spark.sparkContext.defaultParallelism} best=$best%.3f " +
           f"reps=${secs.map(s => f"$s%.3f").mkString(",")} docs_per_sec=${n / best}%.0f")
       }
-      time("minhash_signature")(graft.ops.Dedup.minhashSignature(cached, "text").count())
+      time("minhash_signature")(graft.ops.Dedup.minhashSignature(cached).count())
       time("simhash")(graft.ops.Dedup.simhash(cached).count())
     } else {
       val (pairs, sec) = Harness.timed(graft.ops.Dedup.pipeline(cached, threshold = 0.5)

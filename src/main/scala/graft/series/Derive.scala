@@ -77,25 +77,15 @@ object Derive {
     * filling created buckets with `fillValue` (0 for rates). This is the
     * engine's analog of the reference's impute_missing
     * (preprocess.py:140-222), expressed as relational ops instead of an
-    * array pass.
-    *
-    * Densification multiplies rows by span/step (a conversation with a
-    * year-long span at 1-minute step materializes ~526k rows): at scale,
-    * bound the span with `maxSteps` — a series wider than the bound is
-    * clamped to its NEWEST `maxSteps` buckets (the retention-horizon
-    * semantics: old gaps are the batch backfill's job, not the grid's).
-    * The default keeps the reference's unbounded behavior.
+    * array pass. The grid spans each series from its first bucket to its
+    * last: densification multiplies rows by span/step (a year-long span
+    * at 1-minute step is ~526k rows), so pre-filter a wide series to the
+    * span it needs.
     */
   def gapFill(points: Dataset[SeriesPoint], stepMicros: Long,
-      fillValue: Double, maxSteps: Long = Long.MaxValue): Dataset[SeriesPoint] = {
+      fillValue: Double): Dataset[SeriesPoint] = {
     val spark = points.sparkSession
     import spark.implicits._
-
-    def clampLo(lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column) =
-      // any bound whose span in micros would overflow Long is effectively
-      // unbounded — skip the clamp entirely rather than wrap
-      if (maxSteps >= Long.MaxValue / math.max(stepMicros, 1L)) lo
-      else greatest(lo, hi - lit(stepMicros) * (lit(maxSteps) - 1))
 
     // Densify with ONE aggregation and SEGMENT generation: collect each
     // series' sorted (bucket, value) entries with its bounds, keep the
@@ -108,14 +98,13 @@ object Derive {
     // Contracts: (1) buckets are unique per (conv_id, kind), the
     // SeriesPoint invariant; a duplicate fails loudly (sequence() rejects
     // start > stop). (2) one aggregation buffer holds a whole series'
-    // entries (~24 B per point): the maxSteps clamp bounds the OUTPUT
-    // grid, not the collected input, so pre-filter multi-million-point
-    // groups to the retention horizon.
+    // entries (~24 B per point), so pre-filter multi-million-point groups
+    // to the retention horizon.
     val step = lit(stepMicros)
     points
       .groupBy($"conv_id", $"kind")
       .agg(sort_array(collect_list(struct($"bucket", $"value"))).as("es"),
-        min($"bucket").as("lo0"), max($"bucket").as("hi"))
+        min($"bucket").as("lo"), max($"bucket").as("hi"))
       // the aggregate output is a handful of KB, so AQE coalesces it
       // to one partition — but each row EXPANDS by span/step below.
       // Spread the generation explicitly (explicit repartitions are
@@ -123,14 +112,11 @@ object Derive {
       // per-series rows, never the generated grid.
       .repartition(spark.sparkContext.defaultParallelism,
         $"conv_id", $"kind")
-      .withColumn("lo", clampLo($"lo0", $"hi"))
-      // last grid point (the grid is anchored at the clamped lo)
+      // last grid point (the grid is anchored at lo)
       .withColumn("gridHi", $"hi" - pmod($"hi" - $"lo", step))
       // on-grid entries only; strictly increasing because series
       // buckets are unique per (conv_id, kind)
-      .withColumn("oges", filter($"es", e =>
-        e.getField("bucket") >= $"lo" &&
-          pmod(e.getField("bucket") - $"lo", step) === 0))
+      .withColumn("oges", filter($"es", e => pmod(e.getField("bucket") - $"lo", step) === 0))
       .select($"conv_id", $"kind", $"lo", $"oges",
         posexplode(concat($"oges",
           // sentinel one step past the grid: its pair emits the tail
@@ -152,55 +138,6 @@ object Derive {
       .as[SeriesPoint]
   }
 
-  /** Zero-shuffle assemble for conv-bucketed input (all rows of a
-    * conversation in one partition, e.g. a bucket(conv_id) table scan):
-    * partition-local grouping, no exchange.
-    */
-  def assembleColocated(points: Dataset[SeriesPoint])
-      : Dataset[(String, String, Long, Array[Double])] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    // rows arrive sorted (conv, kind, bucket) within a partition →
-    // streaming group collection, O(series length) state
-    points.mapPartitions { it =>
-      new Iterator[(String, String, Long, Array[Double])] {
-        private var curConv: String = null
-        private var curKind: String = null
-        private var start = 0L
-        private var buckets = new scala.collection.mutable.ArrayBuffer[Long]()
-        private var values = new scala.collection.mutable.ArrayBuffer[Double]()
-        private var pending: (String, String, Long, Array[Double]) = null
-
-        private def emit(): Unit = {
-          if (curConv != null) {
-            val idx = buckets.zipWithIndex.sortBy(_._1)
-            pending = (curConv, curKind, idx.head._1, idx.map(p => values(p._2)).toArray)
-          }
-          buckets = new scala.collection.mutable.ArrayBuffer[Long]()
-          values = new scala.collection.mutable.ArrayBuffer[Double]()
-        }
-
-        private def absorb(p: SeriesPoint): Unit = {
-          if (curConv == null || curConv != p.conv_id || curKind != p.kind) {
-            emit()
-            curConv = p.conv_id
-            curKind = p.kind
-            start = p.bucket
-          }
-          buckets += p.bucket
-          values += p.value
-        }
-
-        def hasNext: Boolean = pending != null || curConv != null || it.hasNext
-        def next(): (String, String, Long, Array[Double]) = {
-          while (pending == null && it.hasNext) absorb(it.next())
-          if (pending == null) { emit(); curConv = null }
-          val r = pending; pending = null; r
-        }
-      }
-    }
-  }
-
   /** Assemble per-conversation contiguous value arrays ordered by bucket —
     * the Dataset ↔ kernel boundary, one MP input row per (conv, kind).
     */
@@ -216,5 +153,17 @@ object Derive {
         element_at($"pts", 1).getField("bucket").as("startBucket"),
         transform($"pts", p => p.getField("value")).as("values"))
       .as[SeriesRow]
+  }
+
+  /** [[assemble]] as (conv_id, kind, startBucket, values) tuples. On input
+    * the planner knows is partitioned by conv_id (a bucket(conv_id) table
+    * scan, a cached [[graft.rollup.Rollup.rollupAllColocated]]) the
+    * grouping plans no exchange; any other input is shuffled, so a series
+    * that is interleaved or split across partitions still comes out whole.
+    */
+  def assembleColocated(points: Dataset[SeriesPoint])
+      : Dataset[(String, String, Long, Array[Double])] = {
+    import points.sparkSession.implicits._
+    assemble(points).map(r => (r.conv_id, r.kind, r.startBucket, r.values))
   }
 }

@@ -152,6 +152,26 @@ class DiscoverSpec extends AnyFunSuite {
     assert(cav.forall(v => v >= 0 && v <= 1))
   }
 
+  test("mean-std annotation vector: 1 where the window std is below the " +
+      "mean window std (transform.py:181-229)") {
+    // w = 2 window stds: [1,1] 0, [1,3] 1, [3,5] 1, [5,5] 0, [5,5] 0; mean 0.4
+    assert(AnnotationVectors.makeMeanStdAv(Array[Double](1, 1, 3, 5, 5, 5), 2).toSeq ==
+      Seq(1.0, 0.0, 0.0, 1.0, 1.0))
+    // every std is 0, none is below the mean
+    assert(AnnotationVectors.makeMeanStdAv(Array.fill(5)(3.0), 2).toSeq == Seq.fill(4)(0.0))
+  }
+
+  test("clipping annotation vector: 1 - the normalized count of global " +
+      "min/max values per window (transform.py:232-285)") {
+    // min 1, max 5; w = 2 counts: [1,1] 2, [1,3] 1, [3,5] 1, [5,2] 1, [2,4] 0;
+    // less their min (0), over their max (2)
+    assert(AnnotationVectors.makeClippingAv(Array[Double](1, 1, 3, 5, 2, 4), 2).toSeq ==
+      Seq(0.0, 0.5, 0.5, 0.5, 1.0))
+    // all-constant: every value is the min and the max, so every window
+    // counts w, the normalized counts are all 0 and so is the vector
+    assert(AnnotationVectors.makeClippingAv(Array.fill(5)(3.0), 2).toSeq == Seq.fill(4)(0.0))
+  }
+
   test("preprocess: impute + constant-window noise (preprocess.py semantics)") {
     val nan = Double.NaN
     val ts = Array(1.0, nan, 3.0, 4.0, nan, 6.0, 7.0, 8.0)

@@ -33,6 +33,21 @@ object Fixtures {
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  /** Run `body` with the executor's and the task set manager's logging
+    * off, restored afterwards: a spec that expects a task to fail asserts
+    * on the error it gets, and their two copies of its stack trace only
+    * bury the test log.
+    */
+  def withoutTaskFailureLogs[A](body: => A): A = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val levels = Seq("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager").map(n => n -> LogManager.getLogger(n).getLevel)
+    levels.foreach { case (n, _) => Configurator.setLevel(n, Level.OFF) }
+    try body
+    finally levels.foreach { case (n, l) => Configurator.setLevel(n, l) }
+  }
+
   def assertAlmostEqual(actual: Array[Double], desired: Array[Double],
       decimal: Int = 7): Unit = {
     assert(actual.length == desired.length,

@@ -56,7 +56,7 @@ class RecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("simhash banding is complete: banded pairs == brute-force pairs") {
     import spark.implicits._
     val d = docs()
-    val banded = Dedup.simhashPairs(d, maxHamming = 3)
+    val banded = Dedup.simhashPairs(d)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val sigs = Dedup.simhash(d).as[(Long, String)].collect()
     val brute = (for {

@@ -338,7 +338,8 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 875 points: at or over splitThreshold, but the caller claimed <= 50,
     // so no tile branch is planned that could take the row
     val e = intercept[Exception] {
-      DistributedMp.mpxProfiles(ds, 32, "raw", splitThreshold = 100, maxSeriesLen = 50).collect()
+      withoutTaskFailureLogs(DistributedMp.mpxProfiles(ds, 32, "raw",
+        splitThreshold = 100, maxSeriesLen = 50).collect())
     }
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(msgs.exists(m => m != null && m.contains("a row of size 875 is at or over " +
@@ -530,14 +531,6 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       SeriesPoint("c1", "v", 1002L * Rollup.MicrosPerMin, 3.0)))
     val unbounded = Derive.gapFill(pts, Rollup.MicrosPerMin, 0.0)
     assert(unbounded.count() == 1003)
-    val bounded = Derive.gapFill(pts, Rollup.MicrosPerMin, 0.0, maxSteps = 10)
-      .orderBy($"bucket").collect()
-    assert(bounded.length == 10, "span must clamp to the newest maxSteps buckets")
-    assert(bounded.head.bucket == 993L * Rollup.MicrosPerMin)
-    assert(bounded.last.bucket == 1002L * Rollup.MicrosPerMin)
-    // observed values inside the window survive; created buckets fill
-    assert(bounded.last.value == 3.0 &&
-      bounded.map(_.value).sum == 5.0)
   }
 
   test("gap-fill keeps the grid join's on-grid semantics: off-grid " +
@@ -828,15 +821,30 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("colocated zero-shuffle rollup/assemble equals generic shuffle plan") {
+    import spark.implicits._
     // the colocated rollup is gated against the generic plan by the
-    // storage-layout spec; this one gates the colocated assemble
-    val pts = TranscriptGen.generatePoints(spark, 40)
-    val ga = Derive.assemble(pts).collect().map(r => (r.conv_id, r.kind) -> r).toMap
-    val ca = Derive.assembleColocated(pts).collect().map(r => (r._1, r._2) -> r).toMap
-    assert(ga.keySet == ca.keySet && ga.nonEmpty)
-    ga.foreach { case (k, g) =>
-      assert(g.values.toSeq == ca(k)._4.toSeq && g.startBucket == ca(k)._3)
+    // storage-layout spec; this one gates the colocated assemble: one row
+    // per series, whatever the input's layout
+    def assembled(pts: Dataset[SeriesPoint]) = {
+      val ga = Derive.assemble(pts).collect()
+        .map(r => (r.conv_id, r.kind, r.startBucket, r.values.toSeq)).sortBy(r => (r._1, r._2))
+      val ca = Derive.assembleColocated(pts).collect()
+        .map(r => (r._1, r._2, r._3, r._4.toSeq)).sortBy(r => (r._1, r._2))
+      assert(ga.nonEmpty && ca.toSeq == ga.toSeq, s"colocated ${ca.toSeq} vs generic ${ga.toSeq}")
+      ca.toSeq
     }
+    assembled(TranscriptGen.generatePoints(spark, 40))
+    def inPartitions(n: Int, pts: SeriesPoint*) =
+      spark.createDataset(spark.sparkContext.parallelize(pts, n))
+    // one partition whose series interleave: (c1,a) (c1,b) (c1,a) (c1,a)
+    assert(assembled(inPartitions(1, SeriesPoint("c1", "a", 0L, 1.0),
+      SeriesPoint("c1", "b", 0L, 5.0), SeriesPoint("c1", "a", 1L, 2.0),
+      SeriesPoint("c1", "a", 2L, 3.0))) ==
+      Seq(("c1", "a", 0L, Seq(1.0, 2.0, 3.0)), ("c1", "b", 0L, Seq(5.0))))
+    // one 4-point series split across two partitions
+    assert(assembled(inPartitions(2, SeriesPoint("c1", "v", 1L, 2.0),
+      SeriesPoint("c1", "v", 3L, 4.0), SeriesPoint("c1", "v", 0L, 1.0),
+      SeriesPoint("c1", "v", 2L, 3.0))) == Seq(("c1", "v", 0L, Seq(1.0, 2.0, 3.0, 4.0))))
   }
 
   test("string-free points generator equals length(text) derivation") {
